@@ -298,7 +298,7 @@ def run(
         ).select("encounter_id", F.col("uuid").alias("collection_identifier"))
     else:
         codes = codes.select("encounter_id", F.col("barcode").alias("collection_identifier"))
-    samples = warehouse.upsert_sample(
+    warehouse.upsert_sample(
         codes.select(
             F.lit(None).cast("string").alias("identifier"),
             "collection_identifier",
@@ -308,11 +308,11 @@ def run(
 
     stats = {
         "enrollments": enr.count(),
-        "sites": sites.count(),
-        "individuals": individuals.count(),
-        "encounters": encounters.count(),
+        "sites": warehouse.num_rows("site"),
+        "individuals": warehouse.num_rows("individual"),
+        "encounters": warehouse.num_rows("encounter"),
         "encounter_locations": n_encounter_locations,
-        "samples": samples.count(),
+        "samples": warehouse.num_rows("sample"),
     }
     enr.unpersist()
     return stats

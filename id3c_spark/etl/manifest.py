@@ -78,14 +78,15 @@ def run(
     known = resolved.filter(
         F.col("identifier").isNotNull() | F.col("collection_identifier").isNotNull()
     )
-    n_unknown = docs.count() - known.count()
+    n_docs = docs.count()
+    n_unknown = n_docs - known.count()
 
     updates = known.select(
         "identifier", "collection_identifier", "collected", "details"
     ).dropDuplicates(["identifier", "collection_identifier"])
-    samples = warehouse.upsert_sample(updates)
+    warehouse.upsert_sample(updates)
     return {
-        "manifests": docs.count(),
+        "manifests": n_docs,
         "unknown_barcodes": n_unknown,
-        "samples": samples.count(),
+        "samples": warehouse.num_rows("sample"),
     }

@@ -220,7 +220,8 @@ def run(
             for r in known.select("identifier_set_id").distinct().collect()
         }
         invalid = {names.get(s, str(s)) for s in used_sets} - valid_sets
-        assert not invalid, f"Identifier found in invalid set {sorted(invalid)}"
+        if invalid:
+            raise AssertionError(f"Identifier found in invalid set {sorted(invalid)}")
     tiny_sets = [sid for sid, name in names.items() if "tiny-swab" in name]
     is_tiny = F.col("identifier_set_id").isin(tiny_sets) if tiny_sets else F.lit(False)
 
@@ -330,14 +331,14 @@ def run(
             pa_details.alias("details"),
         )
     )
-    pa = warehouse.upsert_presence_absence(pa_updates)
+    warehouse.upsert_presence_absence(pa_updates)
 
     stats = {
         "results": results.count(),
         "unknown_barcodes": n_unknown,
-        "targets": targets.count(),
-        "samples": samples.count(),
-        "presence_absence": pa.count(),
+        "targets": warehouse.num_rows("target"),
+        "samples": warehouse.num_rows("sample"),
+        "presence_absence": warehouse.num_rows("presence_absence"),
     }
     results.unpersist()
     known.unpersist()

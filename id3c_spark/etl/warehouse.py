@@ -32,6 +32,11 @@ class Warehouse:
             return tbl.read()
         return self.spark.createDataFrame([], schemas.WAREHOUSE_SCHEMAS[name])
 
+    def num_rows(self, name: str) -> int:
+        """Rows in a table's current version, from its parquet footers."""
+        tbl = self.tables[name]
+        return tbl.num_rows() if tbl.exists() else 0
+
     def publish(self, name: str, df: DataFrame) -> None:
         self.tables[name].publish(df)
 
@@ -41,7 +46,12 @@ class Warehouse:
         merge keys means an ETL batch rewrites only the files it touches —
         the 100×-scale shape of the reference's per-row upsert transaction
         (db/__init__.py:182-326). First publish bootstraps the table and
-        range-clusters it on the first match key so later merges prune."""
+        range-clusters it on the first match key so later merges prune.
+
+        The batch is materialized once (localCheckpoint: it stays
+        distributed) and that one copy feeds both the prune-key collection
+        and the merge's single write."""
+        updates = updates.localCheckpoint()
         tbl = self.tables[name]
         cluster = [k for k in ([key_cols[0]] if isinstance(key_cols[0], str) else list(key_cols[0])) if k]
         if not tbl.exists():
@@ -119,6 +129,8 @@ class Warehouse:
     def upsert_encounter_location(self, updates: DataFrame) -> DataFrame:
         """upsert_encounter_location (etl/__init__.py:469-545): match
         (encounter_id, relation citext)."""
+        updates = updates.localCheckpoint()
+
         def run(target: DataFrame) -> DataFrame:
             current = target.withColumn(
                 "el_id", F.xxhash64("encounter_id", "relation")  # composite PK surrogate

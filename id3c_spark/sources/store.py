@@ -14,12 +14,19 @@ feeds MERGE INTO unchanged.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from id3c_spark.operators.merge import check_errors_raised
+
+#: per-version schema record, beside the data files (Spark skips ``_*``)
+_SCHEMA_FILE = "_schema.json"
 
 
 def zorder_key_expr(
@@ -42,7 +49,8 @@ def zorder_key_expr(
     returned Column is name-bound (plain ``F.col`` refs), so it applies
     to any frame carrying *cols*.
     """
-    assert bits * len(cols) <= 62, "z-key overflows a long"
+    if bits * len(cols) > 62:
+        raise ValueError(f"z-key overflows a long: {bits} bits x {len(cols)} columns")
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
         *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
@@ -92,6 +100,21 @@ def with_zorder_key(
     return df.withColumn(key_col, zorder_key_expr(df, cols, bits))
 
 
+def _nullable(dt: T.DataType) -> T.DataType:
+    """*dt* with every field, element and value nullable — the schema
+    parquet reads back, whatever the written frame declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
 class ParquetTable:
     def __init__(self, spark: SparkSession, path: str, keep_versions: int = 2):
         """*keep_versions* controls vacuum retention: raise it (or pass a
@@ -101,6 +124,7 @@ class ParquetTable:
         self.spark = spark
         self.path = path
         self.keep_versions = keep_versions
+        self._schemas: dict[int, T.StructType] = {}
         os.makedirs(path, exist_ok=True)
 
     @property
@@ -126,9 +150,9 @@ class ParquetTable:
             if name.startswith("v") and name[1:].isdigit()
         )
 
-    def read(self, version: int | None = None) -> DataFrame:
-        """Current version, or a pinned historical *version* (time
-        travel). Raises FileNotFoundError for vacuumed/unknown versions."""
+    def _version_dir(self, version: int | None) -> tuple[int, str]:
+        """(version, its directory); FileNotFoundError for vacuumed or
+        unknown versions."""
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no published version at {self.path}")
@@ -138,7 +162,32 @@ class ParquetTable:
                 f"version {v} not on disk at {self.path} "
                 f"(kept: {self.versions()}; raise keep_versions to retain more)"
             )
-        return self.spark.read.parquet(out)
+        return v, out
+
+    def schema(self, version: int | None = None) -> T.StructType:
+        """Schema of a version as its writer recorded it, so reads plan
+        without a schema-inference job. A version without a record is
+        inferred once and cached."""
+        v, out = self._version_dir(version)
+        if v not in self._schemas:
+            try:
+                with open(os.path.join(out, _SCHEMA_FILE)) as f:
+                    self._schemas[v] = T.StructType.fromJson(json.load(f))
+            except FileNotFoundError:
+                self._schemas[v] = self.spark.read.parquet(out).schema
+        return self._schemas[v]
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """Current version, or a pinned historical *version* (time
+        travel). Raises FileNotFoundError for vacuumed/unknown versions."""
+        v, out = self._version_dir(version)
+        return self.spark.read.schema(self.schema(v)).parquet(out)
+
+    def num_rows(self, version: int | None = None) -> int:
+        """Row count of a version from its parquet footers: no Spark job."""
+        import pyarrow.parquet as pq
+
+        return sum(pq.read_metadata(f).num_rows for f in self.files(version))
 
     def files(self, version: int | None = None) -> list[str]:
         """Data files of a version — the unit of copy-on-write."""
@@ -197,6 +246,8 @@ class ParquetTable:
         matches can only live in candidate files.
         *cluster_by*: range-cluster + sort the rewritten files on these
         columns so footer ranges stay tight for the NEXT merge.
+        A merge check that fires while the new version is written raises
+        MultipleMatchError; the version never goes live.
         """
         if not self.exists():
             raise FileNotFoundError(
@@ -211,7 +262,7 @@ class ParquetTable:
         prune_cols = sorted(
             {k[0] for k in alt_keys if k and k[0] in updates.columns}
         )
-        schema = self.read().schema
+        schema = self.schema()
         files = self.files()
         candidates, carried = list(files), []
         if prune_cols:
@@ -219,25 +270,22 @@ class ParquetTable:
             # bounded driver sample (the common ETL-batch ≪ table case —
             # min/max-range-only pruning dies the moment one insert key
             # sits past the table's range, stretching the batch range over
-            # every file). Past the cap, fall back to range overlap.
+            # every file), collected for every prune column in ONE action.
+            # Past the cap, fall back to range overlap.
             import bisect
 
             cap = 100_000
+            rows = updates.select(*prune_cols).distinct().limit(cap + 1).collect()
             per_col: dict[str, object] = {}
-            for c in prune_cols:
-                vals = [
-                    r[0]
-                    for r in updates.select(c)
-                    .filter(F.col(c).isNotNull())
-                    .distinct()
-                    .limit(cap + 1)
-                    .collect()
-                ]
-                if len(vals) > cap:
-                    lo_hi = updates.agg(F.min(c), F.max(c)).collect()[0]
-                    per_col[c] = ("range", lo_hi[0], lo_hi[1])
-                else:
-                    per_col[c] = ("values", sorted(vals))
+            if len(rows) > cap:
+                lo_hi = updates.agg(
+                    *[F.min(c) for c in prune_cols], *[F.max(c) for c in prune_cols]
+                ).collect()[0]
+                for i, c in enumerate(prune_cols):
+                    per_col[c] = ("range", lo_hi[i], lo_hi[len(prune_cols) + i])
+            else:
+                for i, c in enumerate(prune_cols):
+                    per_col[c] = ("values", sorted({r[i] for r in rows if r[i] is not None}))
             candidates, carried = [], []
             for fname in files:
                 overlap = False
@@ -269,18 +317,10 @@ class ParquetTable:
             target = self.spark.read.schema(schema).parquet(*candidates)
         else:
             target = self.spark.createDataFrame([], schema)
-        merged = merge_fn(target)
 
         v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        merged = self._clustered(merged, cluster_by, zorder_by)
-        merged.write.mode("overwrite").parquet(out)
-        for fname in carried:
-            dst = os.path.join(out, os.path.basename(fname))
-            try:
-                os.link(fname, dst)  # zero-copy carry-forward
-            except OSError:
-                shutil.copy2(fname, dst)
+        out = self._write(merge_fn(target), v, cluster_by, zorder_by)
+        self._carry(carried, out)
         self.flip(v)
         return v
 
@@ -345,7 +385,7 @@ class ParquetTable:
         """Data-skipping IN-list read: only files whose footer range
         admits one of *values*, with the exact membership filter on
         top."""
-        schema = self.read(version).schema
+        schema = self.schema(version)
         keep = self.pruned_files_in(column, values, version)
         df = (
             self.spark.read.schema(schema).parquet(*keep)
@@ -366,7 +406,7 @@ class ParquetTable:
         with cluster_by/zorder_by, a point or range lookup touches a few
         files of a 100 TB table instead of scanning it. Files without
         usable stats are read (skipping must never drop rows)."""
-        schema = self.read(version).schema
+        schema = self.schema(version)
         keep = self.pruned_files(ranges, version)
         df = (
             self.spark.read.schema(schema).parquet(*keep)
@@ -426,11 +466,42 @@ class ParquetTable:
         pick the file layout (tight footer ranges → read_pruned and
         merge_publish skip files)."""
         v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        self._clustered(df, cluster_by, zorder_by, partitions).write.mode(
-            "overwrite"
-        ).parquet(out)
+        self._write(df, v, cluster_by, zorder_by, partitions)
         return v
+
+    def _write(
+        self,
+        df: DataFrame,
+        v: int,
+        cluster_by: Sequence[str] | None = None,
+        zorder_by: Sequence[str] | None = None,
+        partitions: int | None = None,
+    ) -> str:
+        """Write *df* with the given layout as version *v* (not yet live)
+        and record its schema. Every write path goes through here, so a
+        merge check firing inside the write surfaces as MultipleMatchError
+        and leaves only an unreferenced directory behind."""
+        out = os.path.join(self.path, f"v{v}")
+        with check_errors_raised():
+            df = self._clustered(df, cluster_by, zorder_by, partitions)
+            df.write.mode("overwrite").parquet(out)
+        schema = _nullable(df.schema)
+        tmp = os.path.join(out, f".{_SCHEMA_FILE}.tmp")
+        with open(tmp, "w") as f:
+            f.write(schema.json())
+        os.replace(tmp, os.path.join(out, _SCHEMA_FILE))
+        self._schemas[v] = schema
+        return out
+
+    @staticmethod
+    def _carry(files: Sequence[str], out: str) -> None:
+        """Hard-link unchanged *files* into version directory *out*."""
+        for fname in files:
+            dst = os.path.join(out, os.path.basename(fname))
+            try:
+                os.link(fname, dst)  # zero-copy carry-forward
+            except OSError:
+                shutil.copy2(fname, dst)
 
     def flip(self, v: int) -> None:
         """Atomically point readers at a previously staged version."""
@@ -470,7 +541,7 @@ class ParquetTable:
         files must acquire the new columns."""
         if not self.exists():
             return self.publish(df)
-        cur_schema = self.read().schema
+        cur_schema = self.schema()
         same = [f.name for f in cur_schema] == df.columns and all(
             f.dataType == g.dataType for f, g in zip(cur_schema, df.schema)
         )
@@ -487,14 +558,7 @@ class ParquetTable:
                 self.read().unionByName(df, allowMissingColumns=evolve)
             )
         v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        df.write.mode("overwrite").parquet(out)
-        for fname in self.files():
-            dst = os.path.join(out, os.path.basename(fname))
-            try:
-                os.link(fname, dst)  # zero-copy carry-forward
-            except OSError:
-                shutil.copy2(fname, dst)
+        self._carry(self.files(), self._write(df, v))
         self.flip(v)
         return v
 
@@ -536,22 +600,14 @@ class ParquetTable:
             return self.current_version() or 0
         large = [f for f in self.files() if f not in set(small)]
         bins = max(1, sum(os.path.getsize(f) for f in small) // min_file_bytes + 1)
-        schema = self.read().schema
-        packed = self.spark.read.schema(schema).parquet(*small)
+        packed = self.spark.read.schema(self.schema()).parquet(*small)
         packed = (
             self._clustered(packed, cluster_by, zorder_by, int(bins))
             if (cluster_by or zorder_by)
             else packed.coalesce(int(bins))
         )
         v = (self.current_version() or 0) + 1
-        out = os.path.join(self.path, f"v{v}")
-        packed.write.mode("overwrite").parquet(out)
-        for fname in large:
-            dst = os.path.join(out, os.path.basename(fname))
-            try:
-                os.link(fname, dst)
-            except OSError:
-                shutil.copy2(fname, dst)
+        self._carry(large, self._write(packed, v))
         self.flip(v)
         return v
 
@@ -572,7 +628,7 @@ class ParquetTable:
         added by an evolving append read as NULL on the old side."""
         f_old = {os.path.basename(f): f for f in self.files(v_from)}
         f_new = {os.path.basename(f): f for f in self.files(v_to)}
-        schema = self.read(v_to).schema
+        schema = self.schema(v_to)
         old_only = [f for b, f in f_old.items() if b not in f_new]
         new_only = [f for b, f in f_new.items() if b not in f_old]
 

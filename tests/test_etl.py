@@ -341,6 +341,24 @@ def test_shipping_views_vs_oracle(spark, warehouse, identifiers, tmp_path):
     }
 
 
+def test_recorded_schemas_and_footer_counts_match_the_data(spark, warehouse, identifiers):
+    """After an ETL run, every warehouse table's recorded schema is the one
+    parquet infers from its version directory, and the footer row count
+    is the table's row count."""
+    import os
+
+    run_pipeline(spark, warehouse, identifiers)
+    fresh = Warehouse(spark, warehouse.root)  # no schema cached in memory
+    written = [n for n, t in fresh.tables.items() if t.exists()]
+    assert {"sample", "presence_absence", "encounter", "location"} <= set(written)
+    for name in written:
+        tbl = fresh.tables[name]
+        version_dir = os.path.join(tbl.path, f"v{tbl.current_version()}")
+        assert os.path.isfile(os.path.join(version_dir, "_schema.json")), name
+        assert tbl.schema() == spark.read.parquet(version_dir).schema, name
+        assert tbl.num_rows() == tbl.read().count(), name
+
+
 def test_bootstrap_publish_is_clustered_so_first_merge_prunes(spark, tmp_path):
     """The FIRST publish of a warehouse table must range-cluster on the
     match key (etl/warehouse.py _upsert): un-clustered bootstrap footers

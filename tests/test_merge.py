@@ -7,7 +7,13 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from id3c_spark.operators.merge import MultipleMatchError, find_or_create, merge
+from id3c_spark.operators.merge import (
+    MultipleMatchError,
+    check_errors_raised,
+    find_or_create,
+    merge,
+)
+from id3c_spark.sources.store import ParquetTable
 
 
 def df_of(spark, rows, schema):
@@ -76,9 +82,9 @@ def test_multi_match_errors(spark):
     updates = df_of(spark, [
         (None, "dup", None, "2021-01-01", None),
     ], SAMPLE_SCHEMA).drop("sample_id")
-    with pytest.raises(MultipleMatchError):
+    with pytest.raises(MultipleMatchError), check_errors_raised():
         merge(target, updates, [["identifier"]], id_col="sample_id",
-              update_cols=["collected"])
+              update_cols=["collected"]).df.collect()
 
 
 def test_duplicate_update_keys_raise(spark):
@@ -90,9 +96,75 @@ def test_duplicate_update_keys_raise(spark):
         (None, "s1", None, "2020-01-05", None),
         (None, "s1", None, "2020-01-06", None),
     ], SAMPLE_SCHEMA).drop("sample_id")
-    with pytest.raises(MultipleMatchError, match="duplicate update rows"):
+    with pytest.raises(MultipleMatchError, match="duplicate update rows"), check_errors_raised():
         merge(target, updates, [["identifier"]], id_col="sample_id",
-              update_cols=["collected"])
+              update_cols=["collected"]).df.collect()
+
+
+def test_alternate_keys_resolving_to_one_target_raise(spark):
+    """Two update rows that match the same target row by different
+    alternate keys would write two rows with one sample_id."""
+    target = df_of(spark, [(1, "s1", "c1", "2020-01-01", None)], SAMPLE_SCHEMA)
+    updates = df_of(spark, [
+        (None, "s1", None, "2020-01-05", None),
+        (None, None, "c1", "2020-01-06", None),
+    ], SAMPLE_SCHEMA).drop("sample_id")
+    with pytest.raises(MultipleMatchError), check_errors_raised():
+        merge(target, updates, [["identifier"], ["collection_identifier"]],
+              id_col="sample_id", update_cols=["collected"]).df.collect()
+
+
+def test_merge_launches_no_spark_job(spark):
+    """Building the merge plan is free: checks run inside the write."""
+    sc = spark.sparkContext
+    target = df_of(spark, [(1, "s1", "c1", "2020-01-01", '{"a":1}')], SAMPLE_SCHEMA)
+    updates = df_of(spark, [
+        (None, "s1", None, "2020-01-05", '{"b":2}'),
+        (None, None, "c9", "2020-01-06", None),
+    ], SAMPLE_SCHEMA).drop("sample_id")
+    group = "merge-builds-a-plan"
+    sc.setJobGroup(group, group)
+    try:
+        merge(target, updates, [["identifier"], ["collection_identifier"]],
+              id_col="sample_id", update_cols=["collected"])
+        merge(target, updates, ["identifier"], id_col="sample_id",
+              update_cols=["collected"], error_on_multi=False)
+        find_or_create(target, updates.select("identifier"), ["identifier"], "sample_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_merge_publish_failed_check_leaves_table_unchanged(spark, tmp_path):
+    """A batch that breaks a check raises from merge_publish, leaves the
+    live version as it was, and the next clean batch publishes. The check
+    columns are not written, so this also proves the write still
+    evaluates them."""
+    tbl = ParquetTable(spark, str(tmp_path / "sample"))
+    tbl.publish(df_of(spark, [
+        (1, "s1", "c1", "2020-01-01", None),
+        (2, "s2", "c2", "2020-01-02", None),
+    ], SAMPLE_SCHEMA))
+    v0 = tbl.current_version()
+    before = sorted(tuple(r) for r in tbl.read().collect())
+    keys = [["identifier"], ["collection_identifier"]]
+
+    def publish(rows):
+        updates = df_of(spark, rows, SAMPLE_SCHEMA).drop("sample_id")
+        return tbl.merge_publish(
+            updates, keys,
+            lambda t: merge(t, updates, keys, "sample_id", update_cols=["collected"]).df,
+        )
+
+    with pytest.raises(MultipleMatchError):
+        publish([(None, "s1", "c2", "2021-01-01", None)])   # s1 → row 1, c2 → row 2
+    assert tbl.current_version() == v0
+    assert sorted(tuple(r) for r in tbl.read().collect()) == before
+
+    publish([(None, "s1", None, "2021-01-01", None)])
+    assert tbl.current_version() == v0 + 1
+    rows = {r.sample_id: r.collected for r in tbl.read().collect()}
+    assert rows == {1: "2021-01-01", 2: "2020-01-02"}
 
 
 def test_find_or_create(spark):
@@ -104,12 +176,18 @@ def test_find_or_create(spark):
     assert rows["kiosk"].site_id == 1  # existing row untouched
 
 
-def test_single_pass_merge_matches_staged(spark):
-    """r16 one-full-outer-join merge (single key, no details): must
-    return EXACTLY the staged branch-family rows, including the
-    error_on_multi=False corners — duplicate update keys where one copy
-    changes and another does not (the unchanged copy is dropped), all
-    copies unchanged (one target row emitted), null-key updates
+def _norm(rows):
+    return sorted(
+        (tuple(r) for r in rows),
+        key=lambda t: tuple((x is None, x) for x in t),
+    )
+
+
+def test_duplicate_update_keys_tolerated_golden(spark):
+    """error_on_multi=False corners, against the rows (and stats) the
+    staged branch-family merge produced: duplicate update keys where one
+    copy changes and another does not (the unchanged copy is dropped),
+    all copies unchanged (one target row emitted), null-key updates
     (insert), null-key target rows (untouched), and plain
     insert/update/skip."""
     schema = "k long, v string, extra string"
@@ -127,25 +205,49 @@ def test_single_pass_merge_matches_staged(spark):
         (9, "new", None),            # insert
         (None, "nullk-upd", None),   # null key → insert
     ], schema).drop("extra")
-
-    kw = dict(
-        key_cols=["k"], id_col="k", update_cols=["v"],
+    res = merge(
+        target, updates, key_cols=["k"], id_col="k", update_cols=["v"],
         details_col=None, error_on_multi=False,
     )
-    fast = merge(target, updates, single_pass=True, **kw)
-    slow = merge(target, updates, single_pass=False, **kw)
+    assert _norm(res.df.collect()) == [
+        (1, "a2", "x"), (2, "b", "y"), (3, "c", "z"), (9, "new", None),
+        (None, "nullk-upd", None), (None, "nullkey", "w"),
+    ]
+    assert res.stats() == {"updated": 1, "inserted": 2, "unchanged": 1}
 
-    def norm(rows):
-        return sorted(
-            (tuple(r) for r in rows),
-            key=lambda t: tuple((x is None, x) for x in t),
-        )
 
-    assert norm(fast.df.collect()) == norm(slow.df.collect())
-    for attr in ("updated_df", "inserted_df", "unchanged_df"):
-        fa = norm(getattr(fast, attr).collect())
-        sa = norm(getattr(slow, attr).collect())
-        assert fa == sa, attr
+def test_details_and_alternate_keys_golden(spark):
+    """Alternate keys with a details merge, against the rows (and stats)
+    the staged branch-family merge produced."""
+    target = df_of(spark, [
+        (1, "s1", "c1", "2020-01-01", '{"a":1,"b":2}'),
+        (2, None, "c2", "2020-01-02", None),
+        (3, "s3", None, "2020-01-03", '{"z":true}'),
+        (4, "s4", "c4", "2020-01-04", '{"keep":1}'),
+        (5, "s5", "c5", "2020-01-05", '{"same":1}'),
+    ], SAMPLE_SCHEMA)
+    updates = df_of(spark, [
+        ("s1", None, None, '{"b":3,"c":[1,2]}'),   # details merge, collected kept
+        (None, "c2", "2020-03-01", '{"n":1}'),     # collection-id match, null details
+        ("s3", "c3", None, None),                  # fills collection id, no details
+        ("s5", None, None, '{"same":1}'),          # no-op details merge → unchanged
+        ("s9", "c9", "2020-04-01", '{"new":1}'),   # insert
+        (None, "c10", None, None),                 # insert by collection id only
+    ], "identifier string, collection_identifier string, collected string, details string")
+    res = merge(
+        target, updates, [["identifier"], ["collection_identifier"]],
+        "sample_id", update_cols=["collected"],
+    )
+    assert _norm(res.df.collect()) == [
+        (-3728145251675179006, None, "c10", None, None),
+        (1, "s1", "c1", "2020-01-01", '{"a":1,"b":3,"c":[1,2]}'),
+        (2, None, "c2", "2020-03-01", '{"n":1}'),
+        (3, "s3", "c3", "2020-01-03", '{"z":true}'),
+        (4, "s4", "c4", "2020-01-04", '{"keep":1}'),
+        (5, "s5", "c5", "2020-01-05", '{"same":1}'),
+        (7392834862228682131, "s9", "c9", "2020-04-01", '{"new":1}'),
+    ]
+    assert res.stats() == {"updated": 3, "inserted": 2, "unchanged": 1}
 
 
 def test_deterministic_insert_ids(spark):

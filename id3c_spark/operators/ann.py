@@ -182,6 +182,33 @@ def source_bytes(df: DataFrame) -> int | None:
     return int(total * len(files) / len(sample))
 
 
+def fits_one_task(
+    df: DataFrame, int_cols: tuple = (), double_cols: tuple = ()
+) -> bool:
+    """The one regime gate: True when *df* runs as ONE fused narrow
+    task instead of the distributed plan — every column in *int_cols*
+    is integral (the numpy mirrors carry ids as int64), every column in
+    *double_cols* is double, and the frame is file-backed with listed
+    source bytes ≤ AUTO_SHARD_BYTES (source_bytes: driver-side listing,
+    no Spark job). Derived frames keep their lineage through
+    inputFiles(), so a filtered scan gates on its source; in-memory
+    frames and large sources keep the distributed plans. File-backed
+    also guarantees ≥ 1 scan partition (a parquet footer is never 0
+    bytes), so the fused task runs even on an empty source. Both
+    regimes return the same schema; callers gating several frames
+    combine calls with ``and``."""
+    from pyspark.sql import types as T
+
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    schema = df.schema
+    if not all(isinstance(schema[c].dataType, integral) for c in int_cols):
+        return False
+    if not all(isinstance(schema[c].dataType, T.DoubleType) for c in double_cols):
+        return False
+    b = source_bytes(df)
+    return b is not None and b <= AUTO_SHARD_BYTES
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -570,24 +597,6 @@ def srp_sketch(
     return src.mapInPandas(gen, "id long, sketch long")
 
 
-def _fuse_sketch(sk: DataFrame) -> bool:
-    """Stats gate for the fused small-regime sketch-pair paths: integral
-    id column (the numpy mirror carries ids as int64) AND a file-backed
-    source whose listed bytes fit one task — the same
-    statistics-before-strategy step as _auto_shards. Sketches are 8
-    bytes/row, so a source under AUTO_SHARD_BYTES bounds the gathered
-    relation far below one task's memory; a 100 TB corpus gates false
-    and keeps the banded distributed join."""
-    from pyspark.sql import types as T
-
-    from id3c_spark.operators.linalg import _single_task_source
-
-    return isinstance(
-        sk.schema["id"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    ) and _single_task_source(sk)
-
-
 def _fused_sketch_pairs(
     sk: DataFrame, bits: int, bands: int, max_hamming: int
 ) -> DataFrame:
@@ -668,7 +677,8 @@ def _fused_sketch_pairs(
             "hamming": triples[:, 2].astype(np.int32),
         })
 
-    return src.mapInPandas(run, "id_a long, id_b long, hamming int")
+    t = sk.schema["id"].dataType.simpleString()
+    return src.mapInPandas(run, f"id_a {t}, id_b {t}, hamming int")
 
 
 def sketch_hamming_pairs(
@@ -676,7 +686,6 @@ def sketch_hamming_pairs(
     bits: int,
     bands: int,
     max_hamming: int,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """All pairs of int64 bit-sketches (columns: id, sketch) within
     *max_hamming* — the shared banded-join core behind srp_pairs and
@@ -697,13 +706,11 @@ def sketch_hamming_pairs(
         )
     if bits % bands:
         raise ValueError("bits must divide evenly into bands")
-    # *fuse* (r16): stats-gated — a small file-backed sketch source runs
-    # the band-bucket + popcount refine as one narrow task after one
-    # tiny exchange (see _fused_sketch_pairs); large or in-memory
-    # sources keep the banded distributed self-join below.
-    if fuse is None:
-        fuse = _fuse_sketch(sk)
-    if fuse:
+    # a small file-backed sketch source runs the band-bucket + popcount
+    # refine as one narrow task after one tiny exchange (see
+    # _fused_sketch_pairs); sketches are 8 bytes/row, so the gate bounds
+    # the gathered relation far below one task's memory
+    if fits_one_task(sk, ("id",)):
         return _fused_sketch_pairs(sk, bits, bands, max_hamming)
     width = bits // bands
     mask = (1 << width) - 1
@@ -851,7 +858,6 @@ def sketch_hamming_join(
     bits: int,
     bands: int,
     max_hamming: int,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Bipartite variant of sketch_hamming_pairs: all (left.id, right.id)
     pairs whose int64 bit-sketches differ in <= *max_hamming* bits —
@@ -866,15 +872,9 @@ def sketch_hamming_join(
         )
     if bits % bands:
         raise ValueError("bits must divide evenly into bands")
-    # *fuse* (r16): stats-gated — when BOTH sketch sources are
-    # file-backed and fit one task, the band join + distinct collapse
-    # into one narrow cogroup task (see _fused_sketch_join); any big or
-    # in-memory side keeps the distributed banded join below.
-    if fuse is None:
-        from id3c_spark.operators.linalg import _single_task_source
-
-        fuse = _single_task_source(left) and _single_task_source(right)
-    if fuse:
+    # when BOTH sketch sources fit one task, the band join + distinct
+    # collapse into one narrow cogroup task (see _fused_sketch_join)
+    if fits_one_task(left) and fits_one_task(right):
         return _fused_sketch_join(left, right, bits, bands, max_hamming)
     width = bits // bands
     mask = (1 << width) - 1
@@ -976,7 +976,12 @@ def _ivf_pivots(cp: DataFrame, nlist: int):
     piv_ids = np.asarray([r.id for r in piv_rows])
     order = np.argsort(piv_ids)
     piv_ids = piv_ids[order]
-    raw = np.asarray([np.asarray(piv_rows[i].v, dtype=np.float64) for i in order])
+    # an empty corpus has no pivots: a (0, 0) matrix keeps the staged
+    # passes well-formed (their assignment sees no rows)
+    raw = (
+        np.asarray([np.asarray(piv_rows[i].v, dtype=np.float64) for i in order])
+        if piv_rows else np.empty((0, 0))
+    )
     piv_mat = raw / np.sqrt((raw * raw).sum(axis=1))[:, None]
     return cp.sparkSession.sparkContext.broadcast((piv_ids, piv_mat, raw))
 
@@ -1113,7 +1118,6 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) coarse quantizer —
     the production-scale companion to lsh_bucketed_topk.
@@ -1138,17 +1142,14 @@ def ivf_topk(
     # shared work
     cp = _prep(corpus, id_col, vec_col)
 
-    # *fuse* (self-search only): None = stats-gated — when _auto_shards
-    # says the corpus fits ONE GEMM task (same gate as the cosine/LSH
-    # fast paths), the pivot-collect job, both assignment passes, the
-    # cell-keyed pack join, and the rank window collapse into one narrow
-    # mapInPandas stage. Pivot selection, 6-dp cosine assignment with
-    # pivot-id tiebreak, self-exclusion, rerank rounding and the
-    # (sim desc, neighbor_id asc) rank are identical to the staged path
-    # (parity-tested); multi-shard corpora keep the cell-keyed layout.
-    if fuse is None:
-        fuse = queries is corpus and _auto_shards(corpus) == 1
-    if fuse and queries is corpus:
+    # self-search below the gate: the pivot-collect job, both assignment
+    # passes, the cell-keyed pack join, and the rank window collapse into
+    # one narrow mapInPandas stage. Pivot selection, 6-dp cosine
+    # assignment with pivot-id tiebreak, self-exclusion, rerank rounding
+    # and the (sim desc, neighbor_id asc) rank are identical to the
+    # staged path (parity-tested); larger corpora keep the cell-keyed
+    # layout.
+    if queries is corpus and fits_one_task(corpus):
         import hashlib
 
         import numpy as np
@@ -1217,7 +1218,6 @@ def ivf_trained_topk(
     vec_col: str = "embedding",
     train_iter: int = 2,
     coarse=None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer — ``ivf_topk`` with Lloyd
     k-means cells instead of md5-pivot cells (reusing pq_train's m=1
@@ -1234,26 +1234,25 @@ def ivf_trained_topk(
     FAISS train-once/serve-many separation): a production index trains
     on a sample ONCE and every serving query skips the Lloyd passes —
     at 100 TB, retraining per lookup would dwarf the lookup."""
-    from id3c_spark.operators.pq import _assign_topn, _normalized, pq_train
+    from id3c_spark.operators.pq import (
+        EmptyCorpusError,
+        _assign_topn,
+        _normalized,
+        pq_train,
+    )
 
     same = queries is corpus
     train_here = coarse is None
     cp = _prep(corpus, id_col, vec_col)
 
-    # *fuse* (self-search only): None = stats-gated — when the corpus
-    # fits one task (clustering._fuse_vectors, the shared
-    # statistics-before-strategy step), the Lloyd training collects, both
+    # self-search below the gate: the Lloyd training collects, both
     # normalize/assign passes, the cell-keyed pack join and the rank
     # window collapse into ONE lazy narrow mapInPandas stage with zero
     # plan-build driver jobs. Normalization, lloyd_np training, 6-dp L2
     # assignment with index tiebreak and the per-cell exact-cosine rerank
     # replay the staged path's np ops elementwise (parity-tested); larger
     # corpora keep the broadcast-centroid distributed shape untouched.
-    if fuse is None:
-        from id3c_spark.operators.clustering import _fuse_vectors
-
-        fuse = same and _fuse_vectors(cp)
-    if fuse and same:
+    if same and fits_one_task(cp, ("id",)):
         import numpy as np
         import pandas as pd
 
@@ -1309,7 +1308,14 @@ def ivf_trained_topk(
     vn = vn.persist() if train_here else vn
     qn = vn if same else _normalized(qp)
     if train_here:
-        coarse = pq_train(vn, "id", "v", m=1, k=nlist, max_iter=train_iter)
+        try:
+            coarse = pq_train(vn, "id", "v", m=1, k=nlist, max_iter=train_iter)
+        except EmptyCorpusError:
+            # no cells: the passes below run over no rows and return the
+            # empty result, as the fused path does
+            import numpy as np
+
+            coarse = np.empty((1, 0, 0))
         vn.unpersist()
     bcg = cp.sparkSession.sparkContext.broadcast(coarse)
     cells = _assign_topn(vn, bcg, 1)
@@ -1333,7 +1339,6 @@ def lsh_bucketed_topk(
     vec_col: str = "embedding",
     seed: str = "lsh",
     multiprobe: int = 0,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates share at least one LSH band
     (planes/bands sign bits), exact cosine rerank within candidates.
@@ -1355,10 +1360,8 @@ def lsh_bucketed_topk(
     index untouched — the classic recall/cost dial that beats adding
     bands (which re-hashes the corpus too).
 
-    *fuse* (self-search only): None = stats-gated — when _auto_shards
-    says the corpus fits ONE GEMM task (≤ ~65 k vectors by file-size /
-    count stats, the same gate as cosine_topk's r14 fast path), the
-    band exchange, bucket self-join, rerank joins, and rank window all
+    Self-search below the regime gate (fits_one_task), the band
+    exchange, bucket self-join, rerank joins, and rank window all
     collapse into one narrow mapInPandas stage (projection → banding →
     in-memory bucket grouping → candidate dedup → exact-cosine rerank →
     per-query top-k). Candidates, 6-dp rounding, and the (sim desc,
@@ -1375,9 +1378,7 @@ def lsh_bucketed_topk(
     spark = queries.sparkSession
     w_mat = hyperplanes(dim, planes, seed)
 
-    if fuse is None:
-        fuse = queries is corpus and _auto_shards(corpus) == 1
-    if fuse and queries is corpus:
+    if queries is corpus and fits_one_task(corpus):
         src = corpus.select(
             F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
         ).coalesce(1)
@@ -1622,7 +1623,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cell_rows: int = 4096,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Semantic (embedding-space) deduplication: cluster near-identical
     embeddings and keep one canonical document per cluster — the
@@ -1660,24 +1660,19 @@ def semantic_dedup(
 
     cp = _prep(corpus, id_col, vec_col)
 
-    # *fuse*: None = stats-gated (clustering._fuse_vectors, the shared
-    # statistics-before-strategy step) — when the corpus fits one task,
-    # the nlist count job, the pivot collect, the persist/join/pack
-    # machinery, the block self-join and dedup_clusters' regime probe all
-    # collapse into ONE lazy narrow mapInPandas stage. Pivot selection,
-    # 6-dp cosine assignment and pair scoring replay the staged np ops
-    # elementwise; the components are min-root union-find — the identical
-    # min-label components both dedup_clusters regimes produce. The
-    # max_cell_rows sub-block split only bounds task matmuls (the hit
-    # set is the union over blocks either way), and rows sharing an id
-    # hash to the same sub-block, so the strict id triangle applies to
-    # them in both paths. Larger corpora keep the packed-cell layout —
-    # the 100 TB shape — untouched.
-    if fuse is None:
-        from id3c_spark.operators.clustering import _fuse_vectors
-
-        fuse = _fuse_vectors(cp)
-    if fuse:
+    # below the regime gate the nlist count job, the pivot collect, the
+    # persist/join/pack machinery, the block self-join and
+    # dedup_clusters' regime probe all collapse into ONE lazy narrow
+    # mapInPandas stage. Pivot selection, 6-dp cosine assignment and
+    # pair scoring replay the staged np ops elementwise; the components
+    # are min-root union-find — the identical min-label components both
+    # dedup_clusters regimes produce. The max_cell_rows sub-block split
+    # only bounds task matmuls (the hit set is the union over blocks
+    # either way), and rows sharing an id hash to the same sub-block, so
+    # the strict id triangle applies to them in both paths. Larger
+    # corpora keep the packed-cell layout — the 100 TB shape —
+    # untouched.
+    if fits_one_task(cp, ("id",)):
         import hashlib
 
         fixed_nlist = nlist
@@ -1756,8 +1751,9 @@ def semantic_dedup(
                 "id": ids, "cluster": cl, "keep": ids == cl
             })
 
+        t = cp.schema["id"].dataType.simpleString()
         return src.mapInPandas(
-            run, "id long, cluster long, keep boolean"
+            run, f"id {t}, cluster long, keep boolean"
         ).select(F.col("id").alias(id_col), "cluster", "keep")
 
     cp = cp.persist()
@@ -1910,7 +1906,6 @@ def exact_rerank(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Exact-cosine rerank of ANY candidate relation (query_id,
     neighbor_id) → top-k per query by true similarity — the refine step
@@ -1922,30 +1917,23 @@ def exact_rerank(
     Compose: exact_rerank(q, c, pq_topk(q, c, books, k=4*k), k) — the
     standard recall restorer for compressed indexes.
 
-    Laziness note (ADVICE r15): inside the fuse gate, building the
-    returned DataFrame eagerly collects the gate-bounded query and
-    corpus vector relations (one small job each) — callers that build
-    plans speculatively and never execute them still pay that; pass
-    fuse=False to keep a fully lazy plan."""
+    Laziness note: when queries, corpus and candidates all fit one task
+    (fits_one_task), building the returned DataFrame collects the query
+    and corpus vectors (one small job each), even if the plan is never
+    executed. Above the gate the returned plan is fully lazy."""
     qe = _prep(queries, id_col, vec_col).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
     )
     ce = _prep(corpus, id_col, vec_col).select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv")
     )
-    # *fuse* (r15): None = stats-gated — when queries, corpus AND the
-    # candidate relation's source files each fit one task, the joins +
-    # scoring + window run in one narrow stage (_fused_rerank); any
-    # in-memory or large input keeps the distributed shape below.
-    if fuse is None:
-        from id3c_spark.operators.linalg import _single_task_source
-
-        fuse = (
-            _single_task_source(queries)
-            and _single_task_source(corpus)
-            and _single_task_source(candidates)
-        )
-    if fuse:
+    # when queries, corpus AND the candidate relation each fit one task,
+    # the joins + scoring + window run in one narrow stage (_fused_rerank)
+    if (
+        fits_one_task(queries)
+        and fits_one_task(corpus)
+        and fits_one_task(candidates)
+    ):
         # no .distinct() here — the fused task's pair SET is the dedup,
         # keeping the plan exchange-free
         return _fused_rerank(

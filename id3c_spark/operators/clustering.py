@@ -82,8 +82,8 @@ def micros6(x):
         # micro pipeline cannot represent; fail loudly rather than
         # emit an undefined int64 (ADVICE r15)
         raise ValueError(
-            "micros6: non-finite component; route this corpus through "
-            "the staged (fuse=False) path, whose decimal cast NULLs it"
+            "micros6: non-finite component; the fused single-task path "
+            "cannot represent it (the staged path's decimal cast NULLs it)"
         )
     fa = np.abs(x) * 1e6
     frac = fa - np.floor(fa)
@@ -199,48 +199,30 @@ def _assign(vp: DataFrame, bc, with_dist: bool = False) -> DataFrame:
     return vp.mapInPandas(gen, schema)
 
 
-def _fuse_vectors(vp: DataFrame) -> bool:
-    """Stats gate for the fused single-task Lloyd paths: integral id
-    (the numpy mirror is int64/str(int)) and a file-backed source small
-    enough for one task — the same statistics-before-strategy step as
-    ann._auto_shards, driver-side listing only."""
-    from pyspark.sql import types as T
-
-    from id3c_spark.operators.linalg import _single_task_source
-
-    if not isinstance(
-        vp.schema["id"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    ):
-        return False
-    return _single_task_source(vp)
-
-
 def kmeans(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
     max_iter: int = 2,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Lloyd k-means: *max_iter* assign/update rounds from the
     deterministic md5 seed, then a final assignment. Returns
     ``(id_col, cluster, dist)`` where cluster is the 0-based index of the
     seed ordering and dist the 6-dp squared L2 to the final centroid.
 
-    *fuse*: None = stats-gated (_fuse_vectors) — when the corpus fits
-    one task, the seed-collect job, every per-iteration centroid
-    collect, and the final assignment collapse into ONE lazy narrow
-    mapInPandas stage (zero driver jobs at plan-build time); training
+    Below the regime gate (ann.fits_one_task) the seed-collect job,
+    every per-iteration centroid collect, and the final assignment
+    collapse into ONE lazy narrow mapInPandas stage (zero driver jobs
+    at plan-build time); training
     arithmetic is bit-identical by the lloyd_np contract. Larger
     corpora keep the broadcast-centroid distributed iteration."""
     import numpy as np
 
+    from id3c_spark.operators.ann import fits_one_task
+
     vp = _prep(df, id_col, vec_col)
-    if fuse is None:
-        fuse = _fuse_vectors(vp)
-    if fuse:
+    if fits_one_task(vp, ("id",)):
         import pandas as pd
 
         src = vp.coalesce(1)

@@ -254,6 +254,7 @@ def _fused_shingle_inter(
     stays.)"""
     from id3c_spark.functions.text import words_array
 
+    t = df.schema[id_col].dataType.simpleString()
     src = df.select(
         F.col(id_col).alias("id"), words_array(F.col(text_col)).alias("ws")
     ).coalesce(1)
@@ -303,26 +304,8 @@ def _fused_shingle_inter(
         })
 
     return src.mapInPandas(
-        run, "id_a long, id_b long, n_a long, n_b long, n_inter long"
+        run, f"id_a {t}, id_b {t}, n_a long, n_b long, n_inter long"
     )
-
-
-def _fuse_text(df: DataFrame, id_col: str) -> bool:
-    """Stats gate for the fused small-regime text paths — integral id
-    column (the numpy mirrors carry ids as int64) AND a file-backed
-    source whose listed bytes fit one task (linalg._single_task_source,
-    the same statistics-before-strategy step as ann._auto_shards).
-    Derived frames keep lineage through inputFiles(), so a filtered
-    documents scan gates true while an in-memory test frame or a 100 TB
-    corpus keeps the distributed banded/blocked shape."""
-    from pyspark.sql import types as T
-
-    from id3c_spark.operators.linalg import _single_task_source
-
-    return isinstance(
-        df.schema[id_col].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    ) and _single_task_source(df)
 
 
 def _jaccard_from_inter(inter: DataFrame, threshold: float) -> DataFrame:
@@ -372,11 +355,14 @@ def _fused_minhash_inter(
     With *corpus* (the incremental mode) inputs ride one tagged union
     and candidates pair side 0 (new) against side 1 (corpus) only; ids
     may overlap between sides. Docs with < k words produce no signature
-    row, exactly like the distributed groupBy over an empty explode."""
+    row, exactly like the distributed groupBy over an empty explode.
+    id_a/id_b keep the id types of *new*/*corpus*."""
     from id3c_spark.functions.text import words_array
 
     r = num_hashes // bands
     sides = [new] if corpus is None else [new, corpus]
+    ta = new.schema[id_col].dataType.simpleString()
+    tb = sides[-1].schema[id_col].dataType.simpleString()
     tagged = None
     for s_idx, s_df in enumerate(sides):
         part = s_df.select(
@@ -458,7 +444,7 @@ def _fused_minhash_inter(
         })
 
     return src.mapInPandas(
-        run, "id_a long, id_b long, n_a long, n_b long, n_inter long"
+        run, f"id_a {ta}, id_b {tb}, n_a long, n_b long, n_inter long"
     )
 
 
@@ -470,7 +456,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int | None = None,
     words: DataFrame | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with shingle-set Jaccard ≥ threshold.
 
@@ -491,18 +476,17 @@ def ngram_jaccard_pairs(
     blocking the driver per call (the probe was a measurable share of
     the curation pipeline's latency).
     """
-    # *fuse* (r15): None = stats-gated — when the source is file-backed
-    # and fits one task (same file-size statistic as ann._auto_shards),
-    # the whole shingle → stop-cap → self-join → intersection-count
-    # pipeline collapses into _fused_shingle_inter's single narrow
-    # stage; the jaccard division/round/threshold below are shared by
-    # both paths, so the visible arithmetic is identical (parity-tested
-    # in tests/test_dedup_similarity.py). Callers passing a prebuilt
+    # below the regime gate (ann.fits_one_task) the whole shingle →
+    # stop-cap → self-join → intersection-count pipeline collapses into
+    # _fused_shingle_inter's single narrow stage; the jaccard
+    # division/round/threshold below are shared by both paths, so the
+    # visible arithmetic is identical (parity-tested in
+    # tests/test_dedup_similarity.py). Callers passing a prebuilt
     # *words* relation (the curation flow) keep the distributed shape —
     # their words cache is the better sharing vehicle.
-    if fuse is None:
-        fuse = words is None and _fuse_text(df, id_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if words is None and fits_one_task(df, (id_col,)):
         inter = _fused_shingle_inter(df, id_col, text_col, k, max_df)
         return _jaccard_from_inter(inter, threshold)
     # NO persist anywhere: the shingle pipeline is shared across the
@@ -684,7 +668,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Exact Jaccard self-join via PPJoin-style prefix filtering
     (Chaudhuri/Ganti/Kaushik SSJoin, Xiao et al. PPJoin): order every
@@ -716,16 +699,16 @@ def prefix_filter_jaccard_pairs(
 
     frac = Fraction(threshold).limit_denominator(10**6)
     num, den = frac.numerator, frac.denominator
-    # *fuse* (r15): the prefix filter only prunes CANDIDATES — the
-    # integer-exact verification makes the result identical to the
-    # brute-force join (docstring above), and every pair at J ≥ t > 0
-    # shares a shingle. So the stats-gated small regime reuses
+    # The prefix filter only prunes CANDIDATES — the integer-exact
+    # verification makes the result identical to the brute-force join
+    # (docstring above), and every pair at J ≥ t > 0 shares a shingle.
+    # So the small regime below the gate reuses
     # _fused_shingle_inter's shared-shingle pair relation outright (no
     # frequency ranking needed when the whole corpus is one task) and
     # applies the SAME den·ni ≥ num·union integer filter and rounding.
-    if fuse is None:
-        fuse = _fuse_text(df, id_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(df, (id_col,)):
         inter = _fused_shingle_inter(df, id_col, text_col, k, None)
         union_f = F.col("n_a") + F.col("n_b") - F.col("n_inter")
         return (
@@ -822,7 +805,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH, verified with exact Jaccard.
 
@@ -834,16 +816,16 @@ def minhash_lsh_pairs(
     is 1-(1-s^r)^b).
     """
     assert num_hashes % bands == 0
-    # *fuse* (r15): None = stats-gated — a small file-backed corpus runs
+    # below the regime gate (ann.fits_one_task) a corpus runs
     # signature + banding + candidate pairing + exact verify in ONE
     # narrow mapInPandas stage (_fused_minhash_inter); large or
     # in-memory corpora keep the banded join below. The jaccard
     # division/round/threshold are shared (_jaccard_from_inter), so the
     # visible arithmetic is identical (parity-tested in
     # tests/test_dedup_similarity.py).
-    if fuse is None:
-        fuse = _fuse_text(df, id_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(df, (id_col,)):
         inter = _fused_minhash_inter(
             df, None, id_col, text_col, k, num_hashes, bands
         )
@@ -953,7 +935,6 @@ def incremental_lsh_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Asymmetric (new-batch vs existing-corpus) near-dup detection: which
     incoming documents duplicate something already ingested — the
@@ -973,14 +954,14 @@ def incremental_lsh_dedup(
     the per-batch cost proportional to the NEW data only.
     """
     assert num_hashes % bands == 0
-    # *fuse* (r15): None = stats-gated on BOTH inputs — when each side's
-    # source files fit one task, signatures, cross-side banding and the
-    # exact verify run in one narrow stage over a tagged union (sides
-    # tracked separately inside the task, so overlapping ids stay
-    # distinct); otherwise the distributed band join below.
-    if fuse is None:
-        fuse = _fuse_text(new, id_col) and _fuse_text(corpus, id_col)
-    if fuse:
+    # when BOTH inputs fit one task (ann.fits_one_task), signatures,
+    # cross-side banding and the exact verify run in one narrow stage
+    # over a tagged union (sides tracked separately inside the task, so
+    # overlapping ids stay distinct); otherwise the distributed band
+    # join below.
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(new, (id_col,)) and fits_one_task(corpus, (id_col,)):
         inter = _fused_minhash_inter(
             new, corpus, id_col, text_col, k, num_hashes, bands
         )
@@ -1222,6 +1203,7 @@ def _fused_simhash(
     distributed per-id aggregate."""
     from id3c_spark.functions.text import words_array
 
+    t = df.schema[id_col].dataType.simpleString()
     src = df.select(
         F.col(id_col).alias("id"), words_array(F.col(text_col)).alias("ws")
     ).coalesce(1)
@@ -1256,26 +1238,25 @@ def _fused_simhash(
         packed = ((vm > 0) * (np.int64(1) << jbits)).sum(axis=1)
         yield pd.DataFrame({"id": ids, "simhash": packed})
 
-    return src.mapInPandas(run, "id long, simhash long")
+    return src.mapInPandas(run, f"id {t}, simhash long")
 
 
 def simhash(
     df: DataFrame, id_col: str, text_col: str, bits: int = 32,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """32-bit SimHash over word tokens (md5-derived token hashes).
 
     bit_j(doc) = sign of Σ_tokens (2*((H(tok) >> j) & 1) - 1); packed into
     one bigint. Pure integer expression — identical in the oracle.
     """
-    # *fuse* (r15): stats-gated single-task path (see _fused_simhash);
+    # below the regime gate: the single-task path (see _fused_simhash);
     # the distributed explode + SUM-aggregate shape below is kept for
     # large or in-memory corpora. All-integer arithmetic on identical
     # md5-derived values, so the packed hashes are equal by construction
     # (parity-tested in tests/test_dedup_similarity.py).
-    if fuse is None:
-        fuse = _fuse_text(df, id_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(df, (id_col,)):
         return _fused_simhash(df, id_col, text_col, bits)
     # Same explode+aggregate shape as minhash_signature: hash each token
     # once, take `bits` parallel SUM aggregates of the per-bit ±1 votes,
@@ -1307,7 +1288,9 @@ def _fused_simhash_band_pairs(
     byte bands, pair within buckets (id_a < id_b), keep Hamming ≤
     max_distance — the same candidate semantics as the band equi-join
     (band agreement is checked, not assumed, so a max_distance > 3
-    caller gets the identical band-limited result)."""
+    caller gets the identical band-limited result). Distance is an int,
+    like the staged bit_count."""
+    t = sh.schema["id"].dataType.simpleString()
     src = sh.coalesce(1)
 
     def run(batches):
@@ -1368,12 +1351,11 @@ def _fused_simhash_band_pairs(
             "distance": dist[keep],
         })
 
-    return src.mapInPandas(run, "id_a long, id_b long, distance long")
+    return src.mapInPandas(run, f"id_a {t}, id_b {t}, distance int")
 
 
 def simhash_pairs(
     df: DataFrame, id_col: str, text_col: str, max_distance: int = 3, bits: int = 32,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Pairs within SimHash Hamming distance ≤ max_distance.
 
@@ -1382,16 +1364,14 @@ def simhash_pairs(
     refine with bit_count(xor). Same trick as the reference's barcode
     slices (dev/doc/01-barcode-slices.md), lifted to bit bands.
     """
-    # *fuse* (r15): stats-gated — small file-backed corpora chain the
-    # fused simhash stage into a second narrow banding/refine stage (two
-    # mapInPandas, zero exchanges); otherwise the band self-join below.
-    if fuse is None:
-        fuse = _fuse_text(df, id_col)
-    if fuse:
-        return _fused_simhash_band_pairs(
-            simhash(df, id_col, text_col, bits, fuse=True), max_distance
-        )
-    sh = simhash(df, id_col, text_col, bits, fuse=False)
+    # below the regime gate simhash() is the fused stage, chained into a
+    # second narrow banding/refine stage (two mapInPandas, zero
+    # exchanges); otherwise the band self-join below.
+    from id3c_spark.operators.ann import fits_one_task
+
+    sh = simhash(df, id_col, text_col, bits)
+    if fits_one_task(df, (id_col,)):
+        return _fused_simhash_band_pairs(sh, max_distance)
     # both sides of the band self-join share this subplan via an
     # explicit exchange on the join keys (ReusedExchange: the simhash
     # aggregate runs once per action, nothing cached — a persist here
@@ -1439,7 +1419,6 @@ def ngram_containment_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b, containment) with max-directional shingle
     containment |A∩B| / min(|A|, |B|) ≥ threshold — Broder's containment
@@ -1459,13 +1438,13 @@ def ngram_containment_pairs(
     # pipeline computes once per action, nothing persisted past the
     # caller's action).
     #
-    # *fuse* (r15): same stats gate and fused integer relation as
+    # Below the regime gate: the same fused integer relation as
     # ngram_jaccard_pairs (_fused_shingle_inter covers both measures —
     # any pair with containment > 0 shares a shingle, and the stop-cap
     # semantics are identical); only the Spark-side tail differs.
-    if fuse is None:
-        fuse = _fuse_text(df, id_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(df, (id_col,)):
         inter = _fused_shingle_inter(df, id_col, text_col, k, max_df)
         fc = F.round(
             F.col("n_inter").cast("double")

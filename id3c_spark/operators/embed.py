@@ -37,7 +37,9 @@ def _fused_hash_counts(
     accumulates the signed bucket counts + per-doc squared norm as exact
     integers; the division/sqrt/6-dp-round stay the caller's Spark
     expressions. Every input row emits all *dim* rows (the staged grid
-    join's all-zero rows for wordless docs included)."""
+    join's all-zero rows for wordless docs included). The id column
+    keeps the source id type, as the staged path does."""
+    id_type = df.schema[id_col].dataType.simpleString()
     src = df.select(
         F.col(id_col).alias("id"), words_array(F.col(text_col)).alias("ws")
     ).coalesce(1)
@@ -96,7 +98,7 @@ def _fused_hash_counts(
             "nrm2": np.repeat(nrm2, dim),
         })
 
-    return src.mapInPandas(run, "id long, dim int, s long, nrm2 long")
+    return src.mapInPandas(run, f"id {id_type}, dim int, s long, nrm2 long")
 
 
 def hashed_doc_embeddings(
@@ -104,23 +106,20 @@ def hashed_doc_embeddings(
     id_col: str,
     text_col: str,
     dim: int = 64,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """(id, dim, v): L2-normalized signed hashed bag-of-words, one row
     per (document, dimension) — exploded form so downstream packing /
     comparison is layout-free. Documents with no words emit all-zero
     rows.
 
-    *fuse* (r16): None = stats-gated — below the single-task file-bytes
-    gate the explode + (id, bucket) aggregate + grid/norm joins collapse
-    into ONE narrow mapInPandas stage emitting the dense integer grid;
-    the normalize (division, sqrt, 6-dp round) stays the SAME Spark
-    expression. Distributed shape untouched past the gate."""
-    if fuse is None:
-        from id3c_spark.operators.dedup import _fuse_text
+    Below the regime gate (ann.fits_one_task) the explode + (id, bucket)
+    aggregate + grid/norm joins collapse into ONE narrow mapInPandas
+    stage emitting the dense integer grid; the normalize (division,
+    sqrt, 6-dp round) stays the SAME Spark expression. Distributed
+    shape untouched past the gate."""
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = _fuse_text(df, id_col)
-    if fuse:
+    if fits_one_task(df, (id_col,)):
         rel = _fused_hash_counts(df, id_col, text_col, dim)
         return rel.select(
             "id",

@@ -36,29 +36,16 @@ from pyspark.sql import functions as F
 SCALE = 1e12
 
 
-def _fuse_graph(pairs: DataFrame, *id_cols: str, double_cols: tuple = ()) -> bool:
-    """Stats gate for the fused small-regime graph paths — the same
-    statistics-before-strategy step as linalg._single_task_source: the
-    pair relation's SOURCE FILES (driver-side listing through the
-    frame's file lineage, no Spark job) fit one task, and the id columns
-    are integral (the numpy mirror is int64). Derived frames keep their
-    lineage through inputFiles(), so a fused shingle-pair relation over
-    a small documents table gates true while an in-memory test frame or
-    a 100 TB corpus keeps the distributed iteration."""
-    from pyspark.sql import types as T
-
-    from id3c_spark.operators.linalg import _single_task_source
-
-    for c in id_cols:
-        if not isinstance(
-            pairs.schema[c].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        ):
-            return False
-    for c in double_cols:
-        if not isinstance(pairs.schema[c].dataType, T.DoubleType):
-            return False
-    return _single_task_source(pairs)
+def _node_type(*cols: tuple) -> str:
+    """DDL type of the node ids the distributed loops emit: the
+    union-widened type of every (frame, column) feeding them. The fused
+    mirrors compute in int64 and emit this type, so both regimes return
+    the same schema. Plan analysis only, no Spark job."""
+    nodes = None
+    for df, c in cols:
+        part = df.select(F.col(c).alias("node"))
+        nodes = part if nodes is None else nodes.unionByName(part)
+    return nodes.schema["node"].dataType.simpleString()
 
 
 def _sym_edges_np(src, dst, w=None):
@@ -185,7 +172,8 @@ def _fused_pagerank(
             rank = teleport + damping * (sums.astype(np.float64) / SCALE)
         yield pd.DataFrame({"node": nodes, "rank": rank})
 
-    return src.mapInPandas(run, "node long, rank double")
+    t = _node_type((pairs, a_col), (pairs, b_col))
+    return src.mapInPandas(run, f"node {t}, rank double")
 
 
 def pagerank(
@@ -196,7 +184,6 @@ def pagerank(
     iters: int = 5,
     round_dp: int = 6,
     weight_col: str | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """PageRank over an undirected pair relation → (node, rank).
 
@@ -213,18 +200,16 @@ def pagerank(
     totals sum exactly as DECIMAL(18,6), and the per-edge share w/W is
     a single double division — the oracle discipline is unchanged.
     """
-    # *fuse* (r15): None = stats-gated — a small file-backed pair
-    # relation (derived frames keep file lineage) runs the whole loop in
+    # below the regime gate (ann.fits_one_task) the whole loop runs in
     # one narrow task (_fused_pagerank); large or in-memory relations
     # keep the distributed per-iteration shape below. Both paths end in
     # the same F.round, and the iteration arithmetic is bit-identical
     # (pinned in tests/test_graph_fused.py).
-    if fuse is None:
-        fuse = _fuse_graph(
-            pairs, a_col, b_col,
-            double_cols=(weight_col,) if weight_col else (),
-        )
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(
+        pairs, (a_col, b_col), (weight_col,) if weight_col else ()
+    ):
         out = _fused_pagerank(pairs, a_col, b_col, damping, iters, weight_col)
         return out.select("node", F.round("rank", round_dp).alias("rank"))
     wcols = [F.col(weight_col).alias("w")] if weight_col else []
@@ -346,8 +331,7 @@ def _fused_triangles(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
 
 
 def triangle_count(
-    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
-    fuse: bool | None = None,
+    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
 ) -> DataFrame:
     """Single-row (n_triangles) of the undirected pair relation.
 
@@ -361,9 +345,9 @@ def triangle_count(
     orientation the skew bound is the max same-lo fan-out, which AQE
     skew-join splitting handles.
     """
-    if fuse is None:
-        fuse = _fuse_graph(pairs, a_col, b_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(pairs, (a_col, b_col)):
         return _fused_triangles(pairs, a_col, b_col)
     e = (
         pairs.select(
@@ -442,7 +426,8 @@ def _fused_hops(
         reached = dist != INF
         yield pd.DataFrame({"node": nodes[reached], "dist": dist[reached]})
 
-    return tagged.mapInPandas(run, "node long, dist long")
+    t = _node_type((pairs, a_col), (pairs, b_col), (seeds, seed_col))
+    return tagged.mapInPandas(run, f"node {t}, dist long")
 
 
 def hop_distances(
@@ -452,7 +437,6 @@ def hop_distances(
     a_col: str = "id_a",
     b_col: str = "id_b",
     seed_col: str = "id",
-    fuse: bool | None = None,
 ) -> DataFrame:
     """(node, dist): BFS hop distance from the *seeds* set over the
     undirected pair relation, capped at *max_hops* (unreached nodes are
@@ -467,9 +451,11 @@ def hop_distances(
     document to a known-bad seed set" — contamination blast-radius
     scoring beyond direct pairs.
     """
-    if fuse is None:
-        fuse = _fuse_graph(pairs, a_col, b_col) and _fuse_graph(seeds, seed_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(pairs, (a_col, b_col)) and fits_one_task(
+        seeds, (seed_col,)
+    ):
         return _fused_hops(pairs, seeds, max_hops, a_col, b_col, seed_col)
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = (
@@ -538,7 +524,8 @@ def _fused_lpa(
             lab[vd[first]] = vl[first]
         yield pd.DataFrame({"node": nodes, "community": nodes[lab]})
 
-    return src.mapInPandas(run, "node long, community long")
+    t = _node_type((pairs, a_col), (pairs, b_col))
+    return src.mapInPandas(run, f"node {t}, community {t}")
 
 
 def label_propagation(
@@ -546,7 +533,6 @@ def label_propagation(
     iters: int = 3,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    fuse: bool | None = None,
 ) -> DataFrame:
     """(node, community) by synchronous label propagation: each round a
     node adopts the most frequent label among its neighbors (ties → the
@@ -559,9 +545,9 @@ def label_propagation(
     edge-keyed join, a (node,label) count, and a node-keyed top-1
     window — the catalog oracle unrolls the identical rounds.
     """
-    if fuse is None:
-        fuse = _fuse_graph(pairs, a_col, b_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(pairs, (a_col, b_col)):
         return _fused_lpa(pairs, iters, a_col, b_col)
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = (
@@ -633,7 +619,8 @@ def _fused_kcore(
         surv, degree = np.unique(si, return_counts=True)
         yield pd.DataFrame({"node": nodes[surv], "degree": degree})
 
-    return src.mapInPandas(run, "node long, degree long")
+    t = _node_type((pairs, a_col), (pairs, b_col))
+    return src.mapInPandas(run, f"node {t}, degree long")
 
 
 def kcore(
@@ -642,7 +629,6 @@ def kcore(
     b_col: str = "id_b",
     k: int = 2,
     rounds: int = 8,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """k-core of an undirected pair relation via *rounds* of synchronous
     peeling → (node, degree) for nodes surviving all rounds, with their
@@ -658,9 +644,9 @@ def kcore(
     shuffle pattern as one PageRank iteration; localCheckpoint keeps the
     plan constant-depth. The per-round edge count (a driver scalar, one
     long) doubles as the convergence early-stop."""
-    if fuse is None:
-        fuse = _fuse_graph(pairs, a_col, b_col)
-    if fuse:
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(pairs, (a_col, b_col)):
         return _fused_kcore(pairs, a_col, b_col, k, rounds)
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = (

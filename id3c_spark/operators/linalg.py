@@ -42,21 +42,6 @@ DOT_SCALE = 1e9
 NORM_SCALE = 1e12
 
 
-def _single_task_source(df: DataFrame) -> bool:
-    """Stats gate for the fused small-regime path — the same
-    statistics-before-strategy step as ann._auto_shards: a file-backed
-    source whose listed bytes fit ONE task's worth of vectors
-    (≤ AUTO_SHARD_BYTES). Driver-side listing only, no Spark job.
-    File-backed also guarantees ≥ 1 scan partition (a parquet footer is
-    never 0 bytes), so the fused mapInPandas task always runs and can
-    emit the start vector even on an empty-but-present source;
-    in-memory frames (no file lineage) keep the distributed passes."""
-    from id3c_spark.operators.ann import AUTO_SHARD_BYTES, source_bytes
-
-    b = source_bytes(df)
-    return b is not None and b <= AUTO_SHARD_BYTES
-
-
 def _np_power(mat, dim: int, iters: int, contrib_scale: float):
     """numpy mirror of the distributed fixed-point power iteration —
     bit-exact by construction: every op below is the same single IEEE
@@ -140,7 +125,8 @@ def _fused_spectral(
             yield pd.DataFrame({"id": np.concatenate(ids_acc), "score": score})
 
     schema = (
-        "dim long, v double" if output == "direction" else "id long, score double"
+        "dim long, v double" if output == "direction"
+        else f"id {src.schema['id'].dataType.simpleString()}, score double"
     )
     return src.mapInPandas(run, schema)
 
@@ -224,10 +210,12 @@ def principal_direction(
     """(dim, v) relation of the dominant principal direction, rounded
     6 dp in Spark (so the rounding engine matches the catalog oracle).
 
-    Small regime (stats-gated, see _single_task_source): the whole
-    iteration fuses into one narrow mapInPandas stage — bit-parity with
-    the distributed passes is pinned in tests/test_linalg_fused.py."""
-    if _single_task_source(df):
+    Small regime (ann.fits_one_task): the whole iteration fuses into
+    one narrow mapInPandas stage — bit-parity with the distributed
+    passes is pinned in tests/test_linalg_fused.py."""
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(df):
         out = _fused_spectral(df, None, vec_col, dim, iters, "direction")
     else:
         v = power_iteration(df, vec_col, dim, iters)
@@ -263,7 +251,9 @@ def spectral_scores(
     both (no count job, no per-iteration collect jobs, no source
     re-scans). Identical output either way (bit-parity pinned in
     tests/test_linalg_fused.py)."""
-    if _single_task_source(df):
+    from id3c_spark.operators.ann import fits_one_task
+
+    if fits_one_task(df):
         raw = _fused_spectral(df, id_col, vec_col, dim, iters, "scores")
         return raw.select("id", F.round("score", 6).alias("score"))
     v = power_iteration(df, vec_col, dim, iters)

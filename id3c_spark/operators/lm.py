@@ -127,14 +127,14 @@ def _fused_bigram_counts(
             "vsz": np.full(len(di), vsz, dtype=np.int64),
         })
 
+    t = src.schema["id"].dataType.simpleString()
     return src.mapInPandas(
-        run, "id long, n_occ long, cbg long, ch long, vsz long"
+        run, f"id {t}, n_occ long, cbg long, ch long, vsz long"
     )
 
 
 def bigram_lm_score(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    fuse: bool | None = None,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Per-document cross-entropy under an add-one-smoothed bigram LM
     trained on the corpus itself.
@@ -151,19 +151,17 @@ def bigram_lm_score(
     reference corpus, compute `cb`/`c1`/`v` from that corpus instead —
     the plan shape is identical.
 
-    *fuse* (r16): None = stats-gated — below the single-task file-bytes
-    gate the two count aggregates + count-joins collapse into ONE narrow
-    mapInPandas stage emitting the distinct-(doc, bigram) integer
-    relation; the log/8-dp-round/decimal-sum tail stays the SAME Spark
-    expressions (n_occ · lp is the same exact decimal arithmetic as
-    summing lp per occurrence), so the visible arithmetic is unchanged.
-    The distributed shape below is untouched past the gate.
+    Below the regime gate (ann.fits_one_task) the two count aggregates +
+    count-joins collapse into ONE narrow mapInPandas stage emitting the
+    distinct-(doc, bigram) integer relation; the
+    log/8-dp-round/decimal-sum tail stays the SAME Spark expressions
+    (n_occ · lp is the same exact decimal arithmetic as summing lp per
+    occurrence), so the visible arithmetic is unchanged. The distributed
+    shape below is untouched past the gate.
     """
-    if fuse is None:
-        from id3c_spark.operators.dedup import _fuse_text
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = _fuse_text(docs, id_col)
-    if fuse:
+    if fits_one_task(docs, (id_col,)):
         rel = _fused_bigram_counts(docs, id_col, text_col)
         lp = F.round(
             F.log((F.col("cbg") + F.lit(1.0)) / (F.col("ch") + F.col("vsz"))), 8
@@ -295,8 +293,9 @@ def _fused_dsir_counts(
             "t": np.full(len(di), t_tot, dtype=np.int64),
         })
 
+    t = src.schema["id"].dataType.simpleString()
     return src.mapInPandas(
-        run, "id long, n_occ long, cr long, ct long, r long, t long"
+        run, f"id {t}, n_occ long, cr long, ct long, r long, t long"
     )
 
 
@@ -307,7 +306,6 @@ def dsir_top_docs(
     text_col: str = "text",
     n_buckets: int = 256,
     k: int = 50,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Top-k documents by DSIR importance weight toward a target slice.
 
@@ -322,18 +320,15 @@ def dsir_top_docs(
     Returns (id, n_tokens, weight, rank), rank ≤ k by weight desc with
     id tiebreak.
 
-    *fuse* (r16): None = stats-gated — below the single-task file-bytes
-    gate the token explode + B-key aggregate + totals + score join
-    collapse into ONE narrow mapInPandas stage emitting the
-    distinct-(doc, bucket) integer relation; the log-ratio/round/sum/
-    rank tail stays the SAME Spark expressions. Distributed shape
-    untouched past the gate.
+    Below the regime gate (ann.fits_one_task) the token explode + B-key
+    aggregate + totals + score join collapse into ONE narrow mapInPandas
+    stage emitting the distinct-(doc, bucket) integer relation; the
+    log-ratio/round/sum/rank tail stays the SAME Spark expressions.
+    Distributed shape untouched past the gate.
     """
-    if fuse is None:
-        from id3c_spark.operators.dedup import _fuse_text
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = _fuse_text(docs, id_col)
-    if fuse:
+    if fits_one_task(docs, (id_col,)):
         rel = _fused_dsir_counts(docs, is_target, id_col, text_col, n_buckets)
         lr = F.round(
             F.log(

@@ -60,6 +60,10 @@ def _subspace_assign(vp: DataFrame, bc) -> DataFrame:
     return vp.mapInPandas(gen, "id long, sub int, code int")
 
 
+class EmptyCorpusError(ValueError):
+    """pq_train was given no vectors: there is nothing to train."""
+
+
 def pq_train(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -68,7 +72,6 @@ def pq_train(
     k: int = 16,
     max_iter: int = 2,
     seed_salt: str = "",
-    fuse: bool | None = None,
 ):
     """Train the m per-subspace codebooks (Lloyd iterations). Returns a
     numpy array (m, k, d/m) of 6-dp centroids — broadcast-sized model
@@ -87,18 +90,16 @@ def pq_train(
     quantizer so both quantizers share one oracle-mirrored discipline."""
     import numpy as np
 
-    vp = _prep(df, id_col, vec_col)
-    # *fuse*: None = stats-gated (clustering._fuse_vectors) — a corpus
-    # that fits one task trains in ONE narrow job (scan → lloyd_np →
-    # m·k·dsub centroid rows collected) instead of the seed collect plus
-    # one assignment-scan + aggregate collect PER Lloyd iteration;
-    # centroids are bit-identical by the lloyd_np contract. Larger
-    # corpora keep the broadcast-centroid distributed iterations.
-    if fuse is None:
-        from id3c_spark.operators.clustering import _fuse_vectors
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = _fuse_vectors(vp)
-    if fuse:
+    vp = _prep(df, id_col, vec_col)
+    # below the regime gate (ann.fits_one_task) the corpus trains in ONE
+    # narrow job (scan → lloyd_np → m·k·dsub centroid rows collected)
+    # instead of the seed collect plus one assignment-scan + aggregate
+    # collect PER Lloyd iteration; centroids are bit-identical by the
+    # lloyd_np contract. Larger corpora keep the broadcast-centroid
+    # distributed iterations.
+    if fits_one_task(vp, ("id",)):
         import pandas as pd
 
         from id3c_spark.operators.clustering import lloyd_np
@@ -128,7 +129,7 @@ def pq_train(
             train, "sub int, code int, dim int, c double"
         ).collect()
         if not rows:
-            raise ValueError("pq_train: empty corpus")
+            raise EmptyCorpusError("pq_train: empty corpus")
         kk = 1 + max(r.code for r in rows)
         dsub = 1 + max(r.dim for r in rows)
         cent = np.empty((m, kk, dsub), dtype=np.float64)
@@ -146,6 +147,9 @@ def pq_train(
         .limit(k)
         .collect()
     )
+    if not seeds:
+        vp.unpersist()
+        raise EmptyCorpusError("pq_train: empty corpus")
     # a corpus smaller than k yields fewer seeds: train min(N, k)
     # centroids, exactly what the SQL oracle's `cl < k` seed filter
     # admits (row_number over N rows caps itself)
@@ -318,7 +322,6 @@ def pq_topk(
     vec_col: str = "embedding",
     corpus_shards: int = 8,
     query_blocks: int = 8,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: exact query vectors scored against
     the COMPRESSED corpus. Same blocked shape as ann.cosine_topk — query
@@ -338,20 +341,17 @@ def pq_topk(
 
     qp = _prep(queries, id_col, vec_col)
 
-    # *fuse* (self-search only): None = stats-gated — when the corpus
-    # fits one task (clustering._fuse_vectors, the shared
-    # statistics-before-strategy step), the two pack aggregates, the
-    # crossJoin exchange and the rank window collapse into ONE narrow
-    # mapInPandas stage that encodes and ADC-scores in place. LUT values,
-    # exact integer-micro sums and the (dist asc, id asc) rank replay
-    # partial_topk's np ops elementwise (single shard ⇒ partial top-k IS
-    # the global top-k), so rows are bit-identical; multi-shard corpora
-    # keep the blocked codes layout — the 100 TB shape — untouched.
-    if fuse is None:
-        from id3c_spark.operators.clustering import _fuse_vectors
+    # self-search below the regime gate (ann.fits_one_task): the two
+    # pack aggregates, the crossJoin exchange and the rank window
+    # collapse into ONE narrow mapInPandas stage that encodes and
+    # ADC-scores in place. LUT values, exact integer-micro sums and the
+    # (dist asc, id asc) rank replay partial_topk's np ops elementwise
+    # (single shard ⇒ partial top-k IS the global top-k), so rows are
+    # bit-identical; multi-shard corpora keep the blocked codes layout —
+    # the 100 TB shape — untouched.
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = queries is corpus and _fuse_vectors(qp)
-    if fuse and queries is corpus:
+    if queries is corpus and fits_one_task(qp, ("id",)):
         bcm = qp.sparkSession.sparkContext.broadcast(mdl)
         src = qp.coalesce(1)
 

@@ -136,8 +136,7 @@ def _fused_profile(df: DataFrame, cols: list[str], dtypes: dict) -> DataFrame:
 
 
 def profile_table(
-    df: DataFrame, columns: list[str] | None = None, exact: bool = True,
-    fuse: bool | None = None,
+    df: DataFrame, columns: list[str] | None = None, exact: bool = True
 ) -> DataFrame:
     """Per-column profile: (col_name, n_rows, n_nulls, n_distinct,
     min_num, max_num, min_str, max_str).
@@ -149,21 +148,19 @@ def profile_table(
     """
     cols = columns or df.columns
     dtypes = dict((f.name, f.dataType) for f in df.schema.fields)
-    # *fuse* (r16): stats-gated — an exact profile over a file-backed
-    # source that fits one task runs as one narrow mapInPandas pass
+    # an exact profile over a source below the regime gate
+    # (ann.fits_one_task) runs as one narrow mapInPandas pass
     # (see _fused_profile) instead of the Expand shape, which multiplies
     # every input row by the number of distinct aggregates before the
     # exchange; bigger or in-memory sources (and approx mode / complex
     # column types) keep the distributed aggregation below.
-    if fuse is None:
-        from id3c_spark.operators.linalg import _single_task_source
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = (
-            exact
-            and all(isinstance(dtypes[c], _FUSABLE) for c in cols)
-            and _single_task_source(df)
-        )
-    if fuse:
+    if (
+        exact
+        and all(isinstance(dtypes[c], _FUSABLE) for c in cols)
+        and fits_one_task(df)
+    ):
         return _fused_profile(df, cols, dtypes)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:

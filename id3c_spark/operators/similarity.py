@@ -364,8 +364,9 @@ def _fused_entity_resolution(
             "n_members": sizes.astype(np.int64),
         })
 
+    t = src.schema["id"].dataType.simpleString()
     return src.mapInPandas(
-        run, "canonical_id long, canonical_name string, n_members long"
+        run, f"canonical_id {t}, canonical_name string, n_members long"
     )
 
 
@@ -375,7 +376,6 @@ def entity_resolution(
     text_col: str,
     block_col: str,
     max_distance: int = 2,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Entity resolution end-to-end (the classic MDM composition):
     blocked candidate pairs — exact-name plus Levenshtein <= k — feed
@@ -383,21 +383,15 @@ def entity_resolution(
     min-id record with a member count → (canonical_id, canonical_name,
     n_members).
 
-    *fuse* (r16): stats-gated — a file-backed source that fits one task
-    runs the whole composition as one narrow stage (_fused_entity_
-    resolution); otherwise every stage keeps its already-scale-shaped
-    distributed operator: block-keyed joins, pointer-jumping components
-    past the driver cutoff, broadcast dim attach."""
+    Below the regime gate (ann.fits_one_task) the whole composition
+    runs as one narrow stage (_fused_entity_resolution); otherwise every
+    stage keeps its already-scale-shaped distributed operator:
+    block-keyed joins, pointer-jumping components past the driver
+    cutoff, broadcast dim attach."""
     from id3c_spark.operators import dedup
-    from id3c_spark.operators.linalg import _single_task_source
-    from pyspark.sql import types as T
+    from id3c_spark.operators.ann import fits_one_task
 
-    if fuse is None:
-        fuse = isinstance(
-            df.schema[id_col].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        ) and _single_task_source(df)
-    if fuse:
+    if fits_one_task(df, (id_col,)):
         return _fused_entity_resolution(
             df, id_col, text_col, block_col, max_distance
         )

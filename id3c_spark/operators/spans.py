@@ -157,8 +157,9 @@ def _fused_span_pairs(
             "len_words": len_words[keep].astype(np.int32),
         })
 
+    t = src.schema["id"].dataType.simpleString()
     return src.mapInPandas(
-        run, "id_a long, id_b long, start_a int, start_b int, len_words int"
+        run, f"id_a {t}, id_b {t}, start_a int, start_b int, len_words int"
     )
 
 
@@ -169,24 +170,20 @@ def shared_span_pairs(
     k: int = 5,
     min_words: int = 8,
     max_df: int | None = 200,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Maximal shared word spans between document pairs.
 
     Returns (id_a, id_b, start_a, start_b, len_words) with
     len_words >= min_words; start positions are 1-based word offsets.
 
-    *fuse*: None = stats-gated (dedup._fuse_text, the shared
-    statistics-before-strategy step) — a corpus whose source files fit
-    one task runs the whole shingle/df-cap/join/islands chain in a
-    single narrow mapInPandas stage (_fused_span_pairs); anything
+    Below the regime gate (ann.fits_one_task) the whole
+    shingle/df-cap/join/islands chain runs in a single narrow
+    mapInPandas stage (_fused_span_pairs); anything
     larger keeps the distributed hash-keyed join below.
     """
-    if fuse is None:
-        from id3c_spark.operators.dedup import _fuse_text
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = _fuse_text(docs, id_col)
-    if fuse:
+    if fits_one_task(docs, (id_col,)):
         return _fused_span_pairs(docs, id_col, text_col, k, min_words, max_df)
     # The shingle relation feeds the df-cap aggregate AND both sides of
     # the self-join — share it through ONE explicit Exchange(h) rather

@@ -789,7 +789,6 @@ def serve_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     rerank_shortlist: int | None = None,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """Serve a query batch from the persisted index: broadcast the
     stored models (nlist·d + m·k*·dsub doubles — tiny), assign each
@@ -809,31 +808,26 @@ def serve_topk(
     probe cells its second evaluation never assigns, silently dropping
     candidates. Callers with nondeterministic batches should
     ``localCheckpoint()`` the frame first."""
-    from id3c_spark.operators.ann import _prep, exact_rerank
+    from id3c_spark.operators.ann import _prep, exact_rerank, fits_one_task
     from id3c_spark.operators.pq import _adc_topk, _assign_topn, _normalized
 
     coarse, books, t = _load_models(spark, path)
     assign_n = _read_assign_n(spark, t)
-    # *fuse* (r15): None = stats-gated — when the query batch and the
-    # codes table (plus the vectors table for IVFADC+R) each fit one
-    # task by file-size statistics, the whole serve runs in ONE narrow
-    # mapInPandas stage over a tagged union (_fused_serve). Reading the
+    # when the query batch and the codes table (plus the vectors table
+    # for IVFADC+R) each fit one task (ann.fits_one_task), the whole
+    # serve runs in ONE narrow mapInPandas stage over a tagged union
+    # (_fused_serve). Reading the
     # small codes table whole replaces the probed-cells collect — the
     # query lineage is then evaluated exactly once, and the determinism
     # precondition below is moot in this regime. Large indexes/batches
     # keep the probed-cell-pruned distributed path.
-    if fuse is None:
-        from id3c_spark.operators.linalg import _single_task_source
-
-        codes_all = t["codes"].read()
-        fuse = _single_task_source(queries) and _single_task_source(codes_all)
-        if fuse and rerank_shortlist is not None:
-            fuse = _single_task_source(t["vectors"].read())
-    if fuse:
-        from id3c_spark.operators.ann import _prep as _prep_f
-
+    if (
+        fits_one_task(queries)
+        and fits_one_task(t["codes"].read())
+        and (rerank_shortlist is None or fits_one_task(t["vectors"].read()))
+    ):
         return _fused_serve(
-            _prep_f(queries, id_col, vec_col),
+            _prep(queries, id_col, vec_col),
             t["codes"].read().select("id", "cell", "codes"),
             (
                 t["vectors"].read().select("id", "cell", "v")

@@ -217,21 +217,21 @@ def curate_sampled_exact(
     jaccard_threshold: float = 0.8,
     k: int = 3,
     max_df: int | None = 200,
-    fuse: bool | None = None,
 ) -> DataFrame:
     """The curation composition's SAMPLED stage with the exact n-gram
     Jaccard pair strategy (full-recall verification — the oracle-backed
-    composition query's configuration), with a stats-gated fused
-    small-regime path (r16, guide §2.4/§4.2).
+    composition query's configuration), with a fused small-regime path
+    (guide §2.4/§4.2). Either regime returns exactly
+    ``(id_col, stratum_col)`` with the source column types.
 
     Distributed regime (the default at scale): exactly ``curate()`` with
     ``pair_fn = ngram_jaccard_pairs(k, threshold, max_df, words=shared)``
     — one shared tokenize pass feeding every word-grain stage, unchanged
     from the adjudicated r12/r13 shape.
 
-    Fused regime (``fuse=None`` → gated on ``dedup._fuse_text`` for BOTH
-    inputs — integral ids + a file-backed source whose listed bytes fit
-    one task): the whole quality → decontaminate → exact-dedup →
+    Fused regime (a string stratum and BOTH inputs below the regime gate
+    ann.fits_one_task — integral ids + a file-backed source whose listed
+    bytes fit one task): the whole quality → decontaminate → exact-dedup →
     near-dup-components → keep-canonical tail runs as ONE mapInPandas
     task over (id, stratum, md5(text), words_array(text)) rows —
     tokenization and the content hash stay Spark expressions, identical
@@ -241,17 +241,15 @@ def curate_sampled_exact(
     contract — duplicate ids make the staged flow's semi-join grains
     ill-defined too). Parity with the staged path is pinned in
     tests/test_corpus_asof_multimodal.py."""
-    from id3c_spark.operators.dedup import _fuse_text
+    from pyspark.sql import types as T
 
-    if fuse is None:
-        from pyspark.sql import types as T
+    from id3c_spark.operators.ann import fits_one_task
 
-        fuse = (
-            isinstance(docs.schema[stratum_col].dataType, T.StringType)
-            and _fuse_text(docs, id_col)
-            and _fuse_text(benchmark, id_col)
-        )
-    if fuse:
+    if (
+        isinstance(docs.schema[stratum_col].dataType, T.StringType)
+        and fits_one_task(docs, (id_col,))
+        and fits_one_task(benchmark, (id_col,))
+    ):
         unique = _fused_curation_unique(
             docs, benchmark, id_col, text_col, stratum_col,
             jaccard_threshold, k, max_df,
@@ -272,7 +270,7 @@ def curate_sampled_exact(
             max_df=max_df, words=words,
         ),
     )
-    return stages["sampled"]
+    return stages["sampled"].select(id_col, stratum_col)
 
 
 def _fused_curation_unique(
@@ -318,6 +316,7 @@ def _fused_curation_unique(
         _np_shingle_occurrences,
     )
 
+    id_type = docs.schema[id_col].dataType.simpleString()
     st_type = docs.schema[stratum_col].dataType.simpleString()
     src = (
         docs.select(
@@ -484,4 +483,4 @@ def _fused_curation_unique(
             }
         )
 
-    return src.mapInPandas(run, f"{id_col} long, {stratum_col} string")
+    return src.mapInPandas(run, f"{id_col} {id_type}, {stratum_col} {st_type}")

@@ -22,6 +22,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def session_defaults() -> tuple[int, str]:
+    """(cpus, driver memory) for a local session: $SPARK_GRAFT_CPUS and
+    $SPARK_GRAFT_DRIVER_MEM when set, else derived from the host — the
+    CPUs this process may run on, and min(16g, RAM/4) so a small host is
+    not over-subscribed."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        with open("/proc/meminfo") as f:
+            total_mb = int(f.readline().split()[1]) // 1024
+        mem = f"{min(16 * 1024, total_mb // 4)}m"
+    return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
+
+
 def get_spark(
     app_name: str = "id3c_spark",
     master: str | None = None,
@@ -30,13 +44,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    Defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real cluster the
-    master comes from the environment/spark-submit and these configs still
-    apply (they are master-agnostic).
+    Defaults to ``local[cpus]`` locally, with cpus and driver memory from
+    session_defaults(); on a real cluster the master comes from the
+    environment/spark-submit and these configs still apply (they are
+    master-agnostic).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = session_defaults()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -48,7 +63,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The driver's events.parquet uses TIMESTAMP(NANOS), which the

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -24,6 +25,24 @@ def sf_dir():
     # fixture the queries run against.
     os.environ["ID3C_ORACLE_SF_DIR"] = SF_SMALL
     return SF_SMALL
+
+
+@pytest.fixture
+def regime(monkeypatch):
+    """Force the one regime gate (ann.fits_one_task) for the operator
+    calls made inside ``with regime(fused):`` — True selects every gated
+    operator's fused single-task path, False its staged distributed
+    plan. The gate decides when the operator builds its plan, so only
+    the call has to sit inside the block."""
+    from id3c_spark.operators import ann
+
+    @contextlib.contextmanager
+    def force(fused: bool):
+        with monkeypatch.context() as m:
+            m.setattr(ann, "fits_one_task", lambda *a, **k: fused)
+            yield
+
+    return force
 
 
 # Central slow-set (see pytest.ini): names here get @pytest.mark.slow at

@@ -599,8 +599,8 @@ def test_adaptive_index_drift_clean_and_rebuild_preserves_ratio(spark, tmp_path)
     assert n < t["codes"].read().count() < 2 * n   # still adaptive fan-out
 
 
-def test_fused_serve_matches_distributed_bitwise(spark, tmp_path):
-    """r15 fused single-task serving: fuse=True vs fuse=False must be
+def test_fused_serve_matches_distributed_bitwise(spark, tmp_path, regime):
+    """r15 fused single-task serving: the fused and staged regimes must be
     row-identical across ADC-only, IVFADC+R and multi-assign/adaptive
     index layouts (the min-dist pair dedup and the rerank refine run
     inside the fused task)."""
@@ -618,8 +618,10 @@ def test_fused_serve_matches_distributed_bitwise(spark, tmp_path):
     ]:
         path = str(tmp_path / f"idx_fsrv_{tag}")
         build_index(emb, path, **build_kw)
-        fused = serve_topk(spark, path, emb, fuse=True, **serve_kw)
-        dist = serve_topk(spark, path, emb, fuse=False, **serve_kw)
+        with regime(True):
+            fused = serve_topk(spark, path, emb, **serve_kw)
+        with regime(False):
+            dist = serve_topk(spark, path, emb, **serve_kw)
         f = sorted(map(tuple, fused.collect()))
         d = sorted(map(tuple, dist.collect()))
         assert f == d and f, tag
@@ -641,7 +643,7 @@ def test_fused_serve_plan_is_narrow(spark, tmp_path):
     assert "SortMergeJoin" not in plan and "Window" not in plan
 
 
-def test_fused_exact_rerank_matches_distributed(spark, tmp_path):
+def test_fused_exact_rerank_matches_distributed(spark, tmp_path, regime):
     """r15 fused exact_rerank: one tagged-union task vs the two
     equi-joins + window, on a file-backed candidate relation (the
     catalog's IVFADC+R composition shape)."""
@@ -651,10 +653,12 @@ def test_fused_exact_rerank_matches_distributed(spark, tmp_path):
     path = str(tmp_path / "idx_frr")
     build_index(emb, path, nlist=8, m=8, kcent=8, train_iter=2, assign_n=2)
     shortlist = serve_topk(spark, path, emb, k=10, nprobe=3)
-    f = sorted(
-        map(tuple, exact_rerank(emb, emb, shortlist, k=3, fuse=True).collect())
-    )
-    d = sorted(
-        map(tuple, exact_rerank(emb, emb, shortlist, k=3, fuse=False).collect())
-    )
+    with regime(True):
+        f = sorted(
+            map(tuple, exact_rerank(emb, emb, shortlist, k=3).collect())
+        )
+    with regime(False):
+        d = sorted(
+            map(tuple, exact_rerank(emb, emb, shortlist, k=3).collect())
+        )
     assert f == d and f

@@ -362,7 +362,7 @@ def test_curation_pipeline_end_to_end(spark):
     assert sorted(shards["id"]) == [2, 6]
 
 
-def test_curate_sampled_exact_fused_parity(spark):
+def test_curate_sampled_exact_fused_parity(spark, regime):
     """r16 fused curation composition: the single-task mirror of
     quality → decontaminate → exact dedup → near-dup components →
     keep-canonical → stratified sample must return EXACTLY the staged
@@ -396,14 +396,16 @@ def test_curate_sampled_exact_fused_parity(spark):
         ({"src1": 0.5, "src2": 0.25}, 0.0625, 0.8),
         ({"src1": 1.0}, 0.0, 0.8),
     ):
-        fused = curate_sampled_exact(
-            docs, bench, sample_rates=rates, default_rate=default,
-            jaccard_threshold=thr, fuse=True,
-        )
-        staged = curate_sampled_exact(
-            docs, bench, sample_rates=rates, default_rate=default,
-            jaccard_threshold=thr, fuse=False,
-        )
+        with regime(True):
+            fused = curate_sampled_exact(
+                docs, bench, sample_rates=rates, default_rate=default,
+                jaccard_threshold=thr,
+            )
+        with regime(False):
+            staged = curate_sampled_exact(
+                docs, bench, sample_rates=rates, default_rate=default,
+                jaccard_threshold=thr,
+            )
         f = sorted((r.doc_id, r.source) for r in
                    fused.select("doc_id", "source").collect())
         s = sorted((r.doc_id, r.source) for r in
@@ -411,7 +413,7 @@ def test_curate_sampled_exact_fused_parity(spark):
         assert f == s, (rates, default, thr, f, s)
 
 
-def test_curate_sampled_exact_fused_parity_sf(spark, sf_dir):
+def test_curate_sampled_exact_fused_parity_sf(spark, sf_dir, regime):
     """Fused vs staged curation on the real documents fixture (the
     catalog query's exact configuration, both doc_id%97 splits)."""
     from id3c_spark.plans.curation import curate_sampled_exact
@@ -423,12 +425,14 @@ def test_curate_sampled_exact_fused_parity_sf(spark, sf_dir):
         sample_rates={"src1": 0.5, "src2": 0.25, "src3": 0.125},
         default_rate=0.0625, jaccard_threshold=0.8, k=3, max_df=200,
     )
-    f = sorted((r.doc_id, r.source) for r in
-               curate_sampled_exact(rest, bench, fuse=True, **kw)
-               .select("doc_id", "source").collect())
-    s = sorted((r.doc_id, r.source) for r in
-               curate_sampled_exact(rest, bench, fuse=False, **kw)
-               .select("doc_id", "source").collect())
+    with regime(True):
+        f = sorted((r.doc_id, r.source) for r in
+                   curate_sampled_exact(rest, bench, **kw)
+                   .select("doc_id", "source").collect())
+    with regime(False):
+        s = sorted((r.doc_id, r.source) for r in
+                   curate_sampled_exact(rest, bench, **kw)
+                   .select("doc_id", "source").collect())
     assert f == s and f
 
 

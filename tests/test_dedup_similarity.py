@@ -307,7 +307,7 @@ def test_fused_single_shard_paths_match_sharded(spark, sf_dir):
     assert fp == sp and fp
 
 
-def test_fused_lsh_path_matches_banded(spark, sf_dir):
+def test_fused_lsh_path_matches_banded(spark, sf_dir, regime):
     """lsh_bucketed_topk r15 single-shard fast path: the fused one-stage
     plan (projection → banding → bucket grouping → rerank → top-k in one
     mapInPandas) must return EXACTLY the banded shuffle layout's rows —
@@ -319,10 +319,10 @@ def test_fused_lsh_path_matches_banded(spark, sf_dir):
         fused = ann.lsh_bucketed_topk(
             emb, emb, dim=64, k=3, planes=64, bands=8, multiprobe=probes
         )  # auto → 1 shard → fused
-        banded = ann.lsh_bucketed_topk(
-            emb, emb, dim=64, k=3, planes=64, bands=8, multiprobe=probes,
-            fuse=False,
-        )
+        with regime(False):
+            banded = ann.lsh_bucketed_topk(
+                emb, emb, dim=64, k=3, planes=64, bands=8, multiprobe=probes,
+            )
         # the .limit(300) test harness adds its own single-partition
         # exchange; the operator's own machinery (bucket join, rank
         # window) must be gone from the fused plan
@@ -335,7 +335,7 @@ def test_fused_lsh_path_matches_banded(spark, sf_dir):
         assert f == b and f, (probes, len(f), len(b))
 
 
-def test_fused_lsh_parity_property(spark):
+def test_fused_lsh_parity_property(spark, regime):
     """Property: for ARBITRARY small corpora (size, values, k,
     multiprobe), the fused single-shard LSH path returns exactly the
     banded layout's rows. Zero vectors excluded — cosine is undefined
@@ -362,26 +362,29 @@ def test_fused_lsh_parity_property(spark):
             rows, "vec_id long, embedding array<double>"
         )
         kw = dict(dim=dim, k=k, planes=16, bands=4, multiprobe=probes)
-        f = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
-                   for r in ann.lsh_bucketed_topk(
-                       emb, emb, fuse=True, **kw).collect())
-        b = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
-                   for r in ann.lsh_bucketed_topk(
-                       emb, emb, fuse=False, **kw).collect())
+        with regime(True):
+            f = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
+                       for r in ann.lsh_bucketed_topk(
+                           emb, emb, **kw).collect())
+        with regime(False):
+            b = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
+                       for r in ann.lsh_bucketed_topk(
+                           emb, emb, **kw).collect())
         assert f == b, (seed, n, k, probes)
 
     check()
 
 
-def test_fused_lsh_edge_cases(spark):
+def test_fused_lsh_edge_cases(spark, regime):
     """Empty corpus, k past candidate count, and duplicate-bucket ties
     through the fused LSH path."""
     from pyspark.sql import functions as F
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert ann.lsh_bucketed_topk(
-        empty, empty, dim=64, k=3, planes=64, bands=8, fuse=True
-    ).count() == 0
+    with regime(True):
+        assert ann.lsh_bucketed_topk(
+            empty, empty, dim=64, k=3, planes=64, bands=8
+        ).count() == 0
 
     # two near-identical vectors land in shared buckets; k=5 past the
     # 1-candidate supply returns the single rank-1 row per query
@@ -391,9 +394,10 @@ def test_fused_lsh_edge_cases(spark):
     rows = [(1, base.tolist()), (2, (base + 1e-9).tolist()),
             (3, (-base).tolist())]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = ann.lsh_bucketed_topk(
-        emb, emb, dim=64, k=5, planes=64, bands=8, fuse=True
-    ).collect()
+    with regime(True):
+        got = ann.lsh_bucketed_topk(
+            emb, emb, dim=64, k=5, planes=64, bands=8
+        ).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r.query_id, []).append(r)
@@ -495,7 +499,7 @@ def test_hashed_embeddings_similarity_structure(spark):
     assert dot(vecs[1], vecs[2]) > 0.5 > abs(dot(vecs[1], vecs[3]))
 
 
-def test_fused_hashed_embeddings_match_distributed(spark, sf_dir):
+def test_fused_hashed_embeddings_match_distributed(spark, sf_dir, regime):
     """r16 fused feature-hash path: the single-task dense integer grid
     must reproduce EXACTLY the distributed explode+agg+grid-join rows —
     on the real documents fixture and on degenerate docs (empty text,
@@ -503,16 +507,20 @@ def test_fused_hashed_embeddings_match_distributed(spark, sf_dir):
     from id3c_spark.operators.embed import hashed_doc_embeddings
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    f = sorted(map(tuple, hashed_doc_embeddings(docs, "doc_id", "text", dim=64, fuse=True).collect()))
-    s = sorted(map(tuple, hashed_doc_embeddings(docs, "doc_id", "text", dim=64, fuse=False).collect()))
+    with regime(True):
+        f = sorted(map(tuple, hashed_doc_embeddings(docs, "doc_id", "text", dim=64).collect()))
+    with regime(False):
+        s = sorted(map(tuple, hashed_doc_embeddings(docs, "doc_id", "text", dim=64).collect()))
     assert f == s and f
 
     tiny = spark.createDataFrame(
         [(1, "alpha beta alpha alpha"), (2, ""), (3, None), (4, "one")],
         "doc_id long, text string",
     )
-    f = sorted(map(tuple, hashed_doc_embeddings(tiny, "doc_id", "text", dim=8, fuse=True).collect()))
-    s = sorted(map(tuple, hashed_doc_embeddings(tiny, "doc_id", "text", dim=8, fuse=False).collect()))
+    with regime(True):
+        f = sorted(map(tuple, hashed_doc_embeddings(tiny, "doc_id", "text", dim=8).collect()))
+    with regime(False):
+        s = sorted(map(tuple, hashed_doc_embeddings(tiny, "doc_id", "text", dim=8).collect()))
     assert f == s and len(f) == 32
 
 
@@ -610,7 +618,7 @@ def test_fused_cosine_edge_cases(spark):
     assert ann.cosine_pairs_above(empty, threshold=0.0).count() == 0
 
 
-def test_fused_ivf_path_matches_staged(spark, sf_dir):
+def test_fused_ivf_path_matches_staged(spark, sf_dir, regime):
     """ivf_topk r15 single-shard fast path: the fused one-stage plan
     (pivots → assignment → probing → rerank → top-k in one mapInPandas)
     must return EXACTLY the staged cell-keyed layout's rows. Layout
@@ -619,9 +627,10 @@ def test_fused_ivf_path_matches_staged(spark, sf_dir):
 
     for nlist, nprobe, k in [(16, 2, 3), (8, 3, 5), (4, 1, 2)]:
         fused = ann.ivf_topk(emb, emb, k=k, nlist=nlist, nprobe=nprobe)
-        staged = ann.ivf_topk(
-            emb, emb, k=k, nlist=nlist, nprobe=nprobe, fuse=False
-        )
+        with regime(False):
+            staged = ann.ivf_topk(
+                emb, emb, k=k, nlist=nlist, nprobe=nprobe
+            )
         plan = fused._jdf.queryExecution().optimizedPlan().toString()
         assert "Join" not in plan and "Window" not in plan, plan
         f = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
@@ -631,7 +640,7 @@ def test_fused_ivf_path_matches_staged(spark, sf_dir):
         assert f == s and f, (nlist, nprobe, k, len(f), len(s))
 
 
-def test_fused_ivf_parity_property(spark):
+def test_fused_ivf_parity_property(spark, regime):
     """Property: for ARBITRARY small corpora (size, values, k, nlist,
     nprobe), the fused single-shard IVF path returns exactly the staged
     layout's rows. Zero vectors excluded — cosine is undefined there."""
@@ -658,20 +667,23 @@ def test_fused_ivf_parity_property(spark):
             rows, "vec_id long, embedding array<double>"
         )
         kw = dict(k=k, nlist=nlist, nprobe=nprobe)
-        f = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
-                   for r in ann.ivf_topk(emb, emb, fuse=True, **kw).collect())
-        s = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
-                   for r in ann.ivf_topk(emb, emb, fuse=False, **kw).collect())
+        with regime(True):
+            f = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
+                       for r in ann.ivf_topk(emb, emb, **kw).collect())
+        with regime(False):
+            s = sorted((r.query_id, r.neighbor_id, r.sim, r.rank)
+                       for r in ann.ivf_topk(emb, emb, **kw).collect())
         assert f == s, (seed, n, k, nlist, nprobe)
 
     check()
 
 
-def test_fused_ivf_edge_cases(spark):
+def test_fused_ivf_edge_cases(spark, regime):
     """Empty corpus, nlist past corpus size, and k past candidate supply
     through the fused IVF path."""
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert ann.ivf_topk(empty, empty, k=3, nlist=4, nprobe=2, fuse=True).count() == 0
+    with regime(True):
+        assert ann.ivf_topk(empty, empty, k=3, nlist=4, nprobe=2).count() == 0
 
     import numpy as np
     rng = np.random.default_rng(5)
@@ -679,8 +691,10 @@ def test_fused_ivf_edge_cases(spark):
     rows = [(i, mat[i].tolist()) for i in range(3)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # nlist=16 > 3 vectors: every vector is a pivot; k=5 past supply
-    got = ann.ivf_topk(emb, emb, k=5, nlist=16, nprobe=2, fuse=True).collect()
-    staged = ann.ivf_topk(emb, emb, k=5, nlist=16, nprobe=2, fuse=False).collect()
+    with regime(True):
+        got = ann.ivf_topk(emb, emb, k=5, nlist=16, nprobe=2).collect()
+    with regime(False):
+        staged = ann.ivf_topk(emb, emb, k=5, nlist=16, nprobe=2).collect()
     f = sorted((r.query_id, r.neighbor_id, r.sim, r.rank) for r in got)
     s = sorted((r.query_id, r.neighbor_id, r.sim, r.rank) for r in staged)
     assert f == s
@@ -691,21 +705,21 @@ def test_fused_ivf_edge_cases(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), (q, ranks)
 
 
-def test_fused_ngram_pairs_match_distributed(spark, sf_dir):
+def test_fused_ngram_pairs_match_distributed(spark, sf_dir, regime):
     """ngram_jaccard_pairs r15 single-task fast path: the fused
     shingle/intersection stage must return EXACTLY the distributed
     pipeline's rows, with and without the stop-shingle cap."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     for max_df in (None, 200, 3):
-        fused = dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.4, max_df=max_df,
-            fuse=True,
-        )
-        dist = dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.4, max_df=max_df,
-            fuse=False,
-        )
+        with regime(True):
+            fused = dedup.ngram_jaccard_pairs(
+                docs, "doc_id", "text", k=3, threshold=0.4, max_df=max_df,
+            )
+        with regime(False):
+            dist = dedup.ngram_jaccard_pairs(
+                docs, "doc_id", "text", k=3, threshold=0.4, max_df=max_df,
+            )
         f = sorted((r.id_a, r.id_b, r.jaccard) for r in fused.collect())
         d = sorted((r.id_a, r.id_b, r.jaccard) for r in dist.collect())
         assert f == d, (max_df, len(f), len(d))
@@ -713,7 +727,7 @@ def test_fused_ngram_pairs_match_distributed(spark, sf_dir):
             assert f, max_df  # non-degenerate on the fixture corpus
 
 
-def test_fused_ngram_pairs_parity_property(spark):
+def test_fused_ngram_pairs_parity_property(spark, regime):
     """Property: for ARBITRARY small corpora (repeated words, short
     docs, duplicate texts), fused == distributed, including k > doc
     length and thresholds that keep everything."""
@@ -732,48 +746,50 @@ def test_fused_ngram_pairs_parity_property(spark):
     def check(texts, k, max_df, thr):
         rows = [(i, " ".join(ws)) for i, ws in enumerate(texts)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        f = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", k=k, threshold=thr, max_df=max_df,
-                fuse=True,
-            ).collect()
-        )
-        d = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", k=k, threshold=thr, max_df=max_df,
-                fuse=False,
-            ).collect()
-        )
+        with regime(True):
+            f = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.ngram_jaccard_pairs(
+                    docs, "doc_id", "text", k=k, threshold=thr, max_df=max_df,
+                ).collect()
+            )
+        with regime(False):
+            d = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.ngram_jaccard_pairs(
+                    docs, "doc_id", "text", k=k, threshold=thr, max_df=max_df,
+                ).collect()
+            )
         assert f == d, (texts, k, max_df, thr)
 
     check()
 
 
-def test_fused_minhash_pairs_match_distributed(spark, sf_dir):
+def test_fused_minhash_pairs_match_distributed(spark, sf_dir, regime):
     """minhash_lsh_pairs r15 single-task fast path: signatures, band
     bucketing and the exact-Jaccard verify must return EXACTLY the
     distributed banded pipeline's rows."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    f = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=3, num_hashes=32, bands=8,
-            threshold=0.4, fuse=True,
-        ).collect()
-    )
-    d = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=3, num_hashes=32, bands=8,
-            threshold=0.4, fuse=False,
-        ).collect()
-    )
+    with regime(True):
+        f = sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(
+                docs, "doc_id", "text", k=3, num_hashes=32, bands=8,
+                threshold=0.4,
+            ).collect()
+        )
+    with regime(False):
+        d = sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(
+                docs, "doc_id", "text", k=3, num_hashes=32, bands=8,
+                threshold=0.4,
+            ).collect()
+        )
     assert f == d and f  # identical and non-degenerate on the fixture
 
 
-def test_fused_minhash_pairs_parity_property(spark):
+def test_fused_minhash_pairs_parity_property(spark, regime):
     """Property parity over arbitrary corpora, including docs below k
     words (no signature row on either path) and duplicate texts, across
     band geometries."""
@@ -793,24 +809,26 @@ def test_fused_minhash_pairs_parity_property(spark):
         rows = [(i, " ".join(ws)) for i, ws in enumerate(texts)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         args = dict(k=2, num_hashes=num_hashes, bands=bands, threshold=thr)
-        f = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", fuse=True, **args
-            ).collect()
-        )
-        d = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", fuse=False, **args
-            ).collect()
-        )
+        with regime(True):
+            f = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.minhash_lsh_pairs(
+                    docs, "doc_id", "text", **args
+                ).collect()
+            )
+        with regime(False):
+            d = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.minhash_lsh_pairs(
+                    docs, "doc_id", "text", **args
+                ).collect()
+            )
         assert f == d, (texts, geometry, thr)
 
     check()
 
 
-def test_fused_incremental_lsh_matches_distributed(spark, sf_dir):
+def test_fused_incremental_lsh_matches_distributed(spark, sf_dir, regime):
     """incremental_lsh_dedup r15 fused cross-side path — including the
     catalog's odd/even split and an OVERLAPPING-id split (sides must
     stay distinct inside the fused task)."""
@@ -818,98 +836,106 @@ def test_fused_incremental_lsh_matches_distributed(spark, sf_dir):
     new = docs.filter(F.col("doc_id") % 2 == 1)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     for n_df, c_df in [(new, corpus), (docs.limit(40), docs)]:
-        f = sorted(
-            (r.new_id, r.corpus_id, r.jaccard)
-            for r in dedup.incremental_lsh_dedup(
-                n_df, c_df, "doc_id", "text", k=3, threshold=0.4, fuse=True
-            ).collect()
-        )
-        d = sorted(
-            (r.new_id, r.corpus_id, r.jaccard)
-            for r in dedup.incremental_lsh_dedup(
-                n_df, c_df, "doc_id", "text", k=3, threshold=0.4, fuse=False
-            ).collect()
-        )
+        with regime(True):
+            f = sorted(
+                (r.new_id, r.corpus_id, r.jaccard)
+                for r in dedup.incremental_lsh_dedup(
+                    n_df, c_df, "doc_id", "text", k=3, threshold=0.4
+                ).collect()
+            )
+        with regime(False):
+            d = sorted(
+                (r.new_id, r.corpus_id, r.jaccard)
+                for r in dedup.incremental_lsh_dedup(
+                    n_df, c_df, "doc_id", "text", k=3, threshold=0.4
+                ).collect()
+            )
         assert f == d and f
 
 
-def test_fused_containment_pairs_match_distributed(spark, sf_dir):
+def test_fused_containment_pairs_match_distributed(spark, sf_dir, regime):
     """ngram_containment_pairs r15 fused path, with and without the
     stop-shingle cap."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for max_df in (None, 200, 3):
-        f = sorted(
-            (r.id_a, r.id_b, r.containment)
-            for r in dedup.ngram_containment_pairs(
-                docs, "doc_id", "text", k=3, threshold=0.5, max_df=max_df,
-                fuse=True,
-            ).collect()
-        )
-        d = sorted(
-            (r.id_a, r.id_b, r.containment)
-            for r in dedup.ngram_containment_pairs(
-                docs, "doc_id", "text", k=3, threshold=0.5, max_df=max_df,
-                fuse=False,
-            ).collect()
-        )
+        with regime(True):
+            f = sorted(
+                (r.id_a, r.id_b, r.containment)
+                for r in dedup.ngram_containment_pairs(
+                    docs, "doc_id", "text", k=3, threshold=0.5, max_df=max_df,
+                ).collect()
+            )
+        with regime(False):
+            d = sorted(
+                (r.id_a, r.id_b, r.containment)
+                for r in dedup.ngram_containment_pairs(
+                    docs, "doc_id", "text", k=3, threshold=0.5, max_df=max_df,
+                ).collect()
+            )
         assert f == d, max_df
         if max_df in (None, 200):
             assert f, max_df
 
 
-def test_fused_prefix_jaccard_match_distributed(spark, sf_dir):
+def test_fused_prefix_jaccard_match_distributed(spark, sf_dir, regime):
     """prefix_filter_jaccard_pairs r15 fused path: the PPJoin prefix
     filter only prunes candidates, so the fused shared-shingle pair
     relation + identical integer threshold must give the same rows, at
     thresholds with exact and inexact rational forms."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for thr in (0.8, 0.5, 1.0 / 3.0):
-        f = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.prefix_filter_jaccard_pairs(
-                docs, "doc_id", "text", k=3, threshold=thr, fuse=True
-            ).collect()
-        )
-        d = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.prefix_filter_jaccard_pairs(
-                docs, "doc_id", "text", k=3, threshold=thr, fuse=False
-            ).collect()
-        )
+        with regime(True):
+            f = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.prefix_filter_jaccard_pairs(
+                    docs, "doc_id", "text", k=3, threshold=thr
+                ).collect()
+            )
+        with regime(False):
+            d = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.prefix_filter_jaccard_pairs(
+                    docs, "doc_id", "text", k=3, threshold=thr
+                ).collect()
+            )
         assert f == d, thr
     assert f  # 1/3 threshold keeps pairs on the fixture corpus
 
 
-def test_fused_simhash_matches_distributed(spark, sf_dir):
+def test_fused_simhash_matches_distributed(spark, sf_dir, regime):
     """simhash + simhash_pairs r15 fused paths: packed hashes and the
     banded Hamming pairs must be bitwise identical to the distributed
     explode/aggregate + band-join shapes."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    f = sorted(
-        (r.id, r.simhash)
-        for r in dedup.simhash(docs, "doc_id", "text", fuse=True).collect()
-    )
-    d = sorted(
-        (r.id, r.simhash)
-        for r in dedup.simhash(docs, "doc_id", "text", fuse=False).collect()
-    )
+    with regime(True):
+        f = sorted(
+            (r.id, r.simhash)
+            for r in dedup.simhash(docs, "doc_id", "text").collect()
+        )
+    with regime(False):
+        d = sorted(
+            (r.id, r.simhash)
+            for r in dedup.simhash(docs, "doc_id", "text").collect()
+        )
     assert f == d and f
-    fp = sorted(
-        (r.id_a, r.id_b, r.distance)
-        for r in dedup.simhash_pairs(
-            docs, "doc_id", "text", max_distance=3, fuse=True
-        ).collect()
-    )
-    dp = sorted(
-        (r.id_a, r.id_b, r.distance)
-        for r in dedup.simhash_pairs(
-            docs, "doc_id", "text", max_distance=3, fuse=False
-        ).collect()
-    )
+    with regime(True):
+        fp = sorted(
+            (r.id_a, r.id_b, r.distance)
+            for r in dedup.simhash_pairs(
+                docs, "doc_id", "text", max_distance=3
+            ).collect()
+        )
+    with regime(False):
+        dp = sorted(
+            (r.id_a, r.id_b, r.distance)
+            for r in dedup.simhash_pairs(
+                docs, "doc_id", "text", max_distance=3
+            ).collect()
+        )
     assert fp == dp and fp
 
 
-def test_fused_simhash_parity_property(spark):
+def test_fused_simhash_parity_property(spark, regime):
     """Property parity for simhash/simhash_pairs over arbitrary corpora,
     including EMPTY token arrays (no row on either path) and duplicate
     ids (votes accumulate per id)."""
@@ -929,44 +955,37 @@ def test_fused_simhash_parity_property(spark):
         if dup_first:
             rows.append((0, rows[0][1] + " extra"))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        f = sorted(
-            (r.id, r.simhash)
-            for r in dedup.simhash(docs, "doc_id", "text", fuse=True).collect()
-        )
-        d = sorted(
-            (r.id, r.simhash)
-            for r in dedup.simhash(docs, "doc_id", "text", fuse=False).collect()
-        )
+        with regime(True):
+            f = sorted(
+                (r.id, r.simhash)
+                for r in dedup.simhash(docs, "doc_id", "text").collect()
+            )
+        with regime(False):
+            d = sorted(
+                (r.id, r.simhash)
+                for r in dedup.simhash(docs, "doc_id", "text").collect()
+            )
         assert f == d, (texts, dup_first)
-        fp = sorted(
-            tuple(r)
-            for r in dedup.simhash_pairs(
-                docs, "doc_id", "text", max_distance=maxd, fuse=True
-            ).collect()
-        )
-        dp = sorted(
-            tuple(r)
-            for r in dedup.simhash_pairs(
-                docs, "doc_id", "text", max_distance=maxd, fuse=False
-            ).collect()
-        )
+        with regime(True):
+            fp = sorted(
+                tuple(r)
+                for r in dedup.simhash_pairs(
+                    docs, "doc_id", "text", max_distance=maxd
+                ).collect()
+            )
+        with regime(False):
+            dp = sorted(
+                tuple(r)
+                for r in dedup.simhash_pairs(
+                    docs, "doc_id", "text", max_distance=maxd
+                ).collect()
+            )
         assert fp == dp, (texts, dup_first, maxd)
 
     check()
 
 
-def test_fuse_text_gate(spark, sf_dir):
-    """The shared stats gate: file-backed small corpora fuse; in-memory
-    frames and non-integral id columns keep the distributed shape."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert dedup._fuse_text(docs, "doc_id")
-    mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    assert not dedup._fuse_text(mem, "doc_id")
-    sdocs = docs.select(F.col("doc_id").cast("string").alias("sid"), "text")
-    assert not dedup._fuse_text(sdocs, "sid")
-
-
-def test_fused_ivf_duplicate_ids_self_exclusion_by_id(spark):
+def test_fused_ivf_duplicate_ids_self_exclusion_by_id(spark, regime):
     """r16 (ADVICE r15): the fused self-search cell top-k excludes
     candidates BY ID like the staged _cell_gemm_topk (cids != qids[i]),
     not by row index — the old row-index mask returned a duplicate-id
@@ -988,10 +1007,12 @@ def test_fused_ivf_duplicate_ids_self_exclusion_by_id(spark):
         (ann.ivf_topk, dict(k=4, nlist=4, nprobe=4)),
         (ann.ivf_trained_topk, dict(k=4, nlist=4, nprobe=4, train_iter=1)),
     ]:
-        f = [(r.query_id, r.neighbor_id)
-             for r in fn(emb, emb, fuse=True, **kw).collect()]
-        s = [(r.query_id, r.neighbor_id)
-             for r in fn(emb, emb, fuse=False, **kw).collect()]
+        with regime(True):
+            f = [(r.query_id, r.neighbor_id)
+                 for r in fn(emb, emb, **kw).collect()]
+        with regime(False):
+            s = [(r.query_id, r.neighbor_id)
+                 for r in fn(emb, emb, **kw).collect()]
         assert f and s
         assert all(q != nbr for q, nbr in f)   # fused: by-id exclusion
         assert all(q != nbr for q, nbr in s)   # staged reference rule

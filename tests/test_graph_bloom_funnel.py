@@ -304,7 +304,7 @@ def test_np_levenshtein_matches_spark_levenshtein(spark):
     assert got.tolist() == ref
 
 
-def test_entity_resolution_fused_parity(spark, tmp_path):
+def test_entity_resolution_fused_parity(spark, tmp_path, regime):
     """Fused single-task entity resolution == the distributed
     composition, value-for-value: exact-name groups, Levenshtein<=2
     edges, min-id components, member counts — including null
@@ -335,8 +335,10 @@ def test_entity_resolution_fused_parity(spark, tmp_path):
             (r.canonical_id, r.canonical_name, r.n_members) for r in rows
         )
 
-    fused = entity_resolution(src, "id", "nm", "blk", 2, fuse=True).collect()
-    dist = entity_resolution(src, "id", "nm", "blk", 2, fuse=False).collect()
+    with regime(True):
+        fused = entity_resolution(src, "id", "nm", "blk", 2).collect()
+    with regime(False):
+        dist = entity_resolution(src, "id", "nm", "blk", 2).collect()
     assert key(fused) == key(dist) and fused
     # the small file-backed source must gate into the single-task plan
     plan = entity_resolution(src, "id", "nm", "blk", 2)._jdf \

@@ -965,7 +965,7 @@ def _pairs_key(rows):
     return sorted((r["id_a"], r["id_b"], r["hamming"]) for r in rows)
 
 
-def test_fused_sketch_pairs_parity_with_banded_join(spark):
+def test_fused_sketch_pairs_parity_with_banded_join(spark, regime):
     from id3c_spark.operators.ann import sketch_hamming_pairs
 
     rng = np.random.default_rng(11)
@@ -980,16 +980,18 @@ def test_fused_sketch_pairs_parity_with_banded_join(spark):
     rows.append((4, int(base[4] ^ 7)))
     sk = spark.createDataFrame(rows, "id long, sketch long")
     for bits, bands, mh in [(64, 8, 7), (64, 4, 3)]:
-        fused = _pairs_key(
-            sketch_hamming_pairs(sk, bits, bands, mh, fuse=True).collect()
-        )
-        dist = _pairs_key(
-            sketch_hamming_pairs(sk, bits, bands, mh, fuse=False).collect()
-        )
+        with regime(True):
+            fused = _pairs_key(
+                sketch_hamming_pairs(sk, bits, bands, mh).collect()
+            )
+        with regime(False):
+            dist = _pairs_key(
+                sketch_hamming_pairs(sk, bits, bands, mh).collect()
+            )
         assert fused == dist and fused  # non-empty: twins survive
 
 
-def test_fused_sketch_join_parity_with_banded_join(spark):
+def test_fused_sketch_join_parity_with_banded_join(spark, regime):
     from pyspark.sql import functions as F
 
     from id3c_spark.operators.ann import sketch_hamming_join
@@ -1004,16 +1006,18 @@ def test_fused_sketch_join_parity_with_banded_join(spark):
     right_rows += [(999, int(rng.integers(-(2**63), 2**63))) for _ in range(5)]
     right_rows.append(right_rows[0])  # duplicate row → triple dedup
     right = spark.createDataFrame(right_rows, "id long, sketch long")
-    fused = _pairs_key(
-        sketch_hamming_join(left, right, 64, 8, 7, fuse=True).collect()
-    )
-    dist = _pairs_key(
-        sketch_hamming_join(left, right, 64, 8, 7, fuse=False).collect()
-    )
+    with regime(True):
+        fused = _pairs_key(
+            sketch_hamming_join(left, right, 64, 8, 7).collect()
+        )
+    with regime(False):
+        dist = _pairs_key(
+            sketch_hamming_join(left, right, 64, 8, 7).collect()
+        )
     assert fused == dist and fused
 
 
-def test_fused_sketch_join_struct_ids(spark):
+def test_fused_sketch_join_struct_ids(spark, regime):
     from pyspark.sql import functions as F
 
     from id3c_spark.operators.ann import sketch_hamming_join
@@ -1028,8 +1032,10 @@ def test_fused_sketch_join_struct_ids(spark):
          for i, s in enumerate(sks) for f in range(2)],
         "v long, f long, sketch long",
     ).select(F.struct("v", "f").alias("id"), "sketch")
-    fused = sketch_hamming_join(left, right, 64, 8, 7, fuse=True).collect()
-    dist = sketch_hamming_join(left, right, 64, 8, 7, fuse=False).collect()
+    with regime(True):
+        fused = sketch_hamming_join(left, right, 64, 8, 7).collect()
+    with regime(False):
+        dist = sketch_hamming_join(left, right, 64, 8, 7).collect()
     key = lambda rows: sorted(
         (r["id_a"], (r["id_b"]["v"], r["id_b"]["f"]), r["hamming"])
         for r in rows
@@ -1037,7 +1043,7 @@ def test_fused_sketch_join_struct_ids(spark):
     assert key(fused) == key(dist) and fused
 
 
-def test_fused_sketch_join_empty_and_no_match_cases(spark):
+def test_fused_sketch_join_empty_and_no_match_cases(spark, regime):
     """No-candidate / no-match / empty-side fused joins must return
     empty frames of the declared schema — including struct ids, where a
     default float64 empty pandas column cannot Arrow-cast to the struct
@@ -1055,10 +1061,12 @@ def test_fused_sketch_join_empty_and_no_match_cases(spark):
         [(2, 0, -1)], "v long, f long, sketch long"
     ).select(F.struct("v", "f").alias("id"), "sketch")
     empty = spark.createDataFrame([], "id long, sketch long")
-    assert sketch_hamming_join(left, right, 64, 8, 7, fuse=True).count() == 0
-    assert sketch_hamming_join(left, rs, 64, 8, 7, fuse=True).count() == 0
-    assert sketch_hamming_join(left, empty, 64, 8, 7, fuse=True).count() == 0
-    assert sketch_hamming_join(empty, rs, 64, 8, 7, fuse=True).count() == 0
+    with regime(True):
+        assert sketch_hamming_join(left, right, 64, 8, 7).count() == 0
+        assert sketch_hamming_join(left, rs, 64, 8, 7).count() == 0
+        assert sketch_hamming_join(left, empty, 64, 8, 7).count() == 0
+        assert sketch_hamming_join(empty, rs, 64, 8, 7).count() == 0
     two = spark.createDataFrame([(1, 0), (2, -1)], "id long, sketch long")
-    assert sketch_hamming_pairs(two, 64, 8, 7, fuse=True).count() == 0
-    assert sketch_hamming_pairs(empty, 64, 8, 7, fuse=True).count() == 0
+    with regime(True):
+        assert sketch_hamming_pairs(two, 64, 8, 7).count() == 0
+        assert sketch_hamming_pairs(empty, 64, 8, 7).count() == 0

@@ -1,8 +1,8 @@
 """Bit-parity of the fused single-task spectral path (r15 optimization)
 vs the distributed power-iteration passes (operators.linalg).
 
-The fused path is stats-gated to file-backed sources small enough for
-one task (linalg._single_task_source); these tests write real parquet
+The fused path sits below the one regime gate (ann.fits_one_task:
+file-backed sources small enough for one task); these tests write real parquet
 fixtures so the gate fires, then pin EXACT equality (float ==, not
 approx) against the distributed implementation on the same data.
 """
@@ -13,8 +13,8 @@ import random
 
 from pyspark.sql import functions as F
 
+from id3c_spark.operators.ann import fits_one_task
 from id3c_spark.operators.linalg import (
-    _single_task_source,
     pc_projection,
     power_iteration,
     spectral_scores,
@@ -46,14 +46,6 @@ def _distributed_direction(spark, df, dim, iters):
     return out.select("dim", F.round("v", 6).alias("v"))
 
 
-def test_gate_fires_on_small_file_backed_source(spark, tmp_path):
-    df = _write_corpus(spark, tmp_path, 50, 8)
-    assert _single_task_source(df)
-    # in-memory frames must keep the distributed path
-    mem = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    assert not _single_task_source(mem)
-
-
 def test_fused_plan_is_narrow(spark, tmp_path):
     df = _write_corpus(spark, tmp_path, 50, 8)
     sc = spectral_scores(df, "vec_id", "embedding", dim=8, iters=3)
@@ -65,7 +57,7 @@ def test_fused_plan_is_narrow(spark, tmp_path):
 def test_fused_scores_match_distributed_bitwise(spark, tmp_path):
     for seed, n_rows, dim in [(7, 50, 8), (11, 200, 16), (3, 120, 64)]:
         df = _write_corpus(spark, tmp_path, n_rows, dim, seed=seed)
-        assert _single_task_source(df)
+        assert fits_one_task(df)
         fused = {
             r["id"]: r["score"]
             for r in spectral_scores(df, "vec_id", "embedding", dim=dim, iters=3).collect()
@@ -99,7 +91,7 @@ def test_fused_empty_and_degenerate_corpora(spark, tmp_path):
 
     # empty but file-backed: direction = rounded start vector, scores = empty
     empty = _write_corpus(spark, tmp_path, 0, 4)
-    assert _single_task_source(empty)
+    assert fits_one_task(empty)
     d = principal_direction(empty, "embedding", dim=4, iters=3).collect()
     assert sorted((r["dim"], r["v"]) for r in d) == [
         (1, 0.5), (2, 0.5), (3, 0.5), (4, 0.5)

@@ -2,10 +2,11 @@
 optimization) vs the collect-per-iteration staged paths: clustering.kmeans,
 pq.pq_train, pq.pq_topk and ann.ivf_trained_topk.
 
-The fused paths are stats-gated to file-backed sources small enough for
-one task (clustering._fuse_vectors); these tests write real parquet
-fixtures so the gate fires, then pin EXACT equality (float ==, not
-approx) against the staged implementation (fuse=False) on the same data.
+The fused paths sit below the one regime gate (ann.fits_one_task:
+file-backed sources small enough for one task); these tests write real
+parquet fixtures, then pin EXACT equality (float ==, not approx) against
+the staged implementation on the same data, each regime forced through
+the `regime` fixture.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import numpy as np
 
 from id3c_spark.operators import ann
 from id3c_spark.operators.ann import _prep
-from id3c_spark.operators.clustering import _fuse_vectors, kmeans, lloyd_np
+from id3c_spark.operators.clustering import kmeans, lloyd_np
 from id3c_spark.operators.pq import pq_topk, pq_train
 
 
@@ -38,21 +39,6 @@ def _write_corpus(spark, tmp_path, n_rows, dim, seed=7, zero=False,
     return spark.read.parquet(path)
 
 
-def test_gate_fires_on_small_file_backed_integral_source(spark, tmp_path):
-    df = _write_corpus(spark, tmp_path, 50, 8)
-    assert _fuse_vectors(_prep(df, "vec_id", "embedding"))
-    # in-memory frames must keep the distributed path
-    mem = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    assert not _fuse_vectors(_prep(mem, "vec_id", "embedding"))
-    # non-integral ids too (the numpy mirror is int64)
-    sid = spark.createDataFrame(
-        [("a", [1.0, 0.0])], "vec_id string, embedding array<float>"
-    )
-    assert not _fuse_vectors(_prep(sid, "vec_id", "embedding"))
-
-
 def test_fused_kmeans_plan_is_narrow_and_lazy(spark, tmp_path):
     df = _write_corpus(spark, tmp_path, 60, 8)
     out = kmeans(df, "vec_id", "embedding", k=4, max_iter=2)
@@ -61,69 +47,78 @@ def test_fused_kmeans_plan_is_narrow_and_lazy(spark, tmp_path):
     assert "MapInPandas" in plan
 
 
-def test_fused_kmeans_matches_staged_bitwise(spark, tmp_path):
+def test_fused_kmeans_matches_staged_bitwise(spark, tmp_path, regime):
     for seed, n, dim, k, iters in [(7, 60, 8, 4, 2), (11, 200, 16, 8, 3),
                                    (3, 40, 64, 8, 1)]:
         df = _write_corpus(spark, tmp_path, n, dim, seed=seed)
-        fused = sorted(map(tuple, kmeans(
-            df, "vec_id", "embedding", k=k, max_iter=iters, fuse=True
-        ).collect()))
-        staged = sorted(map(tuple, kmeans(
-            df, "vec_id", "embedding", k=k, max_iter=iters, fuse=False
-        ).collect()))
+        with regime(True):
+            fused = sorted(map(tuple, kmeans(
+                df, "vec_id", "embedding", k=k, max_iter=iters
+            ).collect()))
+        with regime(False):
+            staged = sorted(map(tuple, kmeans(
+                df, "vec_id", "embedding", k=k, max_iter=iters
+            ).collect()))
         assert fused == staged  # exact float equality
 
 
-def test_fused_pq_train_matches_staged_bitwise(spark, tmp_path):
+def test_fused_pq_train_matches_staged_bitwise(spark, tmp_path, regime):
     for seed, n, dim, m, k, iters, salt in [
         (7, 60, 8, 2, 4, 2, ""),
         (11, 200, 16, 4, 8, 3, "res"),
         (3, 40, 64, 8, 16, 1, ""),
     ]:
         df = _write_corpus(spark, tmp_path, n, dim, seed=seed)
-        fused = pq_train(df, m=m, k=k, max_iter=iters, seed_salt=salt,
-                         fuse=True)
-        staged = pq_train(df, m=m, k=k, max_iter=iters, seed_salt=salt,
-                          fuse=False)
+        with regime(True):
+            fused = pq_train(df, m=m, k=k, max_iter=iters, seed_salt=salt)
+        with regime(False):
+            staged = pq_train(df, m=m, k=k, max_iter=iters, seed_salt=salt)
         assert fused.shape == staged.shape
         assert np.array_equal(fused, staged)  # bit-exact centroids
 
 
-def test_fused_pq_train_double_input_matches(spark, tmp_path):
+def test_fused_pq_train_double_input_matches(spark, tmp_path, regime):
     # array<double> input takes pq_train's emit_direct staged path —
     # the fused mirror must match that too
     df = _write_corpus(spark, tmp_path, 80, 16, seed=5, dtype="double")
-    fused = pq_train(df, m=4, k=8, max_iter=2, fuse=True)
-    staged = pq_train(df, m=4, k=8, max_iter=2, fuse=False)
+    with regime(True):
+        fused = pq_train(df, m=4, k=8, max_iter=2)
+    with regime(False):
+        staged = pq_train(df, m=4, k=8, max_iter=2)
     assert np.array_equal(fused, staged)
 
 
-def test_fused_pq_topk_matches_staged_bitwise(spark, tmp_path):
+def test_fused_pq_topk_matches_staged_bitwise(spark, tmp_path, regime):
     for seed, n, dim, m, k in [(7, 60, 8, 2, 5), (11, 150, 16, 4, 3)]:
         df = _write_corpus(spark, tmp_path, n, dim, seed=seed)
-        books = pq_train(df, m=m, k=8, max_iter=2, fuse=False)
-        fused = sorted(map(tuple, pq_topk(
-            df, df, books, k=k, fuse=True
-        ).collect()))
-        staged = sorted(map(tuple, pq_topk(
-            df, df, books, k=k, fuse=False
-        ).collect()))
+        with regime(False):
+            books = pq_train(df, m=m, k=8, max_iter=2)
+        with regime(True):
+            fused = sorted(map(tuple, pq_topk(
+                df, df, books, k=k
+            ).collect()))
+        with regime(False):
+            staged = sorted(map(tuple, pq_topk(
+                df, df, books, k=k
+            ).collect()))
         assert fused == staged
         plan = pq_topk(df, df, books, k=k)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "Exchange" not in plan
 
 
-def test_fused_ivf_trained_matches_staged_bitwise(spark, tmp_path):
+def test_fused_ivf_trained_matches_staged_bitwise(spark, tmp_path, regime):
     for seed, n, dim, nlist, nprobe, k in [(7, 60, 8, 4, 2, 5),
                                            (11, 200, 16, 16, 6, 5)]:
         df = _write_corpus(spark, tmp_path, n, dim, seed=seed)
-        fused = sorted(map(tuple, ann.ivf_trained_topk(
-            df, df, k=k, nlist=nlist, nprobe=nprobe, fuse=True
-        ).collect()))
-        staged = sorted(map(tuple, ann.ivf_trained_topk(
-            df, df, k=k, nlist=nlist, nprobe=nprobe, fuse=False
-        ).collect()))
+        with regime(True):
+            fused = sorted(map(tuple, ann.ivf_trained_topk(
+                df, df, k=k, nlist=nlist, nprobe=nprobe
+            ).collect()))
+        with regime(False):
+            staged = sorted(map(tuple, ann.ivf_trained_topk(
+                df, df, k=k, nlist=nlist, nprobe=nprobe
+            ).collect()))
         assert fused == staged
         plan = ann.ivf_trained_topk(
             df, df, k=k, nlist=nlist, nprobe=nprobe
@@ -131,57 +126,65 @@ def test_fused_ivf_trained_matches_staged_bitwise(spark, tmp_path):
         assert "Exchange" not in plan
 
 
-def test_fused_ivf_trained_pretrained_coarse_matches(spark, tmp_path):
+def test_fused_ivf_trained_pretrained_coarse_matches(spark, tmp_path, regime):
     # injected pretrained coarse model (the serve-many separation):
     # the fused path must use it instead of retraining
     from id3c_spark.operators.pq import _normalized
 
     df = _write_corpus(spark, tmp_path, 80, 8, seed=9)
     vn = _normalized(_prep(df, "vec_id", "embedding"))
-    coarse = pq_train(vn, "id", "v", m=1, k=4, max_iter=2, fuse=False)
-    fused = sorted(map(tuple, ann.ivf_trained_topk(
-        df, df, k=5, nlist=4, nprobe=2, coarse=coarse, fuse=True
-    ).collect()))
-    staged = sorted(map(tuple, ann.ivf_trained_topk(
-        df, df, k=5, nlist=4, nprobe=2, coarse=coarse, fuse=False
-    ).collect()))
+    with regime(False):
+        coarse = pq_train(vn, "id", "v", m=1, k=4, max_iter=2)
+    with regime(True):
+        fused = sorted(map(tuple, ann.ivf_trained_topk(
+            df, df, k=5, nlist=4, nprobe=2, coarse=coarse
+        ).collect()))
+    with regime(False):
+        staged = sorted(map(tuple, ann.ivf_trained_topk(
+            df, df, k=5, nlist=4, nprobe=2, coarse=coarse
+        ).collect()))
     assert fused == staged
 
 
-def test_fused_edges_k_past_corpus_and_n_below_k(spark, tmp_path):
+def test_fused_edges_k_past_corpus_and_n_below_k(spark, tmp_path, regime):
     # fewer rows than clusters: k trains down to N, like the staged seed
     # cap; top-k past the corpus emits every non-self candidate
     df = _write_corpus(spark, tmp_path, 3, 8, seed=13)
-    assert np.array_equal(
-        pq_train(df, m=2, k=16, max_iter=2, fuse=True),
-        pq_train(df, m=2, k=16, max_iter=2, fuse=False),
-    )
-    fk = sorted(map(tuple, kmeans(df, k=16, max_iter=2, fuse=True).collect()))
-    sk = sorted(map(tuple, kmeans(df, k=16, max_iter=2, fuse=False).collect()))
+    with regime(True):
+        fused_books = pq_train(df, m=2, k=16, max_iter=2)
+        fk = sorted(map(tuple, kmeans(df, k=16, max_iter=2).collect()))
+    with regime(False):
+        staged_books = pq_train(df, m=2, k=16, max_iter=2)
+        sk = sorted(map(tuple, kmeans(df, k=16, max_iter=2).collect()))
+        books = pq_train(df, m=2, k=2, max_iter=1)
+    assert np.array_equal(fused_books, staged_books)
     assert fk == sk
-    books = pq_train(df, m=2, k=2, max_iter=1, fuse=False)
-    ft = sorted(map(tuple, pq_topk(df, df, books, k=10, fuse=True).collect()))
-    st = sorted(map(tuple, pq_topk(df, df, books, k=10, fuse=False).collect()))
+    with regime(True):
+        ft = sorted(map(tuple, pq_topk(df, df, books, k=10).collect()))
+    with regime(False):
+        st = sorted(map(tuple, pq_topk(df, df, books, k=10).collect()))
     assert ft == st
 
 
-def test_fused_zero_vectors_and_empty(spark, tmp_path):
+def test_fused_zero_vectors_and_empty(spark, tmp_path, regime):
     # all-zero vectors: no normalization in kmeans/pq, so values stay
     # finite and parity must hold exactly
     zeros = _write_corpus(spark, tmp_path, 10, 4, zero=True)
-    assert np.array_equal(
-        pq_train(zeros, m=2, k=4, max_iter=2, fuse=True),
-        pq_train(zeros, m=2, k=4, max_iter=2, fuse=False),
-    )
-    fz = sorted(map(tuple, kmeans(zeros, k=4, max_iter=2, fuse=True).collect()))
-    sz = sorted(map(tuple, kmeans(zeros, k=4, max_iter=2, fuse=False).collect()))
+    with regime(True):
+        fused_books = pq_train(zeros, m=2, k=4, max_iter=2)
+        fz = sorted(map(tuple, kmeans(zeros, k=4, max_iter=2).collect()))
+    with regime(False):
+        staged_books = pq_train(zeros, m=2, k=4, max_iter=2)
+        sz = sorted(map(tuple, kmeans(zeros, k=4, max_iter=2).collect()))
+    assert np.array_equal(fused_books, staged_books)
     assert fz == sz
     # empty but file-backed: fused paths emit empty frames
     empty = _write_corpus(spark, tmp_path, 0, 4)
-    assert kmeans(empty, k=4, max_iter=2, fuse=True).count() == 0
-    assert ann.ivf_trained_topk(
-        empty, empty, k=5, nlist=4, nprobe=2, fuse=True
-    ).count() == 0
+    with regime(True):
+        assert kmeans(empty, k=4, max_iter=2).count() == 0
+        assert ann.ivf_trained_topk(
+            empty, empty, k=5, nlist=4, nprobe=2
+        ).count() == 0
 
 
 def test_micros6_matches_spark_round_cast(spark):

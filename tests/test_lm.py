@@ -168,7 +168,7 @@ def test_new_operators_handle_empty_and_degenerate_inputs(spark):
     assert temperature_sample(estr, "doc_id", "stratum", 10).count() == 0
 
 
-def test_fused_lm_paths_match_distributed(spark, sf_dir):
+def test_fused_lm_paths_match_distributed(spark, sf_dir, regime):
     """r16 fused single-task count relations: bigram_lm_score and
     dsir_top_docs must return EXACTLY the distributed pipeline's rows on
     the real documents fixture and on degenerate corpora (empty docs,
@@ -176,13 +176,17 @@ def test_fused_lm_paths_match_distributed(spark, sf_dir):
     from id3c_spark.operators.lm import bigram_lm_score, dsir_top_docs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    f = sorted(map(tuple, bigram_lm_score(docs, fuse=True).collect()))
-    s = sorted(map(tuple, bigram_lm_score(docs, fuse=False).collect()))
+    with regime(True):
+        f = sorted(map(tuple, bigram_lm_score(docs).collect()))
+    with regime(False):
+        s = sorted(map(tuple, bigram_lm_score(docs).collect()))
     assert f == s and f
 
     is_t = F.col("lang") == "en"
-    fd = sorted(map(tuple, dsir_top_docs(docs, is_t, fuse=True).collect()))
-    sd = sorted(map(tuple, dsir_top_docs(docs, is_t, fuse=False).collect()))
+    with regime(True):
+        fd = sorted(map(tuple, dsir_top_docs(docs, is_t).collect()))
+    with regime(False):
+        sd = sorted(map(tuple, dsir_top_docs(docs, is_t).collect()))
     assert fd == sd and fd
 
     rows = [
@@ -194,10 +198,14 @@ def test_fused_lm_paths_match_distributed(spark, sf_dir):
         (6, "the cat sat on a hat", "en"),
     ]
     tiny = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    f = sorted(map(tuple, bigram_lm_score(tiny, fuse=True).collect()))
-    s = sorted(map(tuple, bigram_lm_score(tiny, fuse=False).collect()))
+    with regime(True):
+        f = sorted(map(tuple, bigram_lm_score(tiny).collect()))
+    with regime(False):
+        s = sorted(map(tuple, bigram_lm_score(tiny).collect()))
     assert f == s and f
     is_t = F.col("lang") == "en"   # null lang → null flag → non-target
-    fd = sorted(map(tuple, dsir_top_docs(tiny, is_t, k=10, fuse=True).collect()))
-    sd = sorted(map(tuple, dsir_top_docs(tiny, is_t, k=10, fuse=False).collect()))
+    with regime(True):
+        fd = sorted(map(tuple, dsir_top_docs(tiny, is_t, k=10).collect()))
+    with regime(False):
+        sd = sorted(map(tuple, dsir_top_docs(tiny, is_t, k=10).collect()))
     assert fd == sd and fd

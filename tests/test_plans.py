@@ -41,7 +41,7 @@ ALLOWED_CROSS = {
     # r15: the self-search single-shard pq_topk takes the fused one-stage
     # path at this scale (no pack, no crossJoin) — the multi-shard ADC
     # blocked crossJoin shape stays exercised by the pq parity tests'
-    # fuse=False runs
+    # staged-regime runs
     "pq_topk_embeddings": 0,
     # single-row aggregate scalars cross-joined onto a relation (the same
     # shape as bm25's stats): corpus doc count, unigram vocabulary size,

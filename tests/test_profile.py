@@ -153,8 +153,8 @@ def test_kmv_sketch_map_side_topk_plan(spark):
     assert "Partial" in plan.split("WindowGroupLimit")[-1].split("\n")[0]
 
 
-def test_profile_table_fused_parity_with_distributed(spark, tmp_path):
-    """r16 fused single-task profile (guide §2.4): fuse=True must equal
+def test_profile_table_fused_parity_with_distributed(spark, tmp_path, regime):
+    """r16 fused single-task profile (guide §2.4): the fused regime must equal
     the Expand-based distributed aggregation value-for-value on every
     supported type, including the nasty cases — float NULL vs float NaN
     (the isnull companion keeps them apart through Arrow), NaN min/max
@@ -197,8 +197,10 @@ def test_profile_table_fused_parity_with_distributed(spark, tmp_path):
             out.append((r.col_name, tuple(vals)))
         return out
 
-    fused = profile_table(src, fuse=True).collect()
-    dist = profile_table(src, fuse=False).collect()
+    with regime(True):
+        fused = profile_table(src).collect()
+    with regime(False):
+        dist = profile_table(src).collect()
     assert key(fused) == key(dist)
     # the gate itself: file-backed small source fuses, in-memory doesn't
     assert profile_table(src)._jdf.queryExecution().executedPlan() \
@@ -210,6 +212,8 @@ def test_profile_table_fused_parity_with_distributed(spark, tmp_path):
     empty = str(tmp_path / "prof_empty")
     src.limit(0).coalesce(1).write.parquet(empty)
     esrc = spark.read.parquet(empty)
-    assert key(profile_table(esrc, fuse=True).collect()) == key(
-        profile_table(esrc, fuse=False).collect()
-    )
+    with regime(True):
+        fused_empty = profile_table(esrc).collect()
+    with regime(False):
+        dist_empty = profile_table(esrc).collect()
+    assert key(fused_empty) == key(dist_empty)

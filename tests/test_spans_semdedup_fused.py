@@ -2,10 +2,10 @@
 paths (r15 optimization) vs their distributed implementations
 (operators.spans.shared_span_pairs, operators.ann.semantic_dedup).
 
-The fused paths are stats-gated to file-backed sources small enough for
-one task; these tests write real parquet fixtures so the gate fires,
-then pin EXACT equality against the staged paths (fuse=False) on the
-same data.
+The fused paths sit below the one regime gate (ann.fits_one_task:
+file-backed sources small enough for one task); these tests write real
+parquet fixtures, then pin EXACT equality against the staged paths on
+the same data, each regime forced through the `regime` fixture.
 """
 
 from __future__ import annotations
@@ -59,56 +59,66 @@ def test_fused_span_plan_is_narrow(spark, tmp_path):
     assert "MapInPandas" in plan
 
 
-def test_fused_span_pairs_match_staged_bitwise(spark, tmp_path):
+def test_fused_span_pairs_match_staged_bitwise(spark, tmp_path, regime):
     for seed, n, kk, mw, cap in [(7, 40, 5, 8, 200), (11, 80, 3, 6, 5),
                                  (3, 60, 5, 8, None)]:
         docs = _write_docs(spark, tmp_path, n, seed=seed)
-        fused = sorted(map(tuple, shared_span_pairs(
-            docs, k=kk, min_words=mw, max_df=cap, fuse=True
-        ).collect()))
-        staged = sorted(map(tuple, shared_span_pairs(
-            docs, k=kk, min_words=mw, max_df=cap, fuse=False
-        ).collect()))
+        with regime(True):
+            fused = sorted(map(tuple, shared_span_pairs(
+                docs, k=kk, min_words=mw, max_df=cap
+            ).collect()))
+        with regime(False):
+            staged = sorted(map(tuple, shared_span_pairs(
+                docs, k=kk, min_words=mw, max_df=cap
+            ).collect()))
         assert fused == staged
 
 
-def test_fused_span_edges(spark, tmp_path):
+def test_fused_span_edges(spark, tmp_path, regime):
     # no duplicated span: both paths emit nothing (or identically little)
     docs = _write_docs(spark, tmp_path, 30, seed=9, dup_span=False)
-    fused = sorted(map(tuple, shared_span_pairs(docs, fuse=True).collect()))
-    staged = sorted(map(tuple, shared_span_pairs(docs, fuse=False).collect()))
+    with regime(True):
+        fused = sorted(map(tuple, shared_span_pairs(docs).collect()))
+    with regime(False):
+        staged = sorted(map(tuple, shared_span_pairs(docs).collect()))
     assert fused == staged
     # docs below k words only
     short = _write_docs(spark, tmp_path, 0, seed=1)
-    assert shared_span_pairs(short, fuse=True).count() == 0
+    with regime(True):
+        assert shared_span_pairs(short).count() == 0
 
 
-def test_fused_semantic_dedup_matches_staged_bitwise(spark, tmp_path):
+def test_fused_semantic_dedup_matches_staged_bitwise(spark, tmp_path, regime):
     for seed, n, dim, thr, nl in [(7, 60, 8, 0.9, None), (11, 120, 16, 0.35, None),
                                   (3, 50, 8, 0.5, 4)]:
         vecs = _write_vecs(spark, tmp_path, n, dim, seed=seed)
-        fused = sorted(map(tuple, semantic_dedup(
-            vecs, threshold=thr, nlist=nl, fuse=True
-        ).collect()))
-        staged = sorted(map(tuple, semantic_dedup(
-            vecs, threshold=thr, nlist=nl, fuse=False
-        ).collect()))
+        with regime(True):
+            fused = sorted(map(tuple, semantic_dedup(
+                vecs, threshold=thr, nlist=nl
+            ).collect()))
+        with regime(False):
+            staged = sorted(map(tuple, semantic_dedup(
+                vecs, threshold=thr, nlist=nl
+            ).collect()))
         assert fused == staged
         assert len(fused) == n
 
 
-def test_fused_semantic_dedup_edges(spark, tmp_path):
+def test_fused_semantic_dedup_edges(spark, tmp_path, regime):
     # nlist past the corpus: pivots cap at N, like the staged collect
     vecs = _write_vecs(spark, tmp_path, 5, 4, seed=13)
-    fused = sorted(map(tuple, semantic_dedup(
-        vecs, threshold=0.3, nlist=32, fuse=True
-    ).collect()))
-    staged = sorted(map(tuple, semantic_dedup(
-        vecs, threshold=0.3, nlist=32, fuse=False
-    ).collect()))
+    with regime(True):
+        fused = sorted(map(tuple, semantic_dedup(
+            vecs, threshold=0.3, nlist=32
+        ).collect()))
+    with regime(False):
+        staged = sorted(map(tuple, semantic_dedup(
+            vecs, threshold=0.3, nlist=32
+        ).collect()))
     assert fused == staged
     # empty corpus
     empty = _write_vecs(spark, tmp_path, 0, 4)
-    assert semantic_dedup(empty, fuse=True).count() == 0
+    with regime(True):
+        assert semantic_dedup(empty).count() == 0
     plan = semantic_dedup(vecs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

@@ -173,7 +173,7 @@ def _catalog():
 
 
 def gates() -> None:
-    from id3c_spark.operators.linalg import _single_task_source
+    from id3c_spark.operators.ann import fits_one_task
     from id3c_spark.session import get_spark
 
     spark = get_spark("scaling_gates")
@@ -190,7 +190,7 @@ def gates() -> None:
             "formatted",
         )
         out[name] = {
-            "gate_single_task_big": _single_task_source(src),
+            "gate_single_task_big": fits_one_task(src),
             "plan_shuffles_big": plan_big.count("Exchange ("),
             "plan_shuffles_sf01": plan_small.count("Exchange ("),
         }
@@ -200,7 +200,7 @@ def gates() -> None:
 
 
 def run(names) -> None:
-    from id3c_spark.session import get_spark
+    from id3c_spark.session import get_spark, session_defaults
 
     spark = get_spark("scaling_big")
     catalog = _catalog()
@@ -214,7 +214,7 @@ def run(names) -> None:
         out[name] = round(time.perf_counter() - t0, 3)
         print(name, out[name], flush=True)
     print(json.dumps({
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"), "queries": out
+        "cpus": session_defaults()[0], "queries": out
     }))
 
 

@@ -985,6 +985,18 @@ def test_fused_simhash_parity_property(spark, regime):
     check()
 
 
+def test_fuse_text_gate(spark, sf_dir):
+    """The gate the text operators ask (ann.fits_one_task on the id
+    column): file-backed small corpora fuse; in-memory frames and
+    non-integral id columns keep the distributed shape."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert ann.fits_one_task(docs, ("doc_id",))
+    mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    assert not ann.fits_one_task(mem, ("doc_id",))
+    sdocs = docs.select(F.col("doc_id").cast("string").alias("sid"), "text")
+    assert not ann.fits_one_task(sdocs, ("sid",))
+
+
 def test_fused_ivf_duplicate_ids_self_exclusion_by_id(spark, regime):
     """r16 (ADVICE r15): the fused self-search cell top-k excludes
     candidates BY ID like the staged _cell_gemm_topk (cids != qids[i]),

@@ -55,6 +55,23 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def test_gate_fires_on_small_file_backed_integral_pairs(spark, tmp_path):
+    rows, _ = _pairs(random.Random(1), 20, 40)
+    df = _write_pairs(spark, tmp_path, rows, False, "gate")
+    assert fits_one_task(df, ("id_a", "id_b"))
+    # in-memory frames must keep the distributed path
+    mem = spark.createDataFrame(rows, "id_a long, id_b long")
+    assert not fits_one_task(mem, ("id_a", "id_b"))
+    # non-integral id columns must keep the distributed path
+    sdf = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    assert not fits_one_task(sdf, ("id_a", "id_b"))
+    # a weighted gate additionally requires a double weight column
+    wrows, _ = _pairs(random.Random(1), 10, 20, weighted=True)
+    wdf = _write_pairs(spark, tmp_path, wrows, True, "gate_w")
+    assert fits_one_task(wdf, ("id_a", "id_b"), ("w",))
+    assert not fits_one_task(wdf, ("id_a", "id_b"), ("id_a",))
+
+
 def test_fused_pagerank_plan_is_narrow(spark, tmp_path):
     rows, _ = _pairs(random.Random(2), 30, 60)
     df = _write_pairs(spark, tmp_path, rows, False, "narrow")

@@ -46,6 +46,14 @@ def _distributed_direction(spark, df, dim, iters):
     return out.select("dim", F.round("v", 6).alias("v"))
 
 
+def test_gate_fires_on_small_file_backed_source(spark, tmp_path):
+    df = _write_corpus(spark, tmp_path, 50, 8)
+    assert fits_one_task(df)
+    # in-memory frames must keep the distributed path
+    mem = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    assert not fits_one_task(mem)
+
+
 def test_fused_plan_is_narrow(spark, tmp_path):
     df = _write_corpus(spark, tmp_path, 50, 8)
     sc = spectral_scores(df, "vec_id", "embedding", dim=8, iters=3)

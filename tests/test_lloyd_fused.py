@@ -39,6 +39,21 @@ def _write_corpus(spark, tmp_path, n_rows, dim, seed=7, zero=False,
     return spark.read.parquet(path)
 
 
+def test_gate_fires_on_small_file_backed_integral_source(spark, tmp_path):
+    df = _write_corpus(spark, tmp_path, 50, 8)
+    assert ann.fits_one_task(_prep(df, "vec_id", "embedding"), ("id",))
+    # in-memory frames must keep the distributed path
+    mem = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    assert not ann.fits_one_task(_prep(mem, "vec_id", "embedding"), ("id",))
+    # non-integral ids too (the numpy mirror is int64)
+    sid = spark.createDataFrame(
+        [("a", [1.0, 0.0])], "vec_id string, embedding array<float>"
+    )
+    assert not ann.fits_one_task(_prep(sid, "vec_id", "embedding"), ("id",))
+
+
 def test_fused_kmeans_plan_is_narrow_and_lazy(spark, tmp_path):
     df = _write_corpus(spark, tmp_path, 60, 8)
     out = kmeans(df, "vec_id", "embedding", k=4, max_iter=2)

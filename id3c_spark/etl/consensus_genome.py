@@ -201,7 +201,7 @@ def run(
 
     return {
         "documents": docs.count(),
-        "read_sets": warehouse.read("sequence_read_set").count(),
-        "genomes": warehouse.read("consensus_genome").count(),
-        "sequences": warehouse.read("genomic_sequence").count(),
+        "read_sets": warehouse.num_rows("sequence_read_set"),
+        "genomes": warehouse.num_rows("consensus_genome"),
+        "sequences": warehouse.num_rows("genomic_sequence"),
     }

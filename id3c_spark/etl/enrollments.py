@@ -17,11 +17,12 @@ over the parsed responses array — no Python in the row path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.operators.merge import checks, materialise
 
 KNOWN_VERSIONS = {"1.0.0", "1.1.0"}   # enrollments.py:89-92
 AGE_CAP_MONTHS = 90 * 12              # min(ceil(age), 90) etl/__init__.py:313-329
@@ -156,7 +157,45 @@ def run(
     """``identifiers`` (uuid, barcode): when provided, sampleCodes resolve
     barcode → uuid before storage (find_identifier parity,
     db/__init__.py:79-101) and unknown barcodes are skipped."""
-    enr = parse(receiving).cache()
+    # the batch's one pass: every later frame reads this copy
+    enr, n = materialise(parse(receiving))
+
+    # encounter locations (enrollments.py:187-232): tracts must already
+    # exist (they're enumerable); addresses upsert under the tract
+    # hierarchy; relation comes from the Audere "use" vocabulary. The
+    # reference's hard errors fire while the located rows are materialised,
+    # before the first write: duplicate uses per document (py:281-305),
+    # unknown use (py:222-231 KeyError), unknown tract (py:198-200 assert)
+    locs = (
+        enr.select("encounter_identifier", F.explode("locations").alias("l"))
+        .select(
+            "encounter_identifier",
+            F.lower("l.use").alias("use"),
+            F.col("l.region").alias("tract_identifier"),
+            F.col("l.id").alias("address_identifier"),
+        )
+    )
+    known_tracts = warehouse.read("location").filter(F.col("scale") == "tract")
+    with_tract, _ = materialise(
+        locs.join(
+            F.broadcast(known_tracts.select(
+                F.col("identifier").alias("tract_identifier"),
+                F.col("location_id").alias("tract_location_id"),
+                F.col("hierarchy").alias("tract_hierarchy"),
+            )),
+            "tract_identifier", "left",
+        )
+        .withColumn("uses", F.count("*").over(Window.partitionBy("encounter_identifier", "use")))
+        .filter(checks(
+            (F.col("uses") > 1,
+             F.concat_ws("", F.lit("duplicate location use "), "use"), AssertionError),
+            (~F.col("use").isin(*LOCATION_RELATION),
+             F.concat(F.lit("unknown location use "), "use"), AssertionError),
+            (F.col("tract_identifier").isNotNull() & F.col("tract_location_id").isNull(),
+             F.concat(F.lit("unknown tract "), "tract_identifier"), AssertionError),
+        ))
+        .drop("uses")
+    )
 
     sites = warehouse.find_or_create_site(
         enr.select(
@@ -191,95 +230,43 @@ def run(
         .dropDuplicates(["identifier"])
     )
 
-    # encounter locations (enrollments.py:187-232): tracts must already
-    # exist (they're enumerable); addresses upsert under the tract
-    # hierarchy; relation comes from the Audere "use" vocabulary
-    locs = (
-        enr.select("encounter_identifier", F.explode("locations").alias("l"))
+    addr_wanted = (
+        with_tract.filter(F.col("address_identifier").isNotNull())
         .select(
-            "encounter_identifier",
-            F.lower("l.use").alias("use"),
-            F.col("l.region").alias("tract_identifier"),
-            F.col("l.id").alias("address_identifier"),
+            F.lit("address").alias("scale"),
+            F.col("address_identifier").alias("identifier"),
+            F.col("tract_hierarchy").alias("hierarchy"),
         )
+        .dropDuplicates(["identifier"])
     )
-    n_encounter_locations = 0
-    if not locs.isEmpty():
-        known_tracts = warehouse.read("location").filter(F.col("scale") == "tract")
-        # reference hard errors, mirrored in ONE eager action: duplicate
-        # uses per document (py:281-305), unknown use (py:222-231 KeyError),
-        # unknown tract (py:198-200 assert)
-        dup = (
-            locs.groupBy("encounter_identifier", "use").agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1)
-            .select(F.concat(F.lit("duplicate location use "), "use").alias("reason"))
+    locations = warehouse.upsert_location(addr_wanted)
+    addr_ids = locations.filter(F.col("scale") == "address").select(
+        F.col("identifier").alias("address_identifier"),
+        F.col("location_id").alias("address_location_id"),
+    )
+    rel_map = F.create_map(
+        *[F.lit(x) for kv in LOCATION_RELATION.items() for x in kv]
+    )
+    el_rows, el = materialise(
+        with_tract.join(F.broadcast(addr_ids), "address_identifier", "left")
+        .join(
+            encounters.select(
+                F.col("identifier").alias("encounter_identifier"), "encounter_id"
+            ),
+            "encounter_identifier",
         )
-        unknown_use = locs.filter(~F.col("use").isin(*LOCATION_RELATION)).select(
-            F.concat(F.lit("unknown location use "), "use").alias("reason")
+        .select(
+            "encounter_id",
+            F.element_at(rel_map, F.col("use")).alias("relation"),
+            F.coalesce("address_location_id", "tract_location_id").alias("location_id"),
         )
-        unknown_tract = (
-            locs.filter(F.col("tract_identifier").isNotNull())
-            .join(
-                known_tracts.select(F.col("identifier").alias("tract_identifier")),
-                "tract_identifier", "left_anti",
-            )
-            .select(F.concat(F.lit("unknown tract "), "tract_identifier").alias("reason"))
-        )
-        bad = dup.unionByName(unknown_use).unionByName(unknown_tract).limit(1).collect()
-        if bad:
-            raise AssertionError(bad[0].reason)
-
-        with_tract = locs.join(
-            F.broadcast(known_tracts.select(
-                F.col("identifier").alias("tract_identifier"),
-                F.col("location_id").alias("tract_location_id"),
-                F.col("hierarchy").alias("tract_hierarchy"),
-            )),
-            "tract_identifier", "left",
-        )
-        addr_wanted = (
-            with_tract.filter(F.col("address_identifier").isNotNull())
-            .select(
-                F.lit("address").alias("scale"),
-                F.col("address_identifier").alias("identifier"),
-                F.col("tract_hierarchy").alias("hierarchy"),
-            )
-            .dropDuplicates(["identifier"])
-        )
-        loc_table = (
-            warehouse.upsert_location(addr_wanted)
-            if not addr_wanted.isEmpty()
-            else warehouse.read("location")
-        )
-        addr_ids = loc_table.filter(F.col("scale") == "address").select(
-            F.col("identifier").alias("address_identifier"),
-            F.col("location_id").alias("address_location_id"),
-        )
-        rel_map = F.create_map(
-            *[F.lit(x) for kv in LOCATION_RELATION.items() for x in kv]
-        )
-        el_rows = (
-            with_tract.join(F.broadcast(addr_ids), "address_identifier", "left")
-            .join(
-                encounters.select(
-                    F.col("identifier").alias("encounter_identifier"), "encounter_id"
-                ),
-                "encounter_identifier",
-            )
-            .select(
-                "encounter_id",
-                F.element_at(rel_map, F.col("use")).alias("relation"),
-                F.coalesce("address_location_id", "tract_location_id").alias("location_id"),
-            )
-            # neither tract nor address → warn-and-skip in the reference
-            .filter(F.col("location_id").isNotNull())
-            .groupBy("encounter_id", "relation")
-            .agg(F.min("location_id").alias("location_id"))
-            .withColumn("details", F.lit(None).cast("string"))
-        )
-        if not el_rows.isEmpty():
-            n_encounter_locations = el_rows.count()
-            warehouse.upsert_encounter_location(el_rows)
+        # neither tract nor address → warn-and-skip in the reference
+        .filter(F.col("location_id").isNotNull())
+        .groupBy("encounter_id", "relation")
+        .agg(F.min("location_id").alias("location_id"))
+        .withColumn("details", F.lit(None).cast("string"))
+    )
+    warehouse.upsert_encounter_location(el_rows)
 
     # skeletal samples: collection identifier only (enrollments.py:125-135)
     codes = (
@@ -306,13 +293,11 @@ def run(
         ).dropDuplicates(["collection_identifier"])
     )
 
-    stats = {
-        "enrollments": enr.count(),
+    return {
+        "enrollments": n["rows"],
         "sites": warehouse.num_rows("site"),
         "individuals": warehouse.num_rows("individual"),
         "encounters": warehouse.num_rows("encounter"),
-        "encounter_locations": n_encounter_locations,
+        "encounter_locations": el["rows"],
         "samples": warehouse.num_rows("sample"),
     }
-    enr.unpersist()
-    return stats

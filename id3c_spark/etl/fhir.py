@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.operators.merge import materialise
 
 AGE_CAP_MONTHS = 90 * 12
 
@@ -363,78 +364,70 @@ def run(
             & (F.col("ident_system").isNull() | ~F.col("ident_system").endswith("/site"))
         )
     )
-    n_encounter_locations = 0
-    if not enc_locs.isEmpty():
-        rel_map = F.create_map(
-            *[F.lit(x) for kv in LOCATION_RELATION_MAP.items() for x in kv]
+    rel_map = F.create_map(
+        *[F.lit(x) for kv in LOCATION_RELATION_MAP.items() for x in kv]
+    )
+    loc_joined = (
+        enc_locs
+        .join(locations_r,
+              (enc_locs.id == locations_r.id) & (F.col("loc_ref") == F.col("location_url")))
+        .drop(locations_r.id)
+        .join(
+            locations_r.select(
+                F.col("id").alias("pid"), F.col("location_url").alias("p_url"),
+                F.col("own_tract").alias("parent_tract"),
+            ),
+            (F.col("id") == F.col("pid")) & (F.col("parent_ref") == F.col("p_url")),
+            "left",
         )
-        loc_joined = (
-            enc_locs
-            .join(locations_r,
-                  (enc_locs.id == locations_r.id) & (F.col("loc_ref") == F.col("location_url")))
-            .drop(locations_r.id)
-            .join(
-                locations_r.select(
-                    F.col("id").alias("pid"), F.col("location_url").alias("p_url"),
-                    F.col("own_tract").alias("parent_tract"),
-                ),
-                (F.col("id") == F.col("pid")) & (F.col("parent_ref") == F.col("p_url")),
-                "left",
-            )
-            .select(
-                "encounter_identifier",
-                F.element_at(rel_map, F.col("role_code")).alias("relation"),
-                F.coalesce("parent_tract", "own_tract").alias("tract_identifier"),
-                "own_address",
-            )
-            .filter(F.col("relation").isNotNull())
+        .select(
+            "encounter_identifier",
+            F.element_at(rel_map, F.col("role_code")).alias("relation"),
+            F.coalesce("parent_tract", "own_tract").alias("tract_identifier"),
+            "own_address",
         )
-        wh_tracts = (
-            warehouse.read("location").filter(F.col("scale") == "tract")
-            .select(
-                F.col("identifier").alias("tract_identifier"),
-                F.col("location_id").alias("tract_location_id"),
-                F.col("hierarchy").alias("tract_hierarchy"),
-            )
+        .filter(F.col("relation").isNotNull())
+    )
+    wh_tracts = (
+        warehouse.read("location").filter(F.col("scale") == "tract")
+        .select(
+            F.col("identifier").alias("tract_identifier"),
+            F.col("location_id").alias("tract_location_id"),
+            F.col("hierarchy").alias("tract_hierarchy"),
         )
-        with_tract = loc_joined.join(F.broadcast(wh_tracts), "tract_identifier", "left")
+    )
+    with_tract = loc_joined.join(F.broadcast(wh_tracts), "tract_identifier", "left")
 
-        addr_wanted = (
-            with_tract.filter(F.col("own_address").isNotNull())
-            .select(
-                F.lit("address").alias("scale"),
-                F.col("own_address").alias("identifier"),
-                F.col("tract_hierarchy").alias("hierarchy"),
-            )
-            .dropDuplicates(["identifier"])
+    addr_wanted = (
+        with_tract.filter(F.col("own_address").isNotNull())
+        .select(
+            F.lit("address").alias("scale"),
+            F.col("own_address").alias("identifier"),
+            F.col("tract_hierarchy").alias("hierarchy"),
         )
-        loc_table = (
-            warehouse.upsert_location(addr_wanted)
-            if not addr_wanted.isEmpty()
-            else warehouse.read("location")
+        .dropDuplicates(["identifier"])
+    )
+    loc_table = warehouse.upsert_location(addr_wanted)
+    addr_ids = loc_table.filter(F.col("scale") == "address").select(
+        F.col("identifier").alias("own_address"),
+        F.col("location_id").alias("address_location_id"),
+    )
+    el_rows, el = materialise(
+        with_tract.join(F.broadcast(addr_ids), "own_address", "left")
+        .join(encounters.select(F.col("identifier").alias("encounter_identifier"),
+                                "encounter_id"),
+              "encounter_identifier")
+        .select(
+            "encounter_id", "relation",
+            F.coalesce("address_location_id", "tract_location_id").alias("location_id"),
         )
-        addr_ids = loc_table.filter(F.col("scale") == "address").select(
-            F.col("identifier").alias("own_address"),
-            F.col("location_id").alias("address_location_id"),
-        )
-        el_rows = (
-            with_tract.join(F.broadcast(addr_ids), "own_address", "left")
-            .join(encounters.select(F.col("identifier").alias("encounter_identifier"),
-                                    "encounter_id"),
-                  "encounter_identifier")
-            .select(
-                "encounter_id", "relation",
-                F.coalesce("address_location_id", "tract_location_id").alias("location_id"),
-            )
-            .filter(F.col("location_id").isNotNull())
-            # deterministic winner per (encounter, relation) composite key
-            .groupBy("encounter_id", "relation")
-            .agg(F.min("location_id").alias("location_id"))
-            .withColumn("details", F.lit(None).cast("string"))
-        )
-        if not el_rows.isEmpty():
-            n_encounter_locations = el_rows.count()
-            warehouse.upsert_encounter_location(el_rows)
+        .filter(F.col("location_id").isNotNull())
+        # deterministic winner per (encounter, relation) composite key
+        .groupBy("encounter_id", "relation")
+        .agg(F.min("location_id").alias("location_id"))
+        .withColumn("details", F.lit(None).cast("string"))
+    )
+    warehouse.upsert_encounter_location(el_rows)
 
     # specimens → samples (barcode resolved through the identifier table)
     specimens = _of_type(res, "Specimen").select(
@@ -489,33 +482,32 @@ def run(
         .join(F.broadcast(identifiers.select(F.lower("barcode").alias("barcode"), "uuid")), "barcode")
         .join(samples.select(F.col("identifier").alias("uuid"), "sample_id"), "uuid")
     )
-    if not pa_rows.isEmpty():
-        targets = warehouse.find_or_create_target(
-            pa_rows.select(F.concat(F.lit("snomed/"), "snomed").alias("identifier"))
-            .dropDuplicates(["identifier"]).withColumn("control", F.lit(False))
+    targets = warehouse.find_or_create_target(
+        pa_rows.select(F.concat(F.lit("snomed/"), "snomed").alias("identifier"))
+        .dropDuplicates(["identifier"]).withColumn("control", F.lit(False))
+    )
+    warehouse.upsert_presence_absence(
+        pa_rows.join(
+            F.broadcast(targets.select(
+                F.concat(F.lit("snomed/"), F.regexp_replace("identifier", "snomed/", "")).alias("tkey"),
+                "target_id", F.col("identifier").alias("t_ident"))),
+            F.concat(F.lit("snomed/"), F.col("snomed")) == F.col("tkey"),
         )
-        warehouse.upsert_presence_absence(
-            pa_rows.join(
-                F.broadcast(targets.select(
-                    F.concat(F.lit("snomed/"), F.regexp_replace("identifier", "snomed/", "")).alias("tkey"),
-                    "target_id", F.col("identifier").alias("t_ident"))),
-                F.concat(F.lit("snomed/"), F.col("snomed")) == F.col("tkey"),
-            )
-            .select(
-                F.concat_ws("/", "uuid", "snomed", F.coalesce("device", F.lit(""))).alias("identifier"),
-                "sample_id", "target_id",
-                present.alias("present"),
-            )
-            .dropDuplicates(["identifier"])
+        .select(
+            F.concat_ws("/", "uuid", "snomed", F.coalesce("device", F.lit(""))).alias("identifier"),
+            "sample_id", "target_id",
+            present.alias("present"),
         )
+        .dropDuplicates(["identifier"])
+    )
 
     stats = {
         "bundles": n_bundles,
         "valid_bundles": n_valid,
-        "individuals": individuals.count(),
-        "encounters": encounters.count(),
-        "encounter_locations": n_encounter_locations,
-        "samples": samples.count(),
+        "individuals": warehouse.num_rows("individual"),
+        "encounters": warehouse.num_rows("encounter"),
+        "encounter_locations": el["rows"],
+        "samples": warehouse.num_rows("sample"),
     }
     res.unpersist()
     return stats

@@ -321,7 +321,7 @@ def run(
             "kits_seen": docs.count(),
             "ready": ready.count(),
             "deferred": deferred.count(),
-            "kits": warehouse.read("kit").count(),
+            "kits": warehouse.num_rows("kit"),
         },
         deferred_ids=deferred.select("id"),
     )

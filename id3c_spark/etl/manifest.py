@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.operators.merge import materialise
 
 DOCUMENT_SCHEMA = T.StructType([
     T.StructField("sample", T.StringType()),
@@ -75,18 +76,17 @@ def run(
             "collection_barcode", "left",
         )
     )
-    known = resolved.filter(
-        F.col("identifier").isNotNull() | F.col("collection_identifier").isNotNull()
-    )
-    n_docs = docs.count()
-    n_unknown = n_docs - known.count()
+    is_known = F.col("identifier").isNotNull() | F.col("collection_identifier").isNotNull()
+    # one pass over the batch; identifier barcodes are unique, so the
+    # resolved rows are the documents
+    resolved, n = materialise(resolved, known=F.count_if(is_known))
 
-    updates = known.select(
+    updates = resolved.filter(is_known).select(
         "identifier", "collection_identifier", "collected", "details"
     ).dropDuplicates(["identifier", "collection_identifier"])
     warehouse.upsert_sample(updates)
     return {
-        "manifests": n_docs,
-        "unknown_barcodes": n_unknown,
+        "manifests": n["rows"],
+        "unknown_barcodes": n["rows"] - n["known"],
         "samples": warehouse.num_rows("sample"),
     }

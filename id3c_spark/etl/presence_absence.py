@@ -20,7 +20,8 @@ Skip rules carried over:
     status mapping (incl. PositiveControlPass/Inconclusive/sampleState
     fallback) lives in `target_present`; unknown statuses ABORT like the
     reference's ValueError, as do unknown controlStatus / assayName /
-    assayType values and empty chip ids (one eager validation action)
+    assayType values and empty chip ids (in-plan checks that fire while
+    the batch is first materialised, before any write)
 
 Reference long tail carried over: identifier 'NWGC/{sampleId}/{target}'
 (+ '/{chip}' when on a chip, py:203-208); re-tests are corrections and
@@ -39,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.operators.merge import checks, materialise
 
 DOCUMENT_SCHEMA = T.StructType([
     T.StructField("store", T.StringType()),            # old format marker
@@ -147,36 +149,34 @@ def parse_results(receiving: DataFrame) -> DataFrame:
     )
 
 
-def _first_violation(results: DataFrame) -> str | None:
-    """Eager validation mirror of the reference's hard errors — one action
-    over the batch, reasons unioned into a single frame:
+def _violations() -> Column:
+    """Filter predicate mirroring the reference's hard errors — each fails
+    the action that first runs it (see operators.merge.checks):
       - unknown present status → ValueError (presence_absence.py:448-450)
       - unknown controlStatus → UnknownControlStatusError (py:249-256)
-      - empty-string chip → AssertionError 'bogus chip id' (py:144-145)
-      - unknown assayName / assayType (py:373-379)
+      - empty-string chip → ValueError 'received bogus chip id' (py:144-145)
+      - unknown assayName / assayType → ValueError (py:373-379)
     """
     known_status = _PRESENT_TRUE + _PRESENT_FALSE + _PRESENT_NULL + _PRESENT_SKIP
     effective_type = F.coalesce(F.col("clinical_status"), F.col("sample_assay_type"))
-    checks = [
+    return checks(
         (F.col("target_status").isNull() | ~F.col("target_status").isin(known_status),
          F.concat(F.lit("unable to determine target presence from status "),
-                  F.coalesce(F.col("target_status"), F.lit("<null>")))),
+                  F.coalesce(F.col("target_status"), F.lit("<null>"))),
+         ValueError),
         (F.col("control_status").isNull()
          | ~F.col("control_status").isin("NotControl", "PositiveControl"),
          F.concat(F.lit("unknown control status "),
-                  F.coalesce(F.col("control_status"), F.lit("<null>")))),
-        (F.col("chip") == "", F.lit("received bogus chip id")),
+                  F.coalesce(F.col("control_status"), F.lit("<null>"))),
+         UnknownControlStatusError),
+        (F.col("chip") == "", F.lit("received bogus chip id"), ValueError),
         (F.col("assay_name").isNotNull() & ~F.col("assay_name").isin("OpenArray", "TaqmanQPCR"),
-         F.concat(F.lit("unknown assay name "), F.col("assay_name"))),
+         F.concat(F.lit("unknown assay name "), F.col("assay_name")),
+         ValueError),
         (effective_type.isNotNull() & ~effective_type.isin("Clia", "Research"),
-         F.concat(F.lit("unknown assay type "), effective_type)),
-    ]
-    reason = F.lit(None).cast("string")
-    for cond, msg in reversed(checks):
-        reason = F.when(cond, msg).otherwise(reason)
-    bad = results.select(reason.alias("reason")).filter(F.col("reason").isNotNull())
-    row = bad.limit(1).collect()
-    return row[0].reason if row else None
+         F.concat(F.lit("unknown assay type "), effective_type),
+         ValueError),
+    )
 
 
 def run(
@@ -196,29 +196,24 @@ def run(
     behaviors (presence_absence.py:154-163): identifiers from a set not in
     *valid_sets* abort the run, and 'tiny-swab' sets match samples by
     COLLECTION identifier instead of sample identifier."""
-    results = parse_results(receiving).cache()
-
-    bad = _first_violation(results)
-    if bad is not None:
-        results.unpersist()
-        if "control status" in bad:
-            raise UnknownControlStatusError(bad)
-        raise ValueError(bad)
-
-    known = results.join(
-        F.broadcast(identifiers.select(
-            F.lower("barcode").alias("barcode"), "uuid", "identifier_set_id")),
-        "barcode",
-        "inner",
-    ).cache()
-    n_unknown = results.count() - known.count()
+    # the batch's one pass: hard errors fire here, before any write, and
+    # the stats are observed while it runs (identifier barcodes are
+    # unique, so the resolved rows are the results)
+    resolved, n = materialise(
+        parse_results(receiving).filter(_violations()).join(
+            F.broadcast(identifiers.select(
+                F.lower("barcode").alias("barcode"), "uuid", "identifier_set_id")),
+            "barcode",
+            "left",
+        ),
+        known=F.count("uuid"),
+        sets=F.collect_set(F.when(F.col("uuid").isNotNull(), F.struct("identifier_set_id"))),
+    )
+    known = resolved.filter(F.col("uuid").isNotNull())
 
     names = set_names or {}
     if valid_sets is not None:
-        used_sets = {
-            r.identifier_set_id
-            for r in known.select("identifier_set_id").distinct().collect()
-        }
+        used_sets = {r.identifier_set_id for r in n["sets"]}
         invalid = {names.get(s, str(s)) for s in used_sets} - valid_sets
         if invalid:
             raise AssertionError(f"Identifier found in invalid set {sorted(invalid)}")
@@ -226,7 +221,7 @@ def run(
     is_tiny = F.col("identifier_set_id").isin(tiny_sets) if tiny_sets else F.lit(False)
 
     # drop non-result workflow statuses AFTER validation (Fail/Repeat/Review)
-    known = known.filter(~F.col("target_status").isin(_PRESENT_SKIP)).cache()
+    known = known.filter(~F.col("target_status").isin(_PRESENT_SKIP))
 
     # 1. targets: find-or-create by identifier (gene target)
     wanted_targets = (
@@ -333,13 +328,10 @@ def run(
     )
     warehouse.upsert_presence_absence(pa_updates)
 
-    stats = {
-        "results": results.count(),
-        "unknown_barcodes": n_unknown,
+    return {
+        "results": n["rows"],
+        "unknown_barcodes": n["rows"] - n["known"],
         "targets": warehouse.num_rows("target"),
         "samples": warehouse.num_rows("sample"),
         "presence_absence": warehouse.num_rows("presence_absence"),
     }
-    results.unpersist()
-    known.unpersist()
-    return stats

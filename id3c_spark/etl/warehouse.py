@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from id3c_spark import schemas
-from id3c_spark.operators.merge import merge
+from id3c_spark.operators.merge import materialise, merge
 from id3c_spark.sources.store import ParquetTable
 
 
@@ -50,8 +50,10 @@ class Warehouse:
 
         The batch is materialized once (localCheckpoint: it stays
         distributed) and that one copy feeds both the prune-key collection
-        and the merge's single write."""
-        updates = updates.localCheckpoint()
+        and the merge's single write. An empty batch writes nothing."""
+        updates, batch = materialise(updates)
+        if not batch["rows"]:
+            return self.read(name)
         tbl = self.tables[name]
         cluster = [k for k in ([key_cols[0]] if isinstance(key_cols[0], str) else list(key_cols[0])) if k]
         if not tbl.exists():
@@ -128,8 +130,10 @@ class Warehouse:
 
     def upsert_encounter_location(self, updates: DataFrame) -> DataFrame:
         """upsert_encounter_location (etl/__init__.py:469-545): match
-        (encounter_id, relation citext)."""
-        updates = updates.localCheckpoint()
+        (encounter_id, relation citext). An empty batch writes nothing."""
+        updates, batch = materialise(updates)
+        if not batch["rows"]:
+            return self.read("encounter_location")
 
         def run(target: DataFrame) -> DataFrame:
             current = target.withColumn(

@@ -29,28 +29,39 @@ job:
      is a projection on matched rows; only rows with non-null incoming
      details reach the pandas UDF.
 
+Each step of the plan is built from SQL expression text, so building it
+costs a few py4j round trips per DataFrame step, not one per column
+operation.
+
 Catalyst does not dedupe common subplans across actions or union branches
-(Spark SQL, SIGMOD 2015), so callers materialize the updates once and the
-plan reads target and updates once each. With Delta/Iceberg this plan
-feeds MERGE INTO directly; the parquet copy-on-write in sources/store.py
-is the local stand-in.
+(Spark SQL, SIGMOD 2015), so callers materialize the updates once
+(:func:`materialise`) and the plan reads target and updates once each.
+The check mechanism is shared with the ETLs: :func:`checks` turns
+(condition, message, error) rules into a ``raise_error`` predicate,
+:func:`materialise` computes a batch once with its checks and row counts,
+and :func:`check_errors_raised` re-raises a fired check as its error type.
+With Delta/Iceberg this plan feeds MERGE INTO directly; the parquet
+copy-on-write in sources/store.py is the local stand-in.
 """
 
 from __future__ import annotations
 
 import contextlib
+import re
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from id3c_spark.functions.json_ops import json_merge_udf
 
-#: prefix of the in-plan check messages, found again in the Spark error
-_CHECK = "MERGE CHECK: "
 #: branch each merged row came from (see MergeResult.stats)
 _BRANCH = "__branch"
+#: in-plan check messages start with this tag, found again in the Spark error
+_CHECK = re.compile(r"CHECK\[([^\]]+)\]: ")
+#: the error types in-plan checks raise, by the name in their tag
+_ERRORS: dict[str, type[Exception]] = {}
 
 
 class MultipleMatchError(RuntimeError):
@@ -58,19 +69,54 @@ class MultipleMatchError(RuntimeError):
     raises the same way rather than guessing (db/__init__.py:316-318)."""
 
 
+def _tag(error: type[Exception]) -> str:
+    """Message prefix naming *error*; registers it for check_errors_raised."""
+    name = f"{error.__module__}.{error.__qualname__}"
+    _ERRORS[name] = error
+    return f"CHECK[{name}]: "
+
+
+def checks(*rules: tuple[Column, Column, type[Exception]]) -> Column:
+    """A filter predicate that runs *rules* — (condition, message, error)
+    — on every row, in order: the first rule whose condition holds fails
+    the action running the plan, and :func:`check_errors_raised` re-raises
+    it as ``error(message)``. Rows that pass every rule are kept."""
+    out = None
+    for cond, message, error in rules:
+        fail = F.raise_error(F.concat(F.lit(_tag(error)), message))
+        out = F.when(cond, fail) if out is None else out.when(cond, fail)
+    return out.otherwise(F.lit(True))
+
+
 @contextlib.contextmanager
 def check_errors_raised():
-    """Run Spark actions, re-raising a merge check that fired inside them
-    as :class:`MultipleMatchError`."""
+    """Run Spark actions, re-raising an in-plan check that fired inside
+    them as the error type it names (:func:`checks`; the merge checks
+    raise :class:`MultipleMatchError`)."""
     try:
         yield
     except Exception as e:
         text = str(e)
-        at = text.find(_CHECK)
-        if at < 0:
+        m = _CHECK.search(text)
+        if m is None or m.group(1) not in _ERRORS:
             raise
-        msg = text[at + len(_CHECK):].split("\n", 1)[0].split(" SQLSTATE", 1)[0]
-        raise MultipleMatchError(msg) from e
+        msg = text[m.end():].split("\n", 1)[0].split(" SQLSTATE", 1)[0]
+        raise _ERRORS[m.group(1)](msg) from e
+
+
+def materialise(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Compute *df* once and keep the result (``localCheckpoint``: the
+    copy stays on the executors), re-raising any in-plan check it carries
+    as its typed error. Returns the copy and its ``rows`` plus *metrics*
+    (named aggregate columns), both observed while the copy is written,
+    so they cost no extra Spark job."""
+    obs = Observation()
+    observed = df.observe(
+        obs, F.count(F.lit(1)).alias("rows"), *[c.alias(k) for k, c in metrics.items()]
+    )
+    with check_errors_raised():
+        copy = observed.localCheckpoint()
+    return copy, obs.get
 
 
 @dataclass
@@ -95,32 +141,35 @@ class MergeResult:
         return counts
 
 
-def _null_safe_changed(cols: Sequence[str], dtypes: dict[str, str]) -> Column:
-    """True where any column's RESOLVED value (null update = keep target,
-    mirroring the coalesce in the output projection) differs from the
-    target's — the skip-no-op-write discipline of db/__init__.py:213-231
-    that keeps Delta/parquet file churn down.
+def _q(name: str) -> str:
+    """*name* as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _null_safe_changed(cols: Sequence[str], dtypes: dict[str, str]) -> str:
+    """SQL: true where any column's RESOLVED value (null update = keep
+    target, mirroring the coalesce in the output projection) differs from
+    the target's — the skip-no-op-write discipline of
+    db/__init__.py:213-231 that keeps Delta/parquet file churn down.
 
     Maps are not orderable (<=> rejects them) → compared via key-sorted
     entry arrays, which also makes the comparison key-order independent,
     matching hstore equality semantics."""
-    def canon(col: Column, dtype: str) -> Column:
-        if dtype.startswith("map<"):
-            return F.array_sort(F.map_entries(col))
-        return col
+    def canon(sql: str, dtype: str) -> str:
+        return f"array_sort(map_entries({sql}))" if dtype.startswith("map<") else sql
 
-    cond = F.lit(False)
+    terms = ["false"]
     for c in cols:
-        resolved = F.coalesce(F.col(f"u_{c}"), F.col(f"t_{c}"))
-        dtype = dtypes.get(c, "")
-        cond = cond | ~canon(resolved, dtype).eqNullSafe(canon(F.col(f"t_{c}"), dtype))
-    return cond
+        t, dtype = _q(f"t_{c}"), dtypes.get(c, "")
+        resolved = f"coalesce({_q(f'u_{c}')}, {t})"
+        terms.append(f"NOT ({canon(resolved, dtype)} <=> {canon(t, dtype)})")
+    return " OR ".join(terms)
 
 
-def _fail(msg: str, cols: Sequence[str]) -> Column:
-    return F.raise_error(F.concat(
-        F.lit(_CHECK + msg), F.to_json(F.struct(*[F.col(c) for c in cols]))
-    ))
+def _fail(msg: str, cols: Sequence[str]) -> str:
+    """SQL raising MultipleMatchError(*msg* + the row's *cols* as JSON)."""
+    text = (_tag(MultipleMatchError) + msg).replace("\\", "\\\\").replace("'", "\\'")
+    return f"raise_error(concat('{text}', to_json(struct({', '.join(map(_q, cols))}))))"
 
 
 def merge(
@@ -151,7 +200,12 @@ def merge(
     of them (by alternate keys: the lowest id), and duplicate update keys
     write every changed copy, or one row for a target whose copies are
     all unchanged.
+
+    Every projection, predicate and check is one SQL expression string,
+    so building the plan costs one to two hundred py4j round trips, not
+    one per column operation (thousands).
     """
+    t_cols, u_cols = target.columns, updates.columns
     alt_keys: list[list[str]] = (
         [list(k) for k in key_cols]
         if key_cols and not isinstance(key_cols[0], str)
@@ -162,56 +216,62 @@ def merge(
     # manifest ETL carries both identifier and collection_identifier —
     # reference upserts pass explicit column lists per call site). Key
     # passes and update columns are restricted to what the batch has.
-    alt_keys = [k for k in alt_keys if all(c in updates.columns for c in k)]
+    alt_keys = [k for k in alt_keys if all(c in u_cols for c in k)]
     if not alt_keys:
         raise ValueError("updates carry none of the match keys")
     if update_cols is None:
         update_cols = [
-            c for c in updates.columns
-            if c in target.columns and c != id_col and c != details_col
+            c for c in u_cols
+            if c in t_cols and c != id_col and c != details_col
         ]
-    update_cols = [c for c in update_cols if c in updates.columns]
+    update_cols = [c for c in update_cols if c in u_cols]
     if update_keys:
         # upsert_sample's update_identifiers semantics (db/__init__.py:
         # 182-326): a row matched via one alternate key takes the update's
         # value for the OTHER key columns too (null update values keep the
         # target's — coalesce below). find_or_create passes update_keys=False.
         for c in dict.fromkeys(sum(alt_keys, [])):
-            if c in updates.columns and c != id_col and c not in update_cols:
+            if c in u_cols and c != id_col and c not in update_cols:
                 update_cols.append(c)
-    if details_col and details_col not in updates.columns:
+    if details_col and details_col not in u_cols:
         details_col = None
     dtypes = dict(target.dtypes)
     all_keys = sum(alt_keys, [])
 
-    t = target.select(*[F.col(c).alias(f"t_{c}") for c in target.columns])
-    u = updates.select(*[F.col(c).alias(f"u_{c}") for c in updates.columns])
-    t_id = F.col(f"t_{id_col}")
+    def tq(c: str) -> str:
+        return _q(f"t_{c}")
+
+    def uq(c: str) -> str:
+        return _q(f"u_{c}")
+
+    t = target.selectExpr(*[f"{_q(c)} AS {tq(c)}" for c in t_cols])
+    u = updates.selectExpr(*[f"{_q(c)} AS {uq(c)}" for c in u_cols])
+    t_id = tq(id_col)
+    # columns each side adds before the join, one select per list: the
+    # last window of each side is partitioned on the join key, so the join
+    # reuses its shuffle
+    u_first: list[str] = []
+    u_last, t_last = ["true AS __u"], ["true AS __t"]
 
     # --- 1. resolve every update row to one target row ---------------------
     if len(alt_keys) == 1:
-        t_on = [f"t_{k}" for k in alt_keys[0]]
-        u_on = [f"u_{k}" for k in alt_keys[0]]
+        on = [(tq(k), uq(k)) for k in alt_keys[0]]
     else:
         los, his = [], []
         for i, keys in enumerate(alt_keys):
-            known = t
-            for k in keys:
-                known = known.filter(F.col(f"t_{k}").isNotNull())
-            ids = known.groupBy(*[f"t_{k}" for k in keys]).agg(
-                F.min(t_id).alias(f"__lo{i}"), F.max(t_id).alias(f"__hi{i}")
+            known = t.filter(" AND ".join(f"{tq(k)} IS NOT NULL" for k in keys))
+            ids = known.groupBy(*[F.col(f"t_{k}").alias(f"__k{i}_{k}") for k in keys]).agg(
+                F.expr(f"min({t_id}) AS __lo{i}"), F.expr(f"max({t_id}) AS __hi{i}")
             )
-            cond = F.lit(True)
-            for k in keys:
-                cond = cond & (F.col(f"u_{k}") == F.col(f"t_{k}"))
-            u = u.join(ids, cond, "left").drop(*[f"t_{k}" for k in keys])
-            los.append(F.col(f"__lo{i}"))
-            his.append(F.col(f"__hi{i}"))
-        u = u.withColumn("__rid", F.coalesce(*los))
-        t_on, u_on = [f"t_{id_col}"], ["__rid"]
+            cond = " AND ".join(f"{uq(k)} = {_q(f'__k{i}_{k}')}" for k in keys)
+            u = u.join(ids, F.expr(cond), "left")
+            los.append(f"__lo{i}")
+            his.append(f"__hi{i}")
+        u_first.append(f"coalesce({', '.join(los)}) AS __rid")
+        on = [(t_id, "__rid")]
 
     # --- 2. checks, evaluated by whatever action runs the plan -------------
-    check = None
+    check: list[tuple[str, str]] = []
     if error_on_multi:
         # Two update rows carrying the same key would both match one target
         # (or both insert under the same surrogate id). The reference's
@@ -221,63 +281,62 @@ def merge(
         # ordinal (e.g. redcap_det.complete_dets does).
         for i, keys in enumerate(alt_keys):
             u_keys = [f"u_{k}" for k in keys]
-            u = u.withColumn(f"__n{i}", F.count(F.lit(1)).over(Window.partitionBy(*u_keys)))
-            dup = F.col(f"__n{i}") > 1
-            for k in u_keys:
-                dup = dup & F.col(k).isNotNull()
-            fail = _fail(f"duplicate update rows for key {keys}: ", u_keys)
-            check = F.when(dup, fail) if check is None else check.when(dup, fail)
+            part = ", ".join(map(_q, u_keys))
+            u_first.append(f"count(1) OVER (PARTITION BY {part}) AS __n{i}")
+            dup = " AND ".join([f"__n{i} > 1"] + [f"{_q(k)} IS NOT NULL" for k in u_keys])
+            check.append((dup, _fail(f"duplicate update rows for key {keys}: ", u_keys)))
         multi_fail = _fail("update matched multiple rows: ", [f"u_{k}" for k in all_keys])
         if len(alt_keys) == 1:
             # the window shares the join's partitioning: no extra shuffle
-            t = t.withColumn("__nt", F.count(F.lit(1)).over(Window.partitionBy(*t_on)))
-            check = check.when(F.col("__u").isNotNull() & (F.col("__nt") > 1), multi_fail)
+            part = ", ".join(tc for tc, _ in on)
+            t_last.insert(0, f"count(1) OVER (PARTITION BY {part}) AS __nt")
+            check.append(("__u IS NOT NULL AND __nt > 1", multi_fail))
         else:
             # Checked across ALL alternate keys: an update whose identifier
             # matches row A while its collection_identifier matches row B
             # is ambiguous even though resolution only applies it to A.
-            multi = F.lit(False)
-            for lo, hi in zip(los, his):
-                multi = multi | (lo != hi) | (lo != F.col("__rid"))
-            u = u.withColumn("__nr", F.count(F.lit(1)).over(Window.partitionBy("__rid")))
-            check = check.when(multi, multi_fail).when(
-                F.col("__rid").isNotNull() & (F.col("__nr") > 1),
-                _fail("update rows resolve to one target row: ", ["__rid"]),
+            multi = " OR ".join(
+                ["false"] + [f"{lo} <> {hi} OR {lo} <> __rid" for lo, hi in zip(los, his)]
             )
+            u_last.insert(0, "count(1) OVER (PARTITION BY __rid) AS __nr")
+            check += [
+                (multi, multi_fail),
+                ("__rid IS NOT NULL AND __nr > 1",
+                 _fail("update rows resolve to one target row: ", ["__rid"])),
+            ]
+
+    if u_first:
+        u = u.selectExpr("*", *u_first)
 
     # --- 3. one full-outer join on the key or the resolved id -------------
-    cond = F.lit(True)
-    for tc, uc in zip(t_on, u_on):
-        cond = cond & (F.col(tc) == F.col(uc))
-    j = t.withColumn("__t", F.lit(True)).join(
-        u.withColumn("__u", F.lit(True)), cond, "full_outer"
+    j = t.selectExpr("*", *t_last).join(
+        u.selectExpr("*", *u_last),
+        F.expr(" AND ".join(f"{tc} = {uc}" for tc, uc in on)),
+        "full_outer",
     )
-    if check is not None:
-        j = j.filter(check.otherwise(F.lit(True)))
-    is_matched = F.col("__t").isNotNull() & F.col("__u").isNotNull()
-    is_insert = F.col("__t").isNull()
+    if check:
+        j = j.filter(
+            "CASE " + " ".join(f"WHEN {c} THEN {f}" for c, f in check) + " ELSE true END"
+        )
+    matched = "(__t IS NOT NULL AND __u IS NOT NULL)"
 
     # --- 4./5. change detection and the details merge ----------------------
     changed = _null_safe_changed(update_cols, dtypes)
     if details_col:
-        t_d, u_d = F.col(f"t_{details_col}"), F.col(f"u_{details_col}")
+        t_d, u_d = tq(details_col), uq(details_col)
         # The JSON merge is the one pandas UDF on the write path, and Spark
         # feeds a UDF every row of its input, conditional or not: only the
         # matched rows with incoming details take the UDF branch.
-        need = is_matched & u_d.isNotNull()
+        need = f"({matched} AND {u_d} IS NOT NULL)"
         j = j.filter(need).withColumn(
-            "__d", json_merge_udf(F.coalesce(t_d, F.lit("{}")), u_d)
-        ).unionByName(j.filter(~need).withColumn("__d", t_d))
-        changed = changed | (need & ~F.col("__d").eqNullSafe(t_d))
+            "__d", json_merge_udf(F.expr(f"coalesce({t_d}, '{{}}')"), F.col(f"u_{details_col}"))
+        ).union(j.filter(f"NOT {need}").selectExpr("*", f"{t_d} AS __d"))
+        changed = f"{changed} OR ({need} AND NOT (__d <=> {t_d}))"
 
-    j = j.withColumn(
-        _BRANCH,
-        F.when(is_insert, "inserted")
-        .when(~is_matched, "untouched")
-        .when(changed, "updated")
-        .otherwise("unchanged"),
-    )
-    branch = F.col(_BRANCH)
+    j = j.selectExpr("*", (
+        f"CASE WHEN __t IS NULL THEN 'inserted' WHEN NOT {matched} THEN 'untouched' "
+        f"WHEN {changed} THEN 'updated' ELSE 'unchanged' END AS {_BRANCH}"
+    ))
     if not error_on_multi:
         # Duplicate update keys (or target rows sharing a key) leave several
         # pairs per target id; the checks otherwise guarantee one. A
@@ -288,39 +347,32 @@ def merge(
         # unchanged row per id (every unchanged pair of an id projects the
         # identical target row, so the row_number pick is
         # content-deterministic).
-        part_key = F.coalesce(
-            t_id.cast("string"),
-            F.xxhash64(*[F.col(f"u_{k}") for k in all_keys]).cast("string"),
-        )
-        w = Window.partitionBy(part_key, is_matched)
-        j = j.withColumns({
-            "__nch": F.sum((branch == "updated").cast("int")).over(w),
-            "__rn": F.row_number().over(w.orderBy(F.lit(1))),
-        }).filter(
-            (branch != "unchanged") | ((F.col("__nch") == 0) & (F.col("__rn") == 1))
-        )
+        u_hash = f"xxhash64({', '.join(uq(k) for k in all_keys)})"
+        w = (f"PARTITION BY coalesce(CAST({t_id} AS STRING), CAST({u_hash} AS STRING)), "
+             f"{matched}")
+        j = j.selectExpr(
+            "*",
+            f"sum(CAST({_BRANCH} = 'updated' AS INT)) OVER ({w}) AS __nch",
+            f"row_number() OVER ({w} ORDER BY 1) AS __rn",
+        ).filter(f"{_BRANCH} <> 'unchanged' OR (__nch = 0 AND __rn = 1)")
 
-    def pick(c: str) -> Column:
-        if c == id_col and c not in updates.columns:
-            ins = F.xxhash64(*[F.col(f"u_{k}") for k in all_keys])
-        elif c in updates.columns:
-            ins = F.col(f"u_{c}")
+    def pick(c: str) -> str:
+        if c == id_col and c not in u_cols:
+            ins = f"xxhash64({', '.join(uq(k) for k in all_keys)})"
+        elif c in u_cols:
+            ins = uq(c)
         else:
-            ins = F.lit(None).cast(dtypes[c])
+            ins = "NULL"
         if details_col and c == details_col:
-            upd = F.col("__d")
+            upd = "__d"
         elif c in update_cols and c != id_col:
-            upd = F.coalesce(F.col(f"u_{c}"), F.col(f"t_{c}"))
+            upd = f"coalesce({uq(c)}, {tq(c)})"
         else:
-            upd = F.col(f"t_{c}")
-        return (
-            F.when(branch == "inserted", ins)
-            .when(branch == "updated", upd)
-            .otherwise(F.col(f"t_{c}"))
-            .alias(c)
-        )
+            upd = tq(c)
+        return (f"CASE WHEN {_BRANCH} = 'inserted' THEN {ins} "
+                f"WHEN {_BRANCH} = 'updated' THEN {upd} ELSE {tq(c)} END AS {_q(c)}")
 
-    return MergeResult(j.select(*[pick(c) for c in target.columns], branch))
+    return MergeResult(j.selectExpr(*[pick(c) for c in t_cols], _BRANCH))
 
 
 def find_or_create(

@@ -247,7 +247,9 @@ class ParquetTable:
         *cluster_by*: range-cluster + sort the rewritten files on these
         columns so footer ranges stay tight for the NEXT merge.
         A merge check that fires while the new version is written raises
-        MultipleMatchError; the version never goes live.
+        MultipleMatchError; the version never goes live. An empty batch
+        (the prune-key collect returns no row) writes no version: the
+        current version number comes back unchanged.
         """
         if not self.exists():
             raise FileNotFoundError(
@@ -276,6 +278,8 @@ class ParquetTable:
 
             cap = 100_000
             rows = updates.select(*prune_cols).distinct().limit(cap + 1).collect()
+            if not rows:
+                return self.current_version()
             per_col: dict[str, object] = {}
             if len(rows) > cap:
                 lo_hi = updates.agg(

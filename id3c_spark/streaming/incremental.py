@@ -11,6 +11,11 @@ receiving scan prunes to (id, document), and bumping REVISION reprocesses
 everything idempotently (MERGE absorbs the rewrites) — exactly the
 reference's revision-bump backfill (etl/presence_absence.py:39-45).
 
+Each run computes its batch once: the receiving scan and the anti join run
+in one ``localCheckpoint``, which also counts the rows. The transform and
+the success markers both read that copy, so the log is scanned and the
+status table anti-joined once per run, not once per action.
+
 For true streaming sources the same transform runs under
 ``readStream ... foreachBatch`` with availableNow — see run_incremental.
 """
@@ -23,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from id3c_spark.operators.merge import materialise
 from id3c_spark.schemas import PROCESSING_LOG
 from id3c_spark.sources.store import ParquetTable
 
@@ -95,14 +101,18 @@ def run_incremental(
     """One availableNow-style incremental run: scan unprocessed → user
     transform (which performs the warehouse MERGEs) → append success
     markers. Idempotent: a crash before the marker append means the next
-    run reprocesses the same rows and the MERGEs no-op (SURVEY §3.1)."""
+    run reprocesses the same rows and the MERGEs no-op (SURVEY §3.1).
+
+    The unprocessed batch is materialised once, and its row count is
+    observed while it is written. The transform and the marker append
+    read that copy; an empty batch runs neither."""
     status = (
         status_table.read()
         if status_table.exists()
         else spark.createDataFrame([], PROCESSING_LOG)
     )
-    batch = unprocessed(receiving, status, table_name, etl, revision, id_col)
-    n = batch.count()
+    batch, seen = materialise(unprocessed(receiving, status, table_name, etl, revision, id_col))
+    n = seen["rows"]
     if n:
         transform(batch)
         status_table.append(

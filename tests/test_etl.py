@@ -47,6 +47,10 @@ def run_pipeline(spark, warehouse, identifiers):
     return s1, s2, s3
 
 
+def table_versions(warehouse):
+    return {name: tbl.current_version() for name, tbl in warehouse.tables.items()}
+
+
 def test_enrollment_etl(spark, warehouse, identifiers):
     stats = enrollments.run(
         spark, receiving_df(spark, fixtures.enrollment_documents()), warehouse, identifiers
@@ -123,17 +127,22 @@ def test_enrollment_details_and_locations(spark, warehouse, identifiers):
     assert els["residence"] == locs[("address", "household-7")].location_id
     assert els["workplace"] == locs[("tract", "53033000100")].location_id
 
-    # unknown tract aborts like the reference's assert (py:198-200)
+    # unknown tract aborts like the reference's assert (py:198-200), and
+    # a rejected batch writes no table
+    versions = table_versions(warehouse)
     bad = dict(doc, id="enc-bad",
                locations=[{"use": "home", "region": "99999999999"}])
     with pytest.raises(AssertionError, match="unknown tract"):
         enrollments.run(spark, receiving_df(spark, [(2, json.dumps(bad))]),
                         warehouse, identifiers)
+    assert table_versions(warehouse) == versions
     # unknown use aborts (relation KeyError, py:222-231)
     bad2 = dict(doc, id="enc-bad2", locations=[{"use": "vacation"}])
     with pytest.raises(AssertionError, match="unknown location use"):
         enrollments.run(spark, receiving_df(spark, [(3, json.dumps(bad2))]),
                         warehouse, identifiers)
+    assert table_versions(warehouse) == versions
+    assert {r.identifier for r in warehouse.read("encounter").collect()} == {"enc-loc"}
 
 
 def test_manifest_links_sample_to_collection(spark, warehouse, identifiers):
@@ -256,7 +265,9 @@ def test_presence_absence_details_and_validation(spark, warehouse, identifiers):
             set_names={1: "kits", 2: "collections"}, valid_sets={"collections"},
         )
 
-    # hard errors: unknown status / control status / bogus chip
+    # hard errors: unknown status / control status / bogus chip; a
+    # rejected batch writes no table
+    versions = table_versions(warehouse)
     with pytest.raises(ValueError, match="target presence"):
         presence_absence.run(
             spark,
@@ -264,6 +275,7 @@ def test_presence_absence_details_and_validation(spark, warehouse, identifiers):
                 {"geneTarget": "X", "controlStatus": "NotControl",
                  "targetStatus": "Maybe"}])]),
             warehouse, identifiers)
+    assert table_versions(warehouse) == versions
     with pytest.raises(presence_absence.UnknownControlStatusError):
         presence_absence.run(
             spark,
@@ -403,3 +415,47 @@ def test_bootstrap_publish_is_clustered_so_first_merge_prunes(spark, tmp_path):
     carried = sum(1 for b, ino in before.items() if after.get(b) == ino)
     assert carried >= len(before) - 2  # only the touched file(s) rewrote
     assert tbl.read().count() == 301
+
+
+#: Spark jobs of one incremental manifest run over the fixture log: the
+#: batch is computed once (scan + anti join), the ETL resolves it once,
+#: the upsert materialises and writes once, the markers append once
+MANIFEST_RUN_JOBS = 24
+
+
+def test_incremental_manifest_run_job_count(spark, warehouse, identifiers, tmp_path):
+    """run_incremental + manifest.run re-derive no frame: every action
+    after the batch's one materialisation reads a copy. Counted with a job
+    group and the status tracker."""
+    import json
+
+    from id3c_spark.sources.readers import read_ndjson_receiving
+    from id3c_spark.sources.store import ParquetTable
+    from id3c_spark.streaming.incremental import run_incremental
+
+    enrollments.run(spark, receiving_df(spark, fixtures.enrollment_documents()),
+                    warehouse, identifiers)
+    log = tmp_path / "receiving" / "manifest"
+    log.mkdir(parents=True)
+    docs = [doc for _, doc in fixtures.manifest_documents()]
+    (log / "batch.ndjson").write_text("".join(d + "\n" for d in docs))
+    receiving = read_ndjson_receiving(spark, str(log))
+    status = ParquetTable(spark, str(tmp_path / "status"))
+    out = {}
+
+    sc = spark.sparkContext
+    group = "incremental-manifest-run"
+    sc.setJobGroup(group, group)
+    try:
+        seen = run_incremental(
+            spark, receiving, status, "receiving.manifest", "manifest", 1,
+            lambda batch: out.update(manifest.run(spark, batch, warehouse, identifiers)),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert seen.seen == len(docs)
+    assert out["manifests"] == len(docs) - 1 and out["unknown_barcodes"] == 1
+    assert status.num_rows() == len(docs)
+    assert jobs <= MANIFEST_RUN_JOBS, jobs

@@ -76,6 +76,23 @@ def test_cow_merge_insert_only_batch_carries_everything(spark, tmp_path):
     assert tbl.read().filter("k = 500").select("val").collect()[0][0] == 1
 
 
+def test_cow_merge_empty_batch_writes_no_version(spark, tmp_path):
+    """An empty update batch is a no-op: no new version, the same files,
+    and the merge function is never called."""
+    tbl = ParquetTable(spark, str(tmp_path / "t"), keep_versions=10)
+    _clustered_publish(spark, tbl)
+    version, files = tbl.current_version(), tbl.files()
+    updates = spark.createDataFrame([], "k long, val long, details string")
+
+    def merge_fn(target):
+        raise AssertionError("an empty batch must not build a merge")
+
+    assert tbl.merge_publish(updates, ["k"], merge_fn, cluster_by=["k"]) == version
+    assert tbl.current_version() == version
+    assert tbl.files() == files
+    assert tbl.versions() == [version]
+
+
 def test_cow_merge_alternate_keys_prune_on_each(spark, tmp_path):
     # Alternate-key shape (upsert_sample): pruning must consider BOTH key
     # columns — a file out of range on key A may still match on key B.

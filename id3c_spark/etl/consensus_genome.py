@@ -11,9 +11,13 @@ Reference flow: resolve organism by lquery lineage match
 upsert_genomic_sequence on (segment, genome). 'notMapped' status → genome
 recorded without sequences.
 
-Spark shape: urls arrays are keyed by a deterministic hash
-(sha2 of the sorted url list) so the read-set MERGE is a plain equi-key
-MERGE; lquery '~' becomes a dot-path prefix/regex predicate.
+Spark shape: every table is written through the warehouse's one upsert
+path (an empty batch writes nothing; no table is republished whole).
+Read sets match on (sample_id, urls) with the urls array kept sorted, so
+equal sets compare equal; genomes match on (sample, organism, read set)
+with a null read set matched null-safely, the reference's partial unique
+index (consensus-genome.sql:33). lquery '~' becomes a dot-path
+prefix/regex predicate.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.etl.warehouse import Warehouse
-from id3c_spark.operators.merge import merge
+from id3c_spark.operators.merge import materialise
 
 DOCUMENT_SCHEMA = T.StructType([
     T.StructField("sample_identifier", T.StringType()),
@@ -47,13 +51,8 @@ ORGANISM_LQUERY = {
     "flu-b": "Influenza.B",
     "rsv-a": "RSV.A",
 }
-
-
-def urls_key(urls_col):
-    """Deterministic key for a urls set: sha2 of the sorted list — the
-    MERGE-able stand-in for 'unique urls-to-one-set' (sequence-read-set.sql
-    trigger)."""
-    return F.sha2(F.to_json(F.array_sort(urls_col)), 256)
+#: a genome's natural key (consensus-genome.sql:8-16,33)
+GENOME_KEY = ["sample_id", "organism_id", "sequence_read_set_id"]
 
 
 def match_organism(organisms: DataFrame, token_col):
@@ -71,8 +70,8 @@ def upload_read_sets(
 ) -> tuple[DataFrame, dict[str, int]]:
     """sequence-read-set upload (cli/command/sequence_read_set.py:81-155):
     resolve each set's NWGC sample id against warehouse sample
-    details.nwgc_id (array or legacy scalar), MERGE known sets on
-    (sample_id, urls hash) and return the unknown-sample rows for the
+    details.nwgc_id (array or legacy scalar), upsert known sets on
+    (sample_id, sorted urls) and return the unknown-sample rows for the
     side-channel NDJSON the reference writes."""
     samples = warehouse.read("sample").select(
         "sample_id",
@@ -86,28 +85,23 @@ def upload_read_sets(
         F.col("sample").cast("long").alias("nwgc"),
         F.array_sort("urls").alias("urls"),
     )
-    matched = rs.join(
-        samples, F.array_contains(F.col("nwgc_ids"), F.col("nwgc")), "left"
+    matched, m = materialise(
+        rs.join(samples, F.array_contains(F.col("nwgc_ids"), F.col("nwgc")), "left"),
+        unknown=F.count_if(F.col("sample_id").isNull()),
     )
     unknown = matched.filter(F.col("sample_id").isNull()).select(
         F.col("nwgc").cast("string").alias("sample"), "urls"
     )
-    known = (
+    known, k = materialise(
         matched.filter(F.col("sample_id").isNotNull())
-        .select("sample_id", "urls", urls_key(F.col("urls")).alias("urls_hash"))
-        .dropDuplicates(["sample_id", "urls_hash"])
+        .select("sample_id", "urls")
+        .dropDuplicates(["sample_id", "urls"])
     )
-    n_known = known.count()
-    if n_known:
-        current = warehouse.read("sequence_read_set").withColumn(
-            "urls_hash", urls_key(F.col("urls"))
-        )
-        srs = merge(
-            current, known, [["sample_id", "urls_hash"]],
-            "sequence_read_set_id", update_cols=["urls"], details_col=None,
-        ).df
-        warehouse.publish("sequence_read_set", srs.drop("urls_hash"))
-    return unknown, {"uploaded": n_known, "unknown": unknown.count()}
+    warehouse.upsert(
+        "sequence_read_set", known, [["sample_id", "urls"]], "sequence_read_set_id",
+        update_cols=[], details_col=None,
+    )
+    return unknown, {"uploaded": k["rows"], "unknown": m["unknown"]}
 
 
 def run(
@@ -116,14 +110,18 @@ def run(
     warehouse: Warehouse,
     organisms: DataFrame,
 ) -> dict[str, int]:
-    docs = receiving.select("id", F.from_json("document", DOCUMENT_SCHEMA).alias("d")).select(
-        "id",
-        F.col("d.sample_identifier").alias("sample_identifier"),
-        match_organism(organisms, F.col("d.reference_organism")).alias("lineage_path"),
-        F.col("d.status").alias("status"),
-        F.coalesce(F.col("d.metadata.urls"), F.array().cast("array<string>")).alias("urls"),
-        F.col("d.masked_consensus").alias("masked"),
-    ).filter(F.col("status").isin("complete", "notMapped"))
+    docs, d = materialise(
+        receiving.select("id", F.from_json("document", DOCUMENT_SCHEMA).alias("d")).select(
+            "id",
+            F.col("d.sample_identifier").alias("sample_identifier"),
+            match_organism(organisms, F.col("d.reference_organism")).alias("lineage_path"),
+            F.col("d.status").alias("status"),
+            # sorted: the read-set key compares url sets as arrays
+            F.array_sort(F.coalesce(F.col("d.metadata.urls"), F.array().cast("array<string>")))
+            .alias("urls"),
+            F.col("d.masked_consensus").alias("masked"),
+        ).filter(F.col("status").isin("complete", "notMapped"))
+    )
 
     samples = warehouse.read("sample").select("sample_id", F.col("identifier").alias("sample_identifier"))
     orgs = organisms.select("organism_id", F.col("lineage").alias("lineage_path"))
@@ -131,58 +129,39 @@ def run(
         F.broadcast(orgs), "lineage_path", "left"
     )
 
-    # sequence read sets: MERGE on (sample_id, urls hash)
-    srs_updates = (
+    # sequence read sets: upsert on (sample_id, sorted urls)
+    srs = warehouse.upsert(
+        "sequence_read_set",
         resolved.filter(F.size("urls") > 0)
-        .select(
-            "sample_id",
-            F.array_sort("urls").alias("urls"),   # canonical order on write
-            urls_key(F.col("urls")).alias("urls_hash"),
-        )
-        .dropDuplicates(["sample_id", "urls_hash"])
+        .select("sample_id", "urls")
+        .dropDuplicates(["sample_id", "urls"]),
+        [["sample_id", "urls"]], "sequence_read_set_id",
+        update_cols=[], details_col=None,
     )
-    current_srs = warehouse.read("sequence_read_set").withColumn(
-        "urls_hash", urls_key(F.col("urls"))
-    )
-    srs = merge(
-        current_srs, srs_updates, [["sample_id", "urls_hash"]],
-        "sequence_read_set_id", update_cols=["urls"], details_col=None,
-    ).df
-    warehouse.publish("sequence_read_set", srs.drop("urls_hash"))
-    srs_keyed = srs.select("sequence_read_set_id", "sample_id", "urls_hash")
 
-    # consensus genomes: MERGE on (sample, organism, srs)
-    genome_updates = (
+    # consensus genomes: upsert on (sample, organism, srs); the merge
+    # writes the table's columns only, so `masked` rides along for the
+    # sequences below
+    genome_updates, _ = materialise(
         resolved.join(
-            srs_keyed.withColumnsRenamed({"urls_hash": "uh"}),
-            (resolved.sample_id == srs_keyed.sample_id)
-            & (urls_key(resolved.urls) == F.col("uh")),
-            "left",
+            srs.select("sequence_read_set_id", "sample_id", "urls"),
+            ["sample_id", "urls"], "left",
         )
-        .select(
-            resolved.sample_id.alias("sample_id"),
-            F.col("organism_id"),
-            "sequence_read_set_id",
-            F.col("masked"),
-        )
-        .dropDuplicates(["sample_id", "organism_id", "sequence_read_set_id"])
+        .select(*GENOME_KEY, "masked")
+        .dropDuplicates(GENOME_KEY)
     )
-    genomes = merge(
-        warehouse.read("consensus_genome"),
-        genome_updates.drop("masked"),
-        [["sample_id", "organism_id", "sequence_read_set_id"]],
-        "consensus_genome_id", update_cols=[], details_col=None,
-    ).df
-    warehouse.publish("consensus_genome", genomes)
+    genomes = warehouse.upsert(
+        "consensus_genome", genome_updates, [GENOME_KEY], "consensus_genome_id",
+        update_cols=[], details_col=None,
+    )
 
-    # genomic sequences: MERGE on (segment, consensus_genome_id)
+    # genomic sequences: upsert on (segment, consensus_genome_id)
     seqs = (
-        genome_updates.select("sample_id", "organism_id", "sequence_read_set_id",
-                              F.explode_outer("masked").alias("m"))
+        genome_updates.select(*GENOME_KEY, F.explode_outer("masked").alias("m"))
         .filter(F.col("m").isNotNull())
         .join(
-            genomes.select("consensus_genome_id", "sample_id", "organism_id", "sequence_read_set_id"),
-            ["sample_id", "organism_id", "sequence_read_set_id"],
+            genomes.select("consensus_genome_id", *[F.col(k).alias(f"g_{k}") for k in GENOME_KEY]),
+            [F.col(k).eqNullSafe(F.col(f"g_{k}")) for k in GENOME_KEY],
         )
         .select(
             F.col("m.sequence_identifier").alias("identifier"),
@@ -192,15 +171,13 @@ def run(
         )
         .dropDuplicates(["segment", "consensus_genome_id"])
     )
-    gs = merge(
-        warehouse.read("genomic_sequence"), seqs,
-        [["segment", "consensus_genome_id"]],
-        "genomic_sequence_id", update_cols=["identifier", "seq"], details_col=None,
-    ).df
-    warehouse.publish("genomic_sequence", gs)
+    warehouse.upsert(
+        "genomic_sequence", seqs, [["segment", "consensus_genome_id"]], "genomic_sequence_id",
+        update_cols=["identifier", "seq"], details_col=None,
+    )
 
     return {
-        "documents": docs.count(),
+        "documents": d["rows"],
         "read_sets": warehouse.num_rows("sequence_read_set"),
         "genomes": warehouse.num_rows("consensus_genome"),
         "sequences": warehouse.num_rows("genomic_sequence"),

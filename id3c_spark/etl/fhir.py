@@ -181,7 +181,10 @@ def run(
     warehouse: Warehouse,
     identifiers: DataFrame,
 ) -> dict[str, int]:
-    res = parse_resources(receiving).cache()
+    # the batch (under run_incremental, already a copy: no job) and its
+    # resources, each computed once
+    receiving, batch = materialise(receiving)
+    res, _ = materialise(parse_resources(receiving))
 
     # preferred-language extraction (fhir.py:562-572): the preferred
     # communication entry's bcp-47 coding
@@ -221,7 +224,6 @@ def run(
         patients.select("id").distinct().join(encounters_r.select("id").distinct(), "id")
     )
     valid_ids = has_patient_encounter.unionByName(diagnostics).distinct()
-    n_bundles = receiving.count()
     n_valid = valid_ids.count()
 
     patients = patients.join(valid_ids, "id")
@@ -501,13 +503,11 @@ def run(
         .dropDuplicates(["identifier"])
     )
 
-    stats = {
-        "bundles": n_bundles,
+    return {
+        "bundles": batch["rows"],
         "valid_bundles": n_valid,
         "individuals": warehouse.num_rows("individual"),
         "encounters": warehouse.num_rows("encounter"),
         "encounter_locations": el["rows"],
         "samples": warehouse.num_rows("sample"),
     }
-    res.unpersist()
-    return stats

@@ -7,10 +7,14 @@ document can arrive before its enrollment — the reference *raises*
 (kit.py:70-77, 279-287).
 
 Spark shape: the batch splits into ready (encounter exists) and deferred
-(no encounter yet). Ready rows MERGE into ``kit``; deferred rows are
-returned so the incremental layer leaves them unmarked — they re-enter the
-next batch, which is the retry-on-next-trigger design SURVEY §7.3 item 7
-calls for, without any exception control flow.
+(no encounter yet). Ready rows upsert into ``kit`` through the
+warehouse's one upsert path, and the samples slotted into those kits
+upsert their encounter into ``sample``; an empty batch writes nothing and
+no table is republished whole. Deferred rows are returned so the
+incremental layer leaves them unmarked — they re-enter the next batch,
+which is the retry-on-next-trigger design SURVEY §7.3 item 7 calls for,
+without any exception control flow. Stats are counts observed while the
+batch is materialised, not recounts.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.etl.warehouse import Warehouse
-from id3c_spark.operators.merge import merge
+from id3c_spark.operators.merge import materialise
 
 DOCUMENT_SCHEMA = T.StructType([
     T.StructField("kit", T.StringType()),                # kit barcode
@@ -87,16 +91,18 @@ def run_enrollments(
         F.col("identifier").alias("encounter_identifier"), "encounter_id", "site_id"
     )
     sites = warehouse.read("site").select("site_id", F.col("identifier").alias("site"))
-    with_enc = docs.join(encounters, "encounter_identifier", "left").join(
-        F.broadcast(sites), "site_id", "left"
+    ready = F.col("encounter_id").isNotNull()
+    self_test = ready & (F.col("site") == "self-test")
+    with_enc, n = materialise(
+        docs.join(encounters, "encounter_identifier", "left").join(
+            F.broadcast(sites), "site_id", "left"
+        ),
+        ready=F.count_if(ready), self_test=F.count_if(self_test),
     )
-    deferred = with_enc.filter(F.col("encounter_id").isNull())
-    ready = with_enc.filter(F.col("encounter_id").isNotNull())
-    self_test = ready.filter(F.col("site") == "self-test")
 
     ids = _ids_with_sets(identifiers, set_names)
     codes = (
-        self_test.select("encounter_id", F.explode("codes").alias("c"))
+        with_enc.filter(self_test).select("encounter_id", F.explode("codes").alias("c"))
         .filter(F.col("c.code").isNotNull() & F.col("c.type").isin(*KIT_BARCODE_TYPES))
         .select("encounter_id", F.lower("c.code").alias("barcode"),
                 F.col("c.type").alias("code_type"))
@@ -104,54 +110,43 @@ def run_enrollments(
     )
     if set_names:
         codes = codes.filter(F.col("set_name").isin(*EXPECTED_SETS["kits"]))
-    kit_updates = codes.select(
+    kit_updates, k = materialise(codes.select(
         F.col("uuid").alias("identifier"),
         "encounter_id",
         F.to_json(F.struct(F.col("code_type").alias("type"))).alias("details"),
-    ).dropDuplicates(["identifier"])
-
-    n_kits = kit_updates.count()
-    if n_kits:
-        merged = merge(
-            warehouse.read("kit"), kit_updates, [["identifier"]], "kit_id",
-            update_cols=["encounter_id"],
-        )
-        warehouse.publish("kit", merged.df)
-        _update_kit_samples(warehouse)
+    ).dropDuplicates(["identifier"]))
+    kits = warehouse.upsert(
+        "kit", kit_updates, [["identifier"]], "kit_id", update_cols=["encounter_id"]
+    )
+    _update_kit_samples(warehouse, kits, kit_updates)
 
     return KitRunResult(
         stats={
-            "enrollments": docs.count(),
-            "deferred": deferred.count(),
-            "non_self_test": ready.count() - self_test.count(),
-            "kits": n_kits,
+            "enrollments": n["rows"],
+            "deferred": n["rows"] - n["ready"],
+            "non_self_test": n["ready"] - n["self_test"],
+            "kits": k["rows"],
         },
-        deferred_ids=deferred.select("id"),
+        deferred_ids=with_enc.filter(~ready).select("id"),
     )
 
 
-def _update_kit_samples(warehouse: Warehouse) -> None:
-    """update_kit_samples parity (kit.py:503-524): samples linked through a
-    kit slot inherit the kit's encounter."""
-    kits = warehouse.read("kit")
-    slot_links = (
-        kits.select(F.col("rdt_sample_id").alias("sample_id"), "encounter_id")
-        .unionByName(kits.select(F.col("utm_sample_id").alias("sample_id"), "encounter_id"))
+def _update_kit_samples(warehouse: Warehouse, kits: DataFrame, batch: DataFrame) -> None:
+    """update_kit_samples parity (kit.py:503-524): the samples slotted into
+    the kits *batch* upserted inherit their kit's encounter, upserted by
+    sample identifier."""
+    slots = (
+        kits.join(batch.select("identifier"), "identifier")
+        .select(F.explode(F.array("rdt_sample_id", "utm_sample_id")).alias("sample_id"),
+                "encounter_id")
         .filter(F.col("sample_id").isNotNull() & F.col("encounter_id").isNotNull())
-        .dropDuplicates(["sample_id"])
-        .withColumnsRenamed({"encounter_id": "kit_encounter_id"})
     )
-    if slot_links.isEmpty():
-        return
-    sample = warehouse.read("sample")
-    updated = (
-        sample.join(F.broadcast(slot_links), "sample_id", "left")
-        .withColumn(
-            "encounter_id", F.coalesce("kit_encounter_id", "encounter_id")
-        )
-        .drop("kit_encounter_id")
+    warehouse.upsert_sample(
+        warehouse.read("sample").select("sample_id", "identifier")
+        .join(slots, "sample_id")
+        .select("identifier", "encounter_id")
+        .dropDuplicates(["identifier"])
     )
-    warehouse.publish("sample", updated)
 
 
 def run_manifests(
@@ -178,28 +173,29 @@ def run_manifests(
         F.lower(F.get_json_object("document", "$.kit")).alias("kit_barcode"),
         F.lower(F.get_json_object("document", "$.sample")).alias("sample_barcode"),
         F.lower(F.get_json_object("document", "$.test_strip")).alias("strip_barcode"),
-    ).filter(F.col("kit_barcode").isNotNull())         # no kit data → skip
+    )
+    with_kit = F.col("kit_barcode").isNotNull()        # no kit data → skip
+    known_sample = with_kit & F.col("sample_uuid").isNotNull()
+    if set_names:
+        known_sample &= F.col("sample_set").isin(*EXPECTED_SETS["samples"])
+    missing = known_sample & F.col("sample_id").isNull()
 
     ids = _ids_with_sets(identifiers, set_names)
-    with_sample_id = docs.join(
-        ids.withColumnsRenamed({"barcode": "sample_barcode", "uuid": "sample_uuid",
-                                "set_name": "sample_set"}),
-        "sample_barcode", "left",
-    )
-    known_sample = with_sample_id.filter(F.col("sample_uuid").isNotNull())
-    if set_names:
-        known_sample = known_sample.filter(
-            F.col("sample_set").isin(*EXPECTED_SETS["samples"])
-        )
-
     samples = warehouse.read("sample").select(
         "sample_id", F.col("identifier").alias("sample_uuid"),
         F.get_json_object("details", "$.sample_type").alias("sample_type"),
     )
-    located = known_sample.join(samples, "sample_uuid", "left")
-    deferred = located.filter(F.col("sample_id").isNull())
+    located, n = materialise(
+        docs.join(
+            ids.withColumnsRenamed({"barcode": "sample_barcode", "uuid": "sample_uuid",
+                                    "set_name": "sample_set"}),
+            "sample_barcode", "left",
+        ).join(samples, "sample_uuid", "left"),
+        with_kit=F.count_if(with_kit), deferred=F.count_if(missing),
+    )
+    deferred = located.filter(missing)
     ready = located.filter(
-        F.col("sample_id").isNotNull() & F.col("sample_type").isin("utm", "rdt")
+        known_sample & F.col("sample_id").isNotNull() & F.col("sample_type").isin("utm", "rdt")
     )
 
     ready = ready.join(
@@ -240,7 +236,7 @@ def run_manifests(
         ),
     ).otherwise(base_details)
 
-    kit_updates = (
+    kit_updates, k = materialise(
         ready.select(
             F.col("kit_uuid").alias("identifier"),
             F.when(F.col("sample_type") == "rdt", F.col("sample_id")).alias("rdt_sample_id"),
@@ -249,21 +245,18 @@ def run_manifests(
         )
         .dropDuplicates(["identifier"])
     )
-    n_kits = kit_updates.count()
-    if n_kits:
-        merged = merge(
-            warehouse.read("kit"), kit_updates, [["identifier"]], "kit_id",
-            update_cols=["rdt_sample_id", "utm_sample_id"],
-        )
-        warehouse.publish("kit", merged.df)
-        _update_kit_samples(warehouse)
+    kits = warehouse.upsert(
+        "kit", kit_updates, [["identifier"]], "kit_id",
+        update_cols=["rdt_sample_id", "utm_sample_id"],
+    )
+    _update_kit_samples(warehouse, kits, kit_updates)
 
     return KitRunResult(
         stats={
-            "manifests": receiving.count(),
-            "with_kit": docs.count(),
-            "deferred": deferred.count(),
-            "kits": n_kits,
+            "manifests": n["rows"],
+            "with_kit": n["with_kit"],
+            "deferred": n["deferred"],
+            "kits": k["rows"],
         },
         deferred_ids=deferred.select("id"),
     )
@@ -286,8 +279,11 @@ def run(
     encounters = warehouse.read("encounter").select(
         F.col("identifier").alias("encounter_identifier"), "encounter_id"
     )
-    ready = docs.join(encounters, "encounter_identifier", "inner")
-    deferred = docs.join(encounters, "encounter_identifier", "left_anti")
+    found = F.col("encounter_id").isNotNull()
+    located, n = materialise(
+        docs.join(encounters, "encounter_identifier", "left"), ready=F.count_if(found)
+    )
+    ready = located.filter(found)
 
     ids = F.broadcast(identifiers.select(F.lower("barcode").alias("barcode"), "uuid"))
     samples = warehouse.read("sample").select(F.col("identifier").alias("uuid"), "sample_id")
@@ -310,18 +306,17 @@ def run(
         )
         .dropDuplicates(["identifier"])
     )
-    merged = merge(
-        warehouse.read("kit"), kit_updates, [["identifier"]], "kit_id",
+    warehouse.upsert(
+        "kit", kit_updates, [["identifier"]], "kit_id",
         update_cols=["encounter_id", "rdt_sample_id", "utm_sample_id"], details_col=None,
     )
-    warehouse.publish("kit", merged.df)
 
     return KitRunResult(
         stats={
-            "kits_seen": docs.count(),
-            "ready": ready.count(),
-            "deferred": deferred.count(),
+            "kits_seen": n["rows"],
+            "ready": n["ready"],
+            "deferred": n["rows"] - n["ready"],
             "kits": warehouse.num_rows("kit"),
         },
-        deferred_ids=deferred.select("id"),
+        deferred_ids=located.filter(~found).select("id"),
     )

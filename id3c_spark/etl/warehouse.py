@@ -1,8 +1,12 @@
-"""Warehouse table bundle: typed upsert wrappers over operators.merge.
+"""Warehouse table bundle: the one upsert path over operators.merge.
 
-Each method mirrors one reference upsert (citations inline). Tables are
-ParquetTable stores (Delta-MERGE stand-in, see sources/store.py); all
-write paths are full plans — no per-row loops.
+Every ETL writes its tables through :meth:`Warehouse.upsert`: one
+materialisation of the batch, then a bootstrap or a file-pruned
+copy-on-write merge. No ETL republishes a whole table. The upsert_*
+methods mirror the reference upsert family, each with its table's key
+and update policy (citations inline). Tables are ParquetTable stores
+(Delta-MERGE stand-in, see sources/store.py); every write is one plan,
+with no per-row loops.
 """
 
 from __future__ import annotations
@@ -10,7 +14,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from id3c_spark import schemas
 from id3c_spark.operators.merge import materialise, merge
@@ -38,9 +41,11 @@ class Warehouse:
         return tbl.num_rows() if tbl.exists() else 0
 
     def publish(self, name: str, df: DataFrame) -> None:
+        """Replace a table's contents (seeding; ETLs write through upsert)."""
         self.tables[name].publish(df)
 
-    def _upsert(self, name: str, updates: DataFrame, key_cols, id_col: str, **kw) -> DataFrame:
+    def upsert(self, name: str, updates: DataFrame, key_cols, id_col: str | None,
+               **merge_kw) -> DataFrame:
         """Run operators.merge.merge through the file-granular copy-on-write
         path (sources/store.py merge_publish): footer min/max pruning on the
         merge keys means an ETL batch rewrites only the files it touches —
@@ -49,8 +54,10 @@ class Warehouse:
         range-clusters it on the first match key so later merges prune.
 
         The batch is materialized once (localCheckpoint: it stays
-        distributed) and that one copy feeds both the prune-key collection
-        and the merge's single write. An empty batch writes nothing."""
+        distributed; a batch the caller already materialised is reused
+        as is) and that one copy feeds both the prune-key collection and
+        the merge's single write. An empty batch writes nothing. Returns
+        the table as it now reads."""
         updates, batch = materialise(updates)
         if not batch["rows"]:
             return self.read(name)
@@ -59,13 +66,13 @@ class Warehouse:
         if not tbl.exists():
             base = self.spark.createDataFrame([], schemas.WAREHOUSE_SCHEMAS[name])
             tbl.publish(
-                merge(base, updates, key_cols, id_col, **kw).df,
+                merge(base, updates, key_cols, id_col, **merge_kw).df,
                 cluster_by=cluster,
             )
         else:
             tbl.merge_publish(
                 updates, key_cols,
-                lambda target: merge(target, updates, key_cols, id_col, **kw).df,
+                lambda target: merge(target, updates, key_cols, id_col, **merge_kw).df,
                 cluster_by=cluster,
             )
         return self.read(name)
@@ -75,7 +82,7 @@ class Warehouse:
     def find_or_create_target(self, wanted: DataFrame) -> DataFrame:
         """find_or_create_target (etl/__init__.py:652-682): insert missing
         (identifier, control); never update existing."""
-        return self._upsert(
+        return self.upsert(
             "target", wanted, ["identifier"], "target_id",
             update_cols=[], details_col=None, error_on_multi=False, update_keys=False,
         )
@@ -83,7 +90,7 @@ class Warehouse:
     def find_or_create_site(self, wanted: DataFrame) -> DataFrame:
         """find_or_create_site (etl/__init__.py:33-63); site identifiers are
         unique case-insensitively (site.sql:12-14) — normalize before match."""
-        return self._upsert(
+        return self.upsert(
             "site", wanted, ["identifier"], "site_id",
             update_cols=[], details_col=None, error_on_multi=False, update_keys=False,
         )
@@ -91,14 +98,14 @@ class Warehouse:
     def upsert_individual(self, updates: DataFrame) -> DataFrame:
         """upsert_individual (etl/__init__.py:66-140): match identifier,
         update sex, merge details."""
-        return self._upsert(
+        return self.upsert(
             "individual", updates, ["identifier"], "individual_id",
             update_cols=["sex"],
         )
 
     def upsert_encounter(self, updates: DataFrame) -> DataFrame:
         """upsert_encounter (etl/__init__.py:143-249): match identifier."""
-        return self._upsert(
+        return self.upsert(
             "encounter", updates, ["identifier"], "encounter_id",
             update_cols=["individual_id", "site_id", "encountered", "age_months"],
         )
@@ -106,7 +113,7 @@ class Warehouse:
     def upsert_sample(self, updates: DataFrame) -> DataFrame:
         """upsert_sample (db/__init__.py:182-326): alternate-key match on
         identifier OR collection_identifier; error on multi-match."""
-        return self._upsert(
+        return self.upsert(
             "sample", updates,
             [["identifier"], ["collection_identifier"]], "sample_id",
             update_cols=["collection_identifier", "encounter_id", "collected", "access_role"],
@@ -115,7 +122,7 @@ class Warehouse:
     def upsert_presence_absence(self, updates: DataFrame) -> DataFrame:
         """upsert_presence_absence (etl/__init__.py:548-649): match
         identifier; re-tests are corrections (present may flip)."""
-        return self._upsert(
+        return self.upsert(
             "presence_absence", updates, ["identifier"], "presence_absence_id",
             update_cols=["sample_id", "target_id", "present"],
         )
@@ -123,37 +130,15 @@ class Warehouse:
     def upsert_location(self, updates: DataFrame) -> DataFrame:
         """upsert_location (etl/__init__.py:378-466): match (scale,
         identifier); hierarchy right-biased concat happens in the caller."""
-        return self._upsert(
+        return self.upsert(
             "location", updates, [["scale", "identifier"]], "location_id",
             update_cols=["hierarchy", "point_wkt", "polygon_wkt", "simplified_polygon_wkt"],
         )
 
     def upsert_encounter_location(self, updates: DataFrame) -> DataFrame:
         """upsert_encounter_location (etl/__init__.py:469-545): match
-        (encounter_id, relation citext). An empty batch writes nothing."""
-        updates, batch = materialise(updates)
-        if not batch["rows"]:
-            return self.read("encounter_location")
-
-        def run(target: DataFrame) -> DataFrame:
-            current = target.withColumn(
-                "el_id", F.xxhash64("encounter_id", "relation")  # composite PK surrogate
-            )
-            res = merge(
-                current, updates, [["encounter_id", "relation"]], "el_id",
-                update_cols=["location_id"],
-            )
-            return res.df.drop("el_id")
-
-        tbl = self.tables["encounter_location"]
-        if not tbl.exists():
-            base = self.spark.createDataFrame(
-                [], schemas.WAREHOUSE_SCHEMAS["encounter_location"]
-            )
-            tbl.publish(run(base))
-        else:
-            tbl.merge_publish(
-                updates, [["encounter_id", "relation"]], run,
-                cluster_by=["encounter_id"],
-            )
-        return self.read("encounter_location")
+        (encounter_id, relation citext), the table's primary key."""
+        return self.upsert(
+            "encounter_location", updates, [["encounter_id", "relation"]], None,
+            update_cols=["location_id"],
+        )

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import contextlib
 import re
+import weakref
 from dataclasses import dataclass
 from collections.abc import Sequence
 
@@ -62,6 +63,8 @@ _BRANCH = "__branch"
 _CHECK = re.compile(r"CHECK\[([^\]]+)\]: ")
 #: the error types in-plan checks raise, by the name in their tag
 _ERRORS: dict[str, type[Exception]] = {}
+#: the copies materialise produced, each with the counts observed writing it
+_COPIES: weakref.WeakKeyDictionary[DataFrame, dict] = weakref.WeakKeyDictionary()
 
 
 class MultipleMatchError(RuntimeError):
@@ -109,14 +112,22 @@ def materialise(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     copy stays on the executors), re-raising any in-plan check it carries
     as its typed error. Returns the copy and its ``rows`` plus *metrics*
     (named aggregate columns), both observed while the copy is written,
-    so they cost no extra Spark job."""
+    so they cost no extra Spark job.
+
+    Idempotent: given a copy it produced, it returns that copy and the
+    counts it recorded, with no Spark job, unless *metrics* names a
+    count it did not record."""
+    done = _COPIES.get(df)
+    if done is not None and metrics.keys() <= done.keys():
+        return df, done
     obs = Observation()
     observed = df.observe(
         obs, F.count(F.lit(1)).alias("rows"), *[c.alias(k) for k, c in metrics.items()]
     )
     with check_errors_raised():
         copy = observed.localCheckpoint()
-    return copy, obs.get
+    _COPIES[copy] = counts = obs.get
+    return copy, counts
 
 
 @dataclass
@@ -176,7 +187,7 @@ def merge(
     target: DataFrame,
     updates: DataFrame,
     key_cols: Sequence[Sequence[str]] | Sequence[str],
-    id_col: str,
+    id_col: str | None,
     update_cols: Sequence[str] | None = None,
     details_col: str | None = "details",
     error_on_multi: bool = True,
@@ -186,11 +197,17 @@ def merge(
 
     key_cols: one key, or a list of alternate keys tried in order (rows
     unmatched by key[0] are retried on key[1], matching upsert_sample's
-    ``identifier OR collection_identifier``).
+    ``identifier OR collection_identifier``). A row whose key starts
+    with a null never matches; the later columns of a composite key
+    match null-safely, so a null key part still identifies one row (the
+    reference's partial unique index on consensus genomes without a read
+    set, consensus-genome.sql:33).
     id_col: surrogate key column of target (ids are assumed unique); new
     rows get xxhash64(match-key columns) — deterministic across runs
     (SURVEY §7.3 item 6 warns off monotonically_increasing_id) — or keep
-    the natural key when id_col is one of the update columns.
+    the natural key when id_col is one of the update columns. None: the
+    table has no surrogate id and its one key, checked with
+    error_on_multi, identifies a row.
     update_cols: columns overwritten on match (default: all shared columns
     except id and details). details_col merged top-level JSON.
     error_on_multi: the plan raises (MultipleMatchError once re-raised by
@@ -219,6 +236,8 @@ def merge(
     alt_keys = [k for k in alt_keys if all(c in u_cols for c in k)]
     if not alt_keys:
         raise ValueError("updates carry none of the match keys")
+    if id_col is None and (len(alt_keys) > 1 or not error_on_multi):
+        raise ValueError("a table without an id column takes one key and error_on_multi")
     if update_cols is None:
         update_cols = [
             c for c in u_cols
@@ -244,9 +263,27 @@ def merge(
     def uq(c: str) -> str:
         return _q(f"u_{c}")
 
-    t = target.selectExpr(*[f"{_q(c)} AS {tq(c)}" for c in t_cols])
-    u = updates.selectExpr(*[f"{_q(c)} AS {uq(c)}" for c in u_cols])
-    t_id = tq(id_col)
+    # Each key matches on its first column and, for a composite key, one
+    # struct of the later columns: struct equality holds between null
+    # fields, and plain column equality keeps the join an equi-join whose
+    # shuffle the windows partitioned on the same columns share.
+    t_pack, u_pack, t_keys, u_keys = [], [], [], []
+    for i, (first, *rest) in enumerate(alt_keys):
+        t_keys.append([f"t_{first}"])
+        u_keys.append([f"u_{first}"])
+        if rest:
+            packed = f"struct({', '.join(map(_q, rest))})"
+            t_pack.append(f"{packed} AS __tk{i}")
+            u_pack.append(f"{packed} AS __uk{i}")
+            t_keys[i].append(f"__tk{i}")
+            u_keys[i].append(f"__uk{i}")
+
+    def cols(names: Sequence[str]) -> str:
+        return ", ".join(map(_q, names))
+
+    t = target.selectExpr(*[f"{_q(c)} AS {tq(c)}" for c in t_cols], *t_pack)
+    u = updates.selectExpr(*[f"{_q(c)} AS {uq(c)}" for c in u_cols], *u_pack)
+    t_id = tq(id_col) if id_col else None
     # columns each side adds before the join, one select per list: the
     # last window of each side is partitioned on the join key, so the join
     # reuses its shuffle
@@ -255,20 +292,19 @@ def merge(
 
     # --- 1. resolve every update row to one target row ---------------------
     if len(alt_keys) == 1:
-        on = [(tq(k), uq(k)) for k in alt_keys[0]]
+        on = " AND ".join(f"{_q(tc)} = {_q(uc)}" for tc, uc in zip(t_keys[0], u_keys[0]))
     else:
         los, his = [], []
-        for i, keys in enumerate(alt_keys):
-            known = t.filter(" AND ".join(f"{tq(k)} IS NOT NULL" for k in keys))
-            ids = known.groupBy(*[F.col(f"t_{k}").alias(f"__k{i}_{k}") for k in keys]).agg(
-                F.expr(f"min({t_id}) AS __lo{i}"), F.expr(f"max({t_id}) AS __hi{i}")
-            )
-            cond = " AND ".join(f"{uq(k)} = {_q(f'__k{i}_{k}')}" for k in keys)
+        for i, (tk, uk) in enumerate(zip(t_keys, u_keys)):
+            ids = t.filter(f"{_q(tk[0])} IS NOT NULL").groupBy(
+                *[F.col(c).alias(f"__k{i}_{j}") for j, c in enumerate(tk)]
+            ).agg(F.expr(f"min({t_id}) AS __lo{i}"), F.expr(f"max({t_id}) AS __hi{i}"))
+            cond = " AND ".join(f"{_q(c)} = __k{i}_{j}" for j, c in enumerate(uk))
             u = u.join(ids, F.expr(cond), "left")
             los.append(f"__lo{i}")
             his.append(f"__hi{i}")
         u_first.append(f"coalesce({', '.join(los)}) AS __rid")
-        on = [(t_id, "__rid")]
+        on = f"{t_id} = __rid"
 
     # --- 2. checks, evaluated by whatever action runs the plan -------------
     check: list[tuple[str, str]] = []
@@ -280,16 +316,14 @@ def merge(
         # callers that mean last-wins must pre-dedupe with an explicit
         # ordinal (e.g. redcap_det.complete_dets does).
         for i, keys in enumerate(alt_keys):
-            u_keys = [f"u_{k}" for k in keys]
-            part = ", ".join(map(_q, u_keys))
-            u_first.append(f"count(1) OVER (PARTITION BY {part}) AS __n{i}")
-            dup = " AND ".join([f"__n{i} > 1"] + [f"{_q(k)} IS NOT NULL" for k in u_keys])
-            check.append((dup, _fail(f"duplicate update rows for key {keys}: ", u_keys)))
+            u_first.append(f"count(1) OVER (PARTITION BY {cols(u_keys[i])}) AS __n{i}")
+            dup = f"__n{i} > 1 AND {_q(u_keys[i][0])} IS NOT NULL"
+            check.append((dup, _fail(f"duplicate update rows for key {keys}: ",
+                                     [f"u_{k}" for k in keys])))
         multi_fail = _fail("update matched multiple rows: ", [f"u_{k}" for k in all_keys])
         if len(alt_keys) == 1:
             # the window shares the join's partitioning: no extra shuffle
-            part = ", ".join(tc for tc, _ in on)
-            t_last.insert(0, f"count(1) OVER (PARTITION BY {part}) AS __nt")
+            t_last.insert(0, f"count(1) OVER (PARTITION BY {cols(t_keys[0])}) AS __nt")
             check.append(("__u IS NOT NULL AND __nt > 1", multi_fail))
         else:
             # Checked across ALL alternate keys: an update whose identifier
@@ -309,11 +343,7 @@ def merge(
         u = u.selectExpr("*", *u_first)
 
     # --- 3. one full-outer join on the key or the resolved id -------------
-    j = t.selectExpr("*", *t_last).join(
-        u.selectExpr("*", *u_last),
-        F.expr(" AND ".join(f"{tc} = {uc}" for tc, uc in on)),
-        "full_outer",
-    )
+    j = t.selectExpr("*", *t_last).join(u.selectExpr("*", *u_last), F.expr(on), "full_outer")
     if check:
         j = j.filter(
             "CASE " + " ".join(f"WHEN {c} THEN {f}" for c, f in check) + " ELSE true END"

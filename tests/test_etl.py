@@ -373,7 +373,7 @@ def test_recorded_schemas_and_footer_counts_match_the_data(spark, warehouse, ide
 
 def test_bootstrap_publish_is_clustered_so_first_merge_prunes(spark, tmp_path):
     """The FIRST publish of a warehouse table must range-cluster on the
-    match key (etl/warehouse.py _upsert): un-clustered bootstrap footers
+    match key (etl/warehouse.py upsert): un-clustered bootstrap footers
     span the whole key range, so the first post-bootstrap merge cannot
     skip any file. With clustering, a single-key update touches a strict
     subset of files and every untouched file hard-links forward."""

@@ -41,6 +41,7 @@ def test_kit_defers_until_encounter_exists(spark, warehouse, identifiers):
     assert r1.stats["ready"] == 0 and r1.stats["deferred"] == 1
     assert [row.id for row in r1.deferred_ids.collect()] == [1]
     assert warehouse.read("kit").count() == 0
+    assert warehouse.tables["kit"].current_version() is None  # no empty bootstrap
 
     # load enrollments, retry the same document → now links
     enrollments.run(spark, receiving_df(spark, [json.loads(d) for _, d in fixtures.enrollment_documents()][:2]),
@@ -170,6 +171,33 @@ def test_consensus_genome_etl(spark, warehouse, identifiers):
     # idempotent: same document again changes nothing
     stats2 = consensus_genome.run(spark, receiving_df(spark, [doc]), warehouse, organisms)
     assert stats2 == stats
+
+    # a batch whose samples are all unknown writes no table version
+    tables = ["sequence_read_set", "consensus_genome", "genomic_sequence"]
+    versions = {t: warehouse.tables[t].current_version() for t in tables}
+    unknown = dict(doc, sample_identifier="no-such-sample")
+    consensus_genome.run(spark, receiving_df(spark, [unknown]), warehouse, organisms)
+    assert {t: warehouse.tables[t].current_version() for t in tables} == versions
+
+
+def test_consensus_genome_without_read_set_is_not_duplicated(spark, warehouse):
+    """A genome with no read set is one row however often its document is
+    re-run: the reference's partial unique index on (sample, organism)
+    where the read set is null (consensus-genome.sql:33)."""
+    warehouse.upsert_sample(spark.createDataFrame(
+        [(fixtures.SAMPLE_BARCODES["11112222"], None)],
+        "identifier string, collection_identifier string",
+    ))
+    organisms = spark.createDataFrame(
+        ORGANISMS, "organism_id long, lineage string, identifiers map<string,string>, details string"
+    )
+    doc = {"sample_identifier": fixtures.SAMPLE_BARCODES["11112222"],
+           "reference_organism": "h1n1", "status": "notMapped"}
+    for _ in range(2):
+        consensus_genome.run(spark, receiving_df(spark, [doc]), warehouse, organisms)
+    genomes = warehouse.read("consensus_genome").collect()
+    assert len(genomes) == 1
+    assert genomes[0].sequence_read_set_id is None
 
 
 def test_sequence_read_set_upload(spark, warehouse):

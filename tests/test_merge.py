@@ -11,6 +11,7 @@ from id3c_spark.operators.merge import (
     MultipleMatchError,
     check_errors_raised,
     find_or_create,
+    materialise,
     merge,
 )
 from id3c_spark.sources.store import ParquetTable
@@ -133,6 +134,27 @@ def test_merge_launches_no_spark_job(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_materialise_is_idempotent(spark):
+    """Materialising a copy materialise produced returns that copy and the
+    counts it recorded, without a Spark job; a count it did not record
+    still gets computed."""
+    sc = spark.sparkContext
+    rows = df_of(spark, [(1, "s1", None, None, None), (2, "s2", None, None, None)], SAMPLE_SCHEMA)
+    copy, counts = materialise(rows, ids=F.sum("sample_id"))
+    group = "materialise-a-copy"
+    sc.setJobGroup(group, group)
+    try:
+        again, again_counts = materialise(copy)
+        same, same_counts = materialise(copy, ids=F.sum("sample_id"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert again is copy and same is copy
+    assert again_counts == same_counts == counts == {"rows": 2, "ids": 3}
+    _, more = materialise(copy, n=F.count_if(F.col("identifier") == "s1"))
+    assert more == {"rows": 2, "n": 1}
 
 
 def test_merge_publish_failed_check_leaves_table_unchanged(spark, tmp_path):

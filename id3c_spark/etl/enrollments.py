@@ -13,6 +13,20 @@ etl/__init__.py:313-329), skeletal samples from sampleCodes
 (enrollments.py:125-135), locations by use. Here: one plan per entity,
 `decode_answer` (enrollments.py:370-399) as a when/otherwise expression
 over the parsed responses array — no Python in the row path.
+
+Checks before the first write; one writer per table. The batch is
+materialised once with the location checks (duplicate use, unknown use,
+unknown tract), so a rejected batch writes no table. The upserts then
+run in three waves, each wave's tables written concurrently
+(warehouse.concurrently) and every wave started only after the one
+before it has finished:
+
+  1. site, individual, address location
+  2. encounter (site and individual ids)
+  3. encounter_location (encounter and location ids), sample (encounter ids)
+
+A failure in one upsert of a wave lets the others of that wave finish
+and starts no later wave.
 """
 
 from __future__ import annotations
@@ -21,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, concurrently
 from id3c_spark.operators.merge import checks, materialise
 
 KNOWN_VERSIONS = {"1.0.0", "1.1.0"}   # enrollments.py:89-92
@@ -197,21 +211,33 @@ def run(
         .drop("uses")
     )
 
-    sites = warehouse.find_or_create_site(
-        enr.select(
-            F.col("site_identifier").alias("identifier"),
-            F.to_json(F.struct(F.col("site_type").alias("type"))).alias("details"),
-        ).dropDuplicates(["identifier"])
+    # wave 1: site, individual and address location depend on nothing
+    # the batch writes
+    site_rows = enr.select(
+        F.col("site_identifier").alias("identifier"),
+        F.to_json(F.struct(F.col("site_type").alias("type"))).alias("details"),
+    ).dropDuplicates(["identifier"])
+    individual_rows = enr.select(
+        F.col("individual_identifier").alias("identifier"),
+        F.col("sex"),
+        F.lit(None).cast("string").alias("details"),
+    ).dropDuplicates(["identifier"])
+    addr_wanted = (
+        with_tract.filter(F.col("address_identifier").isNotNull())
+        .select(
+            F.lit("address").alias("scale"),
+            F.col("address_identifier").alias("identifier"),
+            F.col("tract_hierarchy").alias("hierarchy"),
+        )
+        .dropDuplicates(["identifier"])
+    )
+    sites, individuals, locations = concurrently(
+        lambda: warehouse.find_or_create_site(site_rows),
+        lambda: warehouse.upsert_individual(individual_rows),
+        lambda: warehouse.upsert_location(addr_wanted),
     )
 
-    individuals = warehouse.upsert_individual(
-        enr.select(
-            F.col("individual_identifier").alias("identifier"),
-            F.col("sex"),
-            F.lit(None).cast("string").alias("details"),
-        ).dropDuplicates(["identifier"])
-    )
-
+    # wave 2: the encounter takes its site and individual ids
     encounters = warehouse.upsert_encounter(
         enr.join(
             F.broadcast(sites.select(F.col("identifier").alias("site_identifier"), "site_id")),
@@ -229,53 +255,41 @@ def run(
         )
         .dropDuplicates(["identifier"])
     )
+    encounter_ids = encounters.select(
+        F.col("identifier").alias("encounter_identifier"), "encounter_id"
+    )
 
-    addr_wanted = (
-        with_tract.filter(F.col("address_identifier").isNotNull())
-        .select(
-            F.lit("address").alias("scale"),
-            F.col("address_identifier").alias("identifier"),
-            F.col("tract_hierarchy").alias("hierarchy"),
+    # wave 3: encounter locations and samples hang off the encounters
+    def upsert_encounter_locations() -> int:
+        addr_ids = locations.filter(F.col("scale") == "address").select(
+            F.col("identifier").alias("address_identifier"),
+            F.col("location_id").alias("address_location_id"),
         )
-        .dropDuplicates(["identifier"])
-    )
-    locations = warehouse.upsert_location(addr_wanted)
-    addr_ids = locations.filter(F.col("scale") == "address").select(
-        F.col("identifier").alias("address_identifier"),
-        F.col("location_id").alias("address_location_id"),
-    )
-    rel_map = F.create_map(
-        *[F.lit(x) for kv in LOCATION_RELATION.items() for x in kv]
-    )
-    el_rows, el = materialise(
-        with_tract.join(F.broadcast(addr_ids), "address_identifier", "left")
-        .join(
-            encounters.select(
-                F.col("identifier").alias("encounter_identifier"), "encounter_id"
-            ),
-            "encounter_identifier",
+        rel_map = F.create_map(
+            *[F.lit(x) for kv in LOCATION_RELATION.items() for x in kv]
         )
-        .select(
-            "encounter_id",
-            F.element_at(rel_map, F.col("use")).alias("relation"),
-            F.coalesce("address_location_id", "tract_location_id").alias("location_id"),
+        el_rows, el = materialise(
+            with_tract.join(F.broadcast(addr_ids), "address_identifier", "left")
+            .join(encounter_ids, "encounter_identifier")
+            .select(
+                "encounter_id",
+                F.element_at(rel_map, F.col("use")).alias("relation"),
+                F.coalesce("address_location_id", "tract_location_id").alias("location_id"),
+            )
+            # neither tract nor address → warn-and-skip in the reference
+            .filter(F.col("location_id").isNotNull())
+            .groupBy("encounter_id", "relation")
+            .agg(F.min("location_id").alias("location_id"))
+            .withColumn("details", F.lit(None).cast("string"))
         )
-        # neither tract nor address → warn-and-skip in the reference
-        .filter(F.col("location_id").isNotNull())
-        .groupBy("encounter_id", "relation")
-        .agg(F.min("location_id").alias("location_id"))
-        .withColumn("details", F.lit(None).cast("string"))
-    )
-    warehouse.upsert_encounter_location(el_rows)
+        warehouse.upsert_encounter_location(el_rows)
+        return el["rows"]
 
     # skeletal samples: collection identifier only (enrollments.py:125-135)
     codes = (
         enr.select("encounter_identifier", F.explode("sample_codes").alias("sc"))
         .filter(F.col("sc.type").isin(*SAMPLE_CODE_TYPES))
-        .join(
-            encounters.select(F.col("identifier").alias("encounter_identifier"), "encounter_id"),
-            "encounter_identifier",
-        )
+        .join(encounter_ids, "encounter_identifier")
         .select("encounter_id", F.lower("sc.code").alias("barcode"))
     )
     if identifiers is not None:
@@ -285,12 +299,14 @@ def run(
         ).select("encounter_id", F.col("uuid").alias("collection_identifier"))
     else:
         codes = codes.select("encounter_id", F.col("barcode").alias("collection_identifier"))
-    warehouse.upsert_sample(
-        codes.select(
-            F.lit(None).cast("string").alias("identifier"),
-            "collection_identifier",
-            "encounter_id",
-        ).dropDuplicates(["collection_identifier"])
+    sample_rows = codes.select(
+        F.lit(None).cast("string").alias("identifier"),
+        "collection_identifier",
+        "encounter_id",
+    ).dropDuplicates(["collection_identifier"])
+    encounter_locations, _ = concurrently(
+        upsert_encounter_locations,
+        lambda: warehouse.upsert_sample(sample_rows),
     )
 
     return {
@@ -298,6 +314,6 @@ def run(
         "sites": warehouse.num_rows("site"),
         "individuals": warehouse.num_rows("individual"),
         "encounters": warehouse.num_rows("encounter"),
-        "encounter_locations": el["rows"],
+        "encounter_locations": encounter_locations,
         "samples": warehouse.num_rows("sample"),
     }

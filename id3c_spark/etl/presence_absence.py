@@ -10,6 +10,17 @@ The reference loops records in Python; here the whole batch is ONE plan:
   validate/split (skips mirror reference skip rules) →
   staged target / sample / presence_absence frames → MERGEs.
 
+Checks before the first write; one writer per table. The batch is
+materialised once with every hard-error check, so a rejected batch
+writes no table. The upserts then run in two waves, each wave's tables
+written concurrently (warehouse.concurrently):
+
+  1. target, sample
+  2. presence_absence (sample and target ids)
+
+A failure in one upsert of wave 1 lets the other finish and does not
+start wave 2.
+
 Skip rules carried over:
   - old-format documents {"store": ...} skipped (presence_absence.py:101-106)
   - samples without investigatorId barcode skipped (no identifier to match)
@@ -39,7 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, concurrently
 from id3c_spark.operators.merge import checks, materialise
 
 DOCUMENT_SCHEMA = T.StructType([
@@ -228,7 +239,6 @@ def run(
         known.groupBy(F.col("gene_target").alias("identifier"))
         .agg(F.max("is_control").alias("control"))
     )
-    targets = warehouse.find_or_create_target(wanted_targets)
 
     # 2. samples: upsert by identifier (or COLLECTION identifier for
     #    tiny-swab sets); details carry the nwgc_id array extended with the
@@ -271,10 +281,14 @@ def run(
             details_col.alias("details"),
         )
     )
-    samples = warehouse.upsert_sample(sample_updates)
+    # wave 1: targets and samples are independent of each other
+    targets, samples = concurrently(
+        lambda: warehouse.find_or_create_target(wanted_targets),
+        lambda: warehouse.upsert_sample(sample_updates),
+    )
     sample_key = F.coalesce("identifier", "collection_identifier")
 
-    # 3. presence_absence rows: latest result per (sample, target, chip) wins
+    # 3. (wave 2) presence_absence rows: latest result per (sample, target, chip) wins
     #    (re-tests are corrections, presence_absence.py:210-213); identifier
     #    'NWGC/{sampleId}/{target}' + '/{chip}' when on a chip (py:203-208)
     pa_identifier = F.when(

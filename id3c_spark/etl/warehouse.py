@@ -7,17 +7,38 @@ methods mirror the reference upsert family, each with its table's key
 and update policy (citations inline). Tables are ParquetTable stores
 (Delta-MERGE stand-in, see sources/store.py); every write is one plan,
 with no per-row loops.
+
+An ETL runs the upserts of tables that do not depend on each other
+together (:func:`concurrently`): Spark plans and runs one action at a
+time per caller, so independent writes only overlap when they are
+started together. Each table has one writer at a time; a second upsert
+of a table already being written raises instead of waiting.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from id3c_spark import schemas
 from id3c_spark.operators.merge import materialise, merge
 from id3c_spark.sources.store import ParquetTable
+
+
+def concurrently(*calls: Callable[[], object]) -> list:
+    """Run each zero-argument call on its own thread, wait for every one
+    to finish, and return their results in call order, or raise the
+    first failure in call order. Each thread carries the caller's Spark
+    job group and local properties."""
+    inherit = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(len(calls), thread_name_prefix="concurrently") as pool:
+        futures = [pool.submit(inherit(call)) for call in calls]
+    return [f.result() for f in futures]
 
 
 class Warehouse:
@@ -28,6 +49,8 @@ class Warehouse:
             name: ParquetTable(spark, os.path.join(root, name))
             for name in schemas.WAREHOUSE_SCHEMAS
         }
+        # one writer per table: two upserts would both write version n+1
+        self._writing = {name: threading.Lock() for name in self.tables}
 
     def read(self, name: str) -> DataFrame:
         tbl = self.tables[name]
@@ -56,26 +79,36 @@ class Warehouse:
         The batch is materialized once (localCheckpoint: it stays
         distributed; a batch the caller already materialised is reused
         as is) and that one copy feeds both the prune-key collection and
-        the merge's single write. An empty batch writes nothing. Returns
-        the table as it now reads."""
-        updates, batch = materialise(updates)
-        if not batch["rows"]:
+        the merge's single write. An empty batch, or one that changes no
+        row, writes nothing. Returns the table as it now reads.
+
+        Raises RuntimeError when another upsert of *name* is in flight:
+        the order of two writes to one table must not depend on thread
+        timing, so they are refused rather than queued."""
+        lock = self._writing[name]
+        if not lock.acquire(blocking=False):
+            raise RuntimeError(f"an upsert of {name!r} is already in flight: one writer per table")
+        try:
+            updates, batch = materialise(updates)
+            if not batch["rows"]:
+                return self.read(name)
+            tbl = self.tables[name]
+            cluster = [k for k in ([key_cols[0]] if isinstance(key_cols[0], str) else list(key_cols[0])) if k]
+            if not tbl.exists():
+                base = self.spark.createDataFrame([], schemas.WAREHOUSE_SCHEMAS[name])
+                tbl.publish(
+                    merge(base, updates, key_cols, id_col, **merge_kw).df,
+                    cluster_by=cluster,
+                )
+            else:
+                tbl.merge_publish(
+                    updates, key_cols,
+                    lambda target: merge(target, updates, key_cols, id_col, **merge_kw),
+                    cluster_by=cluster,
+                )
             return self.read(name)
-        tbl = self.tables[name]
-        cluster = [k for k in ([key_cols[0]] if isinstance(key_cols[0], str) else list(key_cols[0])) if k]
-        if not tbl.exists():
-            base = self.spark.createDataFrame([], schemas.WAREHOUSE_SCHEMAS[name])
-            tbl.publish(
-                merge(base, updates, key_cols, id_col, **merge_kw).df,
-                cluster_by=cluster,
-            )
-        else:
-            tbl.merge_publish(
-                updates, key_cols,
-                lambda target: merge(target, updates, key_cols, id_col, **merge_kw).df,
-                cluster_by=cluster,
-            )
-        return self.read(name)
+        finally:
+            lock.release()
 
     # --- reference upsert family (SURVEY §2.9) ---------------------------
 

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import contextlib
 import re
+import threading
 import weakref
 from dataclasses import dataclass
 from collections.abc import Sequence
@@ -65,6 +66,8 @@ _CHECK = re.compile(r"CHECK\[([^\]]+)\]: ")
 _ERRORS: dict[str, type[Exception]] = {}
 #: the copies materialise produced, each with the counts observed writing it
 _COPIES: weakref.WeakKeyDictionary[DataFrame, dict] = weakref.WeakKeyDictionary()
+#: guards _COPIES: an ETL's independent upserts materialise on their own threads
+_COPIES_LOCK = threading.Lock()
 
 
 class MultipleMatchError(RuntimeError):
@@ -117,7 +120,8 @@ def materialise(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     Idempotent: given a copy it produced, it returns that copy and the
     counts it recorded, with no Spark job, unless *metrics* names a
     count it did not record."""
-    done = _COPIES.get(df)
+    with _COPIES_LOCK:
+        done = _COPIES.get(df)
     if done is not None and metrics.keys() <= done.keys():
         return df, done
     obs = Observation()
@@ -126,7 +130,9 @@ def materialise(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     )
     with check_errors_raised():
         copy = observed.localCheckpoint()
-    _COPIES[copy] = counts = obs.get
+    counts = obs.get
+    with _COPIES_LOCK:
+        _COPIES[copy] = counts
     return copy, counts
 
 
@@ -140,6 +146,12 @@ class MergeResult:
     @property
     def df(self) -> DataFrame:
         return self.tagged.drop(_BRANCH)
+
+    def observe_changes(self, obs: Observation) -> DataFrame:
+        """:attr:`df` with the rows inserted or updated counted into
+        *obs* as ``changed`` by whatever action writes it: no extra job."""
+        changed = F.count_if(F.col(_BRANCH).isin("inserted", "updated")).alias("changed")
+        return self.tagged.observe(obs, changed).drop(_BRANCH)
 
     def stats(self) -> dict[str, int]:
         """Rows updated, inserted and matched-but-unchanged: one aggregate

@@ -19,11 +19,11 @@ import os
 import shutil
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.operators.merge import check_errors_raised
+from id3c_spark.operators.merge import MergeResult, check_errors_raised
 
 #: per-version schema record, beside the data files (Spark skips ``_*``)
 _SCHEMA_FILE = "_schema.json"
@@ -223,7 +223,7 @@ class ParquetTable:
         self,
         updates: DataFrame,
         key_cols: Sequence[Sequence[str]] | Sequence[str],
-        merge_fn: Callable[[DataFrame], DataFrame],
+        merge_fn: Callable[[DataFrame], DataFrame | MergeResult],
         cluster_by: Sequence[str] | None = None,
         zorder_by: Sequence[str] | None = None,
     ) -> int:
@@ -243,13 +243,18 @@ class ParquetTable:
         *merge_fn* receives the candidate-file rows (never the whole table)
         and returns the merged replacement for exactly those rows plus any
         inserts — operators.merge.merge over the candidates is exact because
-        matches can only live in candidate files.
+        matches can only live in candidate files. When it returns the
+        MergeResult itself, the rows it inserts or updates are counted
+        while the new version is written, and a merge that changes no row
+        (every match unchanged: a re-run, a batch of duplicates) deletes
+        the staged version and writes none — the reference's skip of
+        no-op writes (db/__init__.py:213-231) at version granularity.
         *cluster_by*: range-cluster + sort the rewritten files on these
         columns so footer ranges stay tight for the NEXT merge.
         A merge check that fires while the new version is written raises
         MultipleMatchError; the version never goes live. An empty batch
-        (the prune-key collect returns no row) writes no version: the
-        current version number comes back unchanged.
+        (the prune-key collect returns no row) writes no version either:
+        the current version number comes back unchanged.
         """
         if not self.exists():
             raise FileNotFoundError(
@@ -322,8 +327,18 @@ class ParquetTable:
         else:
             target = self.spark.createDataFrame([], schema)
 
-        v = (self.current_version() or 0) + 1
-        out = self._write(merge_fn(target), v, cluster_by, zorder_by)
+        merged = merge_fn(target)
+        changes = None
+        if isinstance(merged, MergeResult):
+            changes = Observation()
+            merged = merged.observe_changes(changes)
+        current = self.current_version()
+        v = current + 1
+        out = self._write(merged, v, cluster_by, zorder_by)
+        if changes is not None and not changes.get["changed"]:
+            shutil.rmtree(out)
+            self._schemas.pop(v, None)
+            return current
         self._carry(carried, out)
         self.flip(v)
         return v

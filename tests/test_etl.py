@@ -459,3 +459,136 @@ def test_incremental_manifest_run_job_count(spark, warehouse, identifiers, tmp_p
     assert out["manifests"] == len(docs) - 1 and out["unknown_barcodes"] == 1
     assert status.num_rows() == len(docs)
     assert jobs <= MANIFEST_RUN_JOBS, jobs
+
+
+def warehouse_rows(warehouse):
+    """Every written table's rows, order-free and comparable."""
+    import json
+
+    return {
+        name: sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in warehouse.read(name).collect()
+        )
+        for name, tbl in warehouse.tables.items() if tbl.exists()
+    }
+
+
+def test_concurrently_keeps_call_order_and_local_properties(spark):
+    """Results come back in call order; the first failure in call order
+    is raised only after every call has finished; each thread carries the
+    caller's local properties."""
+    import threading
+    import time
+
+    from id3c_spark.etl.warehouse import concurrently
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("id3c.test", "caller")
+    try:
+        assert concurrently(
+            lambda: (time.sleep(0.2), 1)[1],
+            lambda: sc.getLocalProperty("id3c.test"),
+        ) == [1, "caller"]
+    finally:
+        sc.setLocalProperty("id3c.test", None)
+
+    finished = threading.Event()
+
+    def late_error():
+        time.sleep(0.2)
+        raise ValueError("first in call order")
+
+    def slow_ok():
+        time.sleep(0.4)
+        finished.set()
+
+    def early_error():
+        raise KeyError("second in call order")
+
+    with pytest.raises(ValueError, match="first in call order"):
+        concurrently(late_error, early_error, slow_ok)
+    assert finished.is_set()
+
+
+def test_concurrent_upserts_of_one_table_are_refused(spark, warehouse, monkeypatch):
+    """One writer per table: of eight upserts of one table started
+    together, one writes and seven raise at once instead of waiting for
+    it or racing it to the next version."""
+    import sys
+    import threading
+
+    from id3c_spark.etl import warehouse as warehouse_mod
+    from id3c_spark.etl.warehouse import concurrently
+
+    n = 8
+    refused = threading.Semaphore(0)
+    materialise = warehouse_mod.materialise
+
+    def held(df, **metrics):
+        # the writer holds the table until every other upsert was refused
+        for _ in range(n - 1):
+            assert refused.acquire(timeout=30)
+        return materialise(df, **metrics)
+
+    monkeypatch.setattr(warehouse_mod, "materialise", held)
+    rows = spark.createDataFrame([("kiosk", None)], "identifier string, details string")
+    start = threading.Barrier(n, timeout=30)
+
+    def attempt():
+        start.wait()
+        try:
+            warehouse.find_or_create_site(rows)
+        except RuntimeError as e:
+            assert "already in flight" in str(e)
+            refused.release()
+            return "refused"
+        return "wrote"
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        outcomes = concurrently(*[attempt] * n)
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(outcomes) == ["refused"] * (n - 1) + ["wrote"]
+    assert warehouse.tables["site"].current_version() == 1
+    assert [r.identifier for r in warehouse.read("site").collect()] == ["kiosk"]
+
+
+def test_enrollment_failed_branch_starts_no_later_wave(spark, tmp_path, identifiers, monkeypatch):
+    """A failing upsert in enrollments' first wave: run raises it once the
+    wave's other upserts have finished, no branch thread outlives run, no
+    dependent upsert starts, and re-running the batch gives the warehouse
+    a clean run gives."""
+    import threading
+
+    class Fault(RuntimeError):
+        pass
+
+    def fault(updates):
+        raise Fault("location upsert failed")
+
+    batch = receiving_df(spark, fixtures.enrollment_documents())
+    wh = Warehouse(spark, str(tmp_path / "faulty"))
+    fixtures.seed_tract(wh)
+    for name in ("encounter", "encounter_location", "sample"):   # v1, empty
+        wh.publish(name, wh.read(name))
+    versions = table_versions(wh)
+
+    monkeypatch.setattr(wh, "upsert_location", fault)
+    with pytest.raises(Fault):
+        enrollments.run(spark, batch, wh, identifiers)
+    assert not [t for t in threading.enumerate() if t.name.startswith("concurrently")]
+    after = table_versions(wh)
+    # the wave's other branches finished; no later wave started
+    assert after["site"] == after["individual"] == 1
+    for name in ("location", "encounter", "encounter_location", "sample"):
+        assert after[name] == versions[name], name
+
+    monkeypatch.undo()
+    enrollments.run(spark, batch, wh, identifiers)
+    clean = Warehouse(spark, str(tmp_path / "clean"))
+    fixtures.seed_tract(clean)
+    enrollments.run(spark, batch, clean, identifiers)
+    assert warehouse_rows(wh) == warehouse_rows(clean)

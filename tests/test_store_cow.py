@@ -78,7 +78,8 @@ def test_cow_merge_insert_only_batch_carries_everything(spark, tmp_path):
 
 def test_cow_merge_empty_batch_writes_no_version(spark, tmp_path):
     """An empty update batch is a no-op: no new version, the same files,
-    and the merge function is never called."""
+    and the merge function is never called. So is a batch whose every
+    row matches unchanged, when the merge hands back its branch tags."""
     tbl = ParquetTable(spark, str(tmp_path / "t"), keep_versions=10)
     _clustered_publish(spark, tbl)
     version, files = tbl.current_version(), tbl.files()
@@ -91,6 +92,24 @@ def test_cow_merge_empty_batch_writes_no_version(spark, tmp_path):
     assert tbl.current_version() == version
     assert tbl.files() == files
     assert tbl.versions() == [version]
+
+    unchanged = spark.createDataFrame(
+        [(5, 50, None), (60, 600, None)], "k long, val long, details string"
+    )
+    assert tbl.merge_publish(
+        unchanged, ["k"], lambda target: merge(target, unchanged, ["k"], "k"),
+        cluster_by=["k"],
+    ) == version
+    assert tbl.current_version() == version
+    assert tbl.files() == files
+    assert tbl.versions() == [version]
+
+    changed = spark.createDataFrame([(5, 51, None)], "k long, val long, details string")
+    assert tbl.merge_publish(
+        changed, ["k"], lambda target: merge(target, changed, ["k"], "k"),
+        cluster_by=["k"],
+    ) == version + 1
+    assert tbl.read().filter("k = 5").collect()[0].val == 51
 
 
 def test_cow_merge_alternate_keys_prune_on_each(spark, tmp_path):

@@ -34,10 +34,11 @@ def concurrently(*calls: Callable[[], object]) -> list:
     """Run each zero-argument call on its own thread, wait for every one
     to finish, and return their results in call order, or raise the
     first failure in call order. Each thread carries the caller's Spark
-    job group and local properties."""
-    inherit = inheritable_thread_target(SparkSession.active())
+    job group and local properties, in a copy of its own: the properties
+    are cloned when a call is wrapped, so each call is wrapped apart."""
+    session = SparkSession.active()
     with ThreadPoolExecutor(len(calls), thread_name_prefix="concurrently") as pool:
-        futures = [pool.submit(inherit(call)) for call in calls]
+        futures = [pool.submit(inheritable_thread_target(session)(call)) for call in calls]
     return [f.result() for f in futures]
 
 

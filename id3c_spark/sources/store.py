@@ -223,7 +223,7 @@ class ParquetTable:
         self,
         updates: DataFrame,
         key_cols: Sequence[Sequence[str]] | Sequence[str],
-        merge_fn: Callable[[DataFrame], DataFrame | MergeResult],
+        merge_fn: Callable[[DataFrame], MergeResult],
         cluster_by: Sequence[str] | None = None,
         zorder_by: Sequence[str] | None = None,
     ) -> int:
@@ -241,14 +241,14 @@ class ParquetTable:
         extra candidates are correct, missed ones are not, and footer
         non-overlap proves no row in the file can match).
         *merge_fn* receives the candidate-file rows (never the whole table)
-        and returns the merged replacement for exactly those rows plus any
-        inserts — operators.merge.merge over the candidates is exact because
-        matches can only live in candidate files. When it returns the
-        MergeResult itself, the rows it inserts or updates are counted
-        while the new version is written, and a merge that changes no row
-        (every match unchanged: a re-run, a batch of duplicates) deletes
-        the staged version and writes none — the reference's skip of
-        no-op writes (db/__init__.py:213-231) at version granularity.
+        and returns the MergeResult of merging the batch into exactly those
+        rows — operators.merge.merge over the candidates is exact because
+        matches can only live in candidate files. The rows it inserts or
+        updates are counted while the new version is written, and a merge
+        that changes no row (every match unchanged: a re-run, a batch of
+        duplicates) deletes the staged version and writes none — the
+        reference's skip of no-op writes (db/__init__.py:213-231) at
+        version granularity.
         *cluster_by*: range-cluster + sort the rewritten files on these
         columns so footer ranges stay tight for the NEXT merge.
         A merge check that fires while the new version is written raises
@@ -327,15 +327,12 @@ class ParquetTable:
         else:
             target = self.spark.createDataFrame([], schema)
 
-        merged = merge_fn(target)
-        changes = None
-        if isinstance(merged, MergeResult):
-            changes = Observation()
-            merged = merged.observe_changes(changes)
+        changes = Observation()
+        merged = merge_fn(target).observe_changes(changes)
         current = self.current_version()
         v = current + 1
         out = self._write(merged, v, cluster_by, zorder_by)
-        if changes is not None and not changes.get["changed"]:
+        if not changes.get["changed"]:
             shutil.rmtree(out)
             self._schemas.pop(v, None)
             return current

@@ -51,10 +51,22 @@ def table_versions(warehouse):
     return {name: tbl.current_version() for name, tbl in warehouse.tables.items()}
 
 
-def test_enrollment_etl(spark, warehouse, identifiers):
-    stats = enrollments.run(
-        spark, receiving_df(spark, fixtures.enrollment_documents()), warehouse, identifiers
+@pytest.fixture(scope="module")
+def enrolled(spark, tmp_path_factory):
+    """A warehouse after one clean enrollment run of the fixture batch,
+    and the run's stats; shared read-only by the tests that check it or
+    compare against it."""
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("enrolled")))
+    fixtures.seed_tract(wh)
+    identifiers = spark.createDataFrame(
+        fixtures.identifier_rows(), "uuid string, barcode string, identifier_set_id long"
     )
+    batch = receiving_df(spark, fixtures.enrollment_documents())
+    return wh, enrollments.run(spark, batch, wh, identifiers)
+
+
+def test_enrollment_etl(enrolled):
+    warehouse, stats = enrolled
     assert stats["enrollments"] == 2               # unknown version skipped
 
     ind = {r.identifier: r.sex for r in warehouse.read("individual").collect()}
@@ -477,7 +489,8 @@ def warehouse_rows(warehouse):
 def test_concurrently_keeps_call_order_and_local_properties(spark):
     """Results come back in call order; the first failure in call order
     is raised only after every call has finished; each thread carries the
-    caller's local properties."""
+    caller's local properties in a copy of its own, so a property one
+    call sets is seen neither by a sibling nor by the caller."""
     import threading
     import time
 
@@ -490,6 +503,23 @@ def test_concurrently_keeps_call_order_and_local_properties(spark):
             lambda: (time.sleep(0.2), 1)[1],
             lambda: sc.getLocalProperty("id3c.test"),
         ) == [1, "caller"]
+
+        both = threading.Barrier(2, timeout=30)
+
+        def sets():
+            sc.setLocalProperty("id3c.test", "branch")
+            both.wait()   # the sibling reads only after this set
+            both.wait()
+            return sc.getLocalProperty("id3c.test")
+
+        def reads():
+            both.wait()
+            seen = sc.getLocalProperty("id3c.test")
+            both.wait()
+            return seen
+
+        assert concurrently(sets, reads) == ["branch", "caller"]
+        assert sc.getLocalProperty("id3c.test") == "caller"
     finally:
         sc.setLocalProperty("id3c.test", None)
 
@@ -556,7 +586,9 @@ def test_concurrent_upserts_of_one_table_are_refused(spark, warehouse, monkeypat
     assert [r.identifier for r in warehouse.read("site").collect()] == ["kiosk"]
 
 
-def test_enrollment_failed_branch_starts_no_later_wave(spark, tmp_path, identifiers, monkeypatch):
+def test_enrollment_failed_branch_starts_no_later_wave(
+    spark, warehouse, identifiers, enrolled, monkeypatch
+):
     """A failing upsert in enrollments' first wave: run raises it once the
     wave's other upserts have finished, no branch thread outlives run, no
     dependent upsert starts, and re-running the batch gives the warehouse
@@ -570,10 +602,7 @@ def test_enrollment_failed_branch_starts_no_later_wave(spark, tmp_path, identifi
         raise Fault("location upsert failed")
 
     batch = receiving_df(spark, fixtures.enrollment_documents())
-    wh = Warehouse(spark, str(tmp_path / "faulty"))
-    fixtures.seed_tract(wh)
-    for name in ("encounter", "encounter_location", "sample"):   # v1, empty
-        wh.publish(name, wh.read(name))
+    wh = warehouse
     versions = table_versions(wh)
 
     monkeypatch.setattr(wh, "upsert_location", fault)
@@ -588,7 +617,5 @@ def test_enrollment_failed_branch_starts_no_later_wave(spark, tmp_path, identifi
 
     monkeypatch.undo()
     enrollments.run(spark, batch, wh, identifiers)
-    clean = Warehouse(spark, str(tmp_path / "clean"))
-    fixtures.seed_tract(clean)
-    enrollments.run(spark, batch, clean, identifiers)
+    clean, _ = enrolled
     assert warehouse_rows(wh) == warehouse_rows(clean)

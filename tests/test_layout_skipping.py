@@ -145,7 +145,7 @@ def test_merge_publish_zorder_layout_round_trip(spark, tmp_path):
     full = merge(tbl.read(), updates, ["k"], "k").df.orderBy("k").collect()
     tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         zorder_by=["a", "b"],
     )
     assert tbl.read().orderBy("k").collect() == full

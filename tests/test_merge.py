@@ -175,7 +175,7 @@ def test_merge_publish_failed_check_leaves_table_unchanged(spark, tmp_path):
         updates = df_of(spark, rows, SAMPLE_SCHEMA).drop("sample_id")
         return tbl.merge_publish(
             updates, keys,
-            lambda t: merge(t, updates, keys, "sample_id", update_cols=["collected"]).df,
+            lambda t: merge(t, updates, keys, "sample_id", update_cols=["collected"]),
         )
 
     with pytest.raises(MultipleMatchError):

@@ -43,7 +43,7 @@ def test_cow_merge_rewrites_only_touched_files(spark, tmp_path):
 
     tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         cluster_by=["k"],
     )
 
@@ -67,7 +67,7 @@ def test_cow_merge_insert_only_batch_carries_everything(spark, tmp_path):
     )
     tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
     )
     after = {os.path.basename(f): os.stat(f).st_ino for f in tbl.files()}
     # Every pre-existing file carried untouched; only insert files are new.
@@ -79,7 +79,7 @@ def test_cow_merge_insert_only_batch_carries_everything(spark, tmp_path):
 def test_cow_merge_empty_batch_writes_no_version(spark, tmp_path):
     """An empty update batch is a no-op: no new version, the same files,
     and the merge function is never called. So is a batch whose every
-    row matches unchanged, when the merge hands back its branch tags."""
+    row matches unchanged."""
     tbl = ParquetTable(spark, str(tmp_path / "t"), keep_versions=10)
     _clustered_publish(spark, tbl)
     version, files = tbl.current_version(), tbl.files()
@@ -133,7 +133,7 @@ def test_cow_merge_alternate_keys_prune_on_each(spark, tmp_path):
     ).df.orderBy("sample_id").collect()
     tbl.merge_publish(
         updates, keys,
-        lambda t: merge(t, updates, keys, "sample_id", update_cols=["collection_identifier"]).df,
+        lambda t: merge(t, updates, keys, "sample_id", update_cols=["collection_identifier"]),
     )
     assert tbl.read().orderBy("sample_id").collect() == full
     got = tbl.read().filter("collection_identifier = 'coll005'").collect()
@@ -144,7 +144,7 @@ def test_cow_merge_requires_published_table(spark, tmp_path):
     tbl = ParquetTable(spark, str(tmp_path / "t"))
     updates = spark.createDataFrame([(1, 1, None)], "k long, val long, details string")
     with pytest.raises(FileNotFoundError):
-        tbl.merge_publish(updates, ["k"], lambda t: t)
+        tbl.merge_publish(updates, ["k"], lambda t: merge(t, updates, ["k"], "k"))
 
 
 def test_append_is_file_granular(spark, tmp_path):
@@ -220,7 +220,7 @@ def test_changes_cdc_is_file_granular(spark, tmp_path):
     )
     v2 = tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         cluster_by=["k"],
     )
 
@@ -272,7 +272,7 @@ def test_changes_cdc_reconstructs_next_version(spark, tmp_path):
     )
     v2 = tbl.merge_publish(
         updates, ["k"],
-        lambda target: merge(target, updates, ["k"], "k").df,
+        lambda target: merge(target, updates, ["k"], "k"),
         cluster_by=["k"],
     )
     feed = tbl.changes(v1, v2)

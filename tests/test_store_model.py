@@ -60,7 +60,7 @@ def test_store_random_op_sequence_matches_model(spark, tmp_path):
             updates, ["k"],
             lambda target: merge(
                 target, updates, ["k"], "k", details_col=None
-            ).df,
+            ),
             cluster_by=rng.choice([None, ["k"]]),
         )
 

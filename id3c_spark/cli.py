@@ -4,18 +4,16 @@
 Commands: etl {enrollments,manifest,presence-absence}, receiving upload,
 identifier mint, de-identify, location lookup, shipping query.
 
-Transaction policy parity (lib/id3c/cli/command/__init__.py:57-162): ETLs
-default to --dry-run (run against a scratch copy of the warehouse, report
-stats, publish nothing); --commit runs in place. The versioned parquet
-store makes dry-run cheap and crash-safe either way.
+Transaction policy parity (lib/id3c/cli/command/__init__.py:57-162): an
+ETL run is one warehouse transaction. It defaults to --dry-run (run,
+report stats, commit nothing); --prompt asks before committing; --commit
+commits. A commit makes every table the run wrote live in one snapshot.
 """
 
 from __future__ import annotations
 
 import json
-import shutil
 import sys
-import tempfile
 
 import click
 
@@ -79,31 +77,20 @@ def _register_etls() -> None:
 )
 def etl_cmd(name, input_path, warehouse_dir, identifiers_path, organisms_path, action):
     """Transaction policy parity (reference cli/command/__init__.py:57-162):
-    three-way --dry-run/--prompt/--commit. dry-run and prompt both run the
-    full ETL against a scratch copy; prompt then asks (click.confirm, the
-    reference's interactive question) and on yes promotes the scratch
-    tables in two phases: ALL version directories are staged first (the
-    expensive Spark writes — a failure here publishes nothing), then the
-    pointers flip in one quick final loop. Each flip is atomic per table;
-    cross-table atomicity is best-effort — the exposure window is the
-    pointer-flip loop only (a few metadata renames), not the data
-    writes."""
+    three-way --dry-run/--prompt/--commit. The ETL runs as one warehouse
+    transaction whose writes stay staged until it ends: --dry-run rolls
+    it back, --prompt asks (click.confirm, the reference's interactive
+    question) and commits on yes, --commit commits. A commit publishes
+    every table the run wrote in one snapshot, so the warehouse moves
+    from its old state to the new one at once, or not at all."""
     from id3c_spark.etl.warehouse import Warehouse
     from id3c_spark.sources.readers import read_ndjson_receiving
 
     _register_etls()
     spark = get_spark(f"etl-{name}")
-    target_dir = warehouse_dir
-    scratch = None
-    if action != "commit":
-        scratch = tempfile.mkdtemp(prefix="id3c-dryrun-")
-        shutil.rmtree(scratch)
-        shutil.copytree(warehouse_dir, scratch, dirs_exist_ok=False) if _exists(warehouse_dir) else None
-        target_dir = scratch
     receiving = read_ndjson_receiving(spark, input_path)
-    wh = Warehouse(spark, target_dir)
-    committed = action == "commit"
-    try:
+    wh = Warehouse(spark, warehouse_dir)
+    with wh.transaction() as txn:
         if name == "consensus-genome":
             if not organisms_path:
                 raise click.UsageError("consensus-genome requires --organisms")
@@ -116,32 +103,16 @@ def etl_cmd(name, input_path, warehouse_dir, identifiers_path, organisms_path, a
             if not identifiers_path:
                 raise click.UsageError(f"{name} requires --identifiers")
             stats = ETLS[name](spark, receiving, wh, _load_identifiers(spark, identifiers_path))
-        if scratch and action == "prompt" and CONFIRM("Commit all changes?"):
-            real = Warehouse(spark, warehouse_dir)
-            # phase 1: stage every table's new version (expensive writes;
-            # a failure here leaves all pointers on the old versions)
-            staged = [
-                (real.tables[tbl_name], real.tables[tbl_name].stage(tbl.read()))
-                for tbl_name, tbl in wh.tables.items()
-                if tbl.exists()
-            ]
-            # phase 2: flip all pointers — per-table atomic renames only
-            for table, version in staged:
-                table.flip(version)
-            committed = True
-        click.echo(json.dumps({"etl": name, "committed": committed, **stats}))
-    finally:
-        if scratch:
-            shutil.rmtree(scratch, ignore_errors=True)
+        committed = action == "commit" or (
+            action == "prompt" and CONFIRM("Commit all changes?")
+        )
+        if not committed:
+            txn.rollback()
+    click.echo(json.dumps({"etl": name, "committed": committed, **stats}))
 
 
 #: Interactive confirmation hook for --prompt mode; swap out in tests.
 CONFIRM = click.confirm
-
-
-def _exists(path: str) -> bool:
-    import os
-    return os.path.isdir(path)
 
 
 @cli.command("upload")
@@ -770,11 +741,13 @@ def redcap_sync_delete(api_url, project_id, token, warehouse_dir, since_date,
 
     The cascade itself is operators/deletes.cascade_delete_encounters
     (the reference's per-encounter savepoint loop becomes one set-wise
-    anti-join cascade). Deletions publish through the store's two-phase
-    stage-then-flip, so an aborted commit leaves every table on its old
-    version — the reference's rollback-by-default transaction policy.
+    anti-join cascade). A commit writes every changed table, clustered
+    as its upsert bootstrap clusters it, in one warehouse transaction:
+    the whole cascade goes live in one snapshot, and a failure leaves
+    every table on its old version. Without a commit nothing is written
+    — the reference's rollback-by-default transaction policy.
     """
-    from id3c_spark.etl.warehouse import Warehouse
+    from id3c_spark.etl.warehouse import MERGE_KEYS, Warehouse, cluster_key
     from id3c_spark.operators.deletes import (
         cascade_delete_encounters,
         find_encounters_like_any,
@@ -794,25 +767,26 @@ def redcap_sync_delete(api_url, project_id, token, warehouse_dir, since_date,
 
     spark = get_spark("redcap-sync")
     wh = Warehouse(spark, warehouse_dir)
-    tables = ("encounter", "encounter_location", "location", "sample",
-              "presence_absence", "individual")
-    frames = {name: wh.read(name) for name in tables}
-    doomed = (
-        find_encounters_like_any(frames["encounter"], patterns)
-        if patterns else frames["encounter"].limit(0)
-    )
-    out, stats = cascade_delete_encounters(frames, doomed)
-
-    committed = action == "commit" or (
-        action == "prompt" and CONFIRM("Commit all changes?")
-    )
-    if committed:
-        changed = [name for name in tables if name in out]
-        staged = [
-            (wh.tables[name], wh.tables[name].stage(out[name])) for name in changed
-        ]
-        for table, version in staged:
-            table.flip(version)
+    # each table, and the cascade's counts of the rows it changes there
+    tables = {
+        "encounter": ["encounter"], "encounter_location": ["encounter_location"],
+        "location": ["location"], "sample": ["sample", "sample_unlinked"],
+        "presence_absence": ["presence_absence"], "individual": ["individual_orphans"],
+    }
+    with wh.transaction():
+        frames = {name: wh.read(name) for name in tables}
+        doomed = (
+            find_encounters_like_any(frames["encounter"], patterns)
+            if patterns else frames["encounter"].limit(0)
+        )
+        out, stats = cascade_delete_encounters(frames, doomed)
+        committed = action == "commit" or (
+            action == "prompt" and CONFIRM("Commit all changes?")
+        )
+        if committed:
+            for name, counts in tables.items():
+                if any(stats.get(c) for c in counts):
+                    wh.tables[name].publish(out[name], cluster_by=cluster_key(MERGE_KEYS[name]))
     click.echo(json.dumps({
         "deletion_events": len(deletion_events),
         "committed": committed,
@@ -883,7 +857,7 @@ def corpus_curate(input_parquet: str, out_dir: str, benchmark: str,
 @click.option("--version", type=int, default=None,
               help="pin a historical version (time travel)")
 def corpus_snapshot(table_path: str, version: int | None) -> None:
-    """Audit a corpus table: retained versions, current pointer, and the
+    """Audit a corpus table: retained versions, current version, and the
     row count of the selected (or current) snapshot."""
     from id3c_spark.sources.store import ParquetTable
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, transactional
 from id3c_spark.operators.merge import materialise
 
 DOCUMENT_SCHEMA = T.StructType([
@@ -63,6 +63,7 @@ def match_organism(organisms: DataFrame, token_col):
     return mapping[F.lower(token_col)]
 
 
+@transactional
 def upload_read_sets(
     spark: SparkSession,
     read_sets: DataFrame,
@@ -104,6 +105,7 @@ def upload_read_sets(
     return unknown, {"uploaded": k["rows"], "unknown": m["unknown"]}
 
 
+@transactional
 def run(
     spark: SparkSession,
     receiving: DataFrame,

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse, concurrently
+from id3c_spark.etl.warehouse import Warehouse, concurrently, transactional
 from id3c_spark.operators.merge import checks, materialise
 
 KNOWN_VERSIONS = {"1.0.0", "1.1.0"}   # enrollments.py:89-92
@@ -162,6 +162,7 @@ def parse(receiving: DataFrame) -> DataFrame:
     )
 
 
+@transactional
 def run(
     spark: SparkSession,
     receiving: DataFrame,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, transactional
 from id3c_spark.operators.merge import materialise
 
 AGE_CAP_MONTHS = 90 * 12
@@ -175,6 +175,7 @@ def _of_type(res: DataFrame, rtype: str) -> DataFrame:
     return res.filter(F.col("r.resourceType") == rtype)
 
 
+@transactional
 def run(
     spark: SparkSession,
     receiving: DataFrame,

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, transactional
 from id3c_spark.operators.merge import materialise
 
 DOCUMENT_SCHEMA = T.StructType([
@@ -63,6 +63,7 @@ def _ids_with_sets(identifiers: DataFrame, set_names: dict[int, str] | None):
     ))
 
 
+@transactional
 def run_enrollments(
     spark: SparkSession,
     receiving: DataFrame,
@@ -149,6 +150,7 @@ def _update_kit_samples(warehouse: Warehouse, kits: DataFrame, batch: DataFrame)
     )
 
 
+@transactional
 def run_manifests(
     spark: SparkSession,
     receiving: DataFrame,
@@ -262,6 +264,7 @@ def run_manifests(
     )
 
 
+@transactional
 def run(
     spark: SparkSession,
     receiving: DataFrame,

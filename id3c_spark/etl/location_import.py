@@ -19,7 +19,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, transactional
 from id3c_spark.functions.hstore import hstore_concat, parse_hstore
 
 
@@ -92,6 +92,7 @@ def stage_features(
     )
 
 
+@transactional
 def import_locations(
     spark: SparkSession,
     warehouse: Warehouse,

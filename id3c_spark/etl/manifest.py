@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse
+from id3c_spark.etl.warehouse import Warehouse, transactional
 from id3c_spark.operators.merge import materialise
 
 DOCUMENT_SCHEMA = T.StructType([
@@ -45,6 +45,7 @@ def parse_date(col):
     )
 
 
+@transactional
 def run(
     spark: SparkSession,
     receiving: DataFrame,

@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse, concurrently
+from id3c_spark.etl.warehouse import Warehouse, concurrently, transactional
 from id3c_spark.operators.merge import checks, materialise
 
 DOCUMENT_SCHEMA = T.StructType([
@@ -190,6 +190,7 @@ def _violations() -> Column:
     )
 
 
+@transactional
 def run(
     spark: SparkSession,
     receiving: DataFrame,

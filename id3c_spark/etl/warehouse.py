@@ -8,17 +8,21 @@ and update policy (citations inline). Tables are ParquetTable stores
 (Delta-MERGE stand-in, see sources/store.py); every write is one plan,
 with no per-row loops.
 
-An ETL runs the upserts of tables that do not depend on each other
-together (:func:`concurrently`): Spark plans and runs one action at a
-time per caller, so independent writes only overlap when they are
-started together. Each table has one writer at a time; a second upsert
-of a table already being written raises instead of waiting.
+Each ETL entry point is one warehouse transaction (:func:`transactional`):
+its upserts stage new versions, and they all go live in one snapshot
+when it returns, or none of them does when it raises. An ETL runs the
+upserts of tables that do not depend on each other together
+(:func:`concurrently`): Spark plans and runs one action at a time per
+caller, so independent writes only overlap when they are started
+together. Each table has one writer at a time; a second upsert of a
+table already being written raises instead of waiting.
 """
 
 from __future__ import annotations
 
+import contextvars
+import functools
 import os
-import threading
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
@@ -27,7 +31,26 @@ from pyspark.util import inheritable_thread_target
 
 from id3c_spark import schemas
 from id3c_spark.operators.merge import materialise, merge
-from id3c_spark.sources.store import ParquetTable
+from id3c_spark.sources.store import ParquetTable, Snapshots
+
+#: each table's merge key as its upsert_* method matches it: one key, or
+#: alternate keys (a list of column lists)
+MERGE_KEYS = {
+    "target": ["identifier"],
+    "site": ["identifier"],
+    "individual": ["identifier"],
+    "encounter": ["identifier"],
+    "sample": [["identifier"], ["collection_identifier"]],
+    "presence_absence": ["identifier"],
+    "location": [["scale", "identifier"]],
+    "encounter_location": [["encounter_id", "relation"]],
+}
+
+
+def cluster_key(key_cols) -> list[str]:
+    """The columns a table is range-clustered on: its first match key,
+    so later merges prune files on it."""
+    return [k for k in ([key_cols[0]] if isinstance(key_cols[0], str) else list(key_cols[0])) if k]
 
 
 def concurrently(*calls: Callable[[], object]) -> list:
@@ -35,23 +58,47 @@ def concurrently(*calls: Callable[[], object]) -> list:
     to finish, and return their results in call order, or raise the
     first failure in call order. Each thread carries the caller's Spark
     job group and local properties, in a copy of its own: the properties
-    are cloned when a call is wrapped, so each call is wrapped apart."""
+    are cloned when a call is wrapped, so each call is wrapped apart.
+    Each also runs in a copy of the caller's context, so its writes join
+    the caller's warehouse transaction."""
     session = SparkSession.active()
     with ThreadPoolExecutor(len(calls), thread_name_prefix="concurrently") as pool:
-        futures = [pool.submit(inheritable_thread_target(session)(call)) for call in calls]
+        futures = [
+            pool.submit(contextvars.copy_context().run, inheritable_thread_target(session)(call))
+            for call in calls
+        ]
     return [f.result() for f in futures]
+
+
+def transactional(run: Callable) -> Callable:
+    """Run an ETL entry point as one transaction of the Warehouse passed
+    to it (joining the caller's, when one is open)."""
+    @functools.wraps(run)
+    def wrapper(*args, **kwargs):
+        warehouse = next(a for a in (*args, *kwargs.values()) if isinstance(a, Warehouse))
+        with warehouse.transaction():
+            return run(*args, **kwargs)
+    return wrapper
 
 
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self.snapshots = Snapshots(root)
         self.tables: dict[str, ParquetTable] = {
-            name: ParquetTable(spark, os.path.join(root, name))
+            name: ParquetTable(spark, os.path.join(root, name), snapshots=self.snapshots)
             for name in schemas.WAREHOUSE_SCHEMAS
         }
-        # one writer per table: two upserts would both write version n+1
-        self._writing = {name: threading.Lock() for name in self.tables}
+
+    def transaction(self):
+        """Context manager: every write inside it is staged, and all go
+        live in one snapshot when it exits normally; an exception (or
+        ``rollback()`` on the transaction it yields) discards them.
+        Nested transactions join the outermost; a write outside any is a
+        transaction of its own. Readers of other Warehouse objects see
+        only committed snapshots."""
+        return self.snapshots.transaction()
 
     def read(self, name: str) -> DataFrame:
         tbl = self.tables[name]
@@ -86,30 +133,24 @@ class Warehouse:
         Raises RuntimeError when another upsert of *name* is in flight:
         the order of two writes to one table must not depend on thread
         timing, so they are refused rather than queued."""
-        lock = self._writing[name]
-        if not lock.acquire(blocking=False):
-            raise RuntimeError(f"an upsert of {name!r} is already in flight: one writer per table")
-        try:
+        tbl = self.tables[name]
+        with tbl.claim():
             updates, batch = materialise(updates)
             if not batch["rows"]:
                 return self.read(name)
-            tbl = self.tables[name]
-            cluster = [k for k in ([key_cols[0]] if isinstance(key_cols[0], str) else list(key_cols[0])) if k]
             if not tbl.exists():
                 base = self.spark.createDataFrame([], schemas.WAREHOUSE_SCHEMAS[name])
                 tbl.publish(
                     merge(base, updates, key_cols, id_col, **merge_kw).df,
-                    cluster_by=cluster,
+                    cluster_by=cluster_key(key_cols),
                 )
             else:
                 tbl.merge_publish(
                     updates, key_cols,
                     lambda target: merge(target, updates, key_cols, id_col, **merge_kw),
-                    cluster_by=cluster,
+                    cluster_by=cluster_key(key_cols),
                 )
             return self.read(name)
-        finally:
-            lock.release()
 
     # --- reference upsert family (SURVEY §2.9) ---------------------------
 
@@ -117,7 +158,7 @@ class Warehouse:
         """find_or_create_target (etl/__init__.py:652-682): insert missing
         (identifier, control); never update existing."""
         return self.upsert(
-            "target", wanted, ["identifier"], "target_id",
+            "target", wanted, MERGE_KEYS["target"], "target_id",
             update_cols=[], details_col=None, error_on_multi=False, update_keys=False,
         )
 
@@ -125,7 +166,7 @@ class Warehouse:
         """find_or_create_site (etl/__init__.py:33-63); site identifiers are
         unique case-insensitively (site.sql:12-14) — normalize before match."""
         return self.upsert(
-            "site", wanted, ["identifier"], "site_id",
+            "site", wanted, MERGE_KEYS["site"], "site_id",
             update_cols=[], details_col=None, error_on_multi=False, update_keys=False,
         )
 
@@ -133,14 +174,14 @@ class Warehouse:
         """upsert_individual (etl/__init__.py:66-140): match identifier,
         update sex, merge details."""
         return self.upsert(
-            "individual", updates, ["identifier"], "individual_id",
+            "individual", updates, MERGE_KEYS["individual"], "individual_id",
             update_cols=["sex"],
         )
 
     def upsert_encounter(self, updates: DataFrame) -> DataFrame:
         """upsert_encounter (etl/__init__.py:143-249): match identifier."""
         return self.upsert(
-            "encounter", updates, ["identifier"], "encounter_id",
+            "encounter", updates, MERGE_KEYS["encounter"], "encounter_id",
             update_cols=["individual_id", "site_id", "encountered", "age_months"],
         )
 
@@ -148,8 +189,7 @@ class Warehouse:
         """upsert_sample (db/__init__.py:182-326): alternate-key match on
         identifier OR collection_identifier; error on multi-match."""
         return self.upsert(
-            "sample", updates,
-            [["identifier"], ["collection_identifier"]], "sample_id",
+            "sample", updates, MERGE_KEYS["sample"], "sample_id",
             update_cols=["collection_identifier", "encounter_id", "collected", "access_role"],
         )
 
@@ -157,7 +197,7 @@ class Warehouse:
         """upsert_presence_absence (etl/__init__.py:548-649): match
         identifier; re-tests are corrections (present may flip)."""
         return self.upsert(
-            "presence_absence", updates, ["identifier"], "presence_absence_id",
+            "presence_absence", updates, MERGE_KEYS["presence_absence"], "presence_absence_id",
             update_cols=["sample_id", "target_id", "present"],
         )
 
@@ -165,7 +205,7 @@ class Warehouse:
         """upsert_location (etl/__init__.py:378-466): match (scale,
         identifier); hierarchy right-biased concat happens in the caller."""
         return self.upsert(
-            "location", updates, [["scale", "identifier"]], "location_id",
+            "location", updates, MERGE_KEYS["location"], "location_id",
             update_cols=["hierarchy", "point_wkt", "polygon_wkt", "simplified_polygon_wkt"],
         )
 
@@ -173,6 +213,6 @@ class Warehouse:
         """upsert_encounter_location (etl/__init__.py:469-545): match
         (encounter_id, relation citext), the table's primary key."""
         return self.upsert(
-            "encounter_location", updates, [["encounter_id", "relation"]], None,
+            "encounter_location", updates, MERGE_KEYS["encounter_location"], None,
             update_cols=["location_id"],
         )

@@ -6,7 +6,7 @@ security-definer function run on a schedule
 lib/id3c/cli/command/refresh_materialized_view.py:24-35).
 
 Spark mapping: a gold table is a recomputed parquet snapshot published
-atomically — the versioned store's pointer flip IS the "concurrently"
+atomically — the versioned store's snapshot commit IS the "concurrently"
 (readers keep the old version until the new one is complete).
 """
 

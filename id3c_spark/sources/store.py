@@ -1,11 +1,15 @@
-"""Copy-on-write parquet table store.
+"""Copy-on-write parquet table store with snapshot commits.
 
-Local stand-in for a transactional table format: Delta/Iceberg jars are
-not in this image (see pyspark guide), so writes go to a new versioned
-directory and a ``_CURRENT`` pointer file flips atomically — readers never
-see a partial write, and failed jobs leave the previous version intact
-(the reference's "commit nothing on hard error" transaction guarantee,
-SURVEY §7.3 item 5, via shadow-write-then-publish).
+Local stand-in for a transactional table format (Delta/Iceberg jars are
+not in this image, see the pyspark guide). A store root is a directory
+of tables; each write goes to a new version directory of its table, and
+a commit makes a set of staged versions live together with one atomic
+file operation: the exclusive create of the root's next snapshot file,
+``_snapshot-{n}.json``, which maps table → version. Readers take the
+newest snapshot, so they see all of a transaction's writes or none, and
+a failed or rolled-back transaction leaves every table on its old
+version (the reference's "commit nothing on hard error" transaction,
+SURVEY §7.3 item 5). A standalone table is a root with one table.
 
 On a real cluster, swap ParquetTable for Delta and operators/merge.py
 feeds MERGE INTO unchanged.
@@ -13,11 +17,17 @@ feeds MERGE INTO unchanged.
 
 from __future__ import annotations
 
+import bisect
+import contextlib
+import contextvars
 import glob
 import json
 import os
+import re
 import shutil
-from collections.abc import Callable, Sequence
+import tempfile
+import threading
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +37,184 @@ from id3c_spark.operators.merge import MergeResult, check_errors_raised
 
 #: per-version schema record, beside the data files (Spark skips ``_*``)
 _SCHEMA_FILE = "_schema.json"
+#: a root's committed snapshots: table → version, one file per commit
+_SNAPSHOT = re.compile(r"_snapshot-(\d+)\.json")
+
+
+class CommitConflict(RuntimeError):
+    """Another transaction committed the root's next snapshot first;
+    nothing of this transaction went live."""
+
+
+class Snapshots:
+    """The commit log of a store root. Snapshot *n* names every table's
+    live version; a commit creates snapshot n+1 from the snapshot its
+    transaction started at, so of two transactions that start at the
+    same snapshot exactly one commits and the other raises
+    :class:`CommitConflict`."""
+
+    def __init__(self, path: str):
+        self.path = path
+        os.makedirs(path, exist_ok=True)
+        self._latest: tuple[int, dict[str, int]] = (0, {})
+        self._active: contextvars.ContextVar[Transaction | None] = contextvars.ContextVar(
+            f"transaction:{path}", default=None
+        )
+
+    def _file(self, n: int) -> str:
+        return os.path.join(self.path, f"_snapshot-{n}.json")
+
+    def _numbers(self) -> list[int]:
+        return [int(m[1]) for m in map(_SNAPSHOT.fullmatch, os.listdir(self.path)) if m]
+
+    def latest(self) -> tuple[int, dict[str, int]]:
+        """(n, table → version) of the newest committed snapshot; (0, {})
+        before the first commit. Snapshot files never change, so a
+        snapshot is parsed once."""
+        while True:
+            n = max(self._numbers(), default=0)
+            if n == self._latest[0]:
+                return self._latest
+            try:
+                with open(self._file(n)) as f:
+                    self._latest = (n, json.load(f))
+                return self._latest
+            except FileNotFoundError:
+                continue  # vacuumed by a newer commit since the listing
+
+    def version(self, key: str) -> int | None:
+        """*key*'s version as the caller sees it: the active transaction's
+        (staged or its start snapshot's), else the newest snapshot's."""
+        txn = self._active.get()
+        return (txn.tables if txn else self.latest()[1]).get(key)
+
+    @contextlib.contextmanager
+    def transaction(self) -> Iterator[Transaction]:
+        """Stage every write made inside the block and commit them in one
+        snapshot when it exits normally; on an exception, delete what was
+        staged. A transaction opened inside another (on this thread, or
+        on a thread started with a copy of its context) joins the
+        outermost one, which alone commits."""
+        txn = self._active.get()
+        if txn is not None:
+            yield txn
+            return
+        txn = Transaction(self)
+        token = self._active.set(txn)
+        try:
+            yield txn
+        except BaseException:
+            txn.rollback()
+            raise
+        finally:
+            self._active.reset(token)
+        txn.commit()
+
+    def _commit(self, n: int, tables: dict[str, int]) -> None:
+        """Exclusively create snapshot *n*: a hard link of a finished
+        temporary file, so readers never see a partial snapshot."""
+        fd, tmp = tempfile.mkstemp(prefix="._snapshot-", dir=self.path)
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(tables, f, sort_keys=True)
+            os.link(tmp, self._file(n))
+        except FileExistsError:
+            raise CommitConflict(
+                f"snapshot {n} of {self.path} was committed by another transaction"
+            ) from None
+        finally:
+            os.remove(tmp)
+        self._latest = (n, dict(tables))
+        for old in self._numbers():
+            if old < n:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(self._file(old))
+
+
+class Transaction:
+    """The versions one transaction claimed and staged. A claim is the
+    exclusive create of the table's next version directory, so no two
+    writers, in one process or in two, ever write into one version."""
+
+    def __init__(self, snapshots: Snapshots):
+        self.snapshots = snapshots
+        self.base, tables = snapshots.latest()
+        #: the start snapshot plus this transaction's staged versions
+        self.tables = dict(tables)
+        self._claims: dict[str, tuple[int, int]] = {}  # key -> (version, thread)
+        self._dirs: list[tuple[ParquetTable, int]] = []  # every version claimed
+        self._lock = threading.Lock()
+        self._open = True
+
+    def claim(self, table: ParquetTable) -> int:
+        """Claim *table*'s next version for the calling thread (again the
+        same version when it holds the claim already). RuntimeError when
+        another writer holds it."""
+        me = threading.get_ident()
+        with self._lock:
+            if not self._open:
+                raise RuntimeError("the transaction has ended")
+            held = self._claims.get(table.key)
+            if held is not None and held[1] == me:
+                return held[0]
+            v = self.tables.get(table.key, 0) + 1
+            try:
+                if held is not None:  # another thread of this transaction
+                    raise FileExistsError
+                os.mkdir(table._dir(v))
+            except FileExistsError:
+                raise RuntimeError(
+                    f"a write of {table.path} is already in flight: v{v} is "
+                    "claimed (remove it if its writer died)"
+                ) from None
+            self._claims[table.key] = (v, me)
+            self._dirs.append((table, v))
+            return v
+
+    def stage(self, table: ParquetTable, v: int) -> None:
+        """Make claimed version *v* the table's version in this transaction."""
+        with self._lock:
+            del self._claims[table.key]
+            self.tables[table.key] = v
+
+    def release(self, table: ParquetTable, v: int) -> None:
+        """Drop the claim of *v* and its directory unless it was staged."""
+        with self._lock:
+            if self._claims.get(table.key, (None,))[0] != v:
+                return
+            del self._claims[table.key]
+            self._dirs.remove((table, v))
+        table._discard(v)
+
+    def rollback(self) -> None:
+        """Delete every version this transaction claimed; nothing of it
+        goes live, and the block's exit commits nothing."""
+        with self._lock:
+            self._open = False
+            dirs, self._dirs = self._dirs, []
+        for table, v in dirs:
+            table._discard(v)
+
+    def commit(self) -> None:
+        """Publish the staged versions as the next snapshot (nothing to
+        publish: no snapshot), then delete what no snapshot names."""
+        with self._lock:
+            if not self._open:
+                return
+            self._open = False
+        live = [(t, v) for t, v in self._dirs if self.tables.get(t.key) == v]
+        try:
+            if live:
+                self.snapshots._commit(self.base + 1, self.tables)
+        except BaseException:
+            live = []
+            raise
+        finally:
+            for t, v in self._dirs:
+                if (t, v) not in live:  # lost the commit, or superseded
+                    t._discard(v)
+        for t, _ in live:
+            t._vacuum()
 
 
 def zorder_key_expr(
@@ -115,40 +303,75 @@ def _nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
+def _footer_admits(
+    fname: str,
+    column: str,
+    lo=None,
+    hi=None,
+    values: Sequence | None = None,
+) -> bool:
+    """Whether data file *fname* may hold a *column* value in [lo, hi]
+    (None: unbounded) that is, when sorted *values* are given, one of
+    them, judged on the file's footer min/max. True when the footer has
+    no usable statistics or they do not compare with the bounds:
+    skipping a file must never drop a row."""
+    rng = ParquetTable._footer_range(fname, column)
+    if rng is None:
+        return True
+    try:
+        if (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo):
+            return False
+        if values is None:
+            return True
+        i = bisect.bisect_left(values, rng[0])
+        return i < len(values) and values[i] <= rng[1]
+    except TypeError:
+        return True
+
+
 class ParquetTable:
-    def __init__(self, spark: SparkSession, path: str, keep_versions: int = 2):
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        keep_versions: int = 2,
+        snapshots: Snapshots | None = None,
+    ):
         """*keep_versions* controls vacuum retention: raise it (or pass a
         large value) to keep historical versions readable for time-travel
         — pinning the exact corpus snapshot a training run consumed is
-        the reproducibility guarantee a data pipeline owes its models."""
+        the reproducibility guarantee a data pipeline owes its models.
+        *snapshots* is the root the table commits through (a Warehouse
+        passes its own); by default the table is a root of its own."""
         self.spark = spark
         self.path = path
         self.keep_versions = keep_versions
         self._schemas: dict[int, T.StructType] = {}
         os.makedirs(path, exist_ok=True)
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
+        self.snapshots = snapshots or Snapshots(path)
+        #: the table's name in its root's snapshots
+        self.key = os.path.relpath(path, self.snapshots.path)
 
     def current_version(self) -> int | None:
-        try:
-            with open(self._pointer) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        """The live version, or inside a transaction the one it staged."""
+        return self.snapshots.version(self.key)
 
     def exists(self) -> bool:
         return self.current_version() is not None
 
     def versions(self) -> list[int]:
-        """Version numbers still on disk (ascending) — the time-travel
-        horizon. Bounded by keep_versions at each flip."""
+        """Version numbers still on disk up to the current one (ascending)
+        — the time-travel horizon. Bounded by keep_versions at each
+        commit."""
+        current = self.current_version() or 0
         return sorted(
             int(name[1:])
             for name in os.listdir(self.path)
-            if name.startswith("v") and name[1:].isdigit()
+            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= current
         )
+
+    def _dir(self, v: int) -> str:
+        return os.path.join(self.path, f"v{v}")
 
     def _version_dir(self, version: int | None) -> tuple[int, str]:
         """(version, its directory); FileNotFoundError for vacuumed or
@@ -156,7 +379,7 @@ class ParquetTable:
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no published version at {self.path}")
-        out = os.path.join(self.path, f"v{v}")
+        out = self._dir(v)
         if not os.path.isdir(out):
             raise FileNotFoundError(
                 f"version {v} not on disk at {self.path} "
@@ -183,6 +406,12 @@ class ParquetTable:
         v, out = self._version_dir(version)
         return self.spark.read.schema(self.schema(v)).parquet(out)
 
+    def _read_files(self, files: Sequence[str], schema: T.StructType) -> DataFrame:
+        """*files* read with *schema*; an empty frame when there are none."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*files)
+
     def num_rows(self, version: int | None = None) -> int:
         """Row count of a version from its parquet footers: no Spark job."""
         import pyarrow.parquet as pq
@@ -194,7 +423,7 @@ class ParquetTable:
         v = self.current_version() if version is None else version
         if v is None:
             return []
-        return sorted(glob.glob(os.path.join(self.path, f"v{v}", "*.parquet")))
+        return sorted(glob.glob(os.path.join(self._dir(v), "*.parquet")))
 
     @staticmethod
     def _footer_range(fname: str, column: str) -> tuple | None:
@@ -218,6 +447,24 @@ class ParquetTable:
         if not mins:
             return None
         return (min(mins), max(maxs))
+
+    @contextlib.contextmanager
+    def claim(self) -> Iterator[int]:
+        """Claim the table's next version for the block, inside the active
+        transaction or one opened for the block (committed when it
+        exits). A nested claim by the same thread gets the same version.
+        RuntimeError at once when another writer holds the claim: the
+        order of two writes to one table must not depend on timing."""
+        with self.snapshots.transaction() as txn:
+            v = txn.claim(self)
+            try:
+                yield v
+            finally:
+                txn.release(self, v)
+
+    def _stage(self, v: int) -> int:
+        self.snapshots._active.get().stage(self, v)
+        return v
 
     def merge_publish(
         self,
@@ -269,76 +516,50 @@ class ParquetTable:
         prune_cols = sorted(
             {k[0] for k in alt_keys if k and k[0] in updates.columns}
         )
-        schema = self.schema()
-        files = self.files()
-        candidates, carried = list(files), []
-        if prune_cols:
-            # Exact per-value pruning when the batch's distinct keys fit a
-            # bounded driver sample (the common ETL-batch ≪ table case —
-            # min/max-range-only pruning dies the moment one insert key
-            # sits past the table's range, stretching the batch range over
-            # every file), collected for every prune column in ONE action.
-            # Past the cap, fall back to range overlap.
-            import bisect
+        with self.claim() as v:
+            current = self.current_version()
+            files = self.files()
+            candidates, carried = list(files), []
+            if prune_cols:
+                # Exact per-value pruning when the batch's distinct keys
+                # fit a bounded driver sample (the common ETL-batch ≪ table
+                # case — min/max-range-only pruning dies the moment one
+                # insert key sits past the table's range, stretching the
+                # batch range over every file), collected for every prune
+                # column in ONE action. Past the cap, fall back to range
+                # overlap. A column with no non-null batch key selects no
+                # file.
+                cap = 100_000
+                rows = updates.select(*prune_cols).distinct().limit(cap + 1).collect()
+                if not rows:
+                    return current
+                if len(rows) > cap:
+                    lo_hi = updates.agg(
+                        *[F.min(c) for c in prune_cols], *[F.max(c) for c in prune_cols]
+                    ).collect()[0]
+                    bounds = [
+                        (c, {"lo": lo_hi[i], "hi": lo_hi[len(prune_cols) + i]})
+                        for i, c in enumerate(prune_cols)
+                        if lo_hi[i] is not None
+                    ]
+                else:
+                    bounds = [
+                        (c, {"values": vals})
+                        for i, c in enumerate(prune_cols)
+                        if (vals := sorted({r[i] for r in rows if r[i] is not None}))
+                    ]
+                candidates, carried = [], []
+                for fname in files:
+                    hit = any(_footer_admits(fname, c, **b) for c, b in bounds)
+                    (candidates if hit else carried).append(fname)
 
-            cap = 100_000
-            rows = updates.select(*prune_cols).distinct().limit(cap + 1).collect()
-            if not rows:
-                return self.current_version()
-            per_col: dict[str, object] = {}
-            if len(rows) > cap:
-                lo_hi = updates.agg(
-                    *[F.min(c) for c in prune_cols], *[F.max(c) for c in prune_cols]
-                ).collect()[0]
-                for i, c in enumerate(prune_cols):
-                    per_col[c] = ("range", lo_hi[i], lo_hi[len(prune_cols) + i])
-            else:
-                for i, c in enumerate(prune_cols):
-                    per_col[c] = ("values", sorted({r[i] for r in rows if r[i] is not None}))
-            candidates, carried = [], []
-            for fname in files:
-                overlap = False
-                for c in prune_cols:
-                    spec = per_col[c]
-                    if spec[0] == "values" and not spec[1]:
-                        continue  # no non-null update keys for this column
-                    rng = self._footer_range(fname, c)
-                    if rng is None:
-                        overlap = True
-                        break
-                    try:
-                        if spec[0] == "values":
-                            vals = spec[1]
-                            i = bisect.bisect_left(vals, rng[0])
-                            if i < len(vals) and vals[i] <= rng[1]:
-                                overlap = True
-                                break
-                        else:
-                            _, lo, hi = spec
-                            if lo is not None and not (hi < rng[0] or lo > rng[1]):
-                                overlap = True
-                                break
-                    except TypeError:  # incomparable stats type: stay safe
-                        overlap = True
-                        break
-                (candidates if overlap else carried).append(fname)
-        if candidates:
-            target = self.spark.read.schema(schema).parquet(*candidates)
-        else:
-            target = self.spark.createDataFrame([], schema)
-
-        changes = Observation()
-        merged = merge_fn(target).observe_changes(changes)
-        current = self.current_version()
-        v = current + 1
-        out = self._write(merged, v, cluster_by, zorder_by)
-        if not changes.get["changed"]:
-            shutil.rmtree(out)
-            self._schemas.pop(v, None)
-            return current
-        self._carry(carried, out)
-        self.flip(v)
-        return v
+            changes = Observation()
+            merged = merge_fn(self._read_files(candidates, self.schema())).observe_changes(changes)
+            out = self._write(merged, v, cluster_by, zorder_by)
+            if not changes.get["changed"]:
+                return current
+            self._carry(carried, out)
+            return self._stage(v)
 
     def pruned_files(
         self,
@@ -348,24 +569,10 @@ class ParquetTable:
         """The files a read_pruned(*ranges*) would open: footer min/max
         proven to overlap every [lo, hi] bound (None = unbounded), plus
         any file lacking usable stats (never prove-skip without proof)."""
-        keep = []
-        for fname in self.files(version):
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                rng = self._footer_range(fname, c)
-                if rng is None:
-                    continue  # no stats: cannot prove non-overlap
-                try:
-                    if (hi is not None and rng[0] > hi) or (
-                        lo is not None and rng[1] < lo
-                    ):
-                        ok = False
-                        break
-                except TypeError:  # incomparable stats type: stay safe
-                    continue
-            if ok:
-                keep.append(fname)
-        return keep
+        return [
+            fname for fname in self.files(version)
+            if all(_footer_admits(fname, c, lo, hi) for c, (lo, hi) in ranges.items())
+        ]
 
     def pruned_files_in(
         self,
@@ -379,18 +586,7 @@ class ParquetTable:
         table clustered by *column*, a scattered probe set (e.g. an ANN
         query's nprobe cells) touches only its cells' files."""
         vals = sorted(set(values))
-        keep = []
-        for fname in self.files(version):
-            rng = self._footer_range(fname, column)
-            if rng is None:
-                keep.append(fname)
-                continue
-            try:
-                if any(rng[0] <= v <= rng[1] for v in vals):
-                    keep.append(fname)
-            except TypeError:
-                keep.append(fname)
-        return keep
+        return [f for f in self.files(version) if _footer_admits(f, column, values=vals)]
 
     def read_pruned_in(
         self,
@@ -401,13 +597,7 @@ class ParquetTable:
         """Data-skipping IN-list read: only files whose footer range
         admits one of *values*, with the exact membership filter on
         top."""
-        schema = self.schema(version)
-        keep = self.pruned_files_in(column, values, version)
-        df = (
-            self.spark.read.schema(schema).parquet(*keep)
-            if keep
-            else self.spark.createDataFrame([], schema)
-        )
+        df = self._read_files(self.pruned_files_in(column, values, version), self.schema(version))
         return df.filter(F.col(column).isin(list(values)))
 
     def read_pruned(
@@ -422,13 +612,7 @@ class ParquetTable:
         with cluster_by/zorder_by, a point or range lookup touches a few
         files of a 100 TB table instead of scanning it. Files without
         usable stats are read (skipping must never drop rows)."""
-        schema = self.schema(version)
-        keep = self.pruned_files(ranges, version)
-        df = (
-            self.spark.read.schema(schema).parquet(*keep)
-            if keep
-            else self.spark.createDataFrame([], schema)
-        )
+        df = self._read_files(self.pruned_files(ranges, version), self.schema(version))
         for c, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.filter(F.col(c) >= lo)
@@ -467,24 +651,6 @@ class ParquetTable:
             return df.repartition(partitions)
         return df
 
-    def stage(
-        self,
-        df: DataFrame,
-        cluster_by: Sequence[str] | None = None,
-        zorder_by: Sequence[str] | None = None,
-        partitions: int | None = None,
-    ) -> int:
-        """Write a new version directory WITHOUT flipping the pointer.
-        Readers keep seeing the old version until flip(); a failure after
-        staging leaves only an unreferenced directory behind. Lets a
-        multi-table promotion do all its expensive writes first and flip
-        every pointer in one quick final pass. *cluster_by*/*zorder_by*
-        pick the file layout (tight footer ranges → read_pruned and
-        merge_publish skip files)."""
-        v = (self.current_version() or 0) + 1
-        self._write(df, v, cluster_by, zorder_by, partitions)
-        return v
-
     def _write(
         self,
         df: DataFrame,
@@ -493,14 +659,15 @@ class ParquetTable:
         zorder_by: Sequence[str] | None = None,
         partitions: int | None = None,
     ) -> str:
-        """Write *df* with the given layout as version *v* (not yet live)
-        and record its schema. Every write path goes through here, so a
-        merge check firing inside the write surfaces as MultipleMatchError
-        and leaves only an unreferenced directory behind."""
-        out = os.path.join(self.path, f"v{v}")
+        """Write *df* with the given layout into claimed version *v* (not
+        yet live) and record its schema. Every write path goes through
+        here, so a merge check firing inside the write surfaces as
+        MultipleMatchError; the claim's release then deletes the version.
+        The claimed directory is written into, never replaced."""
+        out = self._dir(v)
         with check_errors_raised():
             df = self._clustered(df, cluster_by, zorder_by, partitions)
-            df.write.mode("overwrite").parquet(out)
+            df.write.mode("append").parquet(out)
         schema = _nullable(df.schema)
         tmp = os.path.join(out, f".{_SCHEMA_FILE}.tmp")
         with open(tmp, "w") as f:
@@ -519,14 +686,6 @@ class ParquetTable:
             except OSError:
                 shutil.copy2(fname, dst)
 
-    def flip(self, v: int) -> None:
-        """Atomically point readers at a previously staged version."""
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer)
-        self._vacuum(keep=self.keep_versions)
-
     def publish(
         self,
         df: DataFrame,
@@ -534,11 +693,13 @@ class ParquetTable:
         zorder_by: Sequence[str] | None = None,
         partitions: int | None = None,
     ) -> int:
-        """Write a new version, then flip the pointer (atomic rename)."""
-        v = self.stage(df, cluster_by=cluster_by, zorder_by=zorder_by,
-                       partitions=partitions)
-        self.flip(v)
-        return v
+        """Write *df* as the table's next version. It goes live when the
+        transaction commits: at once outside a transaction.
+        *cluster_by*/*zorder_by* pick the file layout (tight footer
+        ranges → read_pruned and merge_publish skip files)."""
+        with self.claim() as v:
+            self._write(df, v, cluster_by, zorder_by, partitions)
+            return self._stage(v)
 
     def append(self, df: DataFrame, evolve: bool = False) -> int:
         """Append rows as a new version. With *evolve*, either side may
@@ -555,41 +716,41 @@ class ParquetTable:
         ingest cannot rewrite the corpus per micro-batch). The
         union-rewrite path remains only for schema evolution, where old
         files must acquire the new columns."""
-        if not self.exists():
-            return self.publish(df)
-        cur_schema = self.schema()
-        same = [f.name for f in cur_schema] == df.columns and all(
-            f.dataType == g.dataType for f, g in zip(cur_schema, df.schema)
-        )
-        if not same and set(df.columns) == {f.name for f in cur_schema}:
-            # column order differs only: align and retry the fast path
-            aligned = df.select(*[f.name for f in cur_schema])
-            if all(
-                f.dataType == g.dataType
-                for f, g in zip(cur_schema, aligned.schema)
-            ):
-                df, same = aligned, True
-        if not same:
-            return self.publish(
-                self.read().unionByName(df, allowMissingColumns=evolve)
+        with self.claim() as v:
+            if not self.exists():
+                return self.publish(df)
+            cur_schema = self.schema()
+            same = [f.name for f in cur_schema] == df.columns and all(
+                f.dataType == g.dataType for f, g in zip(cur_schema, df.schema)
             )
-        v = (self.current_version() or 0) + 1
-        self._carry(self.files(), self._write(df, v))
-        self.flip(v)
-        return v
+            if not same and set(df.columns) == {f.name for f in cur_schema}:
+                # column order differs only: align and retry the fast path
+                aligned = df.select(*[f.name for f in cur_schema])
+                if all(
+                    f.dataType == g.dataType
+                    for f, g in zip(cur_schema, aligned.schema)
+                ):
+                    df, same = aligned, True
+            if not same:
+                return self.publish(
+                    self.read().unionByName(df, allowMissingColumns=evolve)
+                )
+            self._carry(self.files(), self._write(df, v))
+            return self._stage(v)
 
     def compact(self, target_files: int) -> int:
         """Rewrite the current version into *target_files* files (small-
         file compaction after many incremental appends — the OPTIMIZE
         step). Data is unchanged: readers see the same rows, just fewer,
         larger files; published as a normal new version so time travel
-        and the atomic pointer flip still hold. coalesce() not
+        and the atomic snapshot commit still hold. coalesce() not
         repartition(): no shuffle, partitions merge in place.
 
         Full-table rewrite — O(table). For routine post-ingest upkeep on
         a large table use :meth:`compact_incremental`, which touches only
         the undersized files."""
-        return self.publish(self.read().coalesce(target_files))
+        with self.claim():
+            return self.publish(self.read().coalesce(target_files))
 
     def compact_incremental(
         self,
@@ -611,21 +772,20 @@ class ParquetTable:
         and read_pruned keeps skipping them (a plain coalesce of
         interleaved appends would give the packed files full-width
         footers)."""
-        small = [f for f in self.files() if os.path.getsize(f) < min_file_bytes]
-        if len(small) < 2:
-            return self.current_version() or 0
-        large = [f for f in self.files() if f not in set(small)]
-        bins = max(1, sum(os.path.getsize(f) for f in small) // min_file_bytes + 1)
-        packed = self.spark.read.schema(self.schema()).parquet(*small)
-        packed = (
-            self._clustered(packed, cluster_by, zorder_by, int(bins))
-            if (cluster_by or zorder_by)
-            else packed.coalesce(int(bins))
-        )
-        v = (self.current_version() or 0) + 1
-        self._carry(large, self._write(packed, v))
-        self.flip(v)
-        return v
+        with self.claim() as v:
+            small = [f for f in self.files() if os.path.getsize(f) < min_file_bytes]
+            if len(small) < 2:
+                return self.current_version() or 0
+            large = [f for f in self.files() if f not in set(small)]
+            bins = max(1, sum(os.path.getsize(f) for f in small) // min_file_bytes + 1)
+            packed = self._read_files(small, self.schema())
+            packed = (
+                self._clustered(packed, cluster_by, zorder_by, int(bins))
+                if (cluster_by or zorder_by)
+                else packed.coalesce(int(bins))
+            )
+            self._carry(large, self._write(packed, v))
+            return self._stage(v)
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level change feed between two versions (the CDC read
@@ -645,22 +805,20 @@ class ParquetTable:
         f_old = {os.path.basename(f): f for f in self.files(v_from)}
         f_new = {os.path.basename(f): f for f in self.files(v_to)}
         schema = self.schema(v_to)
-        old_only = [f for b, f in f_old.items() if b not in f_new]
-        new_only = [f for b, f in f_new.items() if b not in f_old]
-
-        def part(files: list[str]) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(*files)
-
-        added = part(new_only).exceptAll(part(old_only))
-        removed = part(old_only).exceptAll(part(new_only))
+        old_only = self._read_files([f for b, f in f_old.items() if b not in f_new], schema)
+        new_only = self._read_files([f for b, f in f_new.items() if b not in f_old], schema)
+        added = new_only.exceptAll(old_only)
+        removed = old_only.exceptAll(new_only)
         return added.withColumn("_change_type", F.lit("insert")).unionByName(
             removed.withColumn("_change_type", F.lit("delete"))
         )
 
-    def _vacuum(self, keep: int) -> None:
-        v = self.current_version() or 0
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= v - keep:
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+    def _discard(self, v: int) -> None:
+        """Delete version *v*, which no snapshot names."""
+        shutil.rmtree(self._dir(v), ignore_errors=True)
+        self._schemas.pop(v, None)
+
+    def _vacuum(self) -> None:
+        """Delete all but the newest keep_versions committed versions."""
+        for v in self.versions()[:-self.keep_versions]:
+            shutil.rmtree(self._dir(v), ignore_errors=True)

@@ -14,7 +14,7 @@ appended. This wires that loop as Structured Streaming:
           → dedup.incremental_lsh_dedup vs the published corpus
             (content near-dup guard — the cross-side band join whose
             per-batch cost is proportional to the NEW data only)
-          → ParquetTable.append (atomic pointer-flip publish)
+          → ParquetTable.append (atomic snapshot-commit publish)
 
 Effective exactly-once without a transaction log: the checkpoint makes
 each input file feed exactly one batch, and a crashed batch that re-runs

@@ -7,6 +7,8 @@ presence-absence (results by sample identifier)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -49,6 +51,10 @@ def run_pipeline(spark, warehouse, identifiers):
 
 def table_versions(warehouse):
     return {name: tbl.current_version() for name, tbl in warehouse.tables.items()}
+
+
+def table_files(warehouse):
+    return {name: tbl.files() for name, tbl in warehouse.tables.items()}
 
 
 @pytest.fixture(scope="module")
@@ -589,33 +595,100 @@ def test_concurrent_upserts_of_one_table_are_refused(spark, warehouse, monkeypat
 def test_enrollment_failed_branch_starts_no_later_wave(
     spark, warehouse, identifiers, enrolled, monkeypatch
 ):
-    """A failing upsert in enrollments' first wave: run raises it once the
-    wave's other upserts have finished, no branch thread outlives run, no
-    dependent upsert starts, and re-running the batch gives the warehouse
-    a clean run gives."""
+    """A failing upsert in enrollments' first wave, and a fault after each
+    later wave and between the last upsert and the commit: run raises it
+    once the wave's other upserts have finished, no branch thread
+    outlives run, and every table keeps its pre-run version and files,
+    also for a second reader opened mid-run, with no staged version left
+    on disk. Re-running the batch gives the warehouse a clean run gives."""
     import threading
 
     class Fault(RuntimeError):
         pass
 
-    def fault(updates):
-        raise Fault("location upsert failed")
-
     batch = receiving_df(spark, fixtures.enrollment_documents())
     wh = warehouse
-    versions = table_versions(wh)
+    versions, files = table_versions(wh), table_files(wh)
+    mid_run = []
 
-    monkeypatch.setattr(wh, "upsert_location", fault)
-    with pytest.raises(Fault):
-        enrollments.run(spark, batch, wh, identifiers)
-    assert not [t for t in threading.enumerate() if t.name.startswith("concurrently")]
-    after = table_versions(wh)
-    # the wave's other branches finished; no later wave started
-    assert after["site"] == after["individual"] == 1
-    for name in ("location", "encounter", "encounter_location", "sample"):
-        assert after[name] == versions[name], name
+    def fault(*args):
+        # the run sees what it staged; another reader sees the old snapshot
+        mid_run.append((table_versions(wh), Warehouse(spark, wh.root)))
+        raise Fault("injected")
 
-    monkeypatch.undo()
-    enrollments.run(spark, batch, wh, identifiers)
+    # first-wave branch; after wave 1; after wave 2; after the last upsert
+    for point in ("upsert_location", "upsert_encounter", "upsert_sample", "num_rows"):
+        monkeypatch.setattr(wh, point, fault)
+        with pytest.raises(Fault):
+            enrollments.run(spark, batch, wh, identifiers)
+        monkeypatch.undo()
+        assert not [t for t in threading.enumerate() if t.name.startswith("concurrently")]
+        assert table_versions(wh) == versions, point
+        assert table_files(wh) == files, point
+        staged, other = mid_run[-1]
+        assert table_versions(other) == versions and table_files(other) == files, point
+        for name, tbl in wh.tables.items():
+            on_disk = sorted(int(d[1:]) for d in os.listdir(tbl.path) if d.startswith("v"))
+            assert on_disk == tbl.versions(), (point, name)
+    # what the run had staged when a fault fired after wave 1, and after
+    # its last upsert: every table the clean run wrote
     clean, _ = enrolled
+
+    def changed(seen):
+        return {name for name, v in seen.items() if v != versions[name]}
+
+    after_wave_1 = changed(mid_run[1][0])
+    assert {"site", "individual"} <= after_wave_1 and "encounter" not in after_wave_1
+    assert changed(mid_run[3][0]) == changed(table_versions(clean))
+
+    enrollments.run(spark, batch, wh, identifiers)
     assert warehouse_rows(wh) == warehouse_rows(clean)
+
+
+def test_presence_absence_fault_commits_nothing(spark, warehouse, identifiers, monkeypatch):
+    """A fault after presence-absence's first wave, or after its last
+    upsert (when the run has staged all three of its tables), leaves
+    every table on its pre-run version and files and commits no
+    snapshot."""
+    batch = receiving_df(spark, fixtures.pa_documents())
+    wh = warehouse
+    versions, files = table_versions(wh), table_files(wh)
+    snapshot = wh.snapshots.latest()[0]
+    staged = []
+
+    class Fault(RuntimeError):
+        pass
+
+    def fault(*args):
+        staged.append({n for n, v in table_versions(wh).items() if v != versions[n]})
+        raise Fault("injected")
+
+    for point in ("upsert_presence_absence", "num_rows"):
+        monkeypatch.setattr(wh, point, fault)
+        with pytest.raises(Fault):
+            presence_absence.run(spark, batch, wh, identifiers)
+        monkeypatch.undo()
+        assert table_versions(wh) == versions, point
+        assert table_files(wh) == files, point
+        assert wh.snapshots.latest()[0] == snapshot, point
+    assert staged == [{"target", "sample"}, {"target", "sample", "presence_absence"}]
+
+
+def test_one_of_two_committers_wins(spark, tmp_path):
+    """Two transactions that start from one snapshot each stage a write
+    to their own table: the first to commit wins, the other raises
+    CommitConflict, publishes nothing and leaves no staged directory."""
+    from id3c_spark.sources.store import CommitConflict
+
+    first, second = (Warehouse(spark, str(tmp_path / "wh")) for _ in range(2))
+    one = spark.createDataFrame([("kiosk", None)], "identifier string, details string")
+    with pytest.raises(CommitConflict):
+        with second.transaction():
+            second.tables["target"].publish(one)
+            with first.transaction():
+                first.tables["site"].publish(one)
+            # first has committed snapshot 1; second's commit now loses
+    assert first.snapshots.latest() == (1, {"site": 1})
+    assert not second.tables["target"].exists()
+    assert os.listdir(second.tables["target"].path) == []
+    assert Warehouse(spark, first.root).read("site").count() == 1

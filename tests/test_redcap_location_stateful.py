@@ -490,12 +490,23 @@ def test_redcap_sync_delete_end_to_end(spark, tmp_path, monkeypatch):
             [(1000, "s-1", None, 2, None, '{"coding": [], "note": "x"}', None),
              (1001, "s-2", None, 2, None, '{"note": "x", "lims": true}', None)],
             schemas.WAREHOUSE_SCHEMAS["sample"]))
-        wh.publish("presence_absence", spark.createDataFrame(
-            [(1, "pa-1", 1000, 5, True, None), (2, "pa-2", 1001, 5, False, None)],
-            schemas.WAREHOUSE_SCHEMAS["presence_absence"]))
+        # presence_absence as two files clustered on its merge key
+        wh.tables["presence_absence"].publish(spark.createDataFrame(
+            [(1, "pa-1", 1000, 5, True, None), (2, "pa-2", 1001, 5, False, None)]
+            + [(i, f"pa-{i}", 1000, i, False, None) for i in range(3, 9)],
+            schemas.WAREHOUSE_SCHEMAS["presence_absence"]),
+            cluster_by=["identifier"], partitions=2)
         wh.publish("individual", spark.createDataFrame(
             [(10, "i-10", "male", None), (11, "i-11", "female", None)],
             schemas.WAREHOUSE_SCHEMAS["individual"]))
+        wh.publish("site", spark.createDataFrame(
+            [(1, "hmc", None)], schemas.WAREHOUSE_SCHEMAS["site"]))
+        assert len(wh.tables["presence_absence"].files()) == 2
+
+        def versions():
+            return {name: tbl.current_version() for name, tbl in wh.tables.items()}
+
+        seeded = versions()
 
         runner = CliRunner()
 
@@ -516,6 +527,7 @@ def test_redcap_sync_delete_end_to_end(spark, tmp_path, monkeypatch):
         assert out["encounter"] == 1
         # nothing published: both encounters still present
         assert wh.read("encounter").count() == 2
+        assert versions() == seeded
 
         _, out2 = run("--commit")
         assert out2["committed"] is True
@@ -530,6 +542,15 @@ def test_redcap_sync_delete_end_to_end(spark, tmp_path, monkeypatch):
                 for r in wh.read("presence_absence").collect()} == {2}
         # individual 11 orphaned by enc-2's deletion; 10 still referenced
         assert {r.individual_id for r in wh.read("individual").collect()} == {10}
+        # only the changed tables moved, in one snapshot
+        moved = {name for name, v in versions().items() if v != seeded[name]}
+        assert moved == {"encounter", "sample", "presence_absence", "individual"}
+        # the rewritten presence_absence is still clustered on its key
+        ranges = sorted(
+            wh.tables["presence_absence"]._footer_range(f, "identifier")
+            for f in wh.tables["presence_absence"].files()
+        )
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
     finally:
         stub.close()
 

@@ -57,8 +57,16 @@ def test_streaming_etl_checkpointed(spark, tmp_path):
 def test_cli_etl_dry_run_prompt_commit(spark, tmp_path, monkeypatch):
     """Three-way transaction policy (reference cli/command/__init__.py:57-162):
     dry-run publishes nothing, prompt+no publishes nothing, prompt+yes and
-    commit publish — prompt promotes scratch tables via atomic pointer flips."""
+    commit publish. Prompt+yes commits exactly what commit does: tables
+    the ETL did not write keep their version, written tables keep their
+    clustered files. No mode copies the warehouse."""
+    import datetime
+    import shutil
+
+    import pyarrow.parquet as pq
+
     import id3c_spark.cli as cli_module
+    from id3c_spark import schemas
 
     src = tmp_path / "pa.ndjson"
     src.write_text(fixtures.pa_documents()[0][1] + "\n")
@@ -66,10 +74,26 @@ def test_cli_etl_dry_run_prompt_commit(spark, tmp_path, monkeypatch):
     spark.createDataFrame(
         fixtures.identifier_rows(), "uuid string, barcode string, identifier_set_id long"
     ).write.parquet(ids_path)
-    wh_dir = str(tmp_path / "wh")
     runner = CliRunner()
 
-    def run(*flags):
+    def seeded(name: str) -> Warehouse:
+        # an encounter table, which the presence-absence ETL does not write
+        wh = Warehouse(spark, str(tmp_path / name))
+        wh.publish("encounter", spark.createDataFrame(
+            [(1, "enc-1", 10, 1, datetime.datetime(2026, 1, 1), None, None)],
+            schemas.WAREHOUSE_SCHEMAS["encounter"]))
+        return wh
+
+    def layout(wh: Warehouse) -> dict:
+        return {
+            name: (tbl.current_version(), [pq.read_metadata(f).num_rows for f in tbl.files()])
+            for name, tbl in wh.tables.items()
+        }
+
+    wh, twin = seeded("wh"), seeded("twin")
+    before = layout(wh)
+
+    def run(*flags, wh_dir=wh.root):
         res = runner.invoke(cli_module.cli, [
             "etl", "presence-absence", "--input", str(src),
             "--warehouse", wh_dir, "--identifiers", ids_path, *flags,
@@ -78,40 +102,59 @@ def test_cli_etl_dry_run_prompt_commit(spark, tmp_path, monkeypatch):
         return json.loads(res.output.strip().splitlines()[-1])
 
     def published() -> int:
-        wh = Warehouse(spark, wh_dir)
-        return wh.read("presence_absence").count()
+        return Warehouse(spark, wh.root).read("presence_absence").count()
 
+    def no_copy(*args, **kwargs):
+        raise AssertionError("the warehouse must not be copied")
+
+    monkeypatch.setattr(shutil, "copytree", no_copy)
     assert run()["committed"] is False                   # default = dry-run
     assert published() == 0
+    assert layout(wh) == before
 
     monkeypatch.setattr(cli_module, "CONFIRM", lambda msg: False)
     assert run("--prompt")["committed"] is False          # prompt, answer no
     assert published() == 0
+    assert layout(wh) == before
 
     monkeypatch.setattr(cli_module, "CONFIRM", lambda msg: True)
     out = run("--prompt")                                 # prompt, answer yes
     assert out["committed"] is True
     n = published()
     assert n > 0
+    assert run("--commit", wh_dir=twin.root)["committed"] is True
+    assert layout(wh) == layout(twin)
+    assert layout(wh)["encounter"] == before["encounter"]
 
     assert run("--commit")["committed"] is True           # plain commit
     assert published() == n                               # idempotent upsert
 
 
-def test_store_stage_then_flip(spark, tmp_path):
-    """stage() must not expose the new version to readers; only flip()
-    does — the two-phase shape the --prompt promotion relies on so a
-    failure during the expensive writes publishes nothing."""
+def test_store_transaction_stages_until_commit(spark, tmp_path):
+    """A version written inside a transaction is visible to the
+    transaction and to no other reader until the transaction commits; a
+    rolled-back transaction leaves neither the version nor its
+    directory."""
+    import os
+
     from id3c_spark.sources.store import ParquetTable
 
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.publish(spark.createDataFrame([(1,)], "x long"))
-    v = t.stage(spark.createDataFrame([(1,), (2,)], "x long"))
-    assert t.read().count() == 1          # staged version invisible
-    assert t.current_version() == 1
-    t.flip(v)
-    assert t.read().count() == 2
-    assert t.current_version() == v
+    other = ParquetTable(spark, t.path)
+    with t.snapshots.transaction():
+        v = t.publish(spark.createDataFrame([(1,), (2,)], "x long"))
+        assert t.read().count() == 2          # the writer sees its version
+        assert other.read().count() == 1      # another reader does not
+        assert other.current_version() == 1
+    assert other.read().count() == 2
+    assert other.current_version() == v == 2
+
+    with t.snapshots.transaction() as txn:
+        t.append(spark.createDataFrame([(3,)], "x long"))
+        txn.rollback()
+    assert t.current_version() == 2 and t.read().count() == 2
+    assert sorted(os.listdir(t.path)) == ["_snapshot-2.json", "v1", "v2"]
 
 
 def test_cli_upload_and_mint(tmp_path):

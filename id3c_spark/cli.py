@@ -225,8 +225,14 @@ def identifier_labels(filename, ids_path, set_name, layout,
 
 
 def _registry(spark, warehouse: str, name: str):
+    """A registry table: the warehouse's own table where it has one (so
+    Warehouse readers see what the CLI wrote), else a standalone root."""
+    from id3c_spark.etl.warehouse import Warehouse
+    from id3c_spark.schemas import WAREHOUSE_SCHEMAS
     from id3c_spark.sources.store import ParquetTable
 
+    if name in WAREHOUSE_SCHEMAS:
+        return Warehouse(spark, warehouse).tables[name]
     return ParquetTable(spark, f"{warehouse.rstrip('/')}/{name}")
 
 

@@ -25,6 +25,7 @@ import json
 import os
 import re
 import shutil
+import socket
 import tempfile
 import threading
 from collections.abc import Callable, Iterator, Sequence
@@ -39,6 +40,40 @@ from id3c_spark.operators.merge import MergeResult, check_errors_raised
 _SCHEMA_FILE = "_schema.json"
 #: a root's committed snapshots: table → version, one file per commit
 _SNAPSHOT = re.compile(r"_snapshot-(\d+)\.json")
+#: prefix of the file in a claimed version directory naming its owner
+_CLAIM = "_claim-"
+
+
+def _started(pid: int) -> str | None:
+    """When process *pid* of this host started ("" where /proc does not
+    say), or None when it does not run. With the pid it names a claim's
+    owner, so a recycled pid does not pass for its predecessor."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[19]
+    except OSError:
+        pass
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return None
+    except PermissionError:
+        pass
+    return ""
+
+
+def _owner() -> str:
+    """This process as a claim owner: host-pid-start."""
+    return f"{socket.gethostname()}-{os.getpid()}-{_started(os.getpid())}"
+
+
+def _dead(owner: str) -> bool:
+    """Whether claim *owner* is a process of this host that has exited
+    (an owner on another host, or unreadable, may still be writing)."""
+    parts = owner.rsplit("-", 2)
+    if len(parts) != 3 or parts[0] != socket.gethostname() or not parts[1].isdigit():
+        return False
+    return int(parts[1]) > 0 and _started(int(parts[1])) != parts[2]
 
 
 class CommitConflict(RuntimeError):
@@ -51,7 +86,9 @@ class Snapshots:
     live version; a commit creates snapshot n+1 from the snapshot its
     transaction started at, so of two transactions that start at the
     same snapshot exactly one commits and the other raises
-    :class:`CommitConflict`."""
+    :class:`CommitConflict`. The log is kept whole (a few bytes a
+    commit): however many commits landed since a transaction began, its
+    snapshot n+1 already exists."""
 
     def __init__(self, path: str):
         self.path = path
@@ -69,18 +106,16 @@ class Snapshots:
 
     def latest(self) -> tuple[int, dict[str, int]]:
         """(n, table → version) of the newest committed snapshot; (0, {})
-        before the first commit. Snapshot files never change, so a
-        snapshot is parsed once."""
-        while True:
-            n = max(self._numbers(), default=0)
-            if n == self._latest[0]:
-                return self._latest
-            try:
-                with open(self._file(n)) as f:
-                    self._latest = (n, json.load(f))
-                return self._latest
-            except FileNotFoundError:
-                continue  # vacuumed by a newer commit since the listing
+        before the first commit. Snapshot files are never changed or
+        deleted, so the newest is found by probing forward from the last
+        one seen, and each is parsed once."""
+        n = self._latest[0] or max(self._numbers(), default=0)
+        while os.path.exists(self._file(n + 1)):
+            n += 1
+        if n != self._latest[0]:
+            with open(self._file(n)) as f:
+                self._latest = (n, json.load(f))
+        return self._latest
 
     def version(self, key: str) -> int | None:
         """*key*'s version as the caller sees it: the active transaction's
@@ -125,16 +160,13 @@ class Snapshots:
         finally:
             os.remove(tmp)
         self._latest = (n, dict(tables))
-        for old in self._numbers():
-            if old < n:
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(self._file(old))
 
 
 class Transaction:
     """The versions one transaction claimed and staged. A claim is the
-    exclusive create of the table's next version directory, so no two
-    writers, in one process or in two, ever write into one version."""
+    exclusive create of the table's next version directory, holding a
+    file that names its owner, so no two writers, in one process or in
+    two, ever write into one version."""
 
     def __init__(self, snapshots: Snapshots):
         self.snapshots = snapshots
@@ -158,15 +190,7 @@ class Transaction:
             if held is not None and held[1] == me:
                 return held[0]
             v = self.tables.get(table.key, 0) + 1
-            try:
-                if held is not None:  # another thread of this transaction
-                    raise FileExistsError
-                os.mkdir(table._dir(v))
-            except FileExistsError:
-                raise RuntimeError(
-                    f"a write of {table.path} is already in flight: v{v} is "
-                    "claimed (remove it if its writer died)"
-                ) from None
+            table._claim(v)
             self._claims[table.key] = (v, me)
             self._dirs.append((table, v))
             return v
@@ -461,6 +485,46 @@ class ParquetTable:
                 yield v
             finally:
                 txn.release(self, v)
+
+    def _claim(self, v: int) -> None:
+        """Create version directory *v* holding this process's claim
+        file. A directory already there is refused while its writer may
+        be running. One whose claims all name exited processes of this
+        host, and that no snapshot names, is taken over: a writer killed
+        mid-write blocks no later one. Of two takers, the one that moves
+        the dead claim aside wins."""
+        out = self._dir(v)
+        mine = os.path.join(out, _CLAIM + _owner())
+        try:
+            os.mkdir(out)
+        except FileExistsError:
+            if (self.snapshots.latest()[1].get(self.key) or 0) >= v:
+                raise CommitConflict(
+                    f"v{v} of {self.path} was committed after this transaction began"
+                ) from None
+            claims = sorted(n for n in os.listdir(out) if n.startswith(_CLAIM))
+            in_flight = RuntimeError(
+                f"a write of {self.path} is already in flight: v{v} is claimed "
+                f"by {claims or 'a writer that has not named itself'}"
+            )
+            if not claims or not all(_dead(n[len(_CLAIM):]) for n in claims):
+                raise in_flight from None
+            open(mine, "x").close()
+            try:
+                os.rename(os.path.join(out, claims[0]), os.path.join(out, f".{claims[0]}"))
+            except FileNotFoundError:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(mine)
+                raise in_flight from None
+            for name in os.listdir(out):  # the dead writer's leftovers
+                path = os.path.join(out, name)
+                with contextlib.suppress(FileNotFoundError):
+                    if os.path.isdir(path):
+                        shutil.rmtree(path)
+                    elif path != mine:
+                        os.remove(path)
+        else:
+            open(mine, "x").close()
 
     def _stage(self, v: int) -> int:
         self.snapshots._active.get().stage(self, v)

@@ -677,7 +677,8 @@ def test_presence_absence_fault_commits_nothing(spark, warehouse, identifiers, m
 def test_one_of_two_committers_wins(spark, tmp_path):
     """Two transactions that start from one snapshot each stage a write
     to their own table: the first to commit wins, the other raises
-    CommitConflict, publishes nothing and leaves no staged directory."""
+    CommitConflict, publishes nothing and leaves no staged directory,
+    also when more than one commit landed since it began."""
     from id3c_spark.sources.store import CommitConflict
 
     first, second = (Warehouse(spark, str(tmp_path / "wh")) for _ in range(2))
@@ -692,3 +693,15 @@ def test_one_of_two_committers_wins(spark, tmp_path):
     assert not second.tables["target"].exists()
     assert os.listdir(second.tables["target"].path) == []
     assert Warehouse(spark, first.root).read("site").count() == 1
+
+    # a base two commits old loses too: snapshot 2 still exists when
+    # second tries to create it
+    with pytest.raises(CommitConflict):
+        with second.transaction():
+            second.tables["target"].publish(one)
+            for _ in range(2):
+                with first.transaction():
+                    first.tables["site"].publish(one)
+    assert Warehouse(spark, first.root).snapshots.latest() == (3, {"site": 3})
+    assert not second.tables["target"].exists()
+    assert os.listdir(second.tables["target"].path) == []

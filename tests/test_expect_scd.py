@@ -254,6 +254,10 @@ def test_cli_identifier_sets_and_labels(spark, tmp_path):
     ]).exit_code != 0
     ls = runner.invoke(cli, ["identifier", "set", "ls", "--warehouse", wh])
     assert json.loads(ls.output)["name"] == "samples"
+    # the set lives in the warehouse's own identifier_set table
+    from id3c_spark.etl.warehouse import Warehouse
+
+    assert [r["name"] for r in Warehouse(spark, wh).read("identifier_set").collect()] == ["samples"]
 
     # labels for an existing batch from NDJSON mint output
     ids = tmp_path / "ids.ndjson"

@@ -154,7 +154,38 @@ def test_store_transaction_stages_until_commit(spark, tmp_path):
         t.append(spark.createDataFrame([(3,)], "x long"))
         txn.rollback()
     assert t.current_version() == 2 and t.read().count() == 2
-    assert sorted(os.listdir(t.path)) == ["_snapshot-2.json", "v1", "v2"]
+    assert sorted(os.listdir(t.path)) == ["_snapshot-1.json", "_snapshot-2.json", "v1", "v2"]
+
+
+def test_store_takes_over_a_dead_writers_claim(spark, tmp_path):
+    """A version claimed by a writer that died mid-write (its claim file
+    names an exited process of this host) blocks no later write: the
+    next publish takes it over and clears the leftovers. A claim whose
+    owner still runs is refused."""
+    import os
+    import socket
+    import subprocess
+
+    import pytest
+
+    from id3c_spark.sources.store import ParquetTable, _owner
+
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.publish(spark.createDataFrame([(1,)], "x long"))
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    os.mkdir(t._dir(2))
+    for name in (f"_claim-{socket.gethostname()}-{dead.pid}-0", "part-0.parquet"):
+        open(os.path.join(t._dir(2), name), "w").close()  # a torn write
+    assert t.publish(spark.createDataFrame([(2,)], "x long")) == 2
+    assert [r.x for r in t.read().collect()] == [2]
+    assert [n for n in os.listdir(t._dir(2)) if n.startswith("_claim-")] == [f"_claim-{_owner()}"]
+
+    os.mkdir(t._dir(3))
+    open(os.path.join(t._dir(3), f"_claim-{_owner()}"), "w").close()  # a live writer
+    with pytest.raises(RuntimeError, match="already in flight"):
+        t.publish(spark.createDataFrame([(3,)], "x long"))
+    assert t.current_version() == 2
 
 
 def test_cli_upload_and_mint(tmp_path):

@@ -1537,8 +1537,7 @@ def corpus_media_dedup_stream(source_glob: str, output: str, checkpoint: str,
                    "pair with --no-execute for a fast sweep)")
 def explain(query: str | None, sf_dir: str, execute: bool,
             show_plan: bool, list_queries: bool, all_catalog: bool) -> None:
-    """Audited plan facts for a catalog query, on demand (the per-round
-    plan_audit artifact's computation, per query): shuffle exchanges,
+    """Audited plan facts for a catalog query, on demand: shuffle exchanges,
     broadcast exchanges, reused stages, whole-stage-codegen spans,
     parquet scans, cache sites, and pushed filters — the 100 TB-shape
     evidence a user needs before trusting an operator at scale."""

@@ -1224,8 +1224,8 @@ def ivf_trained_topk(
     instance over unit-normalized vectors, the same coarse stage as
     residual IVFPQ, so one oracle-mirrored discipline serves both).
     Trained cells track the data's actual density: measured near-dup
-    candidate recall at nprobe=6/nlist=16 is 0.81 vs 0.70 for md5 pivots
-    (ANN_RECALL_r7.md), and since candidates are exact-cosine reranked
+    candidate recall at nprobe=6/nlist=16 is 0.81 vs 0.70 for md5 pivots,
+    and since candidates are exact-cosine reranked
     the end recall IS the candidate recall. Same scale shape as ivf_topk:
     broadcast centroids, one Arrow assignment pass per side, cell-keyed
     candidate join.

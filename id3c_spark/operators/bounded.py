@@ -52,7 +52,7 @@ pays exactly one single-wave job regardless of the cap size, which is
 what keeps kmv_jaccard's 4 M-row sketch guard as cheap as the small
 regime probes (the r13 always-two-stage shape taxed every kmv call with
 a second Python/Arrow round trip; measured ~1.2–1.3× on
-kmv_source_jaccard, CONTROL_r14_touched.md).  Overflow returns are
+kmv_source_jaccard).  Overflow returns are
 truncated to ``cap + 1`` rows — callers only test ``len > cap``.
 
 Tier behavior is exercised at a pathological partition count (2,048

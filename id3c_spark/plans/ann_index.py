@@ -120,7 +120,7 @@ def build_index(
 
     Default codebooks are 8-bit (kcent=256, the FAISS norm): measured
     reranked recall@5 at nprobe=6 is 0.918 vs 0.697 for the r7-r9 4-bit
-    m=32/k*=16 shape at the same code bytes (ANN_RECALL_r10.md) — with
+    m=32/k*=16 shape at the same code bytes — with
     k*=256 the ADC shortlist loses essentially nothing, so end recall
     equals the coarse probe ceiling. Size nlist to the corpus (~√N,
     FAISS guidance) — the small default matches the test corpora.
@@ -130,7 +130,7 @@ def build_index(
     and vectors carry one row per (id, cell), so a neighbor whose
     primary cell a query misses is still found through its secondary —
     trading assign_n× codes/vectors storage for probe recall (measured
-    0.918 → ≥0.95 reranked recall@5 at nprobe ≤ 6; ANN_RECALL_r11.md).
+    0.918 → ≥0.95 reranked recall@5 at nprobe ≤ 6).
     Quantizer training is UNCHANGED (coarse + codebooks train on
     primary-cell residuals only), so assign_n=1 tables are bit-identical
     to the pre-multi-assign layout; serving dedups pairs by min ADC
@@ -485,8 +485,7 @@ def index_drift_report(spark: SparkSession, path: str) -> DataFrame:
     and a ``rebuild`` flag per the documented thresholds
     (DRIFT_OCCUPANCY_RATIO / DRIFT_RESID_RATIO). Rebuild when any cell
     flags: ``build_index`` over the current corpus re-trains both
-    quantizers (ANN_RECALL_r10.md records recall before/after on a
-    drifted ingest).
+    quantizers (which restores recall measured on a drifted ingest).
 
     Cost: one scan of the vectors table (residual recompute against the
     broadcast coarse model) + two nlist-sized aggregates — an offline

@@ -9,9 +9,8 @@ pushed filters.  ``audit_query`` runs a catalog query (optionally
 executing it through the noop sink so AQE finalizes the plan) and
 returns the facts.
 
-Shared by the per-round ``tools/plan_audit.py`` artifact and the
-``id3c explain`` CLI (r14 verdict #8): users get the audited plan facts
-per query on demand instead of per round.  Nothing here touches a timed
+Used by the ``id3c explain`` CLI: users get the audited plan facts per
+query on demand.  Nothing here touches a timed
 path — explain builds its own plan and (optionally) a one-off noop
 write.
 """

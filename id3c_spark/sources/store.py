@@ -76,6 +76,12 @@ def _dead(owner: str) -> bool:
     return int(parts[1]) > 0 and _started(int(parts[1])) != parts[2]
 
 
+def _describe(owner: str) -> str:
+    """Claim *owner* for a message: its pid and host."""
+    parts = owner.rsplit("-", 2)
+    return f"pid {parts[1]} on host {parts[0]}" if len(parts) == 3 else owner
+
+
 class CommitConflict(RuntimeError):
     """Another transaction committed the root's next snapshot first;
     nothing of this transaction went live."""
@@ -492,7 +498,10 @@ class ParquetTable:
         be running. One whose claims all name exited processes of this
         host, and that no snapshot names, is taken over: a writer killed
         mid-write blocks no later one. Of two takers, the one that moves
-        the dead claim aside wins."""
+        the dead claim aside wins. A claim of another host's process is
+        always refused, as this host cannot see whether it runs: the
+        error names that host and the directory to delete once its
+        writer is known to be gone."""
         out = self._dir(v)
         mine = os.path.join(out, _CLAIM + _owner())
         try:
@@ -503,9 +512,11 @@ class ParquetTable:
                     f"v{v} of {self.path} was committed after this transaction began"
                 ) from None
             claims = sorted(n for n in os.listdir(out) if n.startswith(_CLAIM))
+            owners = [_describe(n[len(_CLAIM):]) for n in claims]
             in_flight = RuntimeError(
-                f"a write of {self.path} is already in flight: v{v} is claimed "
-                f"by {claims or 'a writer that has not named itself'}"
+                f"a write of {self.path} is already in flight: {out} is claimed "
+                f"by {', '.join(owners) or 'a writer that has not named itself'}; "
+                f"delete {out} once that writer is known to be gone"
             )
             if not claims or not all(_dead(n[len(_CLAIM):]) for n in claims):
                 raise in_flight from None
@@ -729,9 +740,11 @@ class ParquetTable:
         MultipleMatchError; the claim's release then deletes the version.
         The claimed directory is written into, never replaced."""
         out = self._dir(v)
+        before = set(glob.glob(os.path.join(out, "*.parquet")))
         with check_errors_raised():
             df = self._clustered(df, cluster_by, zorder_by, partitions)
             df.write.mode("append").parquet(out)
+        self._drop_empty(sorted(set(glob.glob(os.path.join(out, "*.parquet"))) - before))
         schema = _nullable(df.schema)
         tmp = os.path.join(out, f".{_SCHEMA_FILE}.tmp")
         with open(tmp, "w") as f:
@@ -739,6 +752,22 @@ class ParquetTable:
         os.replace(tmp, os.path.join(out, _SCHEMA_FILE))
         self._schemas[v] = schema
         return out
+
+    @staticmethod
+    def _drop_empty(files: Sequence[str]) -> None:
+        """Delete the 0-row files among *files* (Spark writes one for an
+        empty partition 0 beside the partitions that hold rows), judged by
+        their footers. A write with no row keeps one file, so it still
+        reads back empty with its schema."""
+        import pyarrow.parquet as pq
+
+        empty = [f for f in files if pq.read_metadata(f).num_rows == 0]
+        if len(empty) == len(files):
+            empty = empty[1:]
+        for fname in empty:
+            os.remove(fname)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(os.path.dirname(fname), f".{os.path.basename(fname)}.crc"))
 
     @staticmethod
     def _carry(files: Sequence[str], out: str) -> None:

@@ -83,12 +83,12 @@ _SLOW_TESTS = {
     "test_manifest_links_sample_to_collection",
     "test_kit_enrollment_and_manifest_flows",
     "test_fhir_etl",
-    # sf-fixture fused-curation parity: the committed verify_local
-    # sweeps re-check the same catalog configuration against the oracle
-    # at both SFs; the edge-case fixture parity test stays default
+    # sf-fixture fused-curation parity: tools/verify_local.py re-checks
+    # the same catalog configuration against the oracle at both SFs; the
+    # edge-case fixture parity test stays default
     "test_curate_sampled_exact_fused_parity_sf",
     # index-build-heavy oracle checks; tools/verify_local.py covers the
-    # same queries in every committed sweep
+    # same queries against the same oracles
     "test_query_matches_oracle[ivfpq_adaptive_topk_embeddings]",
     "test_query_matches_oracle[ivfpq_rerank_topk_embeddings]",
     "test_query_matches_oracle[ivfpq_topk_embeddings]",

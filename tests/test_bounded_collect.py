@@ -105,8 +105,7 @@ def test_bounded_collect_reduced_allowance_stays_one_stage(spark, monkeypatch):
     # r14: past the budget, a relation far under its cap must be proven
     # complete by the ONE direct collect (len < allowance ⇒ no partition
     # truncated) — the adjudication stage must not run. This is the kmv
-    # common case the r13 always-two-stage shape taxed (~1.2-1.3x,
-    # CONTROL_r14_touched.md).
+    # common case the r13 always-two-stage shape taxed (~1.2-1.3x).
     from pyspark.sql import DataFrame
 
     def boom(self, *a, **k):

@@ -146,8 +146,7 @@ def test_streaming_vector_ingest_drift_rebuild_lifecycle(spark, tmp_path):
     rebuild then retrains; and the post-rebuild index serves the
     CURRENT corpus with a clean report, served recall healthy on both
     sides of the rebuild, and the ingested duplicates resolving to each
-    other at ~zero distance (the recall-vs-drift measurements live in
-    ANN_RECALL_r11.md's drifted-ingest section)."""
+    other at ~zero distance."""
     import json as _json
 
     from click.testing import CliRunner
@@ -242,9 +241,9 @@ def test_streaming_vector_ingest_drift_rebuild_lifecycle(spark, tmp_path):
     # exact), so the rebuilt quantizer — retrained on a corpus where the
     # blob dominates — may sit a few points either side of the stale
     # one. The lifecycle guarantee pinned here is that serving stays
-    # HEALTHY through every phase; the recall-RECOVERY measurement for a
-    # genuine distribution shift (where stale encoding does hurt) is the
-    # e[0]-split drifted-ingest section of ANN_RECALL_r11.md.
+    # HEALTHY through every phase; recall RECOVERY is measurable only
+    # under a genuine distribution shift (such as an e[0] split), where
+    # stale encoding does hurt.
     assert stale >= 0.85 and rebuilt >= 0.85, (stale, rebuilt)
     served = serve_topk(spark, path, drifted.limit(5), k=1, nprobe=2).collect()
     assert served and all(r.dist <= 1e-4 for r in served)

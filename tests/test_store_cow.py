@@ -10,11 +10,16 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from id3c_spark.operators.merge import merge
 from id3c_spark.sources.store import ParquetTable
+
+
+def _rows(fname):
+    return pq.read_metadata(fname).num_rows
 
 
 def _clustered_publish(spark, tbl, n=100, files=4):
@@ -171,6 +176,19 @@ def test_append_is_file_granular(spark, tmp_path):
     assert all(after2.get(b) == ino for b, ino in before2.items())
     assert tbl.read().filter("k = 1001").collect()[0]["val"] == 2
     assert tbl.read().count() == 102
+    # each appended row lands in one file, with no 0-row file beside it
+    assert [_rows(f) for f in tbl.files() if os.path.basename(f) not in before] == [1, 1]
+    assert 0 not in [_rows(f) for f in tbl.files()]
+    # the same holds for an unclustered publish; a write of no row keeps
+    # one empty file and reads back empty with its schema
+    one = ParquetTable(spark, str(tmp_path / "one"))
+    one.publish(extra)
+    assert [_rows(f) for f in one.files()] == [1]
+    empty = ParquetTable(spark, str(tmp_path / "empty"))
+    empty.publish(extra.limit(0))
+    assert [_rows(f) for f in empty.files()] == [0]
+    assert empty.read().count() == 0
+    assert empty.read().schema.simpleString() == "struct<k:bigint,val:bigint,details:string>"
 
 
 def test_append_schema_evolution_still_rewrites(spark, tmp_path):

@@ -161,7 +161,8 @@ def test_store_takes_over_a_dead_writers_claim(spark, tmp_path):
     """A version claimed by a writer that died mid-write (its claim file
     names an exited process of this host) blocks no later write: the
     next publish takes it over and clears the leftovers. A claim whose
-    owner still runs is refused."""
+    owner still runs, or whose owner is a process of another host, is
+    refused with a message naming the owner's host and the directory."""
     import os
     import socket
     import subprocess
@@ -182,10 +183,15 @@ def test_store_takes_over_a_dead_writers_claim(spark, tmp_path):
     assert [n for n in os.listdir(t._dir(2)) if n.startswith("_claim-")] == [f"_claim-{_owner()}"]
 
     os.mkdir(t._dir(3))
-    open(os.path.join(t._dir(3), f"_claim-{_owner()}"), "w").close()  # a live writer
-    with pytest.raises(RuntimeError, match="already in flight"):
-        t.publish(spark.createDataFrame([(3,)], "x long"))
-    assert t.current_version() == 2
+    for owner, host in ((_owner(), socket.gethostname()), ("db-2.example-1-0", "db-2.example")):
+        claim = os.path.join(t._dir(3), f"_claim-{owner}")
+        open(claim, "w").close()  # a live writer, then one on another host
+        with pytest.raises(RuntimeError, match="already in flight") as err:
+            t.publish(spark.createDataFrame([(3,)], "x long"))
+        assert f"on host {host}" in str(err.value)
+        assert f"delete {t._dir(3)} once" in str(err.value)
+        assert t.current_version() == 2
+        os.remove(claim)
 
 
 def test_cli_upload_and_mint(tmp_path):
@@ -779,9 +785,9 @@ def test_cli_video_decoder_skip_visibility(spark, tmp_path, monkeypatch):
 
 
 def test_cli_explain_plan_facts(spark):
-    """r14 verdict #8: `id3c explain` surfaces the audited plan facts
+    """`id3c explain` surfaces the audited plan facts
     (shuffles/broadcasts/cached/pushed-filters) per catalog query on
-    demand — same computation as the committed plan_audit artifact."""
+    demand."""
     runner = CliRunner()
 
     res = runner.invoke(cli, ["explain", "embedding_dups",

@@ -2,20 +2,16 @@
 Spark and its oracle SQL in DuckDB on the same parquet tables; compare row
 count, column names, and exact values (rows sorted, columns sorted by name).
 
-Usage: python tools/verify_local.py [--json OUT] [sf_dir] [query ...]
-
---json OUT additionally writes a machine-readable record (per-query
-status + which catalog entries sit past the external gate's entry cap) —
-committed per round as VERIFY_LOCAL_r{N}.json so every catalog entry has
-checked-in correctness evidence even when the gate cap drops its tail.
+Usage: python tools/verify_local.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -67,15 +63,10 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 
 def main() -> int:
     args = sys.argv[1:]
-    json_out = None
-    if args and args[0] == "--json":
-        json_out = args[1]
-        args = args[2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     # Lazily generated oracles (VALUES-literal mirrors) must read the same
     # fixture the queries run against.
-    import os
     os.environ["ID3C_ORACLE_SF_DIR"] = sf_dir
     spark = get_spark("verify_local")
     con = duckdb.connect()
@@ -85,7 +76,6 @@ def main() -> int:
     queries = all_queries()
     oracles = all_oracles()
     failures = 0
-    record: dict[str, dict] = {}
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -94,18 +84,15 @@ def main() -> int:
             spdf = sdf.toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
-            record[name] = {"status": "FAIL", "err": f"spark: {e}"}
             failures += 1
             continue
         if name not in oracles:
             print(f"ok   {name}: rows-only, {len(spdf)} rows")
-            record[name] = {"status": "rows-only", "rows": len(spdf)}
             continue
         try:
             dpdf = con.sql(oracles[name]).df()
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {str(e).splitlines()[0]}")
-            record[name] = {"status": "FAIL", "err": f"duckdb: {str(e).splitlines()[0]}"}
             failures += 1
             continue
         problems = compare(name, spdf, dpdf)
@@ -114,27 +101,9 @@ def main() -> int:
             print(f"FAIL {name}: ({len(spdf)} spark rows vs {len(dpdf)} duck rows)")
             for p in problems:
                 print(f"     {p}")
-            record[name] = {"status": "FAIL", "rows": len(spdf), "problems": problems}
         else:
             print(f"PASS {name}: {len(spdf)} rows")
-            record[name] = {"status": "PASS", "rows": len(spdf)}
     spark.stop()
-    if json_out:
-        import json
-
-        from id3c_spark.plans.queries import gate_dropped_queries
-
-        with open(json_out, "w") as f:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "gate_dropped": gate_dropped_queries(),
-                    "results": record,
-                },
-                f,
-                indent=1,
-            )
-        print(f"wrote {json_out}")
     return 1 if failures else 0
 
 

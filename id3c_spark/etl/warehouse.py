@@ -31,7 +31,7 @@ from pyspark.util import inheritable_thread_target
 
 from id3c_spark import schemas
 from id3c_spark.operators.merge import materialise, merge
-from id3c_spark.sources.store import ParquetTable, Snapshots
+from id3c_spark.sources.store import ParquetTable, Snapshots, prune_keys
 
 #: each table's merge key as its upsert_* method matches it: one key, or
 #: alternate keys (a list of column lists)
@@ -125,9 +125,13 @@ class Warehouse:
         range-clusters it on the first match key so later merges prune.
 
         The batch is materialized once (localCheckpoint: it stays
-        distributed; a batch the caller already materialised is reused
-        as is) and that one copy feeds both the prune-key collection and
-        the merge's single write. An empty batch, or one that changes no
+        distributed), and that one pass also observes the prune keys
+        (sources.store.prune_keys), so the merge's single write is the
+        only other Spark job of a small upsert. merge_publish decides the
+        regime: a small batch into small candidate files merges in one
+        task, with no exchange; a larger one runs the distributed plan. A
+        batch the caller already materialised is materialised again only
+        to observe its prune keys. An empty batch, or one that changes no
         row, writes nothing. Returns the table as it now reads.
 
         Raises RuntimeError when another upsert of *name* is in flight:
@@ -135,7 +139,7 @@ class Warehouse:
         timing, so they are refused rather than queued."""
         tbl = self.tables[name]
         with tbl.claim():
-            updates, batch = materialise(updates)
+            updates, batch = materialise(updates, **prune_keys(key_cols, updates.columns))
             if not batch["rows"]:
                 return self.read(name)
             if not tbl.exists():

@@ -29,6 +29,12 @@ job:
      is a projection on matched rows; only rows with non-null incoming
      details reach the pandas UDF.
 
+Steps 1 and 3 take one of two forms. Over a target that is one
+partition (the store's one-task regime, sources/store.py), target and
+updates are unioned into that partition and paired with windows instead
+of joins, so the plan runs in one task with no exchange; otherwise they
+are joined, distributed.
+
 Each step of the plan is built from SQL expression text, so building it
 costs a few py4j round trips per DataFrame step, not one per column
 operation.
@@ -195,6 +201,113 @@ def _fail(msg: str, cols: Sequence[str]) -> str:
     return f"raise_error(concat('{text}', to_json(struct({', '.join(map(_q, cols))}))))"
 
 
+def _cols(names: Sequence[str]) -> str:
+    """*names* as a SQL column list."""
+    return ", ".join(map(_q, names))
+
+
+def _one_task(df: DataFrame) -> bool:
+    """Whether *df* is a ``coalesce(1)``: the store's one-task regime
+    (sources/store.py), whose merge stays in that one task."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.nodeName() == "Repartition" and plan.numPartitions() == 1 and not plan.shuffle()
+
+
+def _match_by_join(t: DataFrame, u: DataFrame, t_keys, u_keys, t_id, counted: bool) -> DataFrame:
+    """Target rows *t* and update rows *u* paired by one full-outer join on
+    the key, or with alternate keys on the target id each update resolves
+    to: every update row joins a per-key (min id, max id) map of the
+    target, and the first key that matched gives ``__rid``. With
+    *counted*, the rows carry the counts the merge checks read: ``__n{i}``
+    update rows per key, ``__nt`` target rows per key (one key) or
+    ``__nr`` update rows per resolved id. Each side's last window is
+    partitioned on the join key, so the join reuses its shuffle."""
+    u_first: list[str] = []
+    u_last, t_last = ["true AS __u"], ["true AS __t"]
+    if len(t_keys) == 1:
+        on = " AND ".join(f"{_q(tc)} = {_q(uc)}" for tc, uc in zip(t_keys[0], u_keys[0]))
+    else:
+        for i, (tk, uk) in enumerate(zip(t_keys, u_keys)):
+            ids = t.filter(f"{_q(tk[0])} IS NOT NULL").groupBy(
+                *[F.col(c).alias(f"__k{i}_{j}") for j, c in enumerate(tk)]
+            ).agg(F.expr(f"min({t_id}) AS __lo{i}"), F.expr(f"max({t_id}) AS __hi{i}"))
+            cond = " AND ".join(f"{_q(c)} = __k{i}_{j}" for j, c in enumerate(uk))
+            u = u.join(ids, F.expr(cond), "left")
+        u_first.append(f"coalesce({', '.join(f'__lo{i}' for i in range(len(t_keys)))}) AS __rid")
+        on = f"{t_id} = __rid"
+    if counted:
+        u_first += [f"count(1) OVER (PARTITION BY {_cols(uk)}) AS __n{i}"
+                    for i, uk in enumerate(u_keys)]
+        if len(t_keys) == 1:
+            t_last.insert(0, f"count(1) OVER (PARTITION BY {_cols(t_keys[0])}) AS __nt")
+        else:
+            u_last.insert(0, "count(1) OVER (PARTITION BY __rid) AS __nr")
+    if u_first:
+        u = u.selectExpr("*", *u_first)
+    return t.selectExpr("*", *t_last).join(u.selectExpr("*", *u_last), F.expr(on), "full_outer")
+
+
+def _match_in_one_task(t: DataFrame, u: DataFrame, t_keys, u_keys, t_id, counted: bool) -> DataFrame:
+    """The rows and counts of :func:`_match_by_join`, from one union of
+    *t* and *u* in one partition, with windows where the join form joins.
+    A one-partition child meets every distribution a window or a
+    generator asks for, so the plan has no exchange whatever Spark
+    estimates the inputs' sizes to be; a join of two one-partition
+    children is reshuffled when an estimate is unknown or large.
+
+    Each window partitions the union on a key, taken from the target's
+    columns on target rows and from the update's on update rows, so a
+    partition holds the target and update rows that would join. A key
+    whose first column is null matches nothing. Update rows take the
+    partition's target rows (``collect_list`` of a struct; an insert
+    keeps a null one) and explode into one row per pair; a target row
+    stays alone when no update row matches it. With alternate keys, the
+    per-key min and max id are windows too, and the pairs are formed on
+    ``__rid``."""
+    rows = t.selectExpr("*", "true AS __t").unionByName(
+        u.selectExpr("*", "true AS __u"), allowMissingColumns=True
+    ).coalesce(1)
+
+    def window(tk, uk) -> tuple[str, str]:
+        """(the window on a key of either side, whether that key can match),
+        from the SQL of the target's and the update's key columns"""
+        key = [f"CASE WHEN __t THEN {a} ELSE {b} END" for a, b in zip(tk, uk)]
+        return f"PARTITION BY {', '.join(key)}", f"{key[0]} IS NOT NULL"
+
+    counts: list[str] = []
+    if len(t_keys) == 1:
+        w, can = window(map(_q, t_keys[0]), map(_q, u_keys[0]))
+        if counted:
+            counts = [f"CASE WHEN __u THEN count(__u) OVER ({w}) END AS __n0",
+                      f"CASE WHEN __u AND {can} THEN count(__t) OVER ({w}) END AS __nt"]
+    else:
+        for i, (tk, uk) in enumerate(zip(t_keys, u_keys)):
+            wi, can = window(map(_q, tk), map(_q, uk))
+            rows = rows.selectExpr(
+                "*",
+                f"CASE WHEN __u AND {can} THEN min({t_id}) OVER ({wi}) END AS __lo{i}",
+                f"CASE WHEN __u AND {can} THEN max({t_id}) OVER ({wi}) END AS __hi{i}",
+                *([f"CASE WHEN __u THEN count(__u) OVER ({wi}) END AS __n{i}"] if counted else []),
+            )
+        rows = rows.selectExpr(
+            "*", f"coalesce({', '.join(f'__lo{i}' for i in range(len(t_keys)))}) AS __rid"
+        )
+        w, can = window([t_id], ["__rid"])
+        if counted:
+            counts = [f"CASE WHEN __u THEN count(__u) OVER ({w}) END AS __nr"]
+    rows = rows.selectExpr(
+        "*", f"CASE WHEN __t THEN struct({_cols([*t.columns, '__t'])}) END AS __ts"
+    ).selectExpr(
+        "*", f"collect_list(__ts) OVER ({w}) AS __tm", f"count(__u) OVER ({w}) AS __nu", *counts
+    )
+    pairs = (f"CASE WHEN __u THEN IF({can} AND size(__tm) > 0, __tm, array(NULL)) "
+             f"WHEN {can} AND __nu > 0 THEN array() ELSE array(__ts) END")
+    keep = [c for c in rows.columns if c not in t.columns and c not in ("__t", "__ts", "__tm", "__nu")]
+    return rows.selectExpr(*map(_q, keep), f"explode({pairs}) AS __tr").selectExpr(
+        "__tr.*", *map(_q, keep)
+    )
+
+
 def merge(
     target: DataFrame,
     updates: DataFrame,
@@ -290,36 +403,15 @@ def merge(
             t_keys[i].append(f"__tk{i}")
             u_keys[i].append(f"__uk{i}")
 
-    def cols(names: Sequence[str]) -> str:
-        return ", ".join(map(_q, names))
-
     t = target.selectExpr(*[f"{_q(c)} AS {tq(c)}" for c in t_cols], *t_pack)
     u = updates.selectExpr(*[f"{_q(c)} AS {uq(c)}" for c in u_cols], *u_pack)
     t_id = tq(id_col) if id_col else None
-    # columns each side adds before the join, one select per list: the
-    # last window of each side is partitioned on the join key, so the join
-    # reuses its shuffle
-    u_first: list[str] = []
-    u_last, t_last = ["true AS __u"], ["true AS __t"]
 
-    # --- 1. resolve every update row to one target row ---------------------
-    if len(alt_keys) == 1:
-        on = " AND ".join(f"{_q(tc)} = {_q(uc)}" for tc, uc in zip(t_keys[0], u_keys[0]))
-    else:
-        los, his = [], []
-        for i, (tk, uk) in enumerate(zip(t_keys, u_keys)):
-            ids = t.filter(f"{_q(tk[0])} IS NOT NULL").groupBy(
-                *[F.col(c).alias(f"__k{i}_{j}") for j, c in enumerate(tk)]
-            ).agg(F.expr(f"min({t_id}) AS __lo{i}"), F.expr(f"max({t_id}) AS __hi{i}"))
-            cond = " AND ".join(f"{_q(c)} = __k{i}_{j}" for j, c in enumerate(uk))
-            u = u.join(ids, F.expr(cond), "left")
-            los.append(f"__lo{i}")
-            his.append(f"__hi{i}")
-        u_first.append(f"coalesce({', '.join(los)}) AS __rid")
-        on = f"{t_id} = __rid"
+    # --- 1./3. pair every update row with the target rows it matches -------
+    match = _match_in_one_task if _one_task(target) else _match_by_join
+    j = match(t, u, t_keys, u_keys, t_id, error_on_multi)
 
     # --- 2. checks, evaluated by whatever action runs the plan -------------
-    check: list[tuple[str, str]] = []
     if error_on_multi:
         # Two update rows carrying the same key would both match one target
         # (or both insert under the same surrogate id). The reference's
@@ -327,36 +419,26 @@ def merge(
         # distributed batch has no order, so refuse instead of guessing —
         # callers that mean last-wins must pre-dedupe with an explicit
         # ordinal (e.g. redcap_det.complete_dets does).
-        for i, keys in enumerate(alt_keys):
-            u_first.append(f"count(1) OVER (PARTITION BY {cols(u_keys[i])}) AS __n{i}")
-            dup = f"__n{i} > 1 AND {_q(u_keys[i][0])} IS NOT NULL"
-            check.append((dup, _fail(f"duplicate update rows for key {keys}: ",
-                                     [f"u_{k}" for k in keys])))
+        check = [
+            (f"__n{i} > 1 AND {_q(u_keys[i][0])} IS NOT NULL",
+             _fail(f"duplicate update rows for key {keys}: ", [f"u_{k}" for k in keys]))
+            for i, keys in enumerate(alt_keys)
+        ]
         multi_fail = _fail("update matched multiple rows: ", [f"u_{k}" for k in all_keys])
         if len(alt_keys) == 1:
-            # the window shares the join's partitioning: no extra shuffle
-            t_last.insert(0, f"count(1) OVER (PARTITION BY {cols(t_keys[0])}) AS __nt")
             check.append(("__u IS NOT NULL AND __nt > 1", multi_fail))
         else:
             # Checked across ALL alternate keys: an update whose identifier
             # matches row A while its collection_identifier matches row B
             # is ambiguous even though resolution only applies it to A.
             multi = " OR ".join(
-                ["false"] + [f"{lo} <> {hi} OR {lo} <> __rid" for lo, hi in zip(los, his)]
+                ["false"] + [f"__lo{i} <> __hi{i} OR __lo{i} <> __rid" for i in range(len(alt_keys))]
             )
-            u_last.insert(0, "count(1) OVER (PARTITION BY __rid) AS __nr")
             check += [
                 (multi, multi_fail),
                 ("__rid IS NOT NULL AND __nr > 1",
                  _fail("update rows resolve to one target row: ", ["__rid"])),
             ]
-
-    if u_first:
-        u = u.selectExpr("*", *u_first)
-
-    # --- 3. one full-outer join on the key or the resolved id -------------
-    j = t.selectExpr("*", *t_last).join(u.selectExpr("*", *u_last), F.expr(on), "full_outer")
-    if check:
         j = j.filter(
             "CASE " + " ".join(f"WHEN {c} THEN {f}" for c, f in check) + " ELSE true END"
         )

@@ -32,8 +32,10 @@ def read_ndjson_receiving(spark: SparkSession, path: str) -> DataFrame:
     ``row_number`` (window keyed by split → parallel across splits, so even
     one huge file fans out), and split-level cumulative offsets come from a
     tiny per-split count aggregate (one row per ~128 MB split) that is
-    collected and broadcast back. Two passes over the text, but both are
-    full-parallel scans; nothing funnels through one partition.
+    collected and looked up in a literal map keyed by (file, split start):
+    no join, so no broadcast, and the frame keeps the text scan's size
+    statistics. Two passes over the text, but both are full-parallel scans;
+    nothing funnels through one partition.
     """
     raw = (
         spark.read.text(path)
@@ -49,23 +51,19 @@ def read_ndjson_receiving(spark: SparkSession, path: str) -> DataFrame:
         ((r["__file"], r["__start"], r["count"])
          for r in raw.groupBy("__file", "__start").count().collect()),
     )
-    offsets, acc = [], 0
+    entries, acc = [], 0
     for file, start, n in splits:
-        offsets.append((file, start, acc))
+        key = F.struct(F.lit(file).alias("__file"), F.lit(start).cast("long").alias("__start"))
+        entries += [key, F.lit(acc).cast("long")]
         acc += n
-    if not offsets:  # empty input: keep the schema without a scan
-        offsets = [("", -1, 0)]
-    offmap = spark.createDataFrame(
-        offsets, "__file string, __start long, __off long"
-    )
+    # empty input: no split to look up, the schema stays
+    offset = (F.create_map(*entries)[F.struct("__file", "__start")] if entries
+              else F.lit(0).cast("long"))
     w = Window.partitionBy("__file", "__start").orderBy("__m")
-    return (
-        raw.join(F.broadcast(offmap), ["__file", "__start"])
-        .select(
-            (F.col("__off") + F.row_number().over(w)).cast("long").alias("id"),
-            F.col("value").alias("document"),
-            F.current_timestamp().alias("received"),
-        )
+    return raw.select(
+        (offset + F.row_number().over(w)).cast("long").alias("id"),
+        F.col("value").alias("document"),
+        F.current_timestamp().alias("received"),
     )
 
 

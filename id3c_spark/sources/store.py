@@ -11,6 +11,14 @@ a failed or rolled-back transaction leaves every table on its old
 version (the reference's "commit nothing on hard error" transaction,
 SURVEY §7.3 item 5). A standalone table is a root with one table.
 
+A MERGE (:meth:`ParquetTable.merge_publish`) runs in one of two regimes,
+decided once per call: a small batch into small candidate files merges
+in one task, with no exchange in its plan (the candidates are read as
+``coalesce(1)`` and the new files sorted within that task); anything
+larger runs the distributed plan and range-partitions its files. Either
+way the batch is materialised once, and that pass observes its rows and
+the keys the merge prunes candidate files on.
+
 On a real cluster, swap ParquetTable for Delta and operators/merge.py
 feeds MERGE INTO unchanged.
 """
@@ -34,7 +42,8 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.operators.merge import MergeResult, check_errors_raised
+from id3c_spark.operators import ann
+from id3c_spark.operators.merge import MergeResult, check_errors_raised, materialise
 
 #: per-version schema record, beside the data files (Spark skips ``_*``)
 _SCHEMA_FILE = "_schema.json"
@@ -318,6 +327,34 @@ def with_zorder_key(
     return df.withColumn(key_col, zorder_key_expr(df, cols, bits))
 
 
+#: distinct batch keys per column that merge_publish prunes files on one
+#: by one; past it, on the batch's key range
+PRUNE_KEYS_CAP = 100_000
+
+
+def _prune_columns(key_cols, columns: Sequence[str]) -> list[str]:
+    """The columns a merge prunes candidate files on: the first column of
+    each alternate key (operators.merge.merge's shape) that the batch
+    carries."""
+    alt_keys = [key_cols] if key_cols and isinstance(key_cols[0], str) else key_cols
+    return sorted({k[0] for k in alt_keys if k and k[0] in columns})
+
+
+def prune_keys(key_cols, columns: Sequence[str]) -> dict[str, Column]:
+    """The aggregates :meth:`ParquetTable.merge_publish` prunes with, named
+    for :func:`operators.merge.materialise`: per prune column, the batch's
+    distinct values (``keys:<column>``), its minimum and its maximum.
+    Observed while the batch is materialised, so they cost no Spark job.
+    The distinct values reach the driver whole (one per batch row at
+    most); past PRUNE_KEYS_CAP of them the merge prunes on the range."""
+    out = {}
+    for c in _prune_columns(key_cols, columns):
+        out[f"keys:{c}"] = F.collect_set(c)
+        out[f"lo:{c}"] = F.min(c)
+        out[f"hi:{c}"] = F.max(c)
+    return out
+
+
 def _nullable(dt: T.DataType) -> T.DataType:
     """*dt* with every field, element and value nullable — the schema
     parquet reads back, whatever the written frame declared."""
@@ -550,7 +587,7 @@ class ParquetTable:
         zorder_by: Sequence[str] | None = None,
     ) -> int:
         """File-granular copy-on-write MERGE: rewrite ONLY the files whose
-        footer min/max key ranges overlap the update batch's key range;
+        footer min/max key ranges admit one of the update batch's keys;
         hard-link every other file unchanged into the new version.
 
         This is the scale fix for the §2.9 write path (reference
@@ -561,7 +598,10 @@ class ParquetTable:
         *key_cols* mirrors operators.merge.merge's alternate-key shape; the
         first column of each alternate key drives pruning (conservative —
         extra candidates are correct, missed ones are not, and footer
-        non-overlap proves no row in the file can match).
+        non-overlap proves no row in the file can match). The batch is
+        materialised once (:func:`operators.merge.materialise`, a no-op
+        for a copy already made with :func:`prune_keys`), which observes
+        its rows and the prune keys, so pruning costs no Spark job.
         *merge_fn* receives the candidate-file rows (never the whole table)
         and returns the MergeResult of merging the batch into exactly those
         rows — operators.merge.merge over the candidates is exact because
@@ -570,67 +610,65 @@ class ParquetTable:
         that changes no row (every match unchanged: a re-run, a batch of
         duplicates) deletes the staged version and writes none — the
         reference's skip of no-op writes (db/__init__.py:213-231) at
-        version granularity.
-        *cluster_by*: range-cluster + sort the rewritten files on these
-        columns so footer ranges stay tight for the NEXT merge.
+        version granularity. An empty batch writes no version and never
+        calls *merge_fn*: the current version number comes back unchanged.
+
+        One regime decision per call. When the batch has at most
+        ``AUTO_SHARD_ROWS`` rows and ``ann.fits_one_task`` passes for the
+        candidate read (listed bytes at most ``AUTO_SHARD_BYTES``; no
+        candidate file passes too), the merge runs in one task: *merge_fn*
+        gets the candidates as ``coalesce(1)``, which operators.merge.merge
+        keeps in that task, and the new files are sorted within it — the
+        batch's checkpoint plus one write job, with no exchange. Otherwise
+        the merge is distributed and the rewritten files range-partitioned.
+        *cluster_by* / *zorder_by*: sort the rewritten files on these
+        columns, or on their Morton key, so footer ranges stay tight for
+        the NEXT merge.
         A merge check that fires while the new version is written raises
-        MultipleMatchError; the version never goes live. An empty batch
-        (the prune-key collect returns no row) writes no version either:
-        the current version number comes back unchanged.
+        MultipleMatchError; the version never goes live.
         """
         if not self.exists():
             raise FileNotFoundError(
                 f"no published version at {self.path}: bootstrap with "
                 "publish() (the target schema is not derivable from updates)"
             )
-        alt_keys: list[list[str]] = (
-            [list(k) for k in key_cols]
-            if key_cols and not isinstance(key_cols[0], str)
-            else [list(key_cols)]
-        )
-        prune_cols = sorted(
-            {k[0] for k in alt_keys if k and k[0] in updates.columns}
-        )
+        updates, batch = materialise(updates, **prune_keys(key_cols, updates.columns))
+        if not batch["rows"]:
+            return self.current_version()
         with self.claim() as v:
             current = self.current_version()
             files = self.files()
             candidates, carried = list(files), []
-            if prune_cols:
-                # Exact per-value pruning when the batch's distinct keys
-                # fit a bounded driver sample (the common ETL-batch ≪ table
-                # case — min/max-range-only pruning dies the moment one
-                # insert key sits past the table's range, stretching the
-                # batch range over every file), collected for every prune
-                # column in ONE action. Past the cap, fall back to range
-                # overlap. A column with no non-null batch key selects no
-                # file.
-                cap = 100_000
-                rows = updates.select(*prune_cols).distinct().limit(cap + 1).collect()
-                if not rows:
-                    return current
-                if len(rows) > cap:
-                    lo_hi = updates.agg(
-                        *[F.min(c) for c in prune_cols], *[F.max(c) for c in prune_cols]
-                    ).collect()[0]
-                    bounds = [
-                        (c, {"lo": lo_hi[i], "hi": lo_hi[len(prune_cols) + i]})
-                        for i, c in enumerate(prune_cols)
-                        if lo_hi[i] is not None
-                    ]
-                else:
-                    bounds = [
-                        (c, {"values": vals})
-                        for i, c in enumerate(prune_cols)
-                        if (vals := sorted({r[i] for r in rows if r[i] is not None}))
-                    ]
-                candidates, carried = [], []
+            columns = _prune_columns(key_cols, updates.columns)
+            if columns:
+                # Exact per-value pruning while a column's distinct batch
+                # keys fit the cap (the common ETL-batch << table case —
+                # min/max-range-only pruning dies the moment one insert key
+                # sits past the table's range, stretching the batch range
+                # over every file); past the cap, range overlap. A column
+                # with no non-null batch key selects no file.
+                bounds = []
+                for c in columns:
+                    keys = batch[f"keys:{c}"]
+                    if len(keys) > PRUNE_KEYS_CAP:
+                        bounds.append((c, {"lo": batch[f"lo:{c}"], "hi": batch[f"hi:{c}"]}))
+                    elif keys:
+                        bounds.append((c, {"values": sorted(keys)}))
+                candidates = []
                 for fname in files:
                     hit = any(_footer_admits(fname, c, **b) for c, b in bounds)
                     (candidates if hit else carried).append(fname)
 
+            target = self._read_files(candidates, self.schema())
+            one_task = batch["rows"] <= ann.AUTO_SHARD_ROWS and (
+                not candidates or ann.fits_one_task(target)
+            )
             changes = Observation()
-            merged = merge_fn(self._read_files(candidates, self.schema())).observe_changes(changes)
-            out = self._write(merged, v, cluster_by, zorder_by)
+            merged = merge_fn(target.coalesce(1) if one_task else target)
+            out = self._write(
+                merged.observe_changes(changes), v, cluster_by, zorder_by,
+                partitions=1 if one_task else None,
+            )
             if not changes.get["changed"]:
                 return current
             self._carry(carried, out)
@@ -708,20 +746,20 @@ class ParquetTable:
         file count (an explicit repartition count opts out of AQE's
         partition coalescing, which would otherwise fold a small table
         into one file and defeat layout tests / incremental compaction
-        targets); None sizes by spark.sql.shuffle.partitions + AQE."""
+        targets); None sizes by spark.sql.shuffle.partitions + AQE. One
+        partition is a ``coalesce(1)`` sorted in its one task: the same
+        file as a range partitioning into one, with no range-sample job
+        and no shuffle."""
+        sort = list(cluster_by or [])
         if zorder_by:
-            df = with_zorder_key(df, zorder_by)
-            args = ([partitions] if partitions else []) + [F.col("_zkey")]
-            return (
-                df.repartitionByRange(*args)
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
-        if cluster_by:
-            args = ([partitions] if partitions else []) + [
-                F.col(c) for c in cluster_by
-            ]
-            return df.repartitionByRange(*args).sortWithinPartitions(*cluster_by)
+            df, sort = with_zorder_key(df, zorder_by), ["_zkey"]
+        if sort:
+            if partitions == 1:
+                df = df.coalesce(1)
+            else:
+                df = df.repartitionByRange(*([partitions] if partitions else []), *sort)
+            df = df.sortWithinPartitions(*sort)
+            return df.drop("_zkey") if zorder_by else df
         if partitions:  # honor an explicit file count even unclustered
             return df.repartition(partitions)
         return df

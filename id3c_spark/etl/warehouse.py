@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from id3c_spark import schemas
+from id3c_spark.operators import ann
 from id3c_spark.operators.merge import materialise, merge
 from id3c_spark.sources.store import ParquetTable, Snapshots, prune_keys
 
@@ -126,32 +127,39 @@ class Warehouse:
 
         The batch is materialized once (localCheckpoint: it stays
         distributed), and that one pass also observes the prune keys
-        (sources.store.prune_keys), so the merge's single write is the
-        only other Spark job of a small upsert. merge_publish decides the
-        regime: a small batch into small candidate files merges in one
-        task, with no exchange; a larger one runs the distributed plan. A
-        batch the caller already materialised is materialised again only
-        to observe its prune keys. An empty batch, or one that changes no
-        row, writes nothing. Returns the table as it now reads.
+        (sources.store.prune_keys; not for the bootstrap, which prunes
+        nothing), so the merge's single write is the only other Spark job
+        of a small upsert. merge_publish decides the regime: a small batch
+        into small candidate files merges in one task, with no exchange; a
+        larger one runs the distributed plan. The merge reads a batch of
+        at most ``AUTO_SHARD_ROWS`` rows as one partition, so that in the
+        one-task regime it shares the candidates' task. A batch the caller
+        already materialised is materialised again only to observe its
+        prune keys. An empty batch, or one that changes no row, writes
+        nothing. Returns the table as it now reads.
 
         Raises RuntimeError when another upsert of *name* is in flight:
         the order of two writes to one table must not depend on thread
         timing, so they are refused rather than queued."""
         tbl = self.tables[name]
         with tbl.claim():
-            updates, batch = materialise(updates, **prune_keys(key_cols, updates.columns))
+            exists = tbl.exists()
+            updates, batch = materialise(
+                updates, **(prune_keys(key_cols, updates.columns) if exists else {})
+            )
             if not batch["rows"]:
                 return self.read(name)
-            if not tbl.exists():
+            if not exists:
                 base = self.spark.createDataFrame([], schemas.WAREHOUSE_SCHEMAS[name])
                 tbl.publish(
                     merge(base, updates, key_cols, id_col, **merge_kw).df,
                     cluster_by=cluster_key(key_cols),
                 )
             else:
+                small = updates.coalesce(1) if batch["rows"] <= ann.AUTO_SHARD_ROWS else updates
                 tbl.merge_publish(
                     updates, key_cols,
-                    lambda target: merge(target, updates, key_cols, id_col, **merge_kw),
+                    lambda target: merge(target, small, key_cols, id_col, **merge_kw),
                     cluster_by=cluster_key(key_cols),
                 )
             return self.read(name)

@@ -8,20 +8,21 @@ lib/id3c/cli/command/etl/__init__.py:66-649 the upsert_* family).
 Here the whole batch is ONE lazy plan, and building it launches no Spark
 job:
 
-  1. every update row resolves to one target row: a single key is joined
-     on directly; with alternate keys (``identifier``, then
+  1. every update row resolves to one target row: a single key matches
+     directly; with alternate keys (``identifier``, then
      ``collection_identifier`` on the residue — db/__init__.py:232-235)
-     each key joins a per-key (min id, max id) map of the target, and the
-     first key that matched gives the target id;
+     each key finds the (min id, max id) of the target rows carrying it,
+     and the first key that matched gives the target id;
   2. the checks — multi-match (db/__init__.py:316-318 "more than one
      match"), duplicate update keys, two update rows resolving to one
      target row — are ``raise_error`` filters inside the plan. They fire
      when the plan runs, so the store's write paths re-raise them as
      :class:`MultipleMatchError` (see :func:`check_errors_raised`) before
      the new version goes live;
-  3. one full-outer join of target and updates on that key or id feeds one
-     branch-selecting projection: untouched target rows, inserts with
-     deterministic surrogate keys, updated rows and unchanged matches;
+  3. target and update rows paired on that key or id, as a full-outer
+     join would pair them, feed one branch-selecting projection:
+     untouched target rows, inserts with deterministic surrogate keys,
+     updated rows and unchanged matches;
   4. skip-no-op-write change detection (``row(...)::text !=`` idiom,
      db/__init__.py:213-231) as a null-safe comparison — matched rows that
      did not change pass through untouched;
@@ -29,11 +30,10 @@ job:
      is a projection on matched rows; only rows with non-null incoming
      details reach the pandas UDF.
 
-Steps 1 and 3 take one of two forms. Over a target that is one
-partition (the store's one-task regime, sources/store.py), target and
-updates are unioned into that partition and paired with windows instead
-of joins, so the plan runs in one task with no exchange; otherwise they
-are joined, distributed.
+Steps 1 and 3 pair the rows with windows over one union of target and
+updates, not with joins: distributed, each window key shuffles the union
+once; given two one-partition inputs (the store's one-task regime,
+sources/store.py), the plan runs in one task with no exchange.
 
 Each step of the plan is built from SQL expression text, so building it
 costs a few py4j round trips per DataFrame step, not one per column
@@ -116,12 +116,17 @@ def check_errors_raised():
         raise _ERRORS[m.group(1)](msg) from e
 
 
+#: a column :func:`materialise`'s metrics may read: each row's ordinal
+#: within its task (0, 1, ...), so a metric can bound what one task adds
+TASK_ROW = "__task_row"
+
+
 def materialise(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     """Compute *df* once and keep the result (``localCheckpoint``: the
     copy stays on the executors), re-raising any in-plan check it carries
     as its typed error. Returns the copy and its ``rows`` plus *metrics*
-    (named aggregate columns), both observed while the copy is written,
-    so they cost no extra Spark job.
+    (named aggregate columns, which may read :data:`TASK_ROW`), both
+    observed while the copy is written, so they cost no extra Spark job.
 
     Idempotent: given a copy it produced, it returns that copy and the
     counts it recorded, with no Spark job, unless *metrics* names a
@@ -131,9 +136,10 @@ def materialise(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     if done is not None and metrics.keys() <= done.keys():
         return df, done
     obs = Observation()
-    observed = df.observe(
+    # the low 33 bits of monotonically_increasing_id count a task's rows
+    observed = df.withColumn(TASK_ROW, F.monotonically_increasing_id() % (1 << 33)).observe(
         obs, F.count(F.lit(1)).alias("rows"), *[c.alias(k) for k, c in metrics.items()]
-    )
+    ).drop(TASK_ROW)
     with check_errors_raised():
         copy = observed.localCheckpoint()
     counts = obs.get
@@ -206,67 +212,34 @@ def _cols(names: Sequence[str]) -> str:
     return ", ".join(map(_q, names))
 
 
-def _one_task(df: DataFrame) -> bool:
-    """Whether *df* is a ``coalesce(1)``: the store's one-task regime
-    (sources/store.py), whose merge stays in that one task."""
-    plan = df._jdf.queryExecution().logical()
-    return plan.nodeName() == "Repartition" and plan.numPartitions() == 1 and not plan.shuffle()
+def _match(t: DataFrame, u: DataFrame, t_keys, u_keys, t_id, counted: bool) -> DataFrame:
+    """Target rows *t* paired with the update rows *u* that match them,
+    as a full-outer join on the key would pair them: one row per matching
+    (target, update) pair, a lone row for a target or update row that
+    matches nothing, ``__t`` / ``__u`` true on the side a row has. With
+    alternate keys, an update pairs with the target id it resolves to
+    (``__rid``): the per-key min and max target id, ``__lo{i}`` and
+    ``__hi{i}``, and the first key that matched gives it. With *counted*,
+    update rows carry the counts the merge checks read: ``__n{i}`` update
+    rows per key, and ``__nt`` target rows per key (one key) or ``__nr``
+    update rows per resolved id (alternate keys).
 
-
-def _match_by_join(t: DataFrame, u: DataFrame, t_keys, u_keys, t_id, counted: bool) -> DataFrame:
-    """Target rows *t* and update rows *u* paired by one full-outer join on
-    the key, or with alternate keys on the target id each update resolves
-    to: every update row joins a per-key (min id, max id) map of the
-    target, and the first key that matched gives ``__rid``. With
-    *counted*, the rows carry the counts the merge checks read: ``__n{i}``
-    update rows per key, ``__nt`` target rows per key (one key) or
-    ``__nr`` update rows per resolved id. Each side's last window is
-    partitioned on the join key, so the join reuses its shuffle."""
-    u_first: list[str] = []
-    u_last, t_last = ["true AS __u"], ["true AS __t"]
-    if len(t_keys) == 1:
-        on = " AND ".join(f"{_q(tc)} = {_q(uc)}" for tc, uc in zip(t_keys[0], u_keys[0]))
-    else:
-        for i, (tk, uk) in enumerate(zip(t_keys, u_keys)):
-            ids = t.filter(f"{_q(tk[0])} IS NOT NULL").groupBy(
-                *[F.col(c).alias(f"__k{i}_{j}") for j, c in enumerate(tk)]
-            ).agg(F.expr(f"min({t_id}) AS __lo{i}"), F.expr(f"max({t_id}) AS __hi{i}"))
-            cond = " AND ".join(f"{_q(c)} = __k{i}_{j}" for j, c in enumerate(uk))
-            u = u.join(ids, F.expr(cond), "left")
-        u_first.append(f"coalesce({', '.join(f'__lo{i}' for i in range(len(t_keys)))}) AS __rid")
-        on = f"{t_id} = __rid"
-    if counted:
-        u_first += [f"count(1) OVER (PARTITION BY {_cols(uk)}) AS __n{i}"
-                    for i, uk in enumerate(u_keys)]
-        if len(t_keys) == 1:
-            t_last.insert(0, f"count(1) OVER (PARTITION BY {_cols(t_keys[0])}) AS __nt")
-        else:
-            u_last.insert(0, "count(1) OVER (PARTITION BY __rid) AS __nr")
-    if u_first:
-        u = u.selectExpr("*", *u_first)
-    return t.selectExpr("*", *t_last).join(u.selectExpr("*", *u_last), F.expr(on), "full_outer")
-
-
-def _match_in_one_task(t: DataFrame, u: DataFrame, t_keys, u_keys, t_id, counted: bool) -> DataFrame:
-    """The rows and counts of :func:`_match_by_join`, from one union of
-    *t* and *u* in one partition, with windows where the join form joins.
-    A one-partition child meets every distribution a window or a
-    generator asks for, so the plan has no exchange whatever Spark
-    estimates the inputs' sizes to be; a join of two one-partition
-    children is reshuffled when an estimate is unknown or large.
-
+    Built from one union of *t* and *u* and windows instead of joins.
     Each window partitions the union on a key, taken from the target's
     columns on target rows and from the update's on update rows, so a
-    partition holds the target and update rows that would join. A key
-    whose first column is null matches nothing. Update rows take the
-    partition's target rows (``collect_list`` of a struct; an insert
-    keeps a null one) and explode into one row per pair; a target row
-    stays alone when no update row matches it. With alternate keys, the
-    per-key min and max id are windows too, and the pairs are formed on
-    ``__rid``."""
+    window partition holds the target and update rows that would join. A
+    key whose first column is null matches nothing. Update rows take the
+    partition's matchable target rows (``collect_list`` of a struct; an
+    insert keeps a null one) and explode into one row per pair; a target
+    row stays alone when no update row matches it. The windows meet any
+    partitioning of the union: distributed, each window key shuffles it
+    once; over two one-partition inputs the union is one partition too,
+    and the whole match runs in its task with no exchange, whatever Spark
+    estimates the inputs' sizes to be (it reshuffles a join of two
+    one-partition children when an estimate is unknown or large)."""
     rows = t.selectExpr("*", "true AS __t").unionByName(
         u.selectExpr("*", "true AS __u"), allowMissingColumns=True
-    ).coalesce(1)
+    )
 
     def window(tk, uk) -> tuple[str, str]:
         """(the window on a key of either side, whether that key can match),
@@ -295,14 +268,16 @@ def _match_in_one_task(t: DataFrame, u: DataFrame, t_keys, u_keys, t_id, counted
         w, can = window([t_id], ["__rid"])
         if counted:
             counts = [f"CASE WHEN __u THEN count(__u) OVER ({w}) END AS __nr"]
+    # only matchable target rows are collected: a null-key partition
+    # holds no pair, however many target rows it has
+    ts = f"struct({_cols([*t.columns, '__t'])})"
     rows = rows.selectExpr(
-        "*", f"CASE WHEN __t THEN struct({_cols([*t.columns, '__t'])}) END AS __ts"
-    ).selectExpr(
-        "*", f"collect_list(__ts) OVER ({w}) AS __tm", f"count(__u) OVER ({w}) AS __nu", *counts
+        "*", f"collect_list(CASE WHEN __t AND {can} THEN {ts} END) OVER ({w}) AS __tm",
+        f"count(__u) OVER ({w}) AS __nu", *counts,
     )
     pairs = (f"CASE WHEN __u THEN IF({can} AND size(__tm) > 0, __tm, array(NULL)) "
-             f"WHEN {can} AND __nu > 0 THEN array() ELSE array(__ts) END")
-    keep = [c for c in rows.columns if c not in t.columns and c not in ("__t", "__ts", "__tm", "__nu")]
+             f"WHEN {can} AND __nu > 0 THEN array() ELSE array({ts}) END")
+    keep = [c for c in rows.columns if c not in t.columns and c not in ("__t", "__tm", "__nu")]
     return rows.selectExpr(*map(_q, keep), f"explode({pairs}) AS __tr").selectExpr(
         "__tr.*", *map(_q, keep)
     )
@@ -389,9 +364,8 @@ def merge(
         return _q(f"u_{c}")
 
     # Each key matches on its first column and, for a composite key, one
-    # struct of the later columns: struct equality holds between null
-    # fields, and plain column equality keeps the join an equi-join whose
-    # shuffle the windows partitioned on the same columns share.
+    # struct of the later columns: a window partition groups null fields
+    # together, so a null key part still matches its twin.
     t_pack, u_pack, t_keys, u_keys = [], [], [], []
     for i, (first, *rest) in enumerate(alt_keys):
         t_keys.append([f"t_{first}"])
@@ -408,8 +382,7 @@ def merge(
     t_id = tq(id_col) if id_col else None
 
     # --- 1./3. pair every update row with the target rows it matches -------
-    match = _match_in_one_task if _one_task(target) else _match_by_join
-    j = match(t, u, t_keys, u_keys, t_id, error_on_multi)
+    j = _match(t, u, t_keys, u_keys, t_id, error_on_multi)
 
     # --- 2. checks, evaluated by whatever action runs the plan -------------
     if error_on_multi:

@@ -14,6 +14,7 @@
 
 from __future__ import annotations
 
+import json
 import zipfile
 import xml.etree.ElementTree as ET
 
@@ -32,9 +33,9 @@ def read_ndjson_receiving(spark: SparkSession, path: str) -> DataFrame:
     ``row_number`` (window keyed by split → parallel across splits, so even
     one huge file fans out), and split-level cumulative offsets come from a
     tiny per-split count aggregate (one row per ~128 MB split) that is
-    collected and looked up in a literal map keyed by (file, split start):
-    no join, so no broadcast, and the frame keeps the text scan's size
-    statistics. Two passes over the text, but both are full-parallel scans;
+    collected and broadcast back, built from one JSON literal, so a split
+    finds its offset by a hash lookup and the frame's size estimate stays
+    known. Two passes over the text, but both are full-parallel scans;
     nothing funnels through one partition.
     """
     raw = (
@@ -51,19 +52,25 @@ def read_ndjson_receiving(spark: SparkSession, path: str) -> DataFrame:
         ((r["__file"], r["__start"], r["count"])
          for r in raw.groupBy("__file", "__start").count().collect()),
     )
-    entries, acc = [], 0
+    offsets, acc = [], 0
     for file, start, n in splits:
-        key = F.struct(F.lit(file).alias("__file"), F.lit(start).cast("long").alias("__start"))
-        entries += [key, F.lit(acc).cast("long")]
+        offsets.append({"__file": file, "__start": start, "__off": acc})
         acc += n
-    # empty input: no split to look up, the schema stays
-    offset = (F.create_map(*entries)[F.struct("__file", "__start")] if entries
-              else F.lit(0).cast("long"))
+    # the rows of one JSON literal: built in one call whatever the split
+    # count, with a size estimate (empty input: no row, same schema)
+    offmap = spark.sql(
+        "SELECT inline(from_json(:offsets, "
+        "'array<struct<__file: string, __start: long, __off: long>>'))",
+        args={"offsets": json.dumps(offsets)},
+    )
     w = Window.partitionBy("__file", "__start").orderBy("__m")
-    return raw.select(
-        (offset + F.row_number().over(w)).cast("long").alias("id"),
-        F.col("value").alias("document"),
-        F.current_timestamp().alias("received"),
+    return (
+        raw.join(F.broadcast(offmap), ["__file", "__start"])
+        .select(
+            (F.col("__off") + F.row_number().over(w)).cast("long").alias("id"),
+            F.col("value").alias("document"),
+            F.current_timestamp().alias("received"),
+        )
     )
 
 

@@ -14,7 +14,7 @@ SURVEY §7.3 item 5). A standalone table is a root with one table.
 A MERGE (:meth:`ParquetTable.merge_publish`) runs in one of two regimes,
 decided once per call: a small batch into small candidate files merges
 in one task, with no exchange in its plan (the candidates are read as
-``coalesce(1)`` and the new files sorted within that task); anything
+``coalesce(1)`` and the new file sorted within that task); anything
 larger runs the distributed plan and range-partitions its files. Either
 way the batch is materialised once, and that pass observes its rows and
 the keys the merge prunes candidate files on.
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from id3c_spark.operators import ann
-from id3c_spark.operators.merge import MergeResult, check_errors_raised, materialise
+from id3c_spark.operators.merge import TASK_ROW, MergeResult, check_errors_raised, materialise
 
 #: per-version schema record, beside the data files (Spark skips ``_*``)
 _SCHEMA_FILE = "_schema.json"
@@ -343,13 +343,17 @@ def _prune_columns(key_cols, columns: Sequence[str]) -> list[str]:
 def prune_keys(key_cols, columns: Sequence[str]) -> dict[str, Column]:
     """The aggregates :meth:`ParquetTable.merge_publish` prunes with, named
     for :func:`operators.merge.materialise`: per prune column, the batch's
-    distinct values (``keys:<column>``), its minimum and its maximum.
-    Observed while the batch is materialised, so they cost no Spark job.
-    The distinct values reach the driver whole (one per batch row at
-    most); past PRUNE_KEYS_CAP of them the merge prunes on the range."""
+    minimum and maximum and its distinct values (``keys:<column>``) among
+    the first PRUNE_KEYS_CAP rows of each task. Observed while the batch
+    is materialised, so they cost no Spark job, and the driver receives
+    at most PRUNE_KEYS_CAP values per column from each task. The values
+    are the batch's whole key set when it has at most PRUNE_KEYS_CAP rows;
+    for a larger batch merge_publish counts its keys with a capped
+    collect instead."""
+    first = F.col(TASK_ROW) < PRUNE_KEYS_CAP
     out = {}
     for c in _prune_columns(key_cols, columns):
-        out[f"keys:{c}"] = F.collect_set(c)
+        out[f"keys:{c}"] = F.collect_set(F.when(first, F.col(c)))
         out[f"lo:{c}"] = F.min(c)
         out[f"hi:{c}"] = F.max(c)
     return out
@@ -601,7 +605,8 @@ class ParquetTable:
         non-overlap proves no row in the file can match). The batch is
         materialised once (:func:`operators.merge.materialise`, a no-op
         for a copy already made with :func:`prune_keys`), which observes
-        its rows and the prune keys, so pruning costs no Spark job.
+        its rows and the prune keys, so pruning a batch of at most
+        PRUNE_KEYS_CAP rows costs no Spark job.
         *merge_fn* receives the candidate-file rows (never the whole table)
         and returns the MergeResult of merging the batch into exactly those
         rows — operators.merge.merge over the candidates is exact because
@@ -617,10 +622,11 @@ class ParquetTable:
         ``AUTO_SHARD_ROWS`` rows and ``ann.fits_one_task`` passes for the
         candidate read (listed bytes at most ``AUTO_SHARD_BYTES``; no
         candidate file passes too), the merge runs in one task: *merge_fn*
-        gets the candidates as ``coalesce(1)``, which operators.merge.merge
-        keeps in that task, and the new files are sorted within it — the
-        batch's checkpoint plus one write job, with no exchange. Otherwise
-        the merge is distributed and the rewritten files range-partitioned.
+        gets the candidates as ``coalesce(1)`` and the new file is sorted
+        in that task. A *merge_fn* that reads its batch as one partition
+        too (Warehouse.upsert does) merges with no exchange: the batch's
+        checkpoint plus one write job. Otherwise the merge is distributed
+        and the rewritten files range-partitioned.
         *cluster_by* / *zorder_by*: sort the rewritten files on these
         columns, or on their Morton key, so footer ranges stay tight for
         the NEXT merge.
@@ -641,19 +647,25 @@ class ParquetTable:
             candidates, carried = list(files), []
             columns = _prune_columns(key_cols, updates.columns)
             if columns:
-                # Exact per-value pruning while a column's distinct batch
-                # keys fit the cap (the common ETL-batch << table case —
+                # Exact per-value pruning while the batch's distinct keys
+                # fit the cap (the common ETL-batch << table case —
                 # min/max-range-only pruning dies the moment one insert key
                 # sits past the table's range, stretching the batch range
                 # over every file); past the cap, range overlap. A column
                 # with no non-null batch key selects no file.
+                keys = {c: batch[f"keys:{c}"] for c in columns}
+                if batch["rows"] > PRUNE_KEYS_CAP:
+                    # the observed sets hold only each task's first rows
+                    rows = updates.select(*columns).distinct().limit(PRUNE_KEYS_CAP + 1).collect()
+                    keys = ({c: {r[i] for r in rows} - {None} for i, c in enumerate(columns)}
+                            if len(rows) <= PRUNE_KEYS_CAP else {})
                 bounds = []
                 for c in columns:
-                    keys = batch[f"keys:{c}"]
-                    if len(keys) > PRUNE_KEYS_CAP:
-                        bounds.append((c, {"lo": batch[f"lo:{c}"], "hi": batch[f"hi:{c}"]}))
-                    elif keys:
-                        bounds.append((c, {"values": sorted(keys)}))
+                    if c not in keys:
+                        if batch[f"lo:{c}"] is not None:
+                            bounds.append((c, {"lo": batch[f"lo:{c}"], "hi": batch[f"hi:{c}"]}))
+                    elif keys[c]:
+                        bounds.append((c, {"values": sorted(keys[c])}))
                 candidates = []
                 for fname in files:
                     hit = any(_footer_admits(fname, c, **b) for c, b in bounds)
@@ -664,11 +676,16 @@ class ParquetTable:
                 not candidates or ann.fits_one_task(target)
             )
             changes = Observation()
-            merged = merge_fn(target.coalesce(1) if one_task else target)
-            out = self._write(
-                merged.observe_changes(changes), v, cluster_by, zorder_by,
-                partitions=1 if one_task else None,
-            )
+            merged = merge_fn(target.coalesce(1) if one_task else target).observe_changes(changes)
+            if one_task:
+                # one partition already when the batch was too (a coalesce
+                # of one partition is free): sort it in its task, with no
+                # range-sample job and no shuffle
+                sort = ["_zkey"] if zorder_by else list(cluster_by or [])
+                merged = (with_zorder_key(merged, zorder_by) if zorder_by else merged).coalesce(1)
+                merged = merged.sortWithinPartitions(*sort).drop("_zkey") if sort else merged
+                cluster_by = zorder_by = None
+            out = self._write(merged, v, cluster_by, zorder_by)
             if not changes.get["changed"]:
                 return current
             self._carry(carried, out)
@@ -746,20 +763,20 @@ class ParquetTable:
         file count (an explicit repartition count opts out of AQE's
         partition coalescing, which would otherwise fold a small table
         into one file and defeat layout tests / incremental compaction
-        targets); None sizes by spark.sql.shuffle.partitions + AQE. One
-        partition is a ``coalesce(1)`` sorted in its one task: the same
-        file as a range partitioning into one, with no range-sample job
-        and no shuffle."""
-        sort = list(cluster_by or [])
+        targets); None sizes by spark.sql.shuffle.partitions + AQE."""
         if zorder_by:
-            df, sort = with_zorder_key(df, zorder_by), ["_zkey"]
-        if sort:
-            if partitions == 1:
-                df = df.coalesce(1)
-            else:
-                df = df.repartitionByRange(*([partitions] if partitions else []), *sort)
-            df = df.sortWithinPartitions(*sort)
-            return df.drop("_zkey") if zorder_by else df
+            df = with_zorder_key(df, zorder_by)
+            args = ([partitions] if partitions else []) + [F.col("_zkey")]
+            return (
+                df.repartitionByRange(*args)
+                .sortWithinPartitions("_zkey")
+                .drop("_zkey")
+            )
+        if cluster_by:
+            args = ([partitions] if partitions else []) + [
+                F.col(c) for c in cluster_by
+            ]
+            return df.repartitionByRange(*args).sortWithinPartitions(*cluster_by)
         if partitions:  # honor an explicit file count even unclustered
             return df.repartition(partitions)
         return df

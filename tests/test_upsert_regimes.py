@@ -7,12 +7,17 @@ forces each. For the four upsert shapes — one key with ``details``
 keys (sample) and find-or-create (site) — both regimes must write equal
 tables, refuse a duplicate-key batch alike and write no version for an
 unchanged re-run. A one-task write must plan no exchange.
+
+A batch with more rows than the store's PRUNE_KEYS_CAP still prunes
+candidate files: per value while its distinct keys fit the cap, on its
+key range past it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 
@@ -58,9 +63,12 @@ SHAPES = {
 }
 
 
+def table_rows_of(df) -> list[str]:
+    return sorted(json.dumps(r.asDict(), sort_keys=True, default=str) for r in df.collect())
+
+
 def table_rows(wh: Warehouse, name: str) -> list[str]:
-    return sorted(json.dumps(r.asDict(), sort_keys=True, default=str)
-                  for r in wh.read(name).collect())
+    return table_rows_of(wh.read(name))
 
 
 @pytest.mark.parametrize("name", sorted(SHAPES))
@@ -109,3 +117,29 @@ def test_upsert_regimes_agree(spark, tmp_path, regime, monkeypatch, name):
 
     assert outcomes[True] == outcomes[False]
     assert (outcomes[True][1] is None) == (name == "site")
+
+
+@pytest.mark.parametrize("cap, rewritten", [(100_000, 2), (2, 4)])
+def test_batch_past_the_prune_cap_prunes_on_its_range(spark, tmp_path, monkeypatch, cap, rewritten):
+    """Keys 2, 3 and 99 sit in the first and last of four files. Within
+    PRUNE_KEYS_CAP the observed keys prune per value (2 files rewritten);
+    a batch with more rows than the cap is counted by a capped collect,
+    and past the cap it prunes on its key range [2, 99] (all 4)."""
+    from pyspark.sql import functions as F
+
+    from id3c_spark.operators.merge import merge
+    from id3c_spark.sources import store
+
+    monkeypatch.setattr(store, "PRUNE_KEYS_CAP", cap)
+    tbl = store.ParquetTable(spark, str(tmp_path / "t"))
+    tbl.publish(spark.range(1, 101).select(F.col("id").alias("k"), (F.col("id") * 10).alias("val")),
+                cluster_by=["k"], partitions=4)
+    before = {os.path.basename(f): os.stat(f).st_ino for f in tbl.files()}
+    assert len(before) == 4
+    updates = spark.createDataFrame([(2, 1), (3, 1), (99, 1)], "k long, val long")
+    expected = table_rows_of(merge(tbl.read(), updates, ["k"], "k").df)
+
+    tbl.merge_publish(updates, ["k"], lambda t: merge(t, updates, ["k"], "k"), cluster_by=["k"])
+    after = {os.path.basename(f): os.stat(f).st_ino for f in tbl.files()}
+    assert sum(after.get(b) != ino for b, ino in before.items()) == rewritten
+    assert table_rows_of(tbl.read()) == expected

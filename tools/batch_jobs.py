@@ -16,7 +16,6 @@ Run from the root of a checkout (a few GB of memory, about a minute on
 4 cores):
 
     python3 tools/batch_jobs.py --seed 502
-    python3 tools/batch_jobs.py --seed 502 --json   # one JSON line instead
 
 The perfbench modules are imported, not changed. Planning each written
 plan again to count its exchanges costs driver time; it is left out of
@@ -174,17 +173,13 @@ def report(out: dict) -> None:
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--json", action="store_true", help="print one JSON line")
     args = ap.parse_args(argv)
     work = tempfile.mkdtemp(prefix="batch_jobs-")
     try:
         out = measure(args.seed, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    if args.json:
-        print(json.dumps(out, sort_keys=True))
-    else:
-        report(out)
+    report(out)
     return 0 if out["correct"] else 1
 
 

@@ -35,8 +35,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse, concurrently, transactional
+from id3c_spark.etl.warehouse import MERGE_KEYS, Warehouse, concurrently, transactional
 from id3c_spark.operators.merge import checks, materialise
+from id3c_spark.sources.store import prune_keys
 
 KNOWN_VERSIONS = {"1.0.0", "1.1.0"}   # enrollments.py:89-92
 AGE_CAP_MONTHS = 90 * 12              # min(ceil(age), 90) etl/__init__.py:313-329
@@ -269,7 +270,7 @@ def run(
         rel_map = F.create_map(
             *[F.lit(x) for kv in LOCATION_RELATION.items() for x in kv]
         )
-        el_rows, el = materialise(
+        el_rows = (
             with_tract.join(F.broadcast(addr_ids), "address_identifier", "left")
             .join(encounter_ids, "encounter_identifier")
             .select(
@@ -282,6 +283,10 @@ def run(
             .groupBy("encounter_id", "relation")
             .agg(F.min("location_id").alias("location_id"))
             .withColumn("details", F.lit(None).cast("string"))
+        )
+        # observe the prune keys here, so that Warehouse.upsert reuses this copy
+        el_rows, el = materialise(
+            el_rows, **prune_keys(MERGE_KEYS["encounter_location"], el_rows.columns)
         )
         warehouse.upsert_encounter_location(el_rows)
         return el["rows"]

@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from id3c_spark.etl.warehouse import Warehouse, transactional
+from id3c_spark.etl.warehouse import MERGE_KEYS, Warehouse, transactional
 from id3c_spark.operators.merge import materialise
+from id3c_spark.sources.store import prune_keys
 
 AGE_CAP_MONTHS = 90 * 12
 
@@ -415,7 +416,7 @@ def run(
         F.col("identifier").alias("own_address"),
         F.col("location_id").alias("address_location_id"),
     )
-    el_rows, el = materialise(
+    el_rows = (
         with_tract.join(F.broadcast(addr_ids), "own_address", "left")
         .join(encounters.select(F.col("identifier").alias("encounter_identifier"),
                                 "encounter_id"),
@@ -429,6 +430,10 @@ def run(
         .groupBy("encounter_id", "relation")
         .agg(F.min("location_id").alias("location_id"))
         .withColumn("details", F.lit(None).cast("string"))
+    )
+    # observe the prune keys here, so that Warehouse.upsert reuses this copy
+    el_rows, el = materialise(
+        el_rows, **prune_keys(MERGE_KEYS["encounter_location"], el_rows.columns)
     )
     warehouse.upsert_encounter_location(el_rows)
 

@@ -64,16 +64,12 @@ def citext_eq(a: Column, b: Column) -> Column:
 
 
 def iso_week_label(ts: Column) -> Column:
-    """Postgres to_char(x, 'IYYY-"W"IW') — e.g. '2020-W01'.
-
-    ISO year = calendar year of the Thursday in the same ISO week; Spark's
-    weekofyear() is already ISO week number.
-    """
+    """Postgres to_char(x, 'IYYY-"W"IW') — e.g. '2020-W01': Spark's
+    YEAROFWEEK is the ISO week-numbering year and weekofyear() the ISO
+    week (plans/shipping.py spells the same label in SQL)."""
     d = F.to_date(ts)
-    iso_dow = ((F.dayofweek(d) + 5) % 7) + 1          # Mon=1 .. Sun=7
-    thursday = F.date_add(d, 4 - iso_dow)
     return F.concat(
-        F.year(thursday).cast("string"),
+        F.extract(F.lit("YEAROFWEEK"), d).cast("string"),
         F.lit("-W"),
         F.lpad(F.weekofyear(d).cast("string"), 2, "0"),
     )

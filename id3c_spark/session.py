@@ -66,6 +66,13 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # A join whose children each run as one partition stays in their
+        # task only if each child's size estimate is at most this bound
+        # (EnsureRequirements); a join's estimate is the product of its
+        # inputs', so the 128 MB default reshuffles a one-task shipping
+        # view (plans/shipping.py) after its first join. Whether a plan
+        # runs as one partition is decided by its hints, not here.
+        .config("spark.sql.maxSinglePartitionBytes", str(2**63 - 1))
         # The driver's events.parquet uses TIMESTAMP(NANOS), which the
         # vectorized reader rejects; read as long and convert (see
         # read_table) — truncation to micros matches DuckDB's semantics.

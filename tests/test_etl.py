@@ -323,7 +323,8 @@ def test_shipping_views_vs_oracle(spark, warehouse, identifiers, tmp_path):
     run_pipeline(spark, warehouse, identifiers)
 
     frames = {n: warehouse.read(n) for n in ("sample", "presence_absence", "target",
-                                             "encounter", "individual", "site")}
+                                             "encounter", "individual", "site",
+                                             "encounter_location", "location")}
     shipping.create_views(spark, frames)
 
     out = str(tmp_path / "wh_parquet")
@@ -361,6 +362,28 @@ def test_shipping_views_vs_oracle(spark, warehouse, identifiers, tmp_path):
     assert obs["enc-1"].sex == "female"
     # observation.sample = coalesce(identifier, collection) = sample uuid
     assert obs["enc-1"].sample == fixtures.SAMPLE_BARCODES["11112222"]
+
+    # residence census tract: the least tract of the encounter's residence
+    # or lodging locations (nulls first), null without one
+    spark_tract = dict(spark.sql(
+        "SELECT encounter, residence_census_tract FROM incidence_model_observation_v2"
+    ).collect())
+    duck_tract = dict(con.sql("""
+        WITH tracts AS (
+            SELECT el.encounter_id, element_at(l.hierarchy, 'tract')[1] AS tract,
+                   row_number() OVER (PARTITION BY el.encounter_id
+                                      ORDER BY element_at(l.hierarchy, 'tract')[1] NULLS FIRST) AS rn
+            FROM encounter_location el JOIN location l USING (location_id)
+            WHERE el.relation IN ('residence', 'lodging')
+        )
+        SELECT e.identifier, t.tract
+        FROM encounter e
+        JOIN individual i USING (individual_id)
+        JOIN site st USING (site_id)
+        LEFT JOIN tracts t ON t.encounter_id = e.encounter_id AND t.rn = 1
+    """).fetchall())
+    assert spark_tract == duck_tract
+    assert any(duck_tract.values())
 
     joined = spark.sql(
         "SELECT encounter, target, present FROM observation_with_presence_absence_result_v1"

@@ -10,16 +10,21 @@ untraced, and prints:
   ``BroadcastExchange`` nodes of the plan each of its writes ran;
 - for each warehouse table: its version and the sha1 of its sorted rows,
   so two checkouts can be compared table by table;
-- whether the warehouse passed perfbench's DuckDB checks.
+- whether the warehouse passed perfbench's DuckDB checks;
+- for each of the nine shipping-view queries perfbench's consumer loop
+  runs after a batch: its kind, the jobs of its job group, its wall time
+  and the ``Exchange`` and ``BroadcastExchange`` nodes of the plan it
+  collected, and whether its rows equal perfbench's DuckDB answer.
 
-Run from the root of a checkout (a few GB of memory, about a minute on
-4 cores):
+Run from the root of a checkout (a few GB of memory, about half a minute
+on 4 cores):
 
     python3 tools/batch_jobs.py --seed 502
 
 The perfbench modules are imported, not changed. Planning each written
-plan again to count its exchanges costs driver time; it is left out of
-the upserts' wall times, not out of the batch's.
+or collected plan again to count its exchanges costs driver time; it is
+left out of the upserts' and the queries' wall times, not out of the
+batch's.
 """
 
 from __future__ import annotations
@@ -102,6 +107,42 @@ def instrument(sc, calls: list[dict]):
     return undo
 
 
+def view_queries(sc, w) -> tuple[list[dict], list[str]]:
+    """Run *w*'s consumer queries, each in a job group of its own, with
+    ``DataFrame.collect`` wrapped to count the exchanges of the plan each
+    query collects. Returns one record per query and the problems of
+    the queries' rows against perfbench's DuckDB answers."""
+    frame = type(w.spark.range(0))  # the session's DataFrame class
+    collect = frame.collect
+    out: list[dict] = []
+
+    def counted_collect(self):
+        t0 = time.perf_counter()
+        out[-1]["exchanges"] = exchanges(self)
+        out[-1]["probe_s"] = time.perf_counter() - t0
+        return collect(self)
+
+    frame.collect = counted_collect
+    answered = []
+    try:
+        for i, (kind, p) in enumerate(w.view_queries()):
+            out.append({"kind": kind, "group": f"batch-jobs-view-{i}"})
+            sc.setJobGroup(out[-1]["group"], f"view {kind}")
+            try:
+                wall_s, rows = w.view_query(kind, p)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            out[-1]["wall_s"] = wall_s - out[-1].pop("probe_s")
+            answered.append((kind, p, rows))
+    finally:
+        frame.collect = collect
+    problems = w.view_problems(answered)
+    for rec, bad in zip(out, problems):
+        rec["jobs"] = len(sc.statusTracker().getJobIdsForGroup(rec.pop("group")))
+        rec["correct"] = not bad
+    return out, [f"{r['kind']}: {b}" for r, bad in zip(out, problems) for b in bad]
+
+
 def marker_job(sc, group: str) -> int:
     """Run one tiny job in job group *group*; returns its job id."""
     sc.setJobGroup(group, group)
@@ -138,6 +179,8 @@ def measure(seed: int, work: str) -> dict:
             name: {"version": tbl.current_version(), "sha1": table_digest(tbl.read())}
             for name, tbl in sorted(w.wh.tables.items()) if tbl.exists()
         }
+        views, view_problems = view_queries(sc, w)
+        problems += view_problems
         return {
             "seed": seed,
             "batch_s": round(elapsed, 3),
@@ -151,6 +194,8 @@ def measure(seed: int, work: str) -> dict:
                 for r in calls
             ],
             "tables": tables,
+            "views": [{k: round(v, 3) if k == "wall_s" else v for k, v in r.items()}
+                      for r in views],
         }
     finally:
         bench.stop_spark(spark)
@@ -168,6 +213,10 @@ def report(out: dict) -> None:
     print(f"  {'table':<20} {'version':>7}  sha1 of sorted rows")
     for name, t in out["tables"].items():
         print(f"  {name:<20} {t['version']:>7}  {t['sha1']}")
+    print(f"  {'view query':<26} {'jobs':>4} {'wall s':>7}  exchanges (shuffle/broadcast)  correct")
+    for v in out["views"]:
+        ex = f"{v['exchanges']['Exchange']}/{v['exchanges']['BroadcastExchange']}"
+        print(f"  {v['kind']:<26} {v['jobs']:>4} {v['wall_s']:>7.2f}  {ex:<29}  {v['correct']}")
 
 
 def main(argv: list[str] | None = None) -> int:
